@@ -919,8 +919,9 @@ object Graphs {
     // driver (measured r16: ~6 s of the gate's 7 s at sf0.1) and
     // shipped to every task; shuffled-hash builds per-partition tables
     // in parallel and the u-keyed exchange is links-sized, not
-    // wedge-sized. The degree cap bounds every u-partition's build
-    // state, so the SHJ build cannot OOM at any scale.
+    // wedge-sized. The degree cap bounds per-key build state; a
+    // shuffle partition holds every u hashed to it, so per-partition
+    // build state is ~|kept|/numPartitions.
     kept.as("x").hint("shuffle_hash").join(kept.as("y").hint("shuffle_hash"),
         col("x.u") === col("y.u") && col("x.ent") < col("y.ent"))
       .select(col("x.ent").as("a"), col("y.ent").as("b"),

@@ -286,6 +286,12 @@ object Sampling {
     * doc-keyed. No vocabulary table anywhere (the hashing trick's
     * point). Totals reach the λ table as 1-row broadcasts.
     *
+    * Eagerness: with `dims <= driverMaxDims` (the default) the two
+    * bucket censuses (raw and target) are collected to the driver when
+    * the frame is built, so calling this runs two Spark jobs over the
+    * whole corpus — and, with `persistFeatures`, fills the `docB`
+    * cache — before any action on the result.
+    *
     * Returns (doc_id, n_tokens, logw_1024ths, avg_millibits) —
     * logw_1024ths is Σ c_b·λ_b in 2^-10 bits, avg_millibits =
     * (1000·logw_1024ths) div (1024·n_tokens) the length-normalized

@@ -17,6 +17,12 @@ import org.apache.spark.sql.Dataset
   * scale the parts land on shared storage; the concat is a byte-level
   * copy, not a recompress.
   *
+  * One file is one write job, whatever its section count: the sections
+  * run as the union of their sorted Datasets, whose partitions come in
+  * union order — every partition of the first section, in its own
+  * order, then the second's — so part order is section order, then
+  * range order within a section.
+  *
   * `compressCommand` mirrors the reference's `--compress-command`: an
   * external stdin→stdout compressor run per partition (see
   * [[Compression]]); None uses the built-in bzip2 codec.
@@ -27,19 +33,15 @@ object XmlSink {
             compressCommand: Option[String] = None): Unit = {
     val partsRoot = Paths.get(outPath + ".parts")
     PartSink.deleteRecursive(partsRoot)
-    val written = sections.zipWithIndex.map { case (ds, si) =>
-      val dir = partsRoot.resolve(f"sec$si%02d")
-      val ids = PartSink.writeParts(ds, dir) { (it, os) =>
-        Compression.compressTo(os, compressCommand) { cs =>
-          it.foreach(s => cs.write(s.getBytes(UTF_8)))
-        }
+    val ids = PartSink.writeParts(sections.reduce(_ union _), partsRoot) { (it, os) =>
+      Compression.compressTo(os, compressCommand) { cs =>
+        it.foreach(s => cs.write(s.getBytes(UTF_8)))
       }
-      (dir, ids)
     }
     val out = new BufferedOutputStream(new FileOutputStream(outPath), 1 << 16)
     try {
       Compression.compressTo(out, compressCommand)(_.write(header.getBytes(UTF_8)))
-      written.foreach { case (dir, ids) => PartSink.concat(out, dir, ids) }
+      PartSink.concat(out, partsRoot, ids)
       Compression.compressTo(out, compressCommand)(_.write(XmlFormat.footer.getBytes(UTF_8)))
     } finally out.close()
     PartSink.deleteRecursive(partsRoot)

@@ -29,14 +29,15 @@ class CliSurfaceSpec extends AnyFunSuite {
   // one shared load of the reference dump for the PBF tests
   private lazy val loaded: (String, Option[java.sql.Timestamp], OsmDb) = {
     val d = Files.createTempDirectory("cli-surface").toString
-    val maxTime = Load.run(spark, s"$refTest/liechtenstein-2013-08-03.dmp", s"$d/work")
+    val maxTime = Load.run(spark,
+      ReferenceFixtures(refTest, "liechtenstein-2013-08-03.dmp"), s"$d/work")
     (d, maxTime, OsmDb(spark, s"$d/work/tables"))
   }
 
   test("destructive runs honor the workDir lock: non-resume AND dump-switching resume") {
     val d = Files.createTempDirectory("lock-test")
     Files.writeString(d.resolve(".lock"), "pid=999 start=test\n")
-    val dump = s"$refTest/liechtenstein-2013-08-03.dmp"
+    val dump = PlanetFixture.dump
     // non-resume always wipes -> must fail fast on a held lock
     val e1 = intercept[IllegalStateException](
       Load.run(spark, dump, d.toString, resume = false))

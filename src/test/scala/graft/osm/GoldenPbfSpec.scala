@@ -49,11 +49,13 @@ class GoldenPbfSpec extends AnyFunSuite {
     }
   }
 
+  private def dump = ReferenceFixtures(refTest, "liechtenstein-2013-08-03.dmp")
+
   import PlanetDump._
 
   test("planet.pbf golden (full byte-exact; no-userinfo structural)") {
     val d = Files.createTempDirectory("golden-pbf").toString
-    PlanetDump.run(spark, s"$refTest/liechtenstein-2013-08-03.dmp", s"$d/work", Seq(
+    PlanetDump.run(spark, dump, s"$d/work", Seq(
       Output(PbfPlanet, s"$d/planet.osm.pbf"),
       Output(PbfPlanet, s"$d/planet-nui.osm.pbf", anon = true)), gen)
     compare(s"$d/planet.osm.pbf", s"$refTest/planet.pbf.case/planet.osm.pbf")
@@ -63,7 +65,7 @@ class GoldenPbfSpec extends AnyFunSuite {
   test("parallel PBF encoding is structurally identical to sequential") {
     val d = Files.createTempDirectory("par-pbf").toString
     val work = s"$d/work"
-    val maxTime = Load.run(spark, s"$refTest/liechtenstein-2013-08-03.dmp", work)
+    val maxTime = Load.run(spark, dump, work)
     val db = OsmDb(spark, s"$work/tables")
     val (n, w, r) = (Assemble.nodes(db), Assemble.ways(db), Assemble.relations(db))
     PlanetPbf.write(s"$d/seq.pbf", gen, history = true, anon = false, maxTime, n, w, r)
@@ -79,7 +81,7 @@ class GoldenPbfSpec extends AnyFunSuite {
 
   test("history.pbf golden (full byte-exact; no-userinfo structural)") {
     val d = Files.createTempDirectory("golden-pbf-h").toString
-    PlanetDump.run(spark, s"$refTest/liechtenstein-2013-08-03.dmp", s"$d/work", Seq(
+    PlanetDump.run(spark, dump, s"$d/work", Seq(
       Output(PbfHistory, s"$d/history.osm.pbf"),
       Output(PbfHistory, s"$d/history-nui.osm.pbf", anon = true)), gen)
     compare(s"$d/history.osm.pbf", s"$refTest/history.pbf.case/history.osm.pbf")

@@ -47,7 +47,7 @@ class GoldenXmlSpec extends AnyFunSuite {
   private def runCase(dump: String, outputs: (String, PlanetDump.Output => PlanetDump.Output)*): Unit = ()
 
   private def run(dump: String, work: String, outs: Seq[PlanetDump.Output]): Unit =
-    PlanetDump.run(spark, s"$refTest/$dump", work, outs, gen)
+    PlanetDump.run(spark, ReferenceFixtures(refTest, dump), work, outs, gen)
 
   private def tmp(name: String): String = {
     val d = Files.createTempDirectory(s"golden-$name").toString

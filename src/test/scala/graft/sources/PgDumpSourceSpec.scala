@@ -15,11 +15,15 @@ class PgDumpSourceSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val dump = "/root/reference/test/liechtenstein-2013-08-03.dmp"
+  private def checkedDump = {
+    val p = java.nio.file.Paths.get(dump)
+    graft.osm.ReferenceFixtures(p.getParent.toString, p.getFileName.toString)
+  }
   private lazy val staging = java.nio.file.Files.createTempDirectory("pgdump-src").toString
 
   private def read(table: String) =
     spark.read.format("pgdump")
-      .option("table", table).option("staging", staging).load(dump)
+      .option("table", table).option("staging", staging).load(checkedDump)
 
   test("reads nodes with full schema, matching the Load decoder") {
     val viaSource = read("nodes")
