@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * (joins, aggregates, formatting) with nothing collected — because a
   * bare count() would let Catalyst prune most of the work. A warmup
   * query amortizes session/codegen startup out of the first
-  * measurement. AQE is on, shuffle partitions match cores. Gates with
+  * measurement. The session is [[GraftSession]]'s profile. Gates with
   * a [[graft.queries.QueryDef]] `prepare` hook get their scratch
   * fixtures materialized OUTSIDE the timed window (the q251
   * discipline: WARC synthesis I/O made the gate un-adjudicable).
@@ -25,52 +23,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The generated-code cache defaults to 100 entries; the composed
-      // crawl/graph gates alone carry 100+ codegen fragments each, so
-      // the suite thrashed it — every stage re-ran Janino INSIDE the
-      // first task while its 31 siblings blocked on the loading cache
-      // (measured r15: q262 task time 466s -> 17s with the larger
-      // cache; stage profiles showed runTime 15-45s at 0.4-0.7s CPU).
-      // Size-adaptive by nature (it is a driver/executor compile cache,
-      // not a data knob); env-overridable for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // The 10 MB default broadcast threshold sits exactly where the
-      // cached doc-grain dimensions of the verify joins hover (the
-      // 5000-doc shingle frame measures ~8-12 MB depending on
-      // compression), so AQE flip-flopped BroadcastHash <-> SortMerge
-      // run to run — q143 was bimodal 2.5 s / 40 s on IDENTICAL code
-      // (the SMJ sorts 600k array-carrying rows). 64 MB is a routine
-      // production setting on >=8 GB executors (guide §3.1: size the
-      // threshold to what the executors can hold, don't trust
-      // estimates at the boundary); env-overridable for A/B.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      // ContextCleaner only reclaims broadcast/accumulator/shuffle state
-      // when a JVM GC runs; at 24g the suite goes many minutes between
-      // GCs, so hundreds of queries' debris piles up and the big
-      // composite plans ran 2-5x slower at the suite tail than in
-      // isolation (q267 30s in-suite vs 4.7s isolated, r15 measured).
-      // 30s periodic GC is Spark's own recommended lever for exactly
-      // this (default 30min); untimed work — it runs on the cleaner
-      // thread, between queries as well as during them.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30s"))
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench", GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // SPARK_GRAFT_BENCH_ISOLATE=1: additionally clear the whole catalog
-    // cache between queries so per-query numbers are order-independent
-    // (default off — keeps continuity with the r1-r5 artifacts)
-    val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
 
     // SPARK_GRAFT_BENCH_REPEAT=N (dev-only; driver never sets it): time
     // each query N times in this JVM, report the MEDIAN, print each
@@ -95,7 +49,6 @@ object Bench {
       // release is OUTSIDE the timed window (it is session hygiene, not
       // part of the query)
       graft.operators.CacheRegistry.releaseAll()
-      if (isolate) spark.catalog.clearCache()
       (elapsed, ok)
     }
 

@@ -18,10 +18,11 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
   * explicitly with `sbt "runMain graft.PlanFingerprint"` and shows up
   * as a reviewable diff.
   *
-  * Fingerprints are pinned to sf0.001 with AQE disabled (the
-  * PlanLintSpec conf): node counts — not partition counts — so they
-  * are independent of master/parallelism, and deterministic for the
-  * read-only testdata.
+  * Fingerprints are taken under [[GraftSession]]'s profile — the
+  * settings the bench runs, so join strategies match — at sf0.001
+  * with AQE disabled for the planning pass: node counts — not
+  * partition counts — so they are independent of master/parallelism,
+  * and deterministic for the read-only testdata.
   */
 object PlanFingerprint {
 
@@ -56,7 +57,7 @@ object PlanFingerprint {
       nodes.count(_.isInstanceOf[BaseJoinExec]))
   }
 
-  /** All gate fingerprints under the pinned conf — each query's
+  /** All gate plans under the pinned conf — each query's
     * returned-frame plan, PLUS one `<name>#trigger` entry per
     * streaming gate holding the representative TRIGGER-INTERNAL plan
     * (the foreachBatch closure's last merge/score/dedup frame, or the
@@ -65,24 +66,24 @@ object PlanFingerprint {
     * closes the r8 boundary where a silent extra scan INSIDE a
     * trigger was invisible to the gate. Caches are released between
     * queries (the Verify/Bench lifecycle) so results are
-    * order-independent.
+    * order-independent. One pass feeds both plan gates: the
+    * fingerprints and PlanLintSpec's lint.
     */
-  def computeAll(spark: SparkSession): Seq[(String, FP)] = {
+  def plans(spark: SparkSession): Seq[(String, SparkPlan)] = {
     val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     TriggerPlanProbe.enabled = true
     TriggerPlanProbe.drain(): Unit // discard any stale pre-run capture
     try {
       val all = SparkEntry.allQueries.flatMap { q =>
-        val fp = fingerprint(q.fn(spark, DataDir).queryExecution.executedPlan)
+        val plan = q.fn(spark, DataDir).queryExecution.executedPlan
         // drained keys: gate names get the #trigger suffix (streaming
         // gates record under their own name); operator-recorded keys
         // already carry #iter and land verbatim
         val probed = TriggerPlanProbe.drain().toSeq.sortBy(_._1)
-          .map { case (k, plan) =>
-            (if (k.contains("#")) k else s"$k#trigger") -> fingerprint(plan) }
+          .map { case (k, p) => (if (k.contains("#")) k else s"$k#trigger") -> p }
         graft.operators.CacheRegistry.releaseAll()
-        (q.name -> fp) +: probed
+        (q.name -> plan) +: probed
       }
       // iterative loops the gate corpus never reaches — q55's
       // connectedComponents, and (since the r15 optimization round)
@@ -118,7 +119,6 @@ object PlanFingerprint {
           driverMaxEdges = 0).count(): Unit
         graft.operators.CacheRegistry.releaseAll()
         TriggerPlanProbe.drain().toSeq.sortBy(_._1)
-          .map { case (k, plan) => k -> fingerprint(plan) }
       }
       // an operator shared by several gates records its #iter entry
       // once per gate — keep the LAST capture (the largest input),
@@ -167,15 +167,9 @@ object PlanFingerprint {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("plan-fingerprint")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("plan-fingerprint", GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val all = computeAll(spark)
+    val all = plans(spark).map { case (k, p) => k -> fingerprint(p) }
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(SnapshotPath), toJson(all))
     println(s"wrote ${all.size} fingerprints to $SnapshotPath")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement harness (guide §1): for each named query,
   * split wall time into Catalyst phases (parsing/analysis/
@@ -18,19 +17,7 @@ object ProfileQuery {
     val repeat = args.headOption.flatMap(_.toIntOption).getOrElse(2)
     val names = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-profile", GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     @volatile var jobs = 0

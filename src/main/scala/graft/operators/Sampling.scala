@@ -178,7 +178,7 @@ object Sampling {
     * leftover scalars reach the plan as independent broadcast
     * subqueries: without the cache each one re-executes `perSource`'s
     * lineage, i.e. FOUR corpus scans for a dozens-of-rows result
-    * (ScanAudit caught exactly that). With it the corpus is scanned
+    * (a plan scan audit caught exactly that). With it the corpus is scanned
     * once and every scalar derives from the cached rows.
     *
     * Input: (sourceCol, sizeCol) one row per source, sizes ≥ 0.

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness (not a gate): prints the merge table
@@ -15,10 +14,7 @@ object BpeDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val n = if (args.length > 1) args(1).toInt else 30
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("bpe-dump", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val merges = graft.operators.Tokenization.trainBpe(
       Tables.documents(spark, dir), col("text"), n)

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness (PiiDump/NfcDump convention): measure the pair recall
   * of `mutualNearestNeighborsLsh` at its default knobs (bands=2,
@@ -16,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object MnnRecallDump {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("mnn-recall-dump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("mnn-recall-dump", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val e = Tables.embeddings(spark, d)
     val exact = Similarity.mutualNearestNeighbors(e, "vec_id", "embedding")

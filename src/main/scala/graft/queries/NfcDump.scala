@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness main for `nfccheck.py`: writes Spark's NFC
   * normalization output for strings that actually change under NFC
   * (the gate's corpus is ASCII, so q56 only proves passthrough) —
@@ -12,8 +10,7 @@ object NfcDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/nfccheck")
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("nfc-dump", 2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     import spark.implicits._

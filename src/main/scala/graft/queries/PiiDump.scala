@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness main for `piicheck.py`: writes Spark's PII counts and
   * redacted text for a battery of PII-bearing strings (the gate's
   * corpus is PII-free, so q49 only proves clean-text passthrough; this
@@ -13,8 +11,7 @@ object PiiDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/piicheck")
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("pii-dump", 2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness main for `xxhcheck.py`: writes (a) the generated
   * [[XxHash64Sql]] byte-hash CTE chain and (b) Spark's own `xxhash64`
   * values for a battery of strings covering every XXH64 code path
@@ -16,8 +14,7 @@ object XxHashDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/xxhcheck")
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("xxhash-dump", 2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     import spark.implicits._

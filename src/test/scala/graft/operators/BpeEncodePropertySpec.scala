@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,15 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * TRAINED table's later merges cannot create earlier pairs.
   * Fixed-seed sampling keeps failures reproducible.
   */
-class BpeEncodePropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-encode-prop")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeEncodePropertySpec extends AnyFunSuite with SparkSpec {
 
   /** Textbook BPE encode: while some adjacent pair is in the table,
     * apply the LOWEST-RANK one at its LEFTMOST position only, repeat. */

@@ -1,16 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
-class CacheRegistrySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("cache-registry")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CacheRegistrySpec extends AnyFunSuite with SparkSpec {
 
   test("releaseAll unpersists registered DataFrames and checkpoint RDD ids") {
     import spark.implicits._

@@ -1,19 +1,11 @@
 package graft.operators
 
+import graft.SparkSpec
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CorpusOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("corpus-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._

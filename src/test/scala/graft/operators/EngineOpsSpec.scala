@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -8,15 +8,7 @@ import scala.jdk.CollectionConverters._
 /** Specs for the engine-utility operators: PageRank, profiling,
   * z-order layout keys, table checksums.
   */
-class EngineOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("engine-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EngineOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("exportJsonl: every row once, md5 shard order, byte-deterministic re-export") {
     import spark.implicits._

@@ -1,21 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the artifact/evaluation operators: bloom filter build +
   * probe, Pareto frontier, ranking metrics, link prediction.
   */
-class EvalOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("eval-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EvalOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("bloomBuild/bloomProbe: no false negatives, word packing replays") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,15 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    mergeable artifacts ([[Sketches.kmvPairOps]]'s foundation) and
   *    distributed aggregation of them correct.
   */
-class FoldLawPropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("fold-law-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FoldLawPropertySpec extends AnyFunSuite with SparkSpec {
 
   /** Deterministic sampling driver (the PropertySpec convention — the
     * scalatest/scalacheck bridge artifact isn't cached here).

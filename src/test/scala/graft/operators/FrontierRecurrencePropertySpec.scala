@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,15 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hosts with a single URL. This is the law that lets the frontier
   * schedule relationally instead of iterating per host.
   */
-class FrontierRecurrencePropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("frontier-recurrence-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FrontierRecurrencePropertySpec extends AnyFunSuite with SparkSpec {
 
   private def sequentialFold(t0: Long, d: Long,
                              nbs: Seq[Option[Long]]): Seq[Long] =

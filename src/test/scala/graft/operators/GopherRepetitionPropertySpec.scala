@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.SparkSpec
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whitespace-only cases included, lengths 0..12 tokens — exactly the
   * region the sf0.1 gate corpus never exercises.
   */
-class GopherRepetitionPropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("gopher-prop")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GopherRepetitionPropertySpec extends AnyFunSuite with SparkSpec {
 
   // ---- reference model (independent re-derivation of the battery)
 

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r15 tiny-graph driver fast paths must be BIT-IDENTICAL to the
@@ -11,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * once with `driverMaxEdges = 0` (distributed path forced), and
   * compares the full sorted row sets.
   */
-class GraphsDriverPathSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graphs-driver-path-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphsDriverPathSpec extends AnyFunSuite with SparkSpec {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)

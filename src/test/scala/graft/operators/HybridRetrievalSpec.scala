@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cell-confined pruning), rrfFuse (reciprocal-rank fusion), and
   * canonicalPerCluster (quality-argmax keeper selection).
   */
-class HybridRetrievalSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("hybrid-retrieval")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HybridRetrievalSpec extends AnyFunSuite with SparkSpec {
 
   private def vec(xs: Double*) = xs.map(_.toFloat).toArray
 

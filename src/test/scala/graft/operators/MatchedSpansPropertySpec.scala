@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * anchor-and-extend rewrite of it. Fixed-seed sampling (the
   * TokenizerParityPropertySpec pattern) keeps failures reproducible.
   */
-class MatchedSpansPropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("matched-spans-prop")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MatchedSpansPropertySpec extends AnyFunSuite with SparkSpec {
 
   /** Brute force: maximal common runs >= minTokens between two token
     * arrays, per diagonal, 1-based positions. */

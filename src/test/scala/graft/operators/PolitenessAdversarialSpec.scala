@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Redirect-resolution adversarial cases live in [[WebGraphSpec]]
   * (relative Location forms, exactly-maxHops settle).
   */
-class PolitenessAdversarialSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("politeness-adversarial")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PolitenessAdversarialSpec extends AnyFunSuite with SparkSpec {
 
   // RFC 9309 §2.1: "lines [are] delimited by either CR, LF, or
   // CR-followed-by-LF" — real servers emit CRLF; a \n-only split

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkSpec
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,14 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Scale-mechanics specs: skew-resistant collect equivalence and
   * bucketed co-located joins (shuffle elimination).
   */
-class ScaleOpsSpec extends AnyFunSuite {
+class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("scale-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  override protected lazy val spark: SparkSession = SparkSpec.builder
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("wh").toString)
     .getOrCreate()

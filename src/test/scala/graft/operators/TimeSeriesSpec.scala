@@ -2,20 +2,12 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TimeSeriesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("timeseries-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TimeSeriesSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(h: Int, m: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")

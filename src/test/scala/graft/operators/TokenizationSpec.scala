@@ -1,17 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TokenizationSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("tokenization-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenizationSpec extends AnyFunSuite with SparkSpec {
 
   // the classic Sennrich walkthrough corpus: low×5 lower×2 newest×6
   // widest×3, one word per "document" repeated by frequency

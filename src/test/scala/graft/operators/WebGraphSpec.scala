@@ -1,18 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class WebGraphSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("webgraph")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WebGraphSpec extends AnyFunSuite with SparkSpec {
 
   // link_no -> (href, url, dst_host, nofollow)
   private def links(uri: String, html: String): Map[Long, (String, String, String, Boolean)] = {

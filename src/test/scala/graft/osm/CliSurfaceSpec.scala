@@ -1,9 +1,9 @@
 package graft.osm
 
 import java.nio.file.{Files, Paths}
+import graft.SparkSpec
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 import org.apache.commons.compress.compressors.gzip.GzipCompressorInputStream
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reference CLI-parity surface (`src/planet-dump.cpp:27-116`):
@@ -13,18 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * external compressor output decompresses to the built-in payload;
   * meta values land on the right header attributes).
   */
-class CliSurfaceSpec extends AnyFunSuite {
+class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
 
   private val refTest = "/root/reference/test"
   private val gen = "planet-dump-ng test X.Y.Z"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("cli-surface")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // one shared load of the reference dump for the PBF tests
   private lazy val loaded: (String, Option[java.sql.Timestamp], OsmDb) = {

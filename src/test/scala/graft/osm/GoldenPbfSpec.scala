@@ -1,24 +1,16 @@
 package graft.osm
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Byte-for-byte PBF golden cases (raw `cmp`, like the reference's
   * `test/test-case-runner.sh:47-54`).
   */
-class GoldenPbfSpec extends AnyFunSuite {
+class GoldenPbfSpec extends AnyFunSuite with SparkSpec {
 
   private val refTest = "/root/reference/test"
   private val gen = "planet-dump-ng test X.Y.Z"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("golden-pbf")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def compare(ours: String, golden: String): Unit = {
     val a = Files.readAllBytes(Paths.get(ours))

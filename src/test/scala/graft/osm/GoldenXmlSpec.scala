@@ -2,26 +2,18 @@ package graft.osm
 
 import java.io.{BufferedInputStream, FileInputStream}
 import java.nio.file.{Files, Paths}
+import graft.SparkSpec
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Byte-for-byte replication of the reference's golden e2e cases
   * (reference `test/` case dirs; compare = `bunzip2 | cmp`,
   * `test/test-case-runner.sh:36-55`).
   */
-class GoldenXmlSpec extends AnyFunSuite {
+class GoldenXmlSpec extends AnyFunSuite with SparkSpec {
 
   private val refTest = "/root/reference/test"
   private val gen = "planet-dump-ng test X.Y.Z"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("golden-xml")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def bunzip(path: String): Array[Byte] = {
     val in = new BZip2CompressorInputStream(

@@ -1,7 +1,7 @@
 package graft.osm
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions.{col, max}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * it from an Observation on each table write, a resumed load reads the
   * skipped tables back; both must equal the max over the written tables.
   */
-class LoadMaxTimeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("load-max-time")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LoadMaxTimeSpec extends AnyFunSuite with SparkSpec {
 
   test("observed max time == read-back max time == max over the Parquet tables") {
     val work = Files.createTempDirectory("load-max-time").toString

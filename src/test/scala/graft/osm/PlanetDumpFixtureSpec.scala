@@ -3,8 +3,8 @@ package graft.osm
 import java.io.{BufferedInputStream, FileInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import graft.SparkSpec
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The in-repo planet fixture: a ~32 KB `pg_dump -Fc` archive written by
@@ -38,16 +38,8 @@ object PlanetFixture {
   * stream boundaries follow the partitioning, the payload does not).
   * Concurrent and serial writers produce the same files.
   */
-class PlanetDumpFixtureSpec extends AnyFunSuite {
+class PlanetDumpFixtureSpec extends AnyFunSuite with SparkSpec {
   import PlanetFixture._
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("planet-fixture")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val expectedSha256 = Map(
     "changesets.osm.bz2" -> "55f226c324586cf03c1166c3556d7c02fb9292de1be49640a23342ab51274509",

@@ -2,9 +2,9 @@ package graft.osm
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
+import graft.SparkSpec
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark jobs one warm serial `PlanetDump.run` submits on the in-repo
@@ -16,17 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * times back. A re-introduced inference read, read-back aggregate or
   * per-section job fails here.
   */
-class PlanetDumpJobCountSpec extends AnyFunSuite {
+class PlanetDumpJobCountSpec extends AnyFunSuite with SparkSpec {
 
   private val maxJobs = 109
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("planet-job-count")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test(s"a warm serial run of all six outputs submits at most $maxJobs jobs") {
     // a session of its own: no runtime setting another spec left behind

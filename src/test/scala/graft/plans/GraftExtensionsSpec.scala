@@ -1,17 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("word_shingles registered as a SQL function") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext")
+    val spark = SparkSpec.builder
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // a pre-existing shared session won't have build-time extensions —
     // the runtime registration path covers that case (and is itself

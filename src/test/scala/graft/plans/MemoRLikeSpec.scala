@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * under BOTH evaluation paths (codegen is the default; the
   * interpreted path runs when codegen is disabled).
   */
-class MemoRLikeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("memo-rlike")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MemoRLikeSpec extends AnyFunSuite with SparkSpec {
 
   // per-row pattern CHANGES (the cache-thrash shape the expression
   // exists for), anchors, wildcards, metachars, no-match, substring

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.PlanFingerprint
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CI gate over the committed plan fingerprints: every gate query's
@@ -14,13 +13,17 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanFingerprintSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-fingerprint-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  test("the plan gates plan under the profile's SQL settings") {
+    // the bench runs GraftSession's profile; a gate planned under any
+    // other value (Spark's 10 MB broadcast threshold, or a runtime
+    // override another spec left behind) certifies plans the bench
+    // does not run
+    val seen = GatePlans.pass.settings
+    val wrong = GatePlans.profile.collect {
+      case (k, v) if !seen(k).contains(v) => s"$k = ${seen(k).getOrElse("unset")}, profile $v"
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
 
   test("every gate query's physical plan matches the committed fingerprint") {
     val path = java.nio.file.Paths.get(PlanFingerprint.SnapshotPath)
@@ -28,7 +31,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
       s"${PlanFingerprint.SnapshotPath} missing — generate it with " +
         """sbt "runMain graft.PlanFingerprint"""")
     val committed = PlanFingerprint.parseJson(java.nio.file.Files.readString(path))
-    val current = PlanFingerprint.computeAll(spark)
+    val current = GatePlans.pass.plans.map { case (k, p) => k -> PlanFingerprint.fingerprint(p) }
     val diffs = current.flatMap { case (name, fp) =>
       committed.get(name) match {
         case None => Some(s"$name: NEW query, no committed fingerprint")

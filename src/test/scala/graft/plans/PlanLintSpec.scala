@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{GlobalLimitExec, LocalLimitExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -17,15 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * where a query declares them by design. New queries are linted
   * automatically by being in SparkEntry.
   */
-class PlanLintSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-lint")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanLintSpec extends AnyFunSuite with SparkSpec {
 
   /** Declared brute-force baselines: quadratic by definition (q200
     * evaluates ANN recall AGAINST the exact baseline, so it inherently
@@ -112,17 +104,14 @@ class PlanLintSpec extends AnyFunSuite {
     "q267_unified_schedule")
 
   test("no gate query plans an unpartitioned window or undeclared cartesian") {
-    // AQE wraps the plan in a leaf AdaptiveSparkPlanExec that defeats
-    // collect(); disable it while building plans (runtime-settable)
-    val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val offenders = graft.SparkEntry.allQueries.flatMap { q =>
-        // q55 loops with actions at plan-build time; its per-round
-        // shapes are the joins/aggs linted through every other query,
-        // so lint its (cheap) sf0.001 plan like the rest
-        val plan: SparkPlan =
-          q.fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan
+    // the gate plans of the shared pass (sf0.001, AQE off: AQE wraps
+    // the plan in a leaf AdaptiveSparkPlanExec that defeats collect());
+    // q55 loops with actions at plan-build time; its per-round shapes
+    // are the joins/aggs linted through every other query, so its
+    // (cheap) sf0.001 plan is linted like the rest
+    val gates = graft.SparkEntry.allQueries.map(_.name).toSet
+    val offenders = GatePlans.pass.plans.filter(p => gates(p._1)).flatMap {
+      case (name, plan) =>
         val unpartitioned = plan.collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }
@@ -134,17 +123,15 @@ class PlanLintSpec extends AnyFunSuite {
         // (q02/q08/q17/q19) legitimately send their few partial-agg
         // rows to one reducer; the harmful single-partition cases are
         // the window/cartesian forms above
-        val bad = Seq(
-          if (unpartitioned.nonEmpty && !globalWindowAllowed(q.name))
-            Some(s"${q.name}: unpartitioned window") else None,
-          if (cartesian.nonEmpty && !cartesianAllowed(q.name))
-            Some(s"${q.name}: cartesian product") else None,
-          if (nlj.nonEmpty && !bnljAllowed(q.name))
-            Some(s"${q.name}: unbounded broadcast nested-loop join") else None).flatten
-        bad
-      }
-      assert(offenders.isEmpty, offenders.mkString("; "))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
+        Seq(
+          if (unpartitioned.nonEmpty && !globalWindowAllowed(name))
+            Some(s"$name: unpartitioned window") else None,
+          if (cartesian.nonEmpty && !cartesianAllowed(name))
+            Some(s"$name: cartesian product") else None,
+          if (nlj.nonEmpty && !bnljAllowed(name))
+            Some(s"$name: unbounded broadcast nested-loop join") else None).flatten
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 
   test("cache hygiene: every gate query leaves zero persistent RDDs after release") {
@@ -155,8 +142,8 @@ class PlanLintSpec extends AnyFunSuite {
     // CacheRegistry (exactly what Bench/Verify do), and require the
     // session to be block-free afterwards.
     val sc = spark.sparkContext
-    // drop leftovers from the lint test above (it builds executedPlans,
-    // which for the looped queries registers caches it never releases)
+    // drop leftovers from the planning pass (it builds executedPlans,
+    // which for the looped queries registers caches)
     graft.operators.CacheRegistry.releaseAll(blocking = true)
     sc.getPersistentRDDs.values.foreach(_.unpersist(true))
     val leaks = graft.SparkEntry.allQueries.flatMap { q =>

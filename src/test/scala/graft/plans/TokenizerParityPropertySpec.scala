@@ -1,7 +1,7 @@
 package graft.plans
 
+import graft.SparkSpec
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,15 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and custom forms shifts positions or counts somewhere — this spec
   * makes it fail loudly instead of silently mis-deduping.
   */
-class TokenizerParityPropertySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("tokenizer-parity")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenizerParityPropertySpec extends AnyFunSuite with SparkSpec {
 
   private def modelTokens(text: String): Array[String] =
     text.split("\\s+").filter(_.nonEmpty)

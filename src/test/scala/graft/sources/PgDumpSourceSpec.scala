@@ -1,18 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PgDumpSourceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pgdump-source")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PgDumpSourceSpec extends AnyFunSuite with SparkSpec {
 
   private val dump = "/root/reference/test/liechtenstein-2013-08-03.dmp"
   private def checkedDump = {

@@ -1,20 +1,12 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-class EventStreamsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("event-streams")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventStreamsSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.from(java.time.Instant.parse(s))
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** State-store PROVIDER INDEPENDENCE: the transcript gates (q213–q218)
@@ -19,15 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * watermark), and the politeness gate's monotone per-key timetable
   * state (q257, Append + NoTimeout against a broadcast dimension).
   */
-class StateStoreProviderSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("state-store-provider")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateStoreProviderSpec extends AnyFunSuite with SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
   private val RocksDb =
