@@ -85,38 +85,30 @@ object PlanFingerprint {
         graft.operators.CacheRegistry.releaseAll()
         (q.name -> plan) +: probed
       }
-      // iterative loops the gate corpus never reaches — q55's
-      // connectedComponents, and (since the r15 optimization round)
-      // every Graphs operator with a tiny-graph driver fast path,
-      // take the ≤driverMaxEdges route at sf0.001; BPE training is
-      // offline (the q212 merge table is a committed fixture) — get
-      // their #iter plans gated here on pinned micro-inputs that
-      // force the distributed path
-      val forced = {
+      // iterative loops the gate corpus never reaches — every
+      // operator behind the [[graft.operators.DriverPath]] gate
+      // (q55's connectedComponents and the seven Graphs operators)
+      // takes its driver path at sf0.001; BPE training is offline
+      // (the q212 merge table is a committed fixture) — get their
+      // #iter plans gated here on pinned micro-inputs, with the
+      // driver paths forced off
+      val forced = graft.operators.DriverPath.forceDistributed {
         import spark.implicits._
+        import graft.operators.Graphs
         val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L))
           .toDF("id_a", "id_b")
-        graft.operators.Dedup.connectedComponents(edges, driverMaxEdges = 0)
-          .count(): Unit
+        graft.operators.Dedup.connectedComponents(edges).count(): Unit
         graft.operators.Tokenization.trainBpe(
           Seq("aa ab aa ab ba").toDF("t"),
           org.apache.spark.sql.functions.col("t"), numMerges = 2): Unit
         val g = edges.toDF("src", "dst")
-        graft.operators.Graphs.hitsMicro(g, iterations = 1,
-          driverMaxEdges = 0).count(): Unit
-        graft.operators.Graphs.bfsDistances(g,
-          Seq(1L).toDF("node"), maxHops = 2, driverMaxEdges = 0)
-          .count(): Unit
-        graft.operators.Graphs.kCore(g.toDF("a", "b"), k = 1, rounds = 1,
-          driverMaxEdges = 0).count(): Unit
-        graft.operators.Graphs.pageRankMicro(g, iterations = 1,
-          driverMaxEdges = 0).count(): Unit
-        graft.operators.Graphs.personalizedPageRank(g, Seq(1L).toDF("node"),
-          iterations = 1, driverMaxEdges = 0).count(): Unit
-        graft.operators.Graphs.labelPropagation(g.toDF("a", "b"), rounds = 1,
-          driverMaxEdges = 0).count(): Unit
-        graft.operators.Graphs.triangleCount(g.toDF("a", "b"),
-          driverMaxEdges = 0).count(): Unit
+        Graphs.hitsMicro(g, iterations = 1).count(): Unit
+        Graphs.bfsDistances(g, Seq(1L).toDF("node"), maxHops = 2).count(): Unit
+        Graphs.kCore(g.toDF("a", "b"), k = 1, rounds = 1).count(): Unit
+        Graphs.pageRankMicro(g, iterations = 1).count(): Unit
+        Graphs.personalizedPageRank(g, Seq(1L).toDF("node"), iterations = 1).count(): Unit
+        Graphs.labelPropagation(g.toDF("a", "b"), rounds = 1).count(): Unit
+        Graphs.triangleCount(g.toDF("a", "b")).count(): Unit
         graft.operators.CacheRegistry.releaseAll()
         TriggerPlanProbe.drain().toSeq.sortBy(_._1)
       }

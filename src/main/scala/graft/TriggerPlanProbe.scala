@@ -33,11 +33,14 @@ object TriggerPlanProbe {
     if (enabled) plans.put(gate, df.queryExecution.executedPlan): Unit
 
   /** Record an ITERATION-internal frame's plan — the r9 analog of the
-    * trigger boundary: hitsMicro/pageRankMicro/personalizedPageRank/
-    * bfsDistances/connectedComponents run per-iteration jobs at eager
+    * trigger boundary: the operators behind
+    * [[graft.operators.DriverPath]] (connectedComponents and the seven
+    * iterative Graphs operators) run per-iteration jobs at eager
     * localCheckpoint time, so the gate fingerprint of the RETURNED
     * frame never sees the plan each round actually executes, and a
-    * silent extra scan inside an iteration could not fail CI. Called
+    * silent extra scan inside an iteration could not fail CI; their
+    * driver paths run no loop and record nothing, while dsirWeights'
+    * driver path records the two census plans it collects. Called
     * by the OPERATOR (which doesn't know its gate name) with its own
     * stable key; repeated iterations overwrite — the LAST round's
     * plan is the representative. Keys land in the snapshot verbatim

@@ -657,6 +657,10 @@ object Dedup {
         round(col("__i") * 1000000.0 / col("__u")).cast("long").as("jaccard_ppm"))
   }
 
+  /** Edge cap of [[connectedComponents]]' driver union-find: 2^20
+    * edges collect at most ~16 MB of longs. */
+  private val ComponentsDriverMaxEdges = 1L << 20
+
   /** Duplicate-cluster formation: connected components over a near-dup
     * pair set (the output of [[minhashLshPairs]] /
     * [[graft.operators.Similarity.cosineNearDupPairs]]), returning
@@ -688,23 +692,20 @@ object Dedup {
     *
     * ADAPTIVE SMALL-GRAPH PATH: the pair graph is the output of the
     * LSH + verify funnel — usually orders of magnitude smaller than
-    * the corpus — and the edge count is already materialized to build
-    * the edge cache. When it is at most `driverMaxEdges` (and the ids
-    * are integral), the labels are computed with a driver-side
-    * union-find instead: one collect of the (tiny, deduped) edge
-    * list, exact min-label semantics, zero iterative rounds. Each
-    * distributed round costs 2 shuffle joins + a count regardless of
-    * size — on a few-hundred-edge graph the rounds ARE the cost
-    * (measured: ~4 s of pure round overhead in the composed q65 at
-    * sf0.1, vs ~0.1 s via union-find). The default cap collects at
-    * most ~16 MB of longs; graphs beyond it — or with non-integral
-    * ids — take the distributed path unchanged. This is the same
-    * adaptive posture as AQE's runtime broadcast: pick the driver
-    * path only when the measured size proves it safe.
+    * the corpus. When the deduped edge cache passes the [[DriverPath]]
+    * gate (at most [[ComponentsDriverMaxEdges]] rows, integral
+    * non-null ids), the labels are computed with a driver-side
+    * union-find instead: one collect of the edge list, exact
+    * min-label semantics, zero iterative rounds. Each distributed
+    * round costs 2 shuffle joins + a count regardless of size — on a
+    * few-hundred-edge graph the rounds ARE the cost (measured: ~4 s of
+    * pure round overhead in the composed q65 at sf0.1, vs ~0.1 s via
+    * union-find). Anything else takes the distributed path unchanged.
+    * This is the same adaptive posture as AQE's runtime broadcast:
+    * pick the driver path only when the measured size proves it safe.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                          maxIters: Int = 50,
-                          driverMaxEdges: Long = 1L << 20): DataFrame = {
+                          maxIters: Int = 50): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sc = pairs.sparkSession.sparkContext
     val fwd = pairs.select(col(idA).as("src"), col(idB).as("dst"))
@@ -720,44 +721,37 @@ object Dedup {
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    DriverPath.pairs(edges, ComponentsDriverMaxEdges) match {
+      case Some(es) =>
+        // union-find with min-root invariant: the root of every set is
+        // its minimum member, so find(v) IS the min reachable id
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x // path compression
+          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        es.foreach { case (a, b) =>
+          if (!parent.contains(a)) parent(a) = a
+          if (!parent.contains(b)) parent(b) = b
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+        }
+        val out = parent.keys.toSeq.map(v => (v, find(v)))
+        edges.unpersist()
+        return DriverPath.frame(pairs.sparkSession, out, "v", "lbl")
+          .select(col("v").cast(fwd.schema("src").dataType),
+            col("lbl").cast(fwd.schema("src").dataType))
+          .toDF("v", "lbl")
+      case None => ()
+    }
     // materialize the edge cache (and anything upstream of it, e.g. a
     // caller's shingle cache) BEFORE the first label checkpoint, so the
     // label rounds below never re-evaluate the caller's upstream plan
-    val edgeCount = edges.count()
-    val integralIds = edges.schema.fields.forall(f =>
-      f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType)
-    if (edgeCount <= driverMaxEdges && integralIds) {
-      // union-find with min-root invariant: the root of every set is
-      // its minimum member, so find(v) IS the min reachable id
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      val it = edges.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        val a = row.get(0).asInstanceOf[Number].longValue()
-        val b = row.get(1).asInstanceOf[Number].longValue()
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      parent.foreachKey(v => out += ((v, find(v))))
-      edges.unpersist()
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return out.toSeq.toDF("v", "lbl")
-        .select(col("v").cast(fwd.schema("src").dataType),
-          col("lbl").cast(fwd.schema("src").dataType))
-        .toDF("v", "lbl")
-    }
+    // (the gate above may decline before counting it)
+    edges.count()
     var labels = edges.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lbl")).localCheckpoint(true)
     // blocks backing the PREVIOUS round's labels; a localCheckpoint's

@@ -1,54 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components
   * ([[Dedup.connectedComponents]]): fixed-iteration PageRank in exact
-  * integer arithmetic.
+  * integer arithmetic. The seven iterative operators run the same
+  * recurrence in a driver loop when their edge list is tiny; the gate
+  * is [[DriverPath]], the caps are the constants below.
   */
 object Graphs {
 
-  /** ADAPTIVE SMALL-GRAPH GATE shared by the iterative operators (the
-    * [[Dedup.connectedComponents]] `driverMaxEdges` posture, r14-
-    * verdict-blessed): iterative graph analytics cost 2-4 shuffle
-    * stages per round REGARDLESS of size, so on a mined graph that is
-    * orders of magnitude smaller than the corpus (host graphs, capped
-    * co-occurrence edges) the rounds ARE the cost — measured r15:
-    * q232's 4 HITS iterations burned 66 jobs / 100-290 s of task time
-    * on a 19-node graph. When the materialized edge list is provably
-    * tiny (count ≤ cap, integral non-null ids), collect it once and
-    * run the SAME exact integer recurrences in a driver loop — the
-    * formulas are engine-portable by design (that is what makes them
-    * gate-able), so the driver path is bit-identical to the
-    * distributed one. Anything bigger — or with nulls / non-integral
-    * ids — takes the distributed path unchanged; at 100 TB the mined
-    * graph exceeds any driver cap and this gate never fires. Returns
-    * None on fallback. The caller must pass an ALREADY-PERSISTED
-    * frame (count + collect = one cache materialization, which the
-    * distributed path needs anyway).
-    */
-  private def collectEdgesIfSmall(e: DataFrame, cap: Long): Option[Array[(Long, Long)]] = {
-    val integral = e.schema.fields.forall(f =>
-      f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType)
-    if (!integral || cap <= 0) return None
-    val n = e.count()
-    if (n == 0 || n > cap) return None
-    val rows = e.collect()
-    val out = new Array[(Long, Long)](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val row = rows(i)
-      if (row.isNullAt(0) || row.isNullAt(1)) return None
-      out(i) = (row.get(0).asInstanceOf[Number].longValue(),
-        row.get(1).asInstanceOf[Number].longValue())
-      i += 1
-    }
-    Some(out)
-  }
+  /** Edge cap of the tiny-graph driver paths: 2^20 edges collect at
+    * most ~16 MB of longs. */
+  private val DriverMaxEdges = 1L << 20
+  /** [[triangleCount]]'s cap is lower: its driver wedge work is
+    * O(m^1.5), not O(m) — ~1.3e8 probe ops at the cap, still well under
+    * a second of HashSet lookups, but not worth pushing further. */
+  private val TriangleDriverMaxEdges = 1L << 18
 
   /** Sorted distinct node array + id→index map for a collected edge
     * list (driver fast paths). */
@@ -59,6 +30,28 @@ object Graphs {
     var i = 0
     while (i < nodes.length) { idx(nodes(i)) = i; i += 1 }
     (nodes, idx)
+  }
+
+  /** [[pageRankMicro]]'s recurrence on a collected edge list, with the
+    * restart mass on `seeds` ([[personalizedPageRank]]) or, for None,
+    * on every node. */
+  private def driverRank(spark: SparkSession, es: Array[(Long, Long)],
+                         seeds: Option[Set[Long]], iterations: Int,
+                         massMicro: Long): DataFrame = {
+    val (nodes, idx) = indexNodes(es, seeds.getOrElse(Nil))
+    val nN = nodes.length
+    val isSeed = Array.tabulate(nN)(i => seeds.forall(_(nodes(i))))
+    val r0 = massMicro / seeds.fold(nN)(_.size)
+    val base = (15L * r0) / 100L
+    val outd = new Array[Long](nN)
+    es.foreach { case (s, _) => outd(idx(s)) += 1L }
+    var r = Array.tabulate(nN)(i => if (isSeed(i)) r0 else 0L)
+    for (_ <- 1 to iterations) {
+      val in = new Array[Long](nN)
+      es.foreach { case (s, d) => in(idx(d)) += r(idx(s)) / outd(idx(s)) }
+      r = Array.tabulate(nN)(i => (if (isSeed(i)) base else 0L) + (85L * in(i)) / 100L)
+    }
+    DriverPath.frame(spark, nodes.toSeq.zip(r), "node", "rank_micro")
   }
 
   /** PageRank with damping 0.85 over a directed edge list, every
@@ -93,8 +86,7 @@ object Graphs {
     */
   def pageRankMicro(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst", iterations: Int = 4,
-                    massMicro: Long = 1000000000000L,
-                    driverMaxEdges: Long = 1L << 20): DataFrame = {
+                    massMicro: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
     require(massMicro > 0, s"massMicro must be positive, got $massMicro")
     // pre-partition the loop-invariant sides by their join keys BEFORE
@@ -107,26 +99,10 @@ object Graphs {
         col(dstCol).cast("long").as("dst"))
         .repartition(col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): the same
+    // tiny-graph fast path ([[DriverPath]]): the same
     // integer recurrence, zero iterative shuffle rounds
-    collectEdgesIfSmall(e, driverMaxEdges) match {
-      case Some(es) =>
-        val (nodes, idx) = indexNodes(es)
-        val nN = nodes.length
-        val r0 = massMicro / nN
-        val base = (15L * r0) / 100L
-        val outd = new Array[Long](nN)
-        es.foreach { case (s, _) => outd(idx(s)) += 1L }
-        var r = Array.fill(nN)(r0)
-        for (_ <- 1 to iterations) {
-          val in = new Array[Long](nN)
-          es.foreach { case (s, d) => in(idx(d)) += r(idx(s)) / outd(idx(s)) }
-          r = Array.tabulate(nN)(i => base + (85L * in(i)) / 100L)
-        }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return nodes.indices.map(i => (nodes(i), r(i)))
-          .toDF("node", "rank_micro")
+    DriverPath.pairs(e, DriverMaxEdges) match {
+      case Some(es) => return driverRank(edges.sparkSession, es, None, iterations, massMicro)
       case None => ()
     }
     val outdeg = CacheRegistry.register(
@@ -219,8 +195,7 @@ object Graphs {
   def hitsMicro(edges: DataFrame, srcCol: String = "src",
                 dstCol: String = "dst", iterations: Int = 4,
                 massMicro: Long = 1000000L,
-                checkpointInterval: Int = 1,
-                driverMaxEdges: Long = 1L << 20): DataFrame = {
+                checkpointInterval: Int = 1): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
     require(massMicro > 0, s"massMicro must be positive, got $massMicro")
     require(checkpointInterval >= 1 && checkpointInterval <= 3,
@@ -231,13 +206,13 @@ object Graphs {
         col(dstCol).cast("long").as("dst"))
         .repartition(col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): the same
+    // tiny-graph fast path ([[DriverPath]]): the same
     // integer half-steps, zero checkpoint jobs. ma/mh are always > 0:
     // every edge target has an in-edge so rawA ≥ min h > 0 in iter 1,
     // and the max-normalized node keeps a = massMicro whose source's
     // rawH ≥ massMicro — the same argument that makes the distributed
     // div-by-__m safe.
-    collectEdgesIfSmall(e, driverMaxEdges) match {
+    DriverPath.pairs(e, DriverMaxEdges) match {
       case Some(es) =>
         val (nodes, idx) = indexNodes(es)
         val nN = nodes.length
@@ -340,8 +315,7 @@ object Graphs {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            srcCol: String = "src", dstCol: String = "dst",
                            seedCol: String = "node", iterations: Int = 4,
-                           massMicro: Long = 1000000000000L,
-                           driverMaxEdges: Long = 1L << 20): DataFrame = {
+                           massMicro: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
     require(massMicro > 0, s"massMicro must be positive, got $massMicro")
     val e = CacheRegistry.register(
@@ -354,38 +328,20 @@ object Graphs {
         .persist(StorageLevel.MEMORY_AND_DISK))
     val sd = seeds.select(col(seedCol).cast("long").as("node"))
       .filter(col("node").isNotNull).distinct()
-    // fail fast on an empty (or all-null-after-cast) seed set: sum(__seed)
-    // = 0 would turn `massMicro div __ns` NULL and silently propagate
-    // NULL ranks everywhere (one cheap limit-1 probe, not a full count)
-    require(!sd.isEmpty,
-      "personalizedPageRank: seeds must contain at least one non-null node id")
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): the seed set
-    // is node-bounded, so it rides the same cap
-    collectEdgesIfSmall(e, driverMaxEdges) match {
-      case Some(es) =>
-        val seedArr = sd.collect().map(_.getLong(0))
-        if (seedArr.length <= driverMaxEdges) {
-          val seedSet = seedArr.toSet
-          val (nodes, idx) = indexNodes(es, seedSet)
-          val nN = nodes.length
-          val r0 = massMicro / seedSet.size
-          val base = (15L * r0) / 100L
-          val outd = new Array[Long](nN)
-          es.foreach { case (s, _) => outd(idx(s)) += 1L }
-          var r = Array.tabulate(nN)(i => if (seedSet(nodes(i))) r0 else 0L)
-          for (_ <- 1 to iterations) {
-            val in = new Array[Long](nN)
-            es.foreach { case (s, d) => in(idx(d)) += r(idx(s)) / outd(idx(s)) }
-            r = Array.tabulate(nN)(i =>
-              (if (seedSet(nodes(i))) base else 0L) + (85L * in(i)) / 100L)
-          }
-          val spark = edges.sparkSession
-          import spark.implicits._
-          return nodes.indices.map(i => (nodes(i), r(i)))
-            .toDF("node", "rank_micro")
-        }
+    // tiny-graph fast path ([[DriverPath]]): the seed set is
+    // node-bounded, so it rides the same cap
+    DriverPath.pairs(e, DriverMaxEdges)
+      .flatMap(es => DriverPath.ids(sd, DriverMaxEdges).map((es, _))) match {
+      case Some((es, seedArr)) =>
+        return driverRank(edges.sparkSession, es, Some(seedArr.toSet), iterations, massMicro)
       case None => ()
     }
+    // fail fast on an empty (or all-null-after-cast) seed set: sum(__seed)
+    // = 0 would turn `massMicro div __ns` NULL and silently propagate
+    // NULL ranks everywhere (one cheap limit-1 probe, not a full count;
+    // the driver path above declines an empty seed set)
+    require(!sd.isEmpty,
+      "personalizedPageRank: seeds must contain at least one non-null node id")
     val nodes = CacheRegistry.register(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
         .union(sd.select("node"))
@@ -468,55 +424,46 @@ object Graphs {
     */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
                    srcCol: String = "src", dstCol: String = "dst",
-                   seedCol: String = "node", maxHops: Int = 6,
-                   driverMaxEdges: Long = 1L << 20): DataFrame = {
+                   seedCol: String = "node", maxHops: Int = 6): DataFrame = {
     require(maxHops >= 1 && maxHops <= 1000, s"maxHops out of range: $maxHops")
     val sc = edges.sparkSession.sparkContext
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize before the checkpoint bookkeeping below
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): same frontier
+    // tiny-graph fast path ([[DriverPath]]): same frontier
     // expansion, zero per-round join/checkpoint jobs. Node values pass
     // through untouched (no arithmetic), cast back to the seed column's
     // type so the returned schema matches the distributed path.
     val sdist = seeds.select(col(seedCol).as("node")).distinct()
     val seedType = sdist.schema("node").dataType
-    val seedIntegral = seedType == org.apache.spark.sql.types.LongType ||
-      seedType == org.apache.spark.sql.types.IntegerType
     // fast path only when seed and edge id types AGREE: with (say) int
     // seeds over long edges the distributed union widens node to long,
     // while a cast-to-seed-type here would both truncate >2^31 ids and
     // diverge from the distributed schema
     val typesAgree = e.schema.fields.forall(_.dataType == seedType)
-    if (seedIntegral && typesAgree) collectEdgesIfSmall(e, driverMaxEdges) match {
-      case Some(es) =>
-        val seedRows = sdist.collect()
-        if (seedRows.length <= driverMaxEdges && !seedRows.exists(_.isNullAt(0))) {
-          val adj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-          es.foreach { case (s, d) =>
-            adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
-          }
-          val dist = new scala.collection.mutable.LongMap[Long]()
-          var frontier = seedRows.map(_.get(0).asInstanceOf[Number].longValue()).distinct
-          frontier.foreach(n => dist(n) = 0L)
-          var hop = 1L
-          while (frontier.nonEmpty && hop <= maxHops) {
-            val next = frontier.iterator.flatMap(n => adj.getOrElse(n, Nil))
-              .filterNot(dist.contains).toArray.distinct
-            next.foreach(n => dist(n) = hop)
-            frontier = next
-            hop += 1
-          }
-          e.unpersist()
-          val spark = edges.sparkSession
-          import spark.implicits._
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          dist.foreach { case (n, dd) => out += ((n, dd)) }
-          return out.toSeq.toDF("node", "dist")
-            .select(col("node").cast(seedType).as("node"), col("dist"))
+    (if (typesAgree) DriverPath.pairs(e, DriverMaxEdges) else None)
+      .flatMap(es => DriverPath.ids(sdist, DriverMaxEdges).map((es, _))) match {
+      case Some((es, seedIds)) =>
+        val adj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
+        es.foreach { case (s, d) =>
+          adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
         }
+        val dist = new scala.collection.mutable.LongMap[Long]()
+        var frontier = seedIds
+        frontier.foreach(n => dist(n) = 0L)
+        var hop = 1L
+        while (frontier.nonEmpty && hop <= maxHops) {
+          val next = frontier.iterator.flatMap(n => adj.getOrElse(n, Nil))
+            .filterNot(dist.contains).toArray.distinct
+          next.foreach(n => dist(n) = hop)
+          frontier = next
+          hop += 1
+        }
+        e.unpersist()
+        return DriverPath.frame(edges.sparkSession, dist.toSeq, "node", "dist")
+          .select(col("node").cast(seedType).as("node"), col("dist"))
       case None => ()
     }
+    e.count() // materialize for the checkpoints below (the gate may decline uncounted)
     var dist = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
     // checkpoint ids read off each frame's own plan — see hitsMicro
@@ -591,17 +538,14 @@ object Graphs {
     * Returns one row (n_edges, n_triangles).
     */
   def triangleCount(edges: DataFrame, aCol: String = "a",
-                    bCol: String = "b",
-                    driverMaxEdges: Long = 1L << 18): DataFrame = {
+                    bCol: String = "b"): DataFrame = {
     val e = CacheRegistry.register(
       edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): the same
-    // degree-oriented wedge closure. The cap is LOWER than the other
-    // operators' (2^18): driver wedge work is O(m^1.5), not O(m) —
-    // ~1.3e8 probe ops at the cap, still well under a second of
-    // HashSet lookups, but not worth pushing further.
-    collectEdgesIfSmall(e, driverMaxEdges) match {
+    // tiny-graph fast path ([[DriverPath]]): the same
+    // degree-oriented wedge closure, under the lower
+    // [[TriangleDriverMaxEdges]] cap
+    DriverPath.pairs(e, TriangleDriverMaxEdges) match {
       case Some(es) =>
         val deg = new scala.collection.mutable.LongMap[Long]()
         es.foreach { case (x, y) =>
@@ -632,9 +576,8 @@ object Graphs {
             i += 1
           }
         }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return Seq((es.length.toLong, tri)).toDF("n_edges", "n_triangles")
+        return DriverPath.frame(edges.sparkSession, Seq((es.length.toLong, tri)),
+          "n_edges", "n_triangles")
       case None => ()
     }
     val deg = e.select(col("a").as("node"))
@@ -690,8 +633,7 @@ object Graphs {
     * both directions are derived inside. Returns (node, community).
     */
   def labelPropagation(edges: DataFrame, aCol: String = "a", bCol: String = "b",
-                       rounds: Int = 3,
-                       driverMaxEdges: Long = 1L << 20): DataFrame = {
+                       rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
     val e = CacheRegistry.register(
       edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
@@ -701,12 +643,12 @@ object Graphs {
         .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK))
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): the same
+    // tiny-graph fast path ([[DriverPath]]): the same
     // deterministic (max count, min label) adoption, zero round joins.
     // Every node has in-edges here (e is bidirectional), so adopting
     // from the per-(node, label) census covers every node each round —
     // exactly the distributed groupBy/min_by semantics.
-    collectEdgesIfSmall(e, driverMaxEdges) match {
+    DriverPath.pairs(e, DriverMaxEdges) match {
       case Some(es) =>
         val (nodes, idx) = indexNodes(es)
         val nN = nodes.length
@@ -729,10 +671,7 @@ object Graphs {
           }
           lbl = next
         }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return nodes.indices.map(i => (nodes(i), lbl(i)))
-          .toDF("node", "community")
+        return DriverPath.frame(edges.sparkSession, nodes.toSeq.zip(lbl), "node", "community")
       case None => ()
     }
     val nodes = e.select(col("src").as("node")).distinct()
@@ -773,8 +712,7 @@ object Graphs {
     * Returns the surviving (node, degree).
     */
   def kCore(edges: DataFrame, aCol: String = "a", bCol: String = "b",
-            k: Int = 3, rounds: Int = 5,
-            driverMaxEdges: Long = 1L << 20): DataFrame = {
+            k: Int = 3, rounds: Int = 5): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(rounds >= 1, s"rounds must be positive, got $rounds")
     val sc = edges.sparkSession.sparkContext
@@ -789,9 +727,9 @@ object Graphs {
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK))
-    // tiny-graph fast path (see [[collectEdgesIfSmall]]): same
+    // tiny-graph fast path ([[DriverPath]]): same
     // synchronous peel, zero per-round jobs
-    collectEdgesIfSmall(e0, driverMaxEdges) match {
+    DriverPath.pairs(e0, DriverMaxEdges) match {
       case Some(es0) =>
         var cur = es0
         for (_ <- 1 to rounds) {
@@ -802,11 +740,7 @@ object Graphs {
         }
         val deg = new scala.collection.mutable.LongMap[Long]()
         cur.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1L }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        deg.foreach { case (n, dd) => out += ((n, dd)) }
-        return out.toSeq.toDF("node", "degree")
+        return DriverPath.frame(edges.sparkSession, deg.toSeq, "node", "degree")
       case None => ()
     }
     // checkpoint ids read off each frame's own plan — see hitsMicro

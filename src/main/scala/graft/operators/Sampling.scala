@@ -253,6 +253,9 @@ object Sampling {
       .filter(col("sample_rank") <= maxPerCluster)
   }
 
+  /** Bucket cap of [[dsirWeights]]' driver-side λ table. */
+  private val DsirDriverMaxDims = 1L << 16
+
   /** DSIR importance weights (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling"): score every raw
     * document by how much more likely its hashed-token features are
@@ -286,9 +289,10 @@ object Sampling {
     * doc-keyed. No vocabulary table anywhere (the hashing trick's
     * point). Totals reach the λ table as 1-row broadcasts.
     *
-    * Eagerness: with `dims <= driverMaxDims` (the default) the two
-    * bucket censuses (raw and target) are collected to the driver when
-    * the frame is built, so calling this runs two Spark jobs over the
+    * Eagerness: when the λ table takes the [[DriverPath]] route
+    * (`dims` ≤ [[DsirDriverMaxDims]], the default) the two bucket
+    * censuses (raw and target) are collected to the driver when the
+    * frame is built, so calling this runs two Spark jobs over the
     * whole corpus — and, with `persistFeatures`, fills the `docB`
     * cache — before any action on the result.
     *
@@ -306,8 +310,7 @@ object Sampling {
     */
   def dsirWeights(raw: DataFrame, target: DataFrame, idCol: String,
                   text: Column, dims: Int = 1024,
-                  persistFeatures: Boolean = true,
-                  driverMaxDims: Int = 1 << 16): DataFrame = {
+                  persistFeatures: Boolean = true): DataFrame = {
     require(dims >= 2 && (dims & (dims - 1)) == 0,
       s"dims must be a power of two, got $dims")
     def bucket(t: Column): Column = pmod(xxhash64(t), lit(dims.toLong))
@@ -330,7 +333,10 @@ object Sampling {
     // `dims` rows BY CONSTRUCTION (bucket = hash mod dims), so for the
     // practical dims range the two bucket censuses collect bounded
     // state (the perceptron-delta / BPE-argmax precedent: driver reads
-    // bounded by a declared parameter, never by data). The fixed-point
+    // bounded by a declared parameter, never by data) — passed to the
+    // gate as the row bound, so no count job sizes them. Their plans
+    // run inside the collects, out of the returned frame's sight, so
+    // they are recorded as plan probes first. The fixed-point
     // log2 is [[graft.functions.IntMath.fracLog2Ref]] — the committed
     // Scala REFERENCE the fracLog2Col spec asserts bit-equality
     // against — so both paths are identical by the same contract that
@@ -341,11 +347,13 @@ object Sampling {
     // total aggregates and two crossJoins. Beyond the driver bound —
     // or on any future wide-dims call — the distributed chain runs
     // unchanged.
+    def census(b: DataFrame, probe: String) =
+      DriverPath.pairs(b, DsirDriverMaxDims, rowBound = dims, probe = Some(probe))
     val lam: DataFrame =
-      if (dims <= driverMaxDims) {
-        val rawArr = rawB.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val tgtMap = tgtB.collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      census(rawB, "dsir_census_raw")
+        .flatMap(r => census(tgtB, "dsir_census_tgt").map((r, _))) match {
+      case Some((rawArr, tgtArr)) =>
+        val tgtMap = tgtArr.toMap
         val nrV = rawArr.map(_._2).sum
         val ntV = tgtMap.values.sum
         import graft.functions.IntMath.fracLog2Ref
@@ -354,10 +362,8 @@ object Sampling {
           val lr = fracLog2Ref(cr + 1, nrV + dims)
           (b, lt - lr)
         }
-        val spark = raw.sparkSession
-        import spark.implicits._
-        rows.toDF("__b", "__lam")
-      } else {
+        DriverPath.frame(raw.sparkSession, rows, "__b", "__lam")
+      case None =>
         val nr = rawB.agg(sum("__cr").as("__nr"))
         val nt = tgtB.agg(coalesce(sum("__ct"), lit(0L)).as("__nt"))
         // target-only buckets can never join a raw doc's features, so
@@ -376,7 +382,7 @@ object Sampling {
             "__ar", "__br", "__lr")
           .withColumn("__lam", col("__lt") - col("__lr"))
           .select("__b", "__lam")
-      }
+    }
     docB.join(broadcast(lam), Seq("__b"))
       .groupBy("doc_id")
       .agg(sum("__c").cast("long").as("n_tokens"),

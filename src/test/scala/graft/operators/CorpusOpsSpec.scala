@@ -409,24 +409,6 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("connected components: driver union-find path equals the distributed path") {
-    import spark.implicits._
-    // deterministic pseudo-random graph: 300 edges over ~200 vertices,
-    // long chains + dense clumps + self-contained pairs
-    val rnd = new scala.util.Random(42)
-    val edges = (Seq.tabulate(100)(i => (i.toLong, (i + 1).toLong)) ++ // one long chain
-      Seq.tabulate(100)(_ => { val a = 200 + rnd.nextInt(50); (a.toLong, (200 + rnd.nextInt(50)).toLong) }) ++
-      Seq.tabulate(100)(i => (1000L + 2 * i, 1001L + 2 * i)))            // isolated pairs
-      .filter { case (a, b) => a != b }
-    val pairs = edges.toDF("id_a", "id_b")
-    val viaDriver = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaRounds = Dedup.connectedComponents(pairs, driverMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.operators.CacheRegistry.releaseAll()
-    assert(viaDriver === viaRounds)
-  }
-
   test("ngram contamination flags docs overlapping the benchmark set") {
     val corpus = docs(
       1L -> "alpha beta gamma delta epsilon", // contains benchmark 3-grams
@@ -1530,26 +1512,6 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     val toyW = Sampling.dsirWeights(toy, toy.filter(col("doc_id") === 1L),
       "doc_id", col("text"), dims = 4, persistFeatures = false)
     assert(toyW.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L))
-  }
-
-  test("dsirWeights: driver-side λ path is row-identical to the distributed chain") {
-    // the r16 optimization computes the λ table on the driver with
-    // fracLog2Ref when dims <= driverMaxDims; forcing driverMaxDims = 0
-    // runs the distributed fracLog2Col chain on the SAME inputs — the
-    // two paths must agree bit-for-bit on every column (the same
-    // contract the fracLog2Col-vs-Ref spec asserts at expression level)
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    def rows(driverMaxDims: Int) = {
-      val w = Sampling.dsirWeights(docs, docs.filter(col("lang") === "en"),
-        "doc_id", col("text"), dims = 64, driverMaxDims = driverMaxDims)
-        .orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      graft.operators.CacheRegistry.releaseAll()
-      w.toSeq
-    }
-    val driver = rows(driverMaxDims = 1 << 16)
-    val dist = rows(driverMaxDims = 0)
-    assert(driver.nonEmpty && driver === dist)
   }
 
   test("blocklistFilter: token boundaries, phrases, normalization, overlap counting") {
