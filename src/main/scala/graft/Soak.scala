@@ -391,8 +391,7 @@ object Soak {
               .otherwise(lit("")),
             lit("</head><body><p>"), col("text"),
             lit("</p><script>var x = 1;</script></body></html>")).as("raw"))
-        val pagesP = operators.CacheRegistry.register(
-          pages.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val pagesP = operators.CacheRegistry.persist(pages)
         val nl = lit("\n")
         val robots = spark.range(997).select(
           concat(lit("h"), col("id").cast("string"), lit(".example.org"))
@@ -719,10 +718,9 @@ object Soak {
         // the allocation feeds BOTH the schedule caps and the final
         // slots/rank join: pin the host-count-sized frame so the
         // mining + rank funnel runs once (the q262/q267 discipline)
-        val alloc = operators.CacheRegistry.register(
+        val alloc = operators.CacheRegistry.persist(
           operators.Frontier.allocateBudget(ranks, "host",
-              col("rank_micro"), budget = 200L)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              col("rank_micro"), budget = 200L))
         val delays = spark.range(997)
           .filter(pmod(col("id"), lit(2)) === 0)
           .select(hh(col("id")).as("host"),

@@ -367,10 +367,9 @@ object TextFunctions {
     // persisted: the (id, host) frame feeds both the suffix explode
     // and the final left join — without the cache the source scans
     // twice for a two-column projection
-    val parts = graft.operators.CacheRegistry.register(
+    val parts = graft.operators.CacheRegistry.persist(
       df.select(col(idCol), host.as("host"))
-        .withColumn("__p", split(col("host"), "\\."))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumn("__p", split(col("host"), "\\.")))
     val suffixes = parts
       .select(col(idCol),
         posexplode(transform(sequence(lit(0), size(col("__p")) - 1),

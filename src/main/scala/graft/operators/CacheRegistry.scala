@@ -1,26 +1,40 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle tracker for caches that operators create INTERNALLY —
-  * the LSH shingle projection ([[Dedup.minhashLshPairs]]), the curated
-  * `exact` prefix ([[CurationPipeline.curate]]), and the final
-  * connected-components label checkpoint ([[Dedup.connectedComponents]]).
+/** The one cache policy for operators and query builders, and the
+  * lifecycle tracker for the caches they create INTERNALLY.
   *
-  * Why it exists: those operators return lazy DataFrames, so they
+  * Policy: every internal cache goes through [[persist]], which picks
+  * the storage level (MEMORY_AND_DISK — a cache that outgrows memory
+  * spills instead of recomputing its lineage) and registers the frame
+  * for [[releaseAll]]. No operator exposes a switch to skip or tune
+  * its cache: the cached frame returns the same rows as the uncached
+  * one, so the cache changes cost only.
+  *
+  * Why the registry exists: operators return lazy DataFrames, so they
   * cannot unpersist their own caches — the blocks are still needed
   * when the CALLER finally runs an action. Deferring to Spark's
   * ContextCleaner does not work in a long-lived session: round 5's
   * bench showed q65's unreleased shingle + checkpoint blocks taxing
   * the four queries that ran after it (q34-q38 regressed 1.6-3.8×
   * with their code unchanged). The registry makes the lifecycle
-  * explicit: operators register what they persist, and the driver
-  * mains (Bench, Verify) — or any library caller — call
-  * [[releaseAll]] once the consuming action has completed.
+  * explicit: operators persist through it, and the driver mains
+  * (Bench, Verify) — or any library caller — call [[releaseAll]] once
+  * the consuming action has completed.
+  *
+  * Deliberate exceptions, which persist directly and release their
+  * own blocks:
+  *  - `graft.osm.PlanetDump.run`'s shared frames, scoped to one run
+  *    and unpersisted in its own `finally` (a global [[releaseAll]]
+  *    there would also drop other callers' caches);
+  *  - the method-local edge caches of [[Dedup.connectedComponents]]
+  *    and [[Graphs.bfsDistances]], unpersisted before they return.
   *
   * Two kinds of entries:
-  *  - DataFrames persisted through the catalog cache (`df.persist`) —
-  *    released with `df.unpersist`;
+  *  - DataFrames cached through [[persist]] — released with
+  *    `df.unpersist`;
   *  - raw RDD ids for `localCheckpoint` blocks (which bypass the
   *    catalog cache) — released through
   *    `sparkContext.getPersistentRDDs`. NOTE a localCheckpoint's
@@ -37,8 +51,14 @@ object CacheRegistry {
   private val rdds =
     new java.util.concurrent.ConcurrentLinkedQueue[(org.apache.spark.SparkContext, Int)]()
 
-  /** Track a DataFrame an operator just `persist`ed. Returns it. */
-  def register(df: DataFrame): DataFrame = { dfs.add(df); df }
+  /** Cache `df` at MEMORY_AND_DISK and track it for [[releaseAll]].
+    * Returns the cached frame.
+    */
+  def persist(df: DataFrame): DataFrame = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    dfs.add(cached)
+    cached
+  }
 
   /** Track localCheckpoint block RDDs by id (see class doc caveat). */
   def registerRddIds(sc: org.apache.spark.SparkContext, ids: Iterable[Int]): Unit =

@@ -89,11 +89,10 @@ object CurationPipeline {
     // this call (the returned DataFrame reads it), so the CALLER
     // releases it — CacheRegistry.releaseAll() after the action.
     val byHash = org.apache.spark.sql.expressions.Window.partitionBy(md5(col("text")))
-    val exact = CacheRegistry.register(
+    val exact = CacheRegistry.persist(
       scored
         .withColumn("__keep", min("doc_id").over(byHash))
-        .filter(col("doc_id") === col("__keep")).drop("__keep")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(col("doc_id") === col("__keep")).drop("__keep"))
     // near-dedup: pair graph -> clusters -> drop every non-keeper
     val pairs = Dedup.minhashLshPairs(exact, "doc_id", col("text"),
       minJaccardPpm = cfg.nearDupJaccardPpm)
@@ -135,18 +134,16 @@ object CurationPipeline {
         Dedup.lineDedup(intraClean, "doc_id", col("text"), m, cfg.lineSep)
           .select(col("doc_id"), col("clean_text").as("text"))
     }
-    val scoredAll = CacheRegistry.register(lineClean
-      .withColumn("quality_milli", qualityScoreMilli(col("text"), cfg.stopwords))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val scoredAll = CacheRegistry.persist(lineClean
+      .withColumn("quality_milli", qualityScoreMilli(col("text"), cfg.stopwords)))
     val lowQ = scoredAll.filter(col("quality_milli") < cfg.minQualityMilli)
       .select(col("doc_id"), lit("quality").as("stage"))
     val scored = scoredAll.filter(col("quality_milli") >= cfg.minQualityMilli)
     val byHash = org.apache.spark.sql.expressions.Window.partitionBy(md5(col("text")))
-    val exact = CacheRegistry.register(
+    val exact = CacheRegistry.persist(
       scored
         .withColumn("__keep", min("doc_id").over(byHash))
-        .filter(col("doc_id") === col("__keep")).drop("__keep")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(col("doc_id") === col("__keep")).drop("__keep"))
     val exactDup = scored.join(exact.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), lit("exact_dup").as("stage"))
     val pairs = Dedup.minhashLshPairs(exact, "doc_id", col("text"),

@@ -45,39 +45,27 @@ object Dedup {
     * corpus it is every twice-occurring line — billions of rows — so
     * the anti-join is a SHUFFLE join by default and AQE converts it
     * to broadcast at runtime only when the set's measured size
-    * actually fits. `broadcastHotSet = true` forces the broadcast
-    * hint for callers who KNOW the set is tiny (high threshold,
-    * bounded domain) and want to skip the corpus-side shuffle; the
-    * per-doc ordered reassembly on doc_id shuffles either way. The
-    * 64-bit hash admits a ~2^-64 per-pair collision (an innocent line
-    * counted with a hot one) — the standard production trade.
+    * actually fits; the per-doc ordered reassembly on doc_id shuffles
+    * either way. The 64-bit hash admits a ~2^-64 per-pair collision
+    * (an innocent line counted with a hot one) — the standard
+    * production trade.
     *
-    * `persistLines = true` (default) caches the exploded
-    * (doc_id, pos, line, hash) projection under the [[CacheRegistry]]
-    * lifecycle: it feeds the census AND the anti-join side, and
-    * without the cache the corpus text is re-read and re-split twice.
-    * The cache is corpus-scale — callers whose storage budget cannot
-    * hold it pass false and take the second scan instead.
+    * The exploded (doc_id, pos, line, hash) projection is cached
+    * through [[CacheRegistry.persist]]: it feeds the census AND the
+    * anti-join side, and without the cache the corpus text is re-read
+    * and re-split twice.
     */
   def lineDedup(df: DataFrame, idCol: String, text: Column,
-                minOccurrences: Long = 2, sep: String = "\n",
-                broadcastHotSet: Boolean = false,
-                persistLines: Boolean = true): DataFrame = {
+                minOccurrences: Long = 2, sep: String = "\n"): DataFrame = {
     require(minOccurrences >= 2, s"minOccurrences must be >= 2, got $minOccurrences")
-    val linesRaw = df
+    val lines = CacheRegistry.persist(df
       .select(col(idCol).as("doc_id"),
         posexplode(split(text, java.util.regex.Pattern.quote(sep))))
       .withColumnRenamed("pos", "__pos").withColumnRenamed("col", "__line")
-      .withColumn("__lh", xxhash64(col("__line")))
-    val lines =
-      if (persistLines)
-        CacheRegistry.register(linesRaw
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else linesRaw
+      .withColumn("__lh", xxhash64(col("__line"))))
     val hot = lines.groupBy("__lh").count()
       .filter(col("count") >= minOccurrences).select("__lh")
-    val hotSide = if (broadcastHotSet) broadcast(hot) else hot
-    val kept = lines.join(hotSide, Seq("__lh"), "left_anti")
+    val kept = lines.join(hot, Seq("__lh"), "left_anti")
     val perDoc = kept.groupBy("doc_id").agg(
       count(lit(1)).as("n_kept"),
       concat_ws(sep, transform(
@@ -151,22 +139,19 @@ object Dedup {
     * is per unique pair, not per bucket collision.
     *
     * The plan references the shingled corpus three times (min-hash
-    * aggregate + both sides of the verify join); `persistShingles`
-    * (default on) caches the shingled projection MEMORY_AND_DISK so
-    * the shingle expression runs one corpus scan, not three — at
-    * 100 TB that difference dominates the operator. The cache is
-    * registered with [[CacheRegistry]] — call
+    * aggregate + both sides of the verify join), so the shingled
+    * projection is cached ([[CacheRegistry.persist]]) and the shingle
+    * expression runs one corpus scan, not three — at 100 TB that
+    * difference dominates the operator. Call
     * `CacheRegistry.releaseAll()` once the consuming action completes
     * (Bench/Verify do this per query; round 5 measured unreleased
-    * shingle blocks taxing unrelated queries 1.6-3.8×). Pass `false`
-    * if the caller already persists/checkpoints the shingled input.
+    * shingle blocks taxing unrelated queries 1.6-3.8×).
     */
   def minhashLshPairs(df: DataFrame, idCol: String, text: Column,
                       bands: Int = 16, rows: Int = 4, n: Int = 3,
                       minJaccardPpm: Long = 500000L,
-                      maxBucket: Int = 4096,
-                      persistShingles: Boolean = true): DataFrame = {
-    val docs = shingled(df, idCol, text, n, persistShingles)
+                      maxBucket: Int = 4096): DataFrame = {
+    val docs = shingled(df, idCol, text, n)
     bandJoinVerify(docs, xxBanded(docs, bands, rows), bands, minJaccardPpm, maxBucket)
   }
 
@@ -219,9 +204,8 @@ object Dedup {
   def minhashLshPairsMd5(df: DataFrame, idCol: String, text: Column,
                          bands: Int = 8, rows: Int = 2, n: Int = 3,
                          minJaccardPpm: Long = 0L,
-                         maxBucket: Int = 4096,
-                         persistShingles: Boolean = true): DataFrame = {
-    val docs = shingled(df, idCol, text, n, persistShingles)
+                         maxBucket: Int = 4096): DataFrame = {
+    val docs = shingled(df, idCol, text, n)
     bandJoinVerify(docs, md5Banded(docs, bands, rows), bands, minJaccardPpm, maxBucket)
   }
 
@@ -262,10 +246,9 @@ object Dedup {
                             idCol: String, text: Column,
                             bands: Int = 16, rows: Int = 4, n: Int = 3,
                             minJaccardPpm: Long = 500000L,
-                            maxBucket: Int = 4096,
-                            persistShingles: Boolean = true): DataFrame = {
-    val docsI = shingled(incoming, idCol, text, n, persistShingles)
-    val docsE = shingled(existing, idCol, text, n, persistShingles)
+                            maxBucket: Int = 4096): DataFrame = {
+    val docsI = shingled(incoming, idCol, text, n)
+    val docsE = shingled(existing, idCol, text, n)
     bandJoinVerifyAcross(docsI, xxBanded(docsI, bands, rows),
       docsE, xxBanded(docsE, bands, rows), bands, minJaccardPpm, maxBucket)
   }
@@ -282,9 +265,8 @@ object Dedup {
     * (bands, rows, n, seed-family) identity).
     */
   def bandedSignatures(df: DataFrame, idCol: String, text: Column,
-                       bands: Int = 16, rows: Int = 4, n: Int = 3,
-                       persistShingles: Boolean = true): DataFrame =
-    xxBanded(shingled(df, idCol, text, n, persistShingles), bands, rows)
+                       bands: Int = 16, rows: Int = 4, n: Int = 3): DataFrame =
+    xxBanded(shingled(df, idCol, text, n), bands, rows)
 
   /** [[minhashLshPairsAcross]] with the EXISTING side's signatures
     * read from a prior [[bandedSignatures]] store instead of
@@ -299,7 +281,6 @@ object Dedup {
                                   bands: Int = 16, rows: Int = 4, n: Int = 3,
                                   minJaccardPpm: Long = 500000L,
                                   maxBucket: Int = 4096,
-                                  persistShingles: Boolean = true,
                                   incomingSignatures: Option[DataFrame] = None): DataFrame = {
     def checkSigShape(sigs: DataFrame, which: String): Unit =
       require(sigs.columns.toSet ==
@@ -309,33 +290,32 @@ object Dedup {
     checkSigShape(existingSignatures, "existingSignatures")
     incomingSignatures.foreach(checkSigShape(_, "incomingSignatures"))
     require(maxBucket >= 1, s"maxBucket must be positive, got $maxBucket")
-    val docsI = shingled(incoming, idCol, text, n, persistShingles)
+    val docsI = shingled(incoming, idCol, text, n)
     // incomingSignatures: a caller that ALSO needs the incoming side's
     // signatures (the incremental-dedup trigger stores survivors')
     // passes its [[bandedSignatures]] frame here so the min-hash
     // aggregate over the batch runs ONCE, not once per consumer —
     // must be built with the same (bands, rows, n) identity
-    val bi = explodeBanded(persistedSignatures(
-      incomingSignatures.getOrElse(xxBanded(docsI, bands, rows))), bands)
-    val be = explodeBanded(persistedSignatures(existingSignatures), bands)
+    val bi = explodeBanded(
+      incomingSignatures.getOrElse(xxBanded(docsI, bands, rows)), bands)
+    val be = explodeBanded(existingSignatures, bands)
     val hot = bi.select("band", "bucket").union(be.select("band", "bucket"))
       .groupBy("band", "bucket").count()
       .filter(col("count") > maxBucket).select("band", "bucket")
     // candidates feed BOTH the existing-side prune and the verify —
     // persist so the band join runs once (CacheRegistry lifecycle)
-    val candidates = CacheRegistry.register(
+    val candidates = CacheRegistry.persist(
       bi.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
         .select(col("band"), col("bucket"), col("doc_id").as("inc_id"))
         .join(be.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
           .select(col("band"), col("bucket"), col("doc_id").as("ex_id")),
           Seq("band", "bucket"))
-        .select("inc_id", "ex_id").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("inc_id", "ex_id").distinct())
     // only the surfaced existing docs are ever re-shingled: the verify
     // side semi-joins the candidate ex_ids BEFORE the text explode
     val exNeeded = existing.join(
       candidates.select(col("ex_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
-    val docsE = shingled(exNeeded, idCol, text, n, persistShingles)
+    val docsE = shingled(exNeeded, idCol, text, n)
     jaccardVerify(candidates, docsI, docsE, "inc_id", "ex_id", minJaccardPpm)
   }
 
@@ -346,26 +326,19 @@ object Dedup {
                                idCol: String, text: Column,
                                bands: Int = 8, rows: Int = 2, n: Int = 3,
                                minJaccardPpm: Long = 0L,
-                               maxBucket: Int = 4096,
-                               persistShingles: Boolean = true): DataFrame = {
-    val docsI = shingled(incoming, idCol, text, n, persistShingles)
-    val docsE = shingled(existing, idCol, text, n, persistShingles)
+                               maxBucket: Int = 4096): DataFrame = {
+    val docsI = shingled(incoming, idCol, text, n)
+    val docsE = shingled(existing, idCol, text, n)
     bandJoinVerifyAcross(docsI, md5Banded(docsI, bands, rows),
       docsE, md5Banded(docsE, bands, rows), bands, minJaccardPpm, maxBucket)
   }
 
   /** The (doc_id, sh) shingled projection both LSH variants fan out
-    * from, optionally cached so its three consumers (min-hash agg +
-    * both sides of the verify join) share one corpus scan.
+    * from, cached so its three consumers (min-hash agg + both sides of
+    * the verify join) share one corpus scan.
     */
-  private def shingled(df: DataFrame, idCol: String, text: Column, n: Int,
-                       persist: Boolean): DataFrame = {
-    val docs = df.select(col(idCol).as("doc_id"), shingles(text, n).as("sh"))
-    if (persist)
-      CacheRegistry.register(
-        docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else docs
-  }
+  private def shingled(df: DataFrame, idCol: String, text: Column, n: Int): DataFrame =
+    CacheRegistry.persist(df.select(col(idCol).as("doc_id"), shingles(text, n).as("sh")))
 
   /** Shared LSH tail: explode band buckets, equi-join on (band, bucket),
     * dedup candidate pairs, then verify each candidate ONCE with exact
@@ -385,7 +358,7 @@ object Dedup {
   private def bandJoinVerify(docs: DataFrame, bucketed: DataFrame, bands: Int,
                              minJaccardPpm: Long, maxBucket: Int): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be positive, got $maxBucket")
-    val allBanded = explodeBanded(persistedSignatures(bucketed), bands)
+    val allBanded = explodeBanded(bucketed, bands)
     val hot = allBanded.groupBy("band", "bucket").count()
       .filter(col("count") > maxBucket).select("band", "bucket")
     val banded = allBanded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
@@ -408,8 +381,8 @@ object Dedup {
                                    bands: Int, minJaccardPpm: Long,
                                    maxBucket: Int): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be positive, got $maxBucket")
-    val bi = explodeBanded(persistedSignatures(bucketedInc), bands)
-    val be = explodeBanded(persistedSignatures(bucketedEx), bands)
+    val bi = explodeBanded(bucketedInc, bands)
+    val be = explodeBanded(bucketedEx, bands)
     val hot = bi.select("band", "bucket").union(be.select("band", "bucket"))
       .groupBy("band", "bucket").count()
       .filter(col("count") > maxBucket).select("band", "bucket")
@@ -422,23 +395,19 @@ object Dedup {
     jaccardVerify(candidates, docsInc, docsEx, "inc_id", "ex_id", minJaccardPpm)
   }
 
-  /** One row per (doc, band): (doc_id, band, bucket). */
+  /** One row per (doc, band): (doc_id, band, bucket). The
+    * banded-signature input (one narrow row per doc) is referenced
+    * three times downstream — hot-bucket census plus both join sides —
+    * and computing it means re-running the full min-hash aggregate
+    * over every shingle. It is cached ([[CacheRegistry.persist]],
+    * caller releases after its action) so the aggregate runs once per
+    * corpus scan, not three times.
+    */
   private def explodeBanded(bucketed: DataFrame, bands: Int): DataFrame =
-    bucketed
+    CacheRegistry.persist(bucketed)
       .select(col("doc_id"),
         posexplode(array((0 until bands).map(bnd => col(s"bk$bnd")): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-
-  /** The banded-signature projection (one narrow row per doc) is
-    * referenced three times downstream — hot-bucket census plus both
-    * join sides — and computing it means re-running the full min-hash
-    * aggregate over every shingle. Persist it (registered with
-    * [[CacheRegistry]], caller releases after its action) so the
-    * aggregate runs once per corpus scan, not three times.
-    */
-  private def persistedSignatures(bucketed: DataFrame): DataFrame =
-    CacheRegistry.register(
-      bucketed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Exact n-gram Jaccard over a candidate pair set: one shingle-array
     * join per side, score in ppm, threshold filter.
@@ -469,9 +438,8 @@ object Dedup {
     // PERSIST the exploded shingle projection ([[CacheRegistry]]
     // lifecycle): it feeds both self-join sides AND the per-doc size
     // census — three corpus scans without the cache.
-    val sh = CacheRegistry.register(
-      df.select(col(idCol).as("doc_id"), explode(shingles(text, n)).as("g"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sh = CacheRegistry.persist(
+      df.select(col(idCol).as("doc_id"), explode(shingles(text, n)).as("g")))
     val pairs = sh.as("a").join(sh.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
@@ -515,12 +483,11 @@ object Dedup {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     val shAll = df.select(col(idCol).as("doc_id"), explode(shingles(text, n)).as("g"))
       .distinct()
-    val sh = CacheRegistry.register(
+    val sh = CacheRegistry.persist(
       shAll.join(broadcast(
           shAll.groupBy("g").agg(count(lit(1)).as("__df"))
             .filter(col("__df") > maxDf).select("g")),
-          Seq("g"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          Seq("g"), "left_anti"))
     // self-join: no smaller side to broadcast at any scale — shuffled
     // hash parallelizes the build (the q165 measurement); maxDf bounds
     // per-shingle build state
@@ -603,12 +570,11 @@ object Dedup {
     * prefix of a large doc at t=0.9 is ~10% of its tokens, all rare.
     */
   def jaccardPrefixJoin(df: DataFrame, idCol: String, text: Column,
-                        n: Int = 3, minJaccardPpm: Long = 300000L,
-                        persistShingles: Boolean = true): DataFrame = {
+                        n: Int = 3, minJaccardPpm: Long = 300000L): DataFrame = {
     require(minJaccardPpm >= 1 && minJaccardPpm <= 1000000L,
       s"minJaccardPpm must be in [1, 1000000], got $minJaccardPpm")
     import org.apache.spark.sql.expressions.Window
-    val docs = shingled(df, idCol, text, n, persistShingles)
+    val docs = shingled(df, idCol, text, n)
     val sh = docs.select(col("doc_id"), explode(col("sh")).as("g"))
     val gdf = sh.groupBy("g").agg(count(lit(1)).as("__gdf"))
     val byRarity = Window.partitionBy("doc_id").orderBy(col("__gdf"), col("g"))
@@ -621,11 +587,10 @@ object Dedup {
     // The prefix projection (df-census join + two windows) feeds BOTH
     // sides of the candidate self-join — persist it so that pipeline
     // runs once, not twice (CacheRegistry lifecycle, caller releases).
-    val prefix = CacheRegistry.register(positioned.filter(
+    val prefix = CacheRegistry.persist(positioned.filter(
       col("__pos") <=
         col("__n") - expr(s"(${minJaccardPpm}L * __n + 999999L) div 1000000L")
-          + lit(1L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          + lit(1L)))
     val a = prefix.select(col("g"), col("doc_id").as("id_a"), col("__n").as("__na"))
     val b = prefix.select(col("g"), col("doc_id").as("id_b"), col("__n").as("__nb"))
     val candidates = a.join(b, Seq("g"))
@@ -888,12 +853,11 @@ object Dedup {
       .select(col("doc_id"), signedFp.as("fp"))
     // the block projection feeds the hot census AND both join sides —
     // persist it so the fingerprint eval runs one corpus pass, not three
-    val blocks = CacheRegistry.register(
+    val blocks = CacheRegistry.persist(
       fps.select(col("doc_id"), col("fp"),
         posexplode(array((0 until nBlocks).map(b =>
           expr(s"shiftrightunsigned(fp, ${offsets(b)}) & ${(1L << widths(b)) - 1}")): _*)))
-        .withColumnRenamed("pos", "__bid").withColumnRenamed("col", "__bval")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumnRenamed("pos", "__bid").withColumnRenamed("col", "__bval"))
     val hot = blocks.groupBy("__bid", "__bval").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxDocsPerBlock).select("__bid", "__bval")
     val kept = blocks.join(broadcast(hot), Seq("__bid", "__bval"), "left_anti")
@@ -979,14 +943,12 @@ object Dedup {
     * hash admits a ~2^-64 per-pair collision (an innocent span marked
     * duplicated) — the standard production trade.
     *
-    * `persistGrams` caches the exploded (doc, pos, gramhash) projection
-    * under the [[CacheRegistry]] lifecycle: it feeds the census AND the
-    * mark join; without it the corpus is re-split twice. Corpus-scale —
-    * callers without the storage budget pass false.
+    * The exploded (doc, pos, gramhash) projection is cached through
+    * [[CacheRegistry.persist]]: it feeds the census AND the mark join;
+    * without it the corpus is re-split twice.
     */
   def duplicateSpans(df: DataFrame, idCol: String, text: Column, k: Int = 8,
-                     minOccurrences: Long = 2,
-                     persistGrams: Boolean = true): DataFrame = {
+                     minOccurrences: Long = 2): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(minOccurrences >= 2, s"minOccurrences must be >= 2, got $minOccurrences")
     import org.apache.spark.sql.expressions.Window
@@ -996,17 +958,12 @@ object Dedup {
     // token array through every exploded position row (O(n²) bytes
     // per document); hashes are bit-identical to
     // xxhash64(concat_ws(' ', slice(tokens, pos, k)))
-    val gramsRaw = df
+    val grams = CacheRegistry.persist(df
       .select(col(idCol).as("doc_id"),
         posexplode(graft.plans.PositionedGramHashes
           .positioned_gram_hashes(text, k)))
       .select(col("doc_id"), (col("pos") + 1).as("__start"),
-        col("col").as("__gh"))
-    val grams =
-      if (persistGrams)
-        CacheRegistry.register(gramsRaw
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else gramsRaw
+        col("col").as("__gh")))
     val dup = grams.groupBy("__gh").count()
       .filter(col("count") >= minOccurrences).select("__gh")
     val marked = grams.join(dup, Seq("__gh"), "left_semi")
@@ -1044,9 +1001,8 @@ object Dedup {
     * beyond single-document size.
     */
   def removeDuplicateSpans(df: DataFrame, idCol: String, text: Column,
-                           k: Int = 8, minOccurrences: Long = 2,
-                           persistGrams: Boolean = true): DataFrame = {
-    val spans = duplicateSpans(df, idCol, text, k, minOccurrences, persistGrams)
+                           k: Int = 8, minOccurrences: Long = 2): DataFrame = {
+    val spans = duplicateSpans(df, idCol, text, k, minOccurrences)
       .select(col("doc_id").as("__sdoc"), col("span_start"), col("span_end"))
     val toks = df
       .select(col(idCol).as("doc_id"),
@@ -1126,23 +1082,17 @@ object Dedup {
     * extension cost, which is bounded by the pair's own gram counts.
     */
   def matchedSpans(df: DataFrame, idCol: String, text: Column, k: Int = 8,
-                   minTokens: Int = 16, maxSeedOccurrences: Long = 50,
-                   persistGrams: Boolean = true): DataFrame = {
+                   minTokens: Int = 16, maxSeedOccurrences: Long = 50): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(minTokens >= k, s"minTokens must be >= k, got $minTokens (k=$k)")
     require(maxSeedOccurrences >= 2,
       s"maxSeedOccurrences must be >= 2, got $maxSeedOccurrences")
     import org.apache.spark.sql.expressions.Window
-    val gramsRaw = df
+    val grams = CacheRegistry.persist(df
       .select(col(idCol).as("doc_id"),
         posexplode(graft.plans.PositionedGramHashes
           .positioned_gram_hashes(text, k)))
-      .select(col("doc_id"), (col("pos") + 1).as("__p"), col("col").as("__gh"))
-    val grams =
-      if (persistGrams)
-        CacheRegistry.register(gramsRaw
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else gramsRaw
+      .select(col("doc_id"), (col("pos") + 1).as("__p"), col("col").as("__gh")))
     val seeds = grams.groupBy("__gh").count()
       .filter(col("count") >= 2 && col("count") <= maxSeedOccurrences)
       .select("__gh")
@@ -1228,10 +1178,8 @@ object Dedup {
     // r15: q174's truth funnel re-executed for the overlap join, 267 s
     // of task CPU on the second pass; CacheRegistry lifecycle, caller
     // releases after its action)
-    val t = CacheRegistry.register(truth.select(col(idA), col(idB))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val c = CacheRegistry.register(candidates.select(col(idA), col(idB))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val t = CacheRegistry.persist(truth.select(col(idA), col(idB)))
+    val c = CacheRegistry.persist(candidates.select(col(idA), col(idB)))
     val nT = t.agg(count(lit(1)).as("n_truth"))
     val nC = c.agg(count(lit(1)).as("n_cand"))
     val nB = t.join(c, Seq(idA, idB)).agg(count(lit(1)).as("n_common"))

@@ -183,10 +183,9 @@ object Frontier {
     // both maps below group on it, and canonicalizeUrl is the family's
     // dominant per-row expression (regex + escape-fold) — one cached
     // pass instead of two re-derivations
-    val ch = CacheRegistry.register(chains
+    val ch = CacheRegistry.persist(chains
       .select(canonicalizeUrl(col("url")).as("__ck"),
-        col("url"), col("final_url"), col("outcome"), col("perm_url"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        col("url"), col("final_url"), col("outcome"), col("perm_url")))
     val pch = ch.select(
         col("__ck").as("canon"),
         when(col("outcome") === "exceeded", col("url"))

@@ -94,31 +94,27 @@ object Graphs {
     // every iteration's join reuses it instead of re-shuffling the
     // static edge/node tables 4× (only the rank side, which actually
     // changed, moves per iteration)
-    val e = CacheRegistry.register(
+    val e = CacheRegistry.persist(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("src")))
     // tiny-graph fast path ([[DriverPath]]): the same
     // integer recurrence, zero iterative shuffle rounds
     DriverPath.pairs(e, DriverMaxEdges) match {
       case Some(es) => return driverRank(edges.sparkSession, es, None, iterations, massMicro)
       case None => ()
     }
-    val outdeg = CacheRegistry.register(
-      e.groupBy("src").agg(count(lit(1)).as("__out"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val nodes = CacheRegistry.register(
+    val outdeg = CacheRegistry.persist(
+      e.groupBy("src").agg(count(lit(1)).as("__out")))
+    val nodes = CacheRegistry.persist(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct().repartition(col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .distinct().repartition(col("node")))
     // one-row stats referenced by r0 and every iteration — persist so
     // the count-aggregate subplan runs once, not once per reference
-    val st = CacheRegistry.register(
+    val st = CacheRegistry.persist(
       nodes.agg(count(lit(1)).as("__n"))
         .select(expr(s"$massMicro div __n").as("__r0"))
-        .select(col("__r0"), expr("(15 * __r0) div 100").as("__base"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("__r0"), expr("(15 * __r0) div 100").as("__base")))
     var r = nodes.crossJoin(broadcast(st)).select(col("node"), col("__r0").as("r"))
     for (_ <- 1 to iterations) {
       val inflow = e
@@ -172,40 +168,28 @@ object Graphs {
     * truncates lineage to an RDD scan; production restart-safety
     * would use a reliable checkpoint dir instead.
     *
-    * `checkpointInterval` = how many HALF-STEPS (raw score vectors; an
-    * iteration has two) run between eager checkpoints. Every skipped
-    * checkpoint trades one materialize-and-store job for recompute:
-    * the lazy vector is re-executed once per downstream fork (×2 per
-    * skipped half-step — the 4^k law above), so the un-truncated span
-    * is capped at 3 half-steps (≤8 subtree copies, well under the
-    * measured stringify/OOM point of 8 spans). MEASURED r11 (PERF.md):
-    * interval 2 never wins — a skipped half-step's vector executes
-    * TWICE (once under the max-aggregate broadcast, again inside the
-    * next checkpoint's materialization), i.e. 3 edge joins per
-    * iteration instead of 2, which outweighs the saved node-vector
-    * write at every scale tried: q232 medians 8.4 s (interval 1) vs
-    * 9.2 s (interval 2) at sf0.1, 30× soak medians 27.6 s vs 29.0 s
-    * at 476k nodes, and the 19-node q247 a wash within noise. Hence
-    * the default 1 (checkpoint every half-step); the lever stays for
-    * exotic shapes (e.g. a store-constrained executor where vector
-    * writes are the bottleneck), bounded by the lineage guard.
+    * Every HALF-STEP (raw score vector; an iteration has two) is
+    * checkpointed. Skipping one trades its materialize-and-store job
+    * for recompute, and MEASURED r11 (PERF.md) that never wins: a
+    * skipped half-step's vector executes TWICE (once under the
+    * max-aggregate broadcast, again inside the next checkpoint's
+    * materialization), i.e. 3 edge joins per iteration instead of 2,
+    * which outweighs the saved node-vector write at every scale
+    * tried — q232 medians 8.4 s (every half-step) vs 9.2 s (every
+    * second) at sf0.1, 30× soak medians 27.6 s vs 29.0 s at 476k
+    * nodes, and the 19-node q247 a wash within noise.
     *
     * Returns (node, authority_micro, hub_micro).
     */
   def hitsMicro(edges: DataFrame, srcCol: String = "src",
                 dstCol: String = "dst", iterations: Int = 4,
-                massMicro: Long = 1000000L,
-                checkpointInterval: Int = 1): DataFrame = {
+                massMicro: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
     require(massMicro > 0, s"massMicro must be positive, got $massMicro")
-    require(checkpointInterval >= 1 && checkpointInterval <= 3,
-      s"checkpointInterval must be in [1, 3] (4^k lineage growth per " +
-        s"skipped half-step — see scaladoc), got $checkpointInterval")
-    val e = CacheRegistry.register(
+    val e = CacheRegistry.persist(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("src")))
     // tiny-graph fast path ([[DriverPath]]): the same
     // integer half-steps, zero checkpoint jobs. ma/mh are always > 0:
     // every edge target has an in-edge so rawA ≥ min h > 0 in iter 1,
@@ -234,10 +218,9 @@ object Graphs {
           .toDF("node", "authority_micro", "hub_micro")
       case None => ()
     }
-    val nodes = CacheRegistry.register(
+    val nodes = CacheRegistry.persist(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-        .distinct().repartition(col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .distinct().repartition(col("node")))
     val sc = edges.sparkSession.sparkContext
     // checkpoint-block lifecycle (the connectedComponents pattern):
     // an eager localCheckpoint's blocks ARE its data. A lazy span
@@ -250,29 +233,23 @@ object Graphs {
     // diffing global getPersistentRDDs — a set-diff races against
     // concurrent queries persisting RDDs on the shared context.
     val live = scala.collection.mutable.Queue.empty[Int]
-    var sinceCkpt = 0
-    def maybeCheckpoint(df: DataFrame, force: Boolean): DataFrame = {
-      sinceCkpt += 1
-      if (sinceCkpt < checkpointInterval && !force) df
-      else {
-        sinceCkpt = 0
-        val c = df.localCheckpoint(true)
-        live += PlanShim.checkpointedRddId(c)
-        while (live.size > 2)
-          sc.getPersistentRDDs.get(live.dequeue()).foreach(_.unpersist(false))
-        c
-      }
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      live += PlanShim.checkpointedRddId(c)
+      while (live.size > 2)
+        sc.getPersistentRDDs.get(live.dequeue()).foreach(_.unpersist(false))
+      c
     }
     var h = nodes.select(col("node"), lit(massMicro).as("h"))
     var a = nodes.select(col("node"), lit(0L).as("a")) // replaced in iter 1
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val rawA0 = nodes
         .join(e.join(h.withColumnRenamed("node", "src"), Seq("src"))
           .groupBy(col("dst").as("node")).agg(sum("h").as("__s")),
           Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("__s"), lit(0L)).as("__r"))
       graft.TriggerPlanProbe.recordIter("hits_micro_auth", rawA0)
-      val rawA = maybeCheckpoint(rawA0, force = false)
+      val rawA = checkpoint(rawA0)
       val ma = rawA.agg(max("__r").as("__m"))
       a = rawA.crossJoin(broadcast(ma))
         .select(col("node"), expr(s"($massMicro * __r) div __m").as("a"))
@@ -282,9 +259,9 @@ object Graphs {
           Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("__s"), lit(0L)).as("__r"))
       graft.TriggerPlanProbe.recordIter("hits_micro_hub", rawH0)
-      // the last hub vector is always checkpointed: it backs the
-      // returned frame and bounds the final a⋈h plan
-      val rawH = maybeCheckpoint(rawH0, force = i == iterations)
+      // the last hub vector's checkpoint backs the returned frame and
+      // bounds the final a⋈h plan
+      val rawH = checkpoint(rawH0)
       val mh = rawH.agg(max("__r").as("__m"))
       h = rawH.crossJoin(broadcast(mh))
         .select(col("node"), expr(s"($massMicro * __r) div __m").as("h"))
@@ -318,14 +295,12 @@ object Graphs {
                            massMicro: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
     require(massMicro > 0, s"massMicro must be positive, got $massMicro")
-    val e = CacheRegistry.register(
+    val e = CacheRegistry.persist(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val outdeg = CacheRegistry.register(
-      e.groupBy("src").agg(count(lit(1)).as("__out"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("src")))
+    val outdeg = CacheRegistry.persist(
+      e.groupBy("src").agg(count(lit(1)).as("__out")))
     val sd = seeds.select(col(seedCol).cast("long").as("node"))
       .filter(col("node").isNotNull).distinct()
     // tiny-graph fast path ([[DriverPath]]): the seed set is
@@ -342,18 +317,16 @@ object Graphs {
     // the driver path above declines an empty seed set)
     require(!sd.isEmpty,
       "personalizedPageRank: seeds must contain at least one non-null node id")
-    val nodes = CacheRegistry.register(
+    val nodes = CacheRegistry.persist(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
         .union(sd.select("node"))
         .distinct().repartition(col("node"))
         .join(broadcast(sd.withColumn("__seed", lit(1L))), Seq("node"), "left_outer")
-        .na.fill(0L, Seq("__seed"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val st = CacheRegistry.register(
+        .na.fill(0L, Seq("__seed")))
+    val st = CacheRegistry.persist(
       nodes.agg(sum("__seed").as("__ns"))
         .select(expr(s"$massMicro div __ns").as("__r0"))
-        .select(col("__r0"), expr("(15 * __r0) div 100").as("__base"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("__r0"), expr("(15 * __r0) div 100").as("__base")))
     var r = nodes.crossJoin(broadcast(st))
       .select(col("node"), (col("__seed") * col("__r0")).as("r"))
     for (_ <- 1 to iterations) {
@@ -500,9 +473,8 @@ object Graphs {
                         maxBasketSize: Long = 10000): DataFrame = {
     require(minShared >= 1, s"minShared must be positive, got $minShared")
     require(maxBasketSize >= 2, s"maxBasketSize must be >= 2, got $maxBasketSize")
-    val items = CacheRegistry.register(
-      df.select(col(keyCol).as("k"), col(itemCol).as("i")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val items = CacheRegistry.persist(
+      df.select(col(keyCol).as("k"), col(itemCol).as("i")).distinct())
     val kept = items.join(
       items.groupBy("k").agg(count(lit(1)).as("__n"))
         .filter(col("__n") <= maxBasketSize).select("k"), Seq("k"))
@@ -539,9 +511,8 @@ object Graphs {
     */
   def triangleCount(edges: DataFrame, aCol: String = "a",
                     bCol: String = "b"): DataFrame = {
-    val e = CacheRegistry.register(
-      edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val e = CacheRegistry.persist(
+      edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")))
     // tiny-graph fast path ([[DriverPath]]): the same
     // degree-oriented wedge closure, under the lower
     // [[TriangleDriverMaxEdges]] cap
@@ -585,13 +556,12 @@ object Graphs {
       .groupBy("node").agg(count(lit(1)).as("d"))
     val flip = (col("da") < col("db")) ||
       (col("da") === col("db") && col("a") < col("b"))
-    val o = CacheRegistry.register(
+    val o = CacheRegistry.persist(
       e.join(deg.select(col("node").as("a"), col("d").as("da")), Seq("a"))
         .join(deg.select(col("node").as("b"), col("d").as("db")), Seq("b"))
         .select(when(flip, col("a")).otherwise(col("b")).as("src"),
           when(flip, col("b")).otherwise(col("a")).as("dst"),
-          when(flip, col("db")).otherwise(col("da")).as("dd"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          when(flip, col("db")).otherwise(col("da")).as("dd")))
     val wedges = o.as("o1").join(o.as("o2"),
         col("o1.src") === col("o2.src") &&
           (col("o1.dd") < col("o2.dd") ||
@@ -635,14 +605,13 @@ object Graphs {
   def labelPropagation(edges: DataFrame, aCol: String = "a", bCol: String = "b",
                        rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
-    val e = CacheRegistry.register(
+    val e = CacheRegistry.persist(
       edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
         .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
         .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .distinct())
     // tiny-graph fast path ([[DriverPath]]): the same
     // deterministic (max count, min label) adoption, zero round joins.
     // Every node has in-edges here (e is bidirectional), so adopting
@@ -719,14 +688,13 @@ object Graphs {
     // the bidirectional distinct edge set is consumed twice per round;
     // persist it once (CacheRegistry lifecycle) — the gate's count is
     // also its materialization, replacing the former lazy checkpoint
-    val e0 = CacheRegistry.register(edges
+    val e0 = CacheRegistry.persist(edges
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .distinct())
     // tiny-graph fast path ([[DriverPath]]): same
     // synchronous peel, zero per-round jobs
     DriverPath.pairs(e0, DriverMaxEdges) match {
@@ -784,17 +752,15 @@ object Graphs {
                        minShared: Long = 2, maxBasketSize: Long = 10000,
                        topK: Int = 100): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
-    val links = CacheRegistry.register(
-      df.select(col(basketCol).as("k"), col(itemCol).as("i")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val links = CacheRegistry.persist(
+      df.select(col(basketCol).as("k"), col(itemCol).as("i")).distinct())
     // marginals, N and pairs ALL derive from the capped basket set, so
     // dropping a degenerate basket is one uniform data filter, not a
     // denominators-disagree special case
-    val kept = CacheRegistry.register(
+    val kept = CacheRegistry.persist(
       links.join(
         links.groupBy("k").agg(count(lit(1)).as("__bs"))
-          .filter(col("__bs") <= maxBasketSize).select("k"), Seq("k"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          .filter(col("__bs") <= maxBasketSize).select("k"), Seq("k")))
     val nBaskets = kept.select("k").distinct().agg(count(lit(1)).as("__nb"))
     val itemN = kept.groupBy("i").agg(count(lit(1)).as("__ni"))
     // shuffled-hash for the same reason as cooccurrenceEdges: a
@@ -842,9 +808,8 @@ object Graphs {
     // the distinct projection feeds the degree census and BOTH wedge
     // sides — persist it once ([[CacheRegistry]] lifecycle) instead of
     // recomputing the upstream distinct up to three times
-    val links = CacheRegistry.register(
-      df.select(col(entityCol).as("ent"), col(unitCol).as("u")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val links = CacheRegistry.persist(
+      df.select(col(entityCol).as("ent"), col(unitCol).as("u")).distinct())
     val deg = links.groupBy("u").agg(count(lit(1)).as("__deg"))
       .filter(col("__deg") <= maxUnitDegree)
     val kept = links.join(deg, Seq("u"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Corpus-trained language-model scoring — the CCNet/Gopher-style
   * "perplexity filter" of an LLM curation pipeline: train a smoothed
@@ -51,8 +50,7 @@ object LanguageModel {
     * Returns (doc_id, n_bigrams, surprisal_bits, avg_millibits) with
     * avg_millibits = ⌊1000·bits / n_bigrams⌋.
     */
-  def bigramSurprisal(df: DataFrame, idCol: String, text: Column,
-                      persistCounts: Boolean = true): DataFrame = {
+  def bigramSurprisal(df: DataFrame, idCol: String, text: Column): DataFrame = {
     val toks = graft.functions.TextFunctions.tokens(text)
     val bi = df
       .select(col(idCol).as("doc_id"), toks.as("__a"))
@@ -63,12 +61,8 @@ object LanguageModel {
         explode(arrays_zip(col("__h"), col("__t"))).as("__p"))
       .select(col("doc_id"), col("__p.__h").as("__w1"),
         col("__p.__t").as("__w2"))
-    val bcRaw = bi.groupBy("doc_id", "__w1", "__w2")
-      .agg(count(lit(1)).as("__c"))
-    val bc =
-      if (persistCounts)
-        CacheRegistry.register(bcRaw.persist(StorageLevel.MEMORY_AND_DISK))
-      else bcRaw
+    val bc = CacheRegistry.persist(bi.groupBy("doc_id", "__w1", "__w2")
+      .agg(count(lit(1)).as("__c")))
     val c12 = bc.groupBy("__w1", "__w2").agg(sum("__c").as("__c12"))
     val c1 = bc.groupBy("__w1").agg(sum("__c").as("__c1"))
     val v = c1.agg(count(lit(1)).as("__v"))
@@ -118,8 +112,7 @@ object LanguageModel {
     * materializes. Returns (w1, w2, n_pair, pmi_bits).
     */
   def pmiCollocations(df: DataFrame, text: Column,
-                      minPairCount: Long = 5, topK: Int = 100,
-                      persistCounts: Boolean = true): DataFrame = {
+                      minPairCount: Long = 5, topK: Int = 100): DataFrame = {
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val toks = graft.functions.TextFunctions.tokens(text)
@@ -130,11 +123,7 @@ object LanguageModel {
       .withColumn("__t", slice(col("__a"), lit(2), size(col("__a")) - 1))
       .select(explode(arrays_zip(col("__h"), col("__t"))).as("__p"))
       .select(col("__p.__h").as("__w1"), col("__p.__t").as("__w2"))
-    val c12Raw = bi.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12"))
-    val c12 =
-      if (persistCounts)
-        CacheRegistry.register(c12Raw.persist(StorageLevel.MEMORY_AND_DISK))
-      else c12Raw
+    val c12 = CacheRegistry.persist(bi.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12")))
     val c1 = c12.groupBy("__w1").agg(sum("__c12").as("__c1"))
     val c2 = c12.groupBy("__w2").agg(sum("__c12").as("__c2"))
     val n = c12.agg(sum("__c12").as("__n"))
@@ -224,13 +213,12 @@ object LanguageModel {
     require(epochs >= 1, s"epochs must be positive, got $epochs")
     val labeled = df.select(col(idCol).as("__id"),
       when(positive, 1L).otherwise(-1L).as("__y"), text.as("__t"))
-    val feats = CacheRegistry.register(labeled
+    val feats = CacheRegistry.persist(labeled
       .select(col("__id"), col("__y"),
         explode(graft.functions.TextFunctions.tokens(col("__t"))).as("__w"))
       .select(col("__id"), col("__y"),
         pmod(xxhash64(col("__w")), lit(dims.toLong)).as("__b"))
-      .groupBy("__id", "__y", "__b").agg(count(lit(1)).as("__c"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .groupBy("__id", "__y", "__b").agg(count(lit(1)).as("__c")))
     val w = new Array[Long](dims)
     def wLit = array(w.toIndexedSeq.map(lit): _*)
     def scores = feats
@@ -258,16 +246,11 @@ object LanguageModel {
   }
 
   def naiveBayesClassify(train: DataFrame, classCol: Column, trainText: Column,
-                         test: DataFrame, idCol: String, testText: Column,
-                         persistModel: Boolean = true): DataFrame = {
+                         test: DataFrame, idCol: String, testText: Column): DataFrame = {
     val toks = graft.functions.TextFunctions.tokens _
-    val cwRaw = train
+    val cw = CacheRegistry.persist(train
       .select(classCol.as("__c"), explode(toks(trainText)).as("__w"))
-      .groupBy("__c", "__w").agg(count(lit(1)).as("__cw"))
-    val cw =
-      if (persistModel)
-        CacheRegistry.register(cwRaw.persist(StorageLevel.MEMORY_AND_DISK))
-      else cwRaw
+      .groupBy("__c", "__w").agg(count(lit(1)).as("__cw")))
     val totc = cw.groupBy("__c").agg(sum("__cw").as("__tot"))
     val vocab = cw.select("__w").distinct()
     val v = vocab.agg(count(lit(1)).as("__v"))

@@ -210,15 +210,14 @@ object Multimodal {
     // the hashed-chunk projection feeds the hot census AND both join
     // sides — persist it (CacheRegistry lifecycle) so the blob decode
     // and hashing run one corpus pass, not three
-    val chunks = CacheRegistry.register(blobs
+    val chunks = CacheRegistry.persist(blobs
       .select(col(idCol).as("__id"), col(blobCol).as("__b"), nChunks.as("__nc"))
       .filter(col("__nc") > 0)
       .select(col("__id"), col("__nc"),
         posexplode(transform(sequence(lit(0L), col("__nc") - 1),
           i => xxhash64(substring(col("__b"),
             (i * chunkBytes + 1).cast("int"), lit(chunkBytes))))))
-      .select(col("__id"), col("__nc"), col("pos").as("__idx"), col("col").as("__h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col("__id"), col("__nc"), col("pos").as("__idx"), col("col").as("__h")))
     val hot = chunks.groupBy("__idx", "__h").agg(count(lit(1)).as("__docs"))
       .filter(col("__docs") > maxDocsPerChunk)
       .select("__idx", "__h")

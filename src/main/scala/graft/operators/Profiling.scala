@@ -168,10 +168,9 @@ object Profiling {
   def vocabGrowth(df: DataFrame, idCol: String, text: Column,
                   bucketTokens: Long = 1000L): DataFrame = {
     require(bucketTokens >= 1, s"bucketTokens must be positive, got $bucketTokens")
-    val toks = CacheRegistry.register(
+    val toks = CacheRegistry.persist(
       df.select(col(idCol).as("__id"),
-        graft.functions.TextFunctions.tokens(text).as("__t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        graft.functions.TextFunctions.tokens(text).as("__t")))
     val counts = toks.select(col("__id"), size(col("__t")).cast("long").as("__n"))
     val offs = Relational.globalPrefixSum(counts, "__id", "__n", "__off")
     val first = toks
@@ -292,9 +291,8 @@ object Profiling {
     * (n_rows, n_agree, agree_milli, kappa_milli).
     */
   def cohenKappa(df: DataFrame, predA: Column, predB: Column): DataFrame = {
-    val base = CacheRegistry.register(
-      df.select(predA.as("__a"), predB.as("__b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val base = CacheRegistry.persist(
+      df.select(predA.as("__a"), predB.as("__b")))
     val totals = base.agg(count(lit(1)).as("__n"),
       sum(when(col("__a") === col("__b"), 1L).otherwise(0L)).as("__agree"))
     val ca = base.groupBy(col("__a").as("__k")).agg(count(lit(1)).as("__ca"))
@@ -439,9 +437,8 @@ object Profiling {
   def groupSetOverlap(df: DataFrame, groupCol: Column, itemCol: Column): DataFrame = {
     // feeds the size census and both intersection sides — one distinct,
     // cached under the CacheRegistry lifecycle
-    val links = CacheRegistry.register(
-      df.select(groupCol.as("g"), itemCol.as("i")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val links = CacheRegistry.persist(
+      df.select(groupCol.as("g"), itemCol.as("i")).distinct())
     val sizes = links.groupBy("g").agg(count(lit(1)).as("n"))
     val inter = links.as("x").join(links.as("y"),
         col("x.i") === col("y.i") && col("x.g") < col("y.g"))

@@ -41,10 +41,9 @@ object Relational {
     */
   def globalPrefixSum(df: DataFrame, orderCol: String, valueCol: String,
                       offsetName: String = "offset"): DataFrame = {
-    val ranged = CacheRegistry.register(
+    val ranged = CacheRegistry.persist(
       df.repartitionByRange(col(orderCol))
-        .withColumn("__pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumn("__pid", spark_partition_id()))
     val wq = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bases = ranged.groupBy("__pid")

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Corpus-level lexical retrieval — the classic IR scoring path a
   * training-data pipeline uses for targeted corpus slicing (pulling
@@ -41,30 +40,23 @@ object Retrieval {
     * subset (filter first, then aggregate — the subset is tiny). The
     * per-doc length table joins the scored subset on doc_id; the
     * query-term df table is broadcast-sized by construction. The final
-    * top-k is TakeOrdered (no global sort). `persistCounts` caches the
-    * (doc, term) projection under the [[CacheRegistry]] lifecycle
-    * because two branches (dl and tf) consume it; callers whose
-    * storage budget cannot hold the distinct (doc, term) set pass
-    * false and take a second explode instead.
+    * top-k is TakeOrdered (no global sort). The (doc, term) projection
+    * is cached through [[CacheRegistry.persist]] because two branches
+    * (dl and tf) consume it.
     *
     * Returns (doc_id, bm25_milli) — the k highest-scoring docs that
     * contain at least one query term, score-descending, doc_id
     * ascending on ties.
     */
   def bm25TopK(df: DataFrame, idCol: String, text: Column,
-               queryTerms: Seq[String], k: Int,
-               persistCounts: Boolean = true): DataFrame = {
+               queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(k >= 1, s"k must be positive, got $k")
-    val cntRaw = df
+    val cnt = CacheRegistry.persist(df
       .select(col(idCol).as("doc_id"),
         explode(graft.functions.TextFunctions.tokens(text)).as("__term"))
       .groupBy(col("doc_id"), col("__term"))
-      .agg(count(lit(1)).as("__tf"))
-    val cnt =
-      if (persistCounts)
-        CacheRegistry.register(cntRaw.persist(StorageLevel.MEMORY_AND_DISK))
-      else cntRaw
+      .agg(count(lit(1)).as("__tf")))
     val dl = cnt.groupBy("doc_id").agg(sum("__tf").as("__dl"))
     // One-row corpus stats (N over ALL docs incl. token-less; Σdl over
     // the token counts), rolled into a single broadcast row — the
@@ -128,16 +120,11 @@ object Retrieval {
     * build itself has no driver state.
     */
   def invertedIndex(df: DataFrame, idCol: String, units: Column,
-                    minDf: Long = 1, maxDf: Long = Long.MaxValue,
-                    persistTerms: Boolean = true): DataFrame = {
+                    minDf: Long = 1, maxDf: Long = Long.MaxValue): DataFrame = {
     require(minDf >= 1 && maxDf >= minDf, s"need 1 <= minDf <= maxDf, got [$minDf,$maxDf]")
-    val termsRaw = df
+    val terms = CacheRegistry.persist(df
       .select(col(idCol).as("doc_id"), explode(units).as("term"))
-      .distinct()
-    val terms =
-      if (persistTerms)
-        CacheRegistry.register(termsRaw.persist(StorageLevel.MEMORY_AND_DISK))
-      else termsRaw
+      .distinct())
     val inRange = terms.groupBy("term").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf && col("df") <= maxDf)
     terms.join(inRange, Seq("term"), "left_semi")

@@ -193,10 +193,9 @@ object Sampling {
         .when(s0 * s0 > col(sizeCol), s0 - 1)
         .otherwise(s0)
     }
-    val weighted = CacheRegistry.register(
+    val weighted = CacheRegistry.persist(
       perSource
-        .select(col(sourceCol).as("source"), col(sizeCol), isqrt.as("weight"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col(sourceCol).as("source"), col(sizeCol), isqrt.as("weight")))
     val total = weighted.agg(sum("weight").as("__wtot"))
     val quotas = weighted.crossJoin(broadcast(total))
       // `div`, not `/`: Spark's / on BIGINT is fractional (double) and
@@ -281,8 +280,8 @@ object Sampling {
     * The score ranks and filters; it is not a calibrated likelihood.
     *
     * Scale shape: ONE explode of the raw corpus into a map-side-
-    * combinable (doc, bucket) count, persisted under [[CacheRegistry]]
-    * when `persistFeatures` (it feeds the raw bucket census AND the
+    * combinable (doc, bucket) count, cached through
+    * [[CacheRegistry.persist]] (it feeds the raw bucket census AND the
     * score join — without it the corpus tokenizes twice); the target —
     * typically a small quality corpus — explodes separately; the λ
     * table is ≤ `dims` rows and broadcasts; the final aggregate is
@@ -293,8 +292,8 @@ object Sampling {
     * (`dims` ≤ [[DsirDriverMaxDims]], the default) the two bucket
     * censuses (raw and target) are collected to the driver when the
     * frame is built, so calling this runs two Spark jobs over the
-    * whole corpus — and, with `persistFeatures`, fills the `docB`
-    * cache — before any action on the result.
+    * whole corpus — and fills the `docB` cache — before any action
+    * on the result.
     *
     * Returns (doc_id, n_tokens, logw_1024ths, avg_millibits) —
     * logw_1024ths is Σ c_b·λ_b in 2^-10 bits, avg_millibits =
@@ -309,21 +308,15 @@ object Sampling {
     * into [[weightedByHash]] for sampled selection.
     */
   def dsirWeights(raw: DataFrame, target: DataFrame, idCol: String,
-                  text: Column, dims: Int = 1024,
-                  persistFeatures: Boolean = true): DataFrame = {
+                  text: Column, dims: Int = 1024): DataFrame = {
     require(dims >= 2 && (dims & (dims - 1)) == 0,
       s"dims must be a power of two, got $dims")
     def bucket(t: Column): Column = pmod(xxhash64(t), lit(dims.toLong))
-    val docBRaw = raw
+    val docB = CacheRegistry.persist(raw
       .select(col(idCol).as("doc_id"),
         explode(graft.functions.TextFunctions.tokens(text)).as("__t"))
       .select(col("doc_id"), bucket(col("__t")).as("__b"))
-      .groupBy("doc_id", "__b").agg(count(lit(1)).as("__c"))
-    val docB =
-      if (persistFeatures)
-        CacheRegistry.register(docBRaw
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else docBRaw
+      .groupBy("doc_id", "__b").agg(count(lit(1)).as("__c")))
     val rawB = docB.groupBy("__b").agg(sum("__c").as("__cr"))
     val tgtB = target
       .select(explode(graft.functions.TextFunctions.tokens(text)).as("__t"))

@@ -98,13 +98,12 @@ object Similarity {
   def marginMining(src: DataFrame, srcId: String, srcVec: String,
                    tgt: DataFrame, tgtId: String, tgtVec: String,
                    k: Int = 4, marginMilliMin: Long = 1000L): DataFrame = {
-    val pairs = CacheRegistry.register(
+    val pairs = CacheRegistry.persist(
       src.select(col(srcId).as("src_id"), col(srcVec).as("__a"))
         .crossJoin(tgt.select(col(tgtId).as("tgt_id"), col(tgtVec).as("__b")))
         .withColumn("cosine_ppm",
           round(cosine(col("__a"), col("__b")) * 1e6).cast("long"))
-        .select("src_id", "tgt_id", "cosine_ppm")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("src_id", "tgt_id", "cosine_ppm"))
     val ws = Window.partitionBy("src_id")
       .orderBy(col("cosine_ppm").desc, col("tgt_id"))
     val wt = Window.partitionBy("tgt_id")
@@ -208,12 +207,11 @@ object Similarity {
     // (the table's expensive bytes) is re-scanned and re-signed three
     // times per query. The cached rows are (vid, band, bucket) — ~20 B
     // each, orders of magnitude smaller than the vectors.
-    val banded = CacheRegistry.register(vectors
+    val banded = CacheRegistry.persist(vectors
       .select(col(idCol).as("vid"), lshSignature(col(vecCol), planes).as("__sig"))
       .select(col("vid"), posexplode(array((0 until bands).map(bnd =>
         shiftrightunsigned(col("__sig"), bnd * rowsPerBand).bitwiseAND(lit(mask))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
     val hot = banded.groupBy("band", "bucket").count()
       .filter(col("count") > maxBucket).select("band", "bucket")
     banded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
@@ -344,8 +342,7 @@ object Similarity {
     // read twice — once as the cell assignment, once exploded into the
     // probe list — and without the cache each read re-scans the vector
     // table and re-scores all nLists centroids per row.
-    val ranked = CacheRegistry.register(nearestCells(v, centroids, nProbe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val ranked = CacheRegistry.persist(nearestCells(v, centroids, nProbe))
     val assigned = ranked.select(col("vid"), col("vec"),
       element_at(col("__cells"), 1).as("cell"))
     // each query probes its nProbe nearest cells
@@ -650,10 +647,9 @@ object Similarity {
     val centroids = v.orderBy(md5(col("vid").cast("string")), col("vid"))
       .limit(nLists)
       .select(col("vid").as("cid"), col("vec").as("cvec"))
-    val assigned = CacheRegistry.register(
+    val assigned = CacheRegistry.persist(
       nearestCells(v, centroids, 1)
-        .select(col("vid"), col("vec"), element_at(col("__cells"), 1).as("cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("vid"), col("vec"), element_at(col("__cells"), 1).as("cell")))
     val wCell = Window.partitionBy("cell")
     val capped = assigned.withColumn("__n", count(lit(1)).over(wCell))
       .filter(col("__n") <= maxCell)

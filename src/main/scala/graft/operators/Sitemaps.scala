@@ -176,10 +176,9 @@ object Sitemaps {
     // conflicting refetch (same URL, different body) stays visible as
     // duplicate entry_no rows for the caller to resolve, never a
     // silent pick
-    val ents = CacheRegistry.register(
+    val ents = CacheRegistry.persist(
       entries(docs.select(col(urlCol).cast("string").as("sitemap_url"),
-          xml.as("__xml")).distinct(), "sitemap_url", col("__xml"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          xml.as("__xml")).distinct(), "sitemap_url", col("__xml")))
     // one-hop provenance: child document URL -> min referencing index
     val refs = ents.filter(col("from_index"))
       .groupBy(col("loc").as("__child"))

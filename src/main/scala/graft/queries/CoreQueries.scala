@@ -2282,10 +2282,9 @@ object CoreQueries {
         // the synthetic new snapshot derives from old twice and the
         // diff reads old again — persist the projection so the gate
         // scans orders ONCE (real-world old/new are distinct tables)
-        val old = graft.operators.CacheRegistry.register(
+        val old = graft.operators.CacheRegistry.persist(
           Tables.orders(s, d).select(col("o_orderkey"),
-            col("o_orderstatus"), cents(col("o_totalprice")).as("price_cents"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            col("o_orderstatus"), cents(col("o_totalprice")).as("price_cents")))
         val neu = old.filter(col("o_orderkey") % 10 =!= 0)
           .withColumn("price_cents", when(col("o_orderkey") % 10 === 5,
             col("price_cents") * 2).otherwise(col("price_cents")))

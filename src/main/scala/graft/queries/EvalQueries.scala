@@ -1958,9 +1958,8 @@ object EvalQueries {
           .select((col("o_custkey") * 2).as("src"),
             (col("l_suppkey") * 2 + 1).as("dst"))
           .distinct()
-        val r = graft.operators.CacheRegistry.register(
-          graft.operators.Graphs.hitsMicro(edges, iterations = 4)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val r = graft.operators.CacheRegistry.persist(
+          graft.operators.Graphs.hitsMicro(edges, iterations = 4))
         val auth = r.orderBy(col("authority_micro").desc, col("node")).limit(10)
           .select(lit("auth").as("side"), col("node"),
             col("authority_micro").as("score_micro"))

@@ -874,10 +874,9 @@ object VectorQueries {
          |GROUP BY 1""".stripMargin) {
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val proj = graft.operators.CacheRegistry.register(e.select(col("vec_id"),
+        val proj = graft.operators.CacheRegistry.persist(e.select(col("vec_id"),
           transform(Similarity.randomProject(col("embedding"), 16, seed = 1L),
-            _.cast("float")).as("pemb"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            _.cast("float")).as("pemb")))
         Similarity.topKRecall(
           Similarity.bruteForceTopK(proj, "vec_id", "pemb",
             proj.filter(col("vec_id") < 50), "vec_id", "pemb", k = 3),

@@ -1534,7 +1534,7 @@ object WebGraphQueries {
         val dir = crawlpolFixture(s, d)
         // the parsed crawl is consumed three ways (robots verdict,
         // noindex verdict, strip funnel) — persist the ONE scan
-        val parsed = graft.operators.CacheRegistry.register(
+        val parsed = graft.operators.CacheRegistry.persist(
           s.read.format("warc").load(dir)
             .filter(col("warc_type") === "response")
             .select(col("target_uri"),
@@ -1543,8 +1543,7 @@ object WebGraphQueries {
               get(filter(col("m.headers"),
                 h => h.getField("name") === lit("x-doc-id")), lit(0))
                 .getField("value").cast("long").as("doc_id"),
-              col("target_uri").as("url"), col("m.body").as("raw"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              col("target_uri").as("url"), col("m.body").as("raw")))
         val verd = graft.operators.Robots.allowed(
           parsed.select(col("doc_id"), col("url")), "doc_id", col("url"),
           robotsFixture(s, d), "host", col("body"), agent = "graftbot")
@@ -2038,10 +2037,9 @@ object WebGraphQueries {
         // the allocation is consumed twice (schedule caps + the final
         // slots/rank join); pin the host-count-sized frame so the WAT
         // mining + rank funnel upstream runs ONCE (the q251 discipline)
-        val alloc = graft.operators.CacheRegistry.register(
+        val alloc = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.allocateBudget(
-            ranks, "host", col("rank_micro"), budget = 200L)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            ranks, "host", col("rank_micro"), budget = 200L))
         val did = col("doc_id")
         val urls = Tables.documents(s, d).select(did,
           concat(lit("http://h"), pmod(did, lit(19)).cast("string"),
@@ -2112,11 +2110,10 @@ object WebGraphQueries {
         // the keyed frame feeds BOTH the group census and the final
         // join-back: pin it so the five-join chain funnel upstream
         // runs once (the q262/q265 discipline)
-        val ky = graft.operators.CacheRegistry.register(
+        val ky = graft.operators.CacheRegistry.persist(
           rc.select(col("url"),
             when(col("outcome") === "exceeded", col("url"))
-              .otherwise(col("final_url")).as("dedup_key"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              .otherwise(col("final_url")).as("dedup_key")))
         val grp = ky.groupBy("dedup_key")
           .agg(min("url").as("kept_url"), count(lit(1)).as("n_aliases"))
         ky.join(grp, Seq("dedup_key"))
@@ -2245,10 +2242,9 @@ object WebGraphQueries {
         // different subtree, so exchange reuse misses and the 4-hop
         // chain resolution runs twice (r16 measured: the funnel is the
         // gate's dominant cost) — pin at the landing-key grain
-        val collapsed = graft.operators.CacheRegistry.register(
+        val collapsed = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.resolveAliases(
-              merged, redirectResolved(s, d))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              merged, redirectResolved(s, d)))
         val robots = robotsFixture(s, d)
         val verd = graft.operators.Robots.allowed(
           collapsed.select("canon", "url"), "canon", col("url"),
@@ -2258,9 +2254,8 @@ object WebGraphQueries {
         // and the blocked branch: pin the landing-key-grain frame so
         // the redirect + merge + verdict funnel runs once (the q262
         // discipline)
-        val full = graft.operators.CacheRegistry.register(
-          collapsed.join(verd, Seq("canon"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val full = graft.operators.CacheRegistry.persist(
+          collapsed.join(verd, Seq("canon")))
         val delays = graft.operators.Robots.crawlDelay(
           robots, "host", col("body"), agent = "graftbot")
         val sched = graft.operators.Frontier.fetchSchedule(
@@ -2524,14 +2519,13 @@ object WebGraphQueries {
         // the parsed observation frame feeds BOTH the heuristic tier
         // (conditionalRecrawl) and the freshness overlay: pin it so
         // the header parse runs once (the q262/q264/q265 discipline)
-        val parsed = graft.operators.CacheRegistry.register(
+        val parsed = graft.operators.CacheRegistry.persist(
           raw.select(col("furl"), col("fms"), hv("etag").as("etag"),
             graft.sources.Warc.httpDateMillis(hv("last-modified"))
               .as("flm"),
             hv("cache-control").as("cc"),
             graft.sources.Warc.httpDateMillis(hv("expires")).as("expms"),
-            hv("age").as("ageh"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            hv("age").as("ageh")))
         val cr = graft.operators.Frontier.conditionalRecrawl(hints, "loc",
           col("slm"), col("changefreq"), parsed, col("furl"), col("fms"),
           col("etag"), col("flm"))
@@ -2626,10 +2620,9 @@ object WebGraphQueries {
         // the allocation feeds BOTH the schedule caps and the final
         // slots/rank join: pin the host-count-sized frame so the WAT
         // mining + rank funnel runs once (the q262 discipline)
-        val alloc = graft.operators.CacheRegistry.register(
+        val alloc = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.allocateBudget(
-            ranks, "host", col("rank_micro"), budget = 200L)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            ranks, "host", col("rank_micro"), budget = 200L))
         val delays = graft.operators.Robots.crawlDelay(
           robotsFixture(s, d), "host", col("body"), agent = "graftbot")
         val sched = graft.operators.Frontier.fetchSchedule(urls, "loc",
@@ -2945,7 +2938,7 @@ object WebGraphQueries {
         // one real response carries every signal; the parse feeds
         // THREE consumers (heuristic due, freshness overlay, backoff)
         // — pinned once
-        val parsed = graft.operators.CacheRegistry.register(
+        val parsed = graft.operators.CacheRegistry.persist(
           raw.select(col("furl"), col("fms"),
             msg.getField("status_code").as("st"),
             hv("retry-after").as("ra"), hv("etag").as("etag"),
@@ -2953,8 +2946,7 @@ object WebGraphQueries {
               .as("flm"),
             hv("cache-control").as("cc"),
             graft.sources.Warc.httpDateMillis(hv("expires")).as("expms"),
-            hv("age").as("ageh"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            hv("age").as("ageh")))
         val cr = graft.operators.Frontier.conditionalRecrawl(hints, "loc",
           col("slm"), col("changefreq"), parsed, col("furl"), col("fms"),
           col("etag"), col("flm"))
@@ -3154,10 +3146,9 @@ object WebGraphQueries {
         // pinned for the same reason as q265's collapsed: the verdict
         // side's pruning otherwise re-derives the chain + canonical
         // funnel as a second, non-reusable subtree
-        val collapsed = graft.operators.CacheRegistry.register(
+        val collapsed = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.resolveAliases(
-              merged, redirectResolved(s, d), hints, col("curl"), col("canu"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              merged, redirectResolved(s, d), hints, col("curl"), col("canu")))
         val robots = robotsFixture(s, d)
         val verd = graft.operators.Robots.allowed(
           collapsed.select("canon", "url"), "canon", col("url"),
@@ -3166,9 +3157,8 @@ object WebGraphQueries {
         // verdict-annotated frame feeds the scheduled AND blocked
         // branches: pin it so the chain + canonical + verdict funnel
         // runs once (the q262/q265 discipline)
-        val full = graft.operators.CacheRegistry.register(
-          collapsed.join(verd, Seq("canon"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val full = graft.operators.CacheRegistry.persist(
+          collapsed.join(verd, Seq("canon")))
         val delays = graft.operators.Robots.crawlDelay(
           robots, "host", col("body"), agent = "graftbot")
         val sched = graft.operators.Frontier.fetchSchedule(
@@ -3283,11 +3273,10 @@ object WebGraphQueries {
         // the identity-grain frame feeds BOTH the fetch-grain census
         // and the final join-back: pin it so the chain + merge +
         // permanent-collapse funnel runs once (the q264 discipline)
-        val rows = graft.operators.CacheRegistry.register(
+        val rows = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.resolveAliasesPermanent(
               merged, redirectResolved(s, d))
-            .withColumn("fetch_canon", canonicalizeUrl(col("fetch_url")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .withColumn("fetch_canon", canonicalizeUrl(col("fetch_url"))))
         val census = rows.groupBy("fetch_canon")
           .agg(count(lit(1)).as("n_identities"), min("canon").as("__lead"))
         rows.join(census, Seq("fetch_canon"))
@@ -3428,11 +3417,10 @@ object WebGraphQueries {
         // identity rows feed the wave fold AND the final join-back;
         // the wave frame feeds the verdict, the schedule, and the
         // join-back — pin both (the q264/q265 discipline)
-        val rows = graft.operators.CacheRegistry.register(
+        val rows = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.resolveAliasesPermanent(
               merged, redirectResolved(s, d))
-            .withColumn("fetch_canon", canonicalizeUrl(col("fetch_url")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .withColumn("fetch_canon", canonicalizeUrl(col("fetch_url"))))
         val wave = rows.groupBy("fetch_canon")
           .agg(min("canon").as("__lead"), min("fetch_url").as("wave_url"),
             max("priority_milli").as("wave_priority"))
@@ -3441,9 +3429,8 @@ object WebGraphQueries {
           wave.select("fetch_canon", "wave_url"), "fetch_canon",
           col("wave_url"), robots, "host", col("body"), agent = "graftbot")
           .select(col("fetch_canon"), col("host"), col("allowed"))
-        val waveFull = graft.operators.CacheRegistry.register(
-          wave.join(verd, Seq("fetch_canon"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val waveFull = graft.operators.CacheRegistry.persist(
+          wave.join(verd, Seq("fetch_canon")))
         val delays = graft.operators.Robots.crawlDelay(
           robots, "host", col("body"), agent = "graftbot")
         val sched = graft.operators.Frontier.fetchSchedule(

@@ -404,7 +404,6 @@ object EventStreams {
                                 minJaccardPpm: Long = 800000L): (DataFrame, DataFrame) = {
     import graft.operators.Dedup
     import graft.operators.CacheRegistry
-    import org.apache.spark.storage.StorageLevel
     // every returned frame is consumed TWICE by the caller (the docs
     // write and the sigs write share the funnel; sigs additionally
     // semi-join the survivors) — pin the per-trigger intermediates so
@@ -423,20 +422,17 @@ object EventStreams {
       .select(idCol)
     val rawExact = hashed.join(keepIds, Seq(idCol), "left_semi").drop("__h")
     graft.TriggerPlanProbe.recordIter("stream_incdedup_exact", rawExact)
-    val exact = CacheRegistry.register(
-      rawExact.persist(StorageLevel.MEMORY_AND_DISK))
+    val exact = CacheRegistry.persist(rawExact)
     store match {
       case None =>
         (exact, Dedup.bandedSignatures(exact, idCol, col(textCol), bands, rows))
       case Some((docs, sigs)) =>
         val rawAfterExact = Dedup.incrementalExact(exact, docs, idCol, col(textCol))
         graft.TriggerPlanProbe.recordIter("stream_incdedup_store_anti", rawAfterExact)
-        val afterExact = CacheRegistry.register(
-          rawAfterExact.persist(StorageLevel.MEMORY_AND_DISK))
+        val afterExact = CacheRegistry.persist(rawAfterExact)
         val rawIncSigs = Dedup.bandedSignatures(afterExact, idCol, col(textCol), bands, rows)
         graft.TriggerPlanProbe.recordIter("stream_incdedup_sigs", rawIncSigs)
-        val incSigs = CacheRegistry.register(
-          rawIncSigs.persist(StorageLevel.MEMORY_AND_DISK))
+        val incSigs = CacheRegistry.persist(rawIncSigs)
         val nearDup = Dedup.minhashLshPairsAcrossStored(
           afterExact, idCol, col(textCol), docs, sigs,
           bands = bands, rows = rows, minJaccardPpm = minJaccardPpm,
@@ -445,8 +441,7 @@ object EventStreams {
           nearDup.select(col("inc_id").as(idCol)).distinct(),
           Seq(idCol), "left_anti")
         graft.TriggerPlanProbe.recordIter("stream_incdedup_surv", rawSurv)
-        val surv = CacheRegistry.register(
-          rawSurv.persist(StorageLevel.MEMORY_AND_DISK))
+        val surv = CacheRegistry.persist(rawSurv)
         (surv, incSigs.join(surv.select(col(idCol).as("doc_id")),
           Seq("doc_id"), "left_semi"))
     }

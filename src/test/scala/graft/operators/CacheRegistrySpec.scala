@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 class CacheRegistrySpec extends AnyFunSuite with SparkSpec {
@@ -11,7 +12,8 @@ class CacheRegistrySpec extends AnyFunSuite with SparkSpec {
     CacheRegistry.releaseAll(blocking = true)
     sc.getPersistentRDDs.values.foreach(_.unpersist(true))
 
-    val df = CacheRegistry.register((1 to 100).toDF("x").persist())
+    val df = CacheRegistry.persist((1 to 100).toDF("x"))
+    assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
     df.count() // materialize the cached blocks
     val ck = (1 to 50).toDF("y").localCheckpoint(true)
     assert(ck.count() === 50)

@@ -955,9 +955,6 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
         d.queryExecution.executedPlan.collect { case b: BroadcastHashJoinExec => b }
       assert(broadcasts(Dedup.lineDedup(df, "doc_id", col("text"))).isEmpty,
         "default lineDedup must shuffle the anti-join, not force a broadcast")
-      assert(broadcasts(
-          Dedup.lineDedup(df, "doc_id", col("text"), broadcastHotSet = true)).nonEmpty,
-        "broadcastHotSet = true must force the broadcast hint")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorThr)
@@ -1510,8 +1507,9 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     // a doc with no tokens contributes no evidence and no row
     val toy = Seq((1L, "alpha beta"), (2L, "   "), (3L, "")).toDF("doc_id", "text")
     val toyW = Sampling.dsirWeights(toy, toy.filter(col("doc_id") === 1L),
-      "doc_id", col("text"), dims = 4, persistFeatures = false)
+      "doc_id", col("text"), dims = 4)
     assert(toyW.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L))
+    CacheRegistry.releaseAll()
   }
 
   test("blocklistFilter: token boundaries, phrases, normalization, overlap counting") {

@@ -141,10 +141,10 @@ class EvalOpsSpec extends AnyFunSuite with SparkSpec {
     val test0 = Seq((1L, "x x"), (2L, "z"), (3L, "y"), (4L, "q q"))
       .toDF("id", "text")
     val got = LanguageModel.naiveBayesClassify(
-        train, col("cls"), col("text"), test0, "id", col("text"),
-        persistModel = false)
+        train, col("cls"), col("text"), test0, "id", col("text"))
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
+    CacheRegistry.releaseAll()
     // margins: doc 1 = 5−3 = 2; doc 2 = 3−2 = 1; doc 3 ties → 0
     assert(got === Map(
       1L -> (("a", 3L, 2L)), 2L -> (("b", 2L, 1L)), 3L -> (("a", 2L, 0L))))
