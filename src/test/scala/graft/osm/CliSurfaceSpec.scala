@@ -15,16 +15,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
 
-  private val refTest = "/root/reference/test"
   private val gen = "planet-dump-ng test X.Y.Z"
 
-  // one shared load of the reference dump for the PBF tests
-  private lazy val loaded: (String, Option[java.sql.Timestamp], OsmDb) = {
-    val d = Files.createTempDirectory("cli-surface").toString
-    val maxTime = Load.run(spark,
-      ReferenceFixtures(refTest, "liechtenstein-2013-08-03.dmp"), s"$d/work")
-    (d, maxTime, OsmDb(spark, s"$d/work/tables"))
-  }
+  // one shared load per dump for the PBF tests: the in-repo fixture, and
+  // the reference Liechtenstein dump where its root exists
+  private lazy val loaded: Seq[(String, Option[java.sql.Timestamp], OsmDb)] =
+    (PlanetFixture.dump +: ReferenceFixtures.liechtenstein.toSeq).map { dump =>
+      val d = Files.createTempDirectory("cli-surface").toString
+      val maxTime = Load.run(spark, dump, s"$d/work")
+      (d, maxTime, OsmDb(spark, s"$d/work/tables"))
+    }
 
   test("destructive runs honor the workDir lock: non-resume AND dump-switching resume") {
     val d = Files.createTempDirectory("lock-test")
@@ -48,25 +48,26 @@ class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("non-dense PBF is structurally identical to dense (and actually non-dense)") {
-    val (d, maxTime, db) = loaded
-    val (n, w, r) = (Assemble.nodes(db), Assemble.ways(db), Assemble.relations(db))
-    PlanetPbf.write(s"$d/dense.pbf", gen, history = true, anon = false, maxTime, n, w, r,
-      denseNodes = true)
-    PlanetPbf.write(s"$d/plain.pbf", gen, history = true, anon = false, maxTime, n, w, r,
-      denseNodes = false)
-    val (hD, eD) = PbfDecode.decode(s"$d/dense.pbf")
-    val (hP, eP) = PbfDecode.decode(s"$d/plain.pbf")
-    // header features differ by exactly the DenseNodes capability
-    assert(hD.contains("DenseNodes") && !hP.contains("DenseNodes"))
-    assert(hD.filterNot(_ == "DenseNodes") === hP.filterNot(_ == "DenseNodes"))
-    assert(eP.length === eD.length)
-    eP.zip(eD).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a === b, s"element $i differs between non-dense and dense")
+    loaded.foreach { case (d, maxTime, db) =>
+      val (n, w, r) = (Assemble.nodes(db), Assemble.ways(db), Assemble.relations(db))
+      PlanetPbf.write(s"$d/dense.pbf", gen, history = true, anon = false, maxTime, n, w, r,
+        denseNodes = true)
+      PlanetPbf.write(s"$d/plain.pbf", gen, history = true, anon = false, maxTime, n, w, r,
+        denseNodes = false)
+      val (hD, eD) = PbfDecode.decode(s"$d/dense.pbf")
+      val (hP, eP) = PbfDecode.decode(s"$d/plain.pbf")
+      // header features differ by exactly the DenseNodes capability
+      assert(hD.contains("DenseNodes") && !hP.contains("DenseNodes"))
+      assert(hD.filterNot(_ == "DenseNodes") === hP.filterNot(_ == "DenseNodes"))
+      assert(eP.length === eD.length)
+      eP.zip(eD).zipWithIndex.foreach { case ((a, b), i) =>
+        assert(a === b, s"element $i differs between non-dense and dense")
+      }
+      // and the encodings genuinely differ
+      assert(!java.util.Arrays.equals(
+        Files.readAllBytes(Paths.get(s"$d/dense.pbf")),
+        Files.readAllBytes(Paths.get(s"$d/plain.pbf"))))
     }
-    // and the encodings genuinely differ
-    assert(!java.util.Arrays.equals(
-      Files.readAllBytes(Paths.get(s"$d/dense.pbf")),
-      Files.readAllBytes(Paths.get(s"$d/plain.pbf"))))
   }
 
   private def decompressAll(path: String, gz: Boolean): String = {

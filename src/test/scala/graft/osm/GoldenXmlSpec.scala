@@ -8,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Byte-for-byte replication of the reference's golden e2e cases
   * (reference `test/` case dirs; compare = `bunzip2 | cmp`,
-  * `test/test-case-runner.sh:36-55`).
+  * `test/test-case-runner.sh:36-55`). Each case is canceled where the
+  * reference root is absent ([[ReferenceFixtures]]).
   */
 class GoldenXmlSpec extends AnyFunSuite with SparkSpec {
 
-  private val refTest = "/root/reference/test"
+  private val refTest = ReferenceFixtures.root
   private val gen = "planet-dump-ng test X.Y.Z"
 
   private def bunzip(path: String): Array[Byte] = {
@@ -39,7 +40,7 @@ class GoldenXmlSpec extends AnyFunSuite with SparkSpec {
   private def runCase(dump: String, outputs: (String, PlanetDump.Output => PlanetDump.Output)*): Unit = ()
 
   private def run(dump: String, work: String, outs: Seq[PlanetDump.Output]): Unit =
-    PlanetDump.run(spark, ReferenceFixtures(refTest, dump), work, outs, gen)
+    PlanetDump.run(spark, ReferenceFixtures(dump), work, outs, gen)
 
   private def tmp(name: String): String = {
     val d = Files.createTempDirectory(s"golden-$name").toString
