@@ -9,7 +9,8 @@ adjudication a diff:
 
   generate:  python3 anchors.py generate [--runs 3] [--sf DIR] [--out ANCHORS.json]
       Runs graft.Bench N times (one JVM per run), takes the per-query
-      MEDIAN of the N runs, writes ANCHORS.json with provenance
+      MEDIAN of the N runs (and the layers of each query's median
+      run), writes ANCHORS.json with provenance
       (git sha, sf dir, run totals). Median-of-3 full runs is the
       committed baseline; single-run archives are what it replaces.
 
@@ -36,6 +37,12 @@ adjudication a diff:
       (round 10's judge had to hand-parse exactly this artifact to
       clear a 7.4x phantom flag on q204).
 
+      When both files carry graft.Bench's per-query `layers`, each
+      flagged query also names the layer that grew most: build (frame
+      construction), planning (the action's Catalyst analysis,
+      optimization and planning) or exec (the rest of the action) — so
+      a build-time regression is told apart from a task-time one.
+
   selftest:  python3 anchors.py selftest
       Fixture-checks the parser on all three input shapes, including
       a front-truncated driver tail. Exit 0 iff all pass.
@@ -54,15 +61,19 @@ import sys
 
 
 def run_bench(sf_dir: str) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
-    out = subprocess.run(
-        ["sbt", "-batch", "runMain graft.Bench"],
-        capture_output=True, text=True, env=env, check=False)
-    for line in out.stdout.splitlines():
-        line = line.removeprefix("[info] ").strip()
-        if line.startswith("{") and '"metric"' in line:
-            return json.loads(line)
-    sys.exit(f"no bench JSON line in sbt output:\n{out.stdout[-2000:]}")
+    """One graft.Bench run; its persisted file (queries and layers)."""
+    import tempfile
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "bench.json")
+        env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
+                   SPARK_GRAFT_BENCH_OUT=path)
+        out = subprocess.run(
+            ["sbt", "-batch", "runMain graft.Bench"],
+            capture_output=True, text=True, env=env, check=False)
+        if not os.path.exists(path):
+            sys.exit(f"graft.Bench wrote no bench file:\n{out.stdout[-2000:]}")
+        with open(path) as f:
+            return json.load(f)
 
 
 def git_sha() -> str:
@@ -84,12 +95,20 @@ def cmd_generate(args) -> int:
     medians = {n: round(statistics.median(
         [r["queries"][n] for r in runs if n in r["queries"]]), 3)
         for n in names}
+    # each query's layers come from its median-wall run
+    layers = {}
+    for n in names:
+        timed = sorted((r["queries"][n], i) for i, r in enumerate(runs)
+                       if n in r["queries"] and n in r.get("layers", {}))
+        if timed:
+            layers[n] = runs[timed[len(timed) // 2][1]]["layers"][n]
     doc = {
         "git": git_sha(),
         "sf": args.sf,
         "runs": args.runs,
         "run_totals_sec": [round(r["value"], 1) for r in runs],
         "queries": medians,
+        "layers": layers,
     }
     with open(args.out, "w") as f:
         json.dump(doc, f, indent=1, sort_keys=True)
@@ -131,6 +150,31 @@ def extract_queries(doc):
              "no 'tail' — keys: " + ", ".join(sorted(doc)))
 
 
+def extract_layers(doc):
+    """Per-query layer fields of a bench or anchors file, or {}."""
+    for d in (doc, doc.get("parsed")):
+        if isinstance(d, dict) and isinstance(d.get("layers"), dict):
+            return d["layers"]
+    return {}
+
+
+def grown_layer(base_layers, new_layers, name):
+    """' — grew most in <layer> (+N s)' when both sides have the query's
+    layers, else ''. The layers are build, planning (the action's
+    Catalyst phases) and exec (the rest of the action)."""
+    if name not in base_layers or name not in new_layers:
+        return ""
+
+    def split(f):
+        planning = f["analysis_s"] + f["optimization_s"] + f["planning_s"]
+        return {"build": f["build_s"], "planning": planning,
+                "exec": f["exec_s"] - planning}
+
+    b, n = split(base_layers[name]), split(new_layers[name])
+    layer = max(b, key=lambda k: n[k] - b[k])
+    return f" — grew most in {layer} ({n[layer] - b[layer]:+.2f}s)"
+
+
 def find_windows(order, ratio_of, window_ratio, window_len):
     """Contiguous runs (execution order) of >= window_len queries all
     at >= window_ratio vs anchors. A run that long spanning adjacent
@@ -158,6 +202,7 @@ def cmd_compare(args) -> int:
         bench = json.load(f)
     new, truncated = extract_queries(bench)
     base = anchors["queries"]
+    base_layers, new_layers = extract_layers(anchors), extract_layers(bench)
     # insertion order of the bench queries object IS execution order
     # (the raw line, the anchors file, and the driver-tail regex all
     # preserve it) — that adjacency is what window adjudication needs;
@@ -190,10 +235,11 @@ def cmd_compare(args) -> int:
               f"(median {med:.2f}x) — box, not code; "
               f"isolate before belief")
     for name, b, n, r in sorted(isolated, key=lambda x: -x[3]):
-        print(f"SLOWER  {name}: {b:.2f}s -> {n:.2f}s ({r:.2f}x)")
+        print(f"SLOWER  {name}: {b:.2f}s -> {n:.2f}s ({r:.2f}x)"
+              + grown_layer(base_layers, new_layers, name))
     for name, b, n, r in sorted(windowed, key=lambda x: -x[3]):
         print(f"slower-in-window  {name}: {b:.2f}s -> {n:.2f}s "
-              f"({r:.2f}x)")
+              f"({r:.2f}x)" + grown_layer(base_layers, new_layers, name))
     for name, b, n, r in sorted(improved, key=lambda x: x[3]):
         print(f"faster  {name}: {b:.2f}s -> {n:.2f}s ({r:.2f}x)")
     if added:
@@ -320,6 +366,55 @@ def cmd_selftest(_args=None) -> int:
                      for i, n in enumerate(qnames)}
         check("compare scattered slowness -> exit 1",
               run2(scattered) == 1)
+    # 7. both files carry layers: a flagged query names the layer that
+    # grew most; without layers on one side it names none
+    import contextlib
+    import io
+
+    def fields(build, plan, exec_s):
+        return {"build_s": build, "analysis_s": plan / 4,
+                "optimization_s": plan / 4, "planning_s": plan / 2,
+                "exec_s": exec_s}
+
+    with tempfile.TemporaryDirectory() as d:
+        anch = os.path.join(d, "ANCHORS.json")
+        with open(anch, "w") as f:
+            json.dump({"queries": {"q01_a": 3.0, "q02_b": 3.0, "q03_c": 3.0},
+                       "layers": {"q01_a": fields(1.0, 0.2, 2.0),
+                                  "q02_b": fields(1.0, 0.2, 2.0),
+                                  "q03_c": fields(1.0, 0.2, 2.0)}}, f)
+
+        def run3(layers):
+            bench = os.path.join(d, "bench.json")
+            doc = {"queries": {"q01_a": 9.0, "q02_b": 9.0, "q03_c": 9.0}}
+            if layers is not None:
+                doc["layers"] = layers
+            with open(bench, "w") as f:
+                json.dump(doc, f)
+            ns = argparse.Namespace(bench=bench, anchors=anch, ratio=1.5,
+                                    abs_sec=1.0, window_ratio=2.0,
+                                    window_len=5)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                cmd_compare(ns)
+            return {ln.split()[1].rstrip(":"): ln for ln in
+                    buf.getvalue().splitlines() if ln.startswith("SLOWER")}
+
+        # q01 built slower; q02 planned slower (exec_s holds planning);
+        # q03 ran its tasks slower
+        out = run3({"q01_a": fields(7.0, 0.2, 2.0),
+                    "q02_b": fields(1.0, 6.2, 8.0),
+                    "q03_c": fields(1.0, 0.2, 8.0)})
+        check("compare names the build layer",
+              "grew most in build (+6.00s)" in out.get("q01_a", ""))
+        check("compare names the planning layer",
+              "grew most in planning (+6.00s)" in out.get("q02_b", ""))
+        check("compare names the exec layer",
+              "grew most in exec (+6.00s)" in out.get("q03_c", ""))
+        out = run3(None)
+        check("compare without bench layers names no layer",
+              len(out) == 3 and not any("grew most" in v
+                                         for v in out.values()))
     print(f"selftest: {'PASS' if not fails else 'FAIL'} "
           f"({total[0] - len(fails)}/{total[0]})")
     return 1 if fails else 0

@@ -18,7 +18,11 @@ package graft
   * driver-tail query regex from confusing offsets with timings).
   * `anchors.py compare` uses execution adjacency + offsets to label
   * contiguous slow WINDOWS (box contention) apart from isolated
-  * regressions (code).
+  * regressions (code). Its `layers` give each query's `build_s`
+  * (building the frame) and `exec_s` (the action, holding its Catalyst
+  * phases) plus the [[QueryMetrics]] fields, from the median-wall
+  * repeat; `SPARK_GRAFT_BENCH_FILTER=<regex> SPARK_GRAFT_BENCH_REPEAT=<n>`
+  * gives them for chosen queries, repeated in one JVM.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -34,45 +38,48 @@ object Bench {
     val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
 
-    def executeOnce(name: String): (Double, Boolean) = {
+    val metrics = new QueryMetrics(spark)
+
+    // (seconds, ok, layers); the listener's bus drains are untimed
+    def executeOnce(name: String): (Double, Boolean, Seq[(String, Double)]) = {
+      metrics.begin()
       val t0 = System.nanoTime()
+      var built = t0
       val ok =
-        try { SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+        try {
+          val df = try SparkEntry.queries(name)(spark, sfDir)
+            finally { built = System.nanoTime(); metrics.markExec() }
+          df.write.format("noop").mode("overwrite").save(); true
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
-      val elapsed = (System.nanoTime() - t0) / 1e9
+      val end = System.nanoTime()
       // release operator-internal caches (LSH shingles, curate's exact
       // prefix, CC label checkpoints) once the action is done — round 5
       // showed stale blocks from q65 taxing the next four queries; the
       // release is OUTSIDE the timed window (it is session hygiene, not
       // part of the query)
       graft.operators.CacheRegistry.releaseAll()
-      (elapsed, ok)
+      ((end - t0) / 1e9, ok,
+        Seq("build_s" -> (built - t0) / 1e9, "exec_s" -> (end - built) / 1e9) ++ metrics.snapshot())
     }
 
-    def execute(name: String): (Double, Boolean) =
-      if (repeat == 1) executeOnce(name)
-      else {
-        val runs = (1 to repeat).map(_ => executeOnce(name))
-        System.err.println(s"[bench] $name repeats: " +
-          runs.map(r => f"${r._1}%.2f").mkString(" "))
-        val sorted = runs.map(_._1).sorted
-        (sorted(sorted.size / 2), runs.forall(_._2))
-      }
+    def execute(name: String): (Double, Boolean, Seq[(String, Double)]) = {
+      val runs = (1 to repeat).map(_ => executeOnce(name))
+      if (repeat > 1) System.err.println(s"[bench] $name repeats: " +
+        runs.map(r => f"${r._1}%.2f").mkString(" "))
+      val median = runs.sortBy(_._1).apply(runs.size / 2)
+      (median._1, runs.forall(_._2), median._3)
+    }
 
     // SPARK_GRAFT_BENCH_FILTER=<regex>: run only matching queries (dev
     // iteration / standalone per-query measurement; driver never sets it)
     val allNames = SparkEntry.allQueries.map(_.name)
     val names = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(f => allNames.filter(_.matches(f))).getOrElse(allNames)
-    // warmup: run the cheapest scan-shaped query once, untimed; drop any
-    // caches it registered so the timed run of the same query is honest
-    try SparkEntry.queries(names.head)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
-    graft.operators.CacheRegistry.releaseAll()
+    // warmup: run the cheapest scan-shaped query once, its result unused;
+    // its caches are released so the timed run of the same query is honest
+    executeOnce(names.head)
 
     val t00 = System.nanoTime()
     val results = names.map { n =>
@@ -87,13 +94,17 @@ object Bench {
       val startOff = (System.nanoTime() - t00) / 1e9
       (n, execute(n), startOff)
     }
-    val qs = results.map { case (k, (v, _), _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def ms(x: Double): Double = math.rint(x * 1000) / 1000
+    val qs = obj(results.map { case (k, (v, _, _), _) => k -> v })
     // failed queries still count their elapsed time toward the total (a
     // crash must never IMPROVE the headline metric) and are listed
     val total = results.map(_._2._1).sum
-    val failed = results.collect { case (k, (_, false), _) => "\"" + k + "\"" }.mkString("[", ",", "]")
-    val starts = results.map { case (k, _, off) =>
-      "\"@" + k + "\":" + math.rint(off * 1000) / 1000 }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, (_, false, _), _) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val starts = obj(results.map { case (k, _, off) => "@" + k -> ms(off) })
+    val layers = obj(results.map { case (k, (_, _, fields), _) =>
+      k -> obj(fields.map { case (f, v) => f -> (if (v.isWhole) v.toLong else ms(v)) }) })
     def jsonStr(x: String): String =
       "\"" + x.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\""
     // the stdout line is the DRIVER CONTRACT — exactly the r1-r14 key
@@ -107,9 +118,9 @@ object Bench {
     // also persist to a file — the stdout line is the contract, but log
     // tails get truncated (round 4 lost q01-q06 and the total that way);
     // the file additionally carries the per-query start offsets that
-    // anchors.py uses to adjudicate contiguous slow windows
+    // anchors.py uses to adjudicate contiguous slow windows, and layers
     val fileLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"starts":$starts,"sf":${jsonStr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"starts":$starts,"layers":$layers,"sf":${jsonStr(sfDir)}}"""
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
     java.nio.file.Files.write(out,

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The query engine's one session profile. Every query main (Bench,
-  * Verify, ProfileQuery, PlanFingerprint, Explain, Soak and the
-  * `graft.queries` dump harnesses) and every spec (through the test trait
+  * Verify, PlanFingerprint, Explain, Soak and the `graft.queries` dump
+  * harnesses) and every spec (through the test trait
   * `graft.SparkSpec`) builds its session here, so the plan gates
   * certify the configuration the bench runs. `graft.osm.PlanetDump`'s
   * main keeps its own builder: its master is a deployment setting.

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import scala.collection.concurrent.TrieMap
 
 /** Scale soak harness (dev-only, not a driver contract): replicates the
   * sf0.1 documents/embeddings tables K× with per-replica mutations and
@@ -23,44 +20,15 @@ import scala.collection.concurrent.TrieMap
   * Usage: runMain graft.Soak [baseSfDir] [outJson]. Writes scaled tables
   * under /tmp/graft_soak/x{K}/ and prints one JSON line per (scale,
   * query): seconds, output rows, and the worst stage's max/median task
-  * time ratio (straggler factor).
+  * time ratio (straggler factor, from [[QueryMetrics]]).
   */
 object Soak {
-  /** max task ms / median task ms of the slowest stage (by max task),
-    * over stages with ≥ 4 tasks — the straggler factor the 100×
-    * posture cares about.
-    */
-  private final class SkewListener extends SparkListener {
-    private val stageTasks = TrieMap.empty[Int, List[Long]]
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      if (t.taskInfo != null && t.taskInfo.successful) {
-        val d = t.taskInfo.duration
-        stageTasks.updateWith(t.stageId) {
-          case Some(xs) => Some(d :: xs)
-          case None => Some(List(d))
-        }
-      }
-    }
-    def reset(): Unit = stageTasks.clear()
-    def worstSkew(): (Double, Long) = {
-      val eligible = stageTasks.values.filter(_.size >= 4)
-      if (eligible.isEmpty) (1.0, 0L)
-      else {
-        val worst = eligible.maxBy(_.max)
-        val sorted = worst.sorted
-        val med = math.max(1L, sorted(sorted.size / 2))
-        (worst.max.toDouble / med, worst.max)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "/tmp/graft_soak/soak.json"
     val spark = GraftSession.builder("graft-soak", GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val skew = new SkewListener
-    spark.sparkContext.addSparkListener(skew)
+    val metrics = new QueryMetrics(spark)
 
     def scaledDir(k: Int): String = s"/tmp/graft_soak/x$k"
 
@@ -780,18 +748,18 @@ object Soak {
     for (k <- scales) {
       materialize(k)
       for ((name, fn) <- picked) {
-        skew.reset()
+        metrics.begin()
         heapPools.foreach(_.resetPeakUsage())
         val t0 = System.nanoTime()
         val n = fn(scaledDir(k)).count()
         val sec = (System.nanoTime() - t0) / 1e9
         operators.CacheRegistry.releaseAll()
         spark.catalog.clearCache()
-        val (ratio, maxMs) = skew.worstSkew()
+        val m = metrics.snapshot()
         // single-JVM local mode: driver + executors share this heap,
         // so the pool peak IS the query's memory high-water mark
         val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
-        val line = f"""{"scale":$k,"query":"$name","sec":$sec%.2f,"rows":$n,"worst_stage_skew":$ratio%.1f,"max_task_ms":$maxMs,"peak_heap_mb":$peakMb}"""
+        val line = f"""{"scale":$k,"query":"$name","sec":$sec%.2f,"rows":$n,"worst_stage_skew":${m("worst_stage_skew")}%.1f,"max_task_ms":${m("max_task_ms").toLong},"peak_heap_mb":$peakMb}"""
         println(line)
         sb.append(line).append('\n')
       }

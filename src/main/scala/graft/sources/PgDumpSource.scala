@@ -82,9 +82,10 @@ final class PgDumpScan(tableDef: Schema.Table, dumpPath: String, staging: String
   private val splitBytes = 32L * 1024 * 1024
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // driver-side staging (idempotent), like the reference's pg_restore
-    // subprocess; executors then read byte ranges of the text
-    val textPath = graft.osm.Load.stage(dumpPath, tableDef.name, staging)
+    // driver-side staging (idempotent, keyed by the dump's identity), like the
+    // reference's pg_restore subprocess; executors then read byte ranges of the text
+    val dumpKey = java.util.UUID.nameUUIDFromBytes(graft.osm.Load.dumpId(dumpPath).getBytes("UTF-8"))
+    val textPath = graft.osm.Load.stage(dumpPath, tableDef.name, s"$staging/$dumpKey")
     val size = new java.io.File(textPath).length()
     val nSplits = math.max(1, (size / splitBytes).toInt)
     val step = size / nSplits + 1

@@ -2,6 +2,8 @@ package graft.osm
 
 import java.nio.file.{Files, Paths}
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Byte-for-byte PBF golden cases (raw `cmp`, like the reference's
@@ -9,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * is absent ([[ReferenceFixtures]]); and parallel ≡ sequential PBF
   * encoding, which needs no golden: it runs on the in-repo
   * [[PlanetFixture]] dump, and on the reference Liechtenstein dump too
-  * where that root exists.
+  * where that root exists; on the fixture once more with partition
+  * coalescing off, so that each section is concatenated from several
+  * parts.
   */
 class GoldenPbfSpec extends AnyFunSuite with SparkSpec {
 
@@ -58,22 +62,43 @@ class GoldenPbfSpec extends AnyFunSuite with SparkSpec {
     compareStructural(s"$d/planet-nui.osm.pbf", s"$refTest/planet.pbf.case/planet-no-userinfo.osm.pbf")
   }
 
+  /** Writes `dump`'s history PBF on `session` sequentially and in
+    * parallel, asserts the two structurally identical, and returns the
+    * three assembled sections.
+    */
+  private def parallelMatchesSequential(session: SparkSession, dump: String): Seq[DataFrame] = {
+    val d = Files.createTempDirectory("par-pbf").toString
+    val work = s"$d/work"
+    val maxTime = Load.run(session, dump, work)
+    val db = OsmDb(session, s"$work/tables")
+    val (n, w, r) = (Assemble.nodes(db), Assemble.ways(db), Assemble.relations(db))
+    PlanetPbf.write(s"$d/seq.pbf", gen, history = true, anon = false, maxTime, n, w, r)
+    PlanetPbf.writeParallel(s"$d/par.pbf", gen, history = true, anon = false, maxTime, n, w, r)
+    val (hSeq, eSeq) = PbfDecode.decode(s"$d/seq.pbf")
+    val (hPar, ePar) = PbfDecode.decode(s"$d/par.pbf")
+    assert(hPar === hSeq)
+    assert(ePar.length === eSeq.length)
+    ePar.zip(eSeq).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a === b, s"element $i differs between parallel and sequential")
+    }
+    Seq(n, w, r)
+  }
+
   test("parallel PBF encoding is structurally identical to sequential") {
-    (PlanetFixture.dump +: ReferenceFixtures.liechtenstein.toSeq).foreach { dump =>
-      val d = Files.createTempDirectory("par-pbf").toString
-      val work = s"$d/work"
-      val maxTime = Load.run(spark, dump, work)
-      val db = OsmDb(spark, s"$work/tables")
-      val (n, w, r) = (Assemble.nodes(db), Assemble.ways(db), Assemble.relations(db))
-      PlanetPbf.write(s"$d/seq.pbf", gen, history = true, anon = false, maxTime, n, w, r)
-      PlanetPbf.writeParallel(s"$d/par.pbf", gen, history = true, anon = false, maxTime, n, w, r)
-      val (hSeq, eSeq) = PbfDecode.decode(s"$d/seq.pbf")
-      val (hPar, ePar) = PbfDecode.decode(s"$d/par.pbf")
-      assert(hPar === hSeq)
-      assert(ePar.length === eSeq.length)
-      ePar.zip(eSeq).zipWithIndex.foreach { case ((a, b), i) =>
-        assert(a === b, s"element $i differs between parallel and sequential")
-      }
+    (PlanetFixture.dump +: ReferenceFixtures.liechtenstein.toSeq)
+      .foreach(parallelMatchesSequential(spark, _))
+  }
+
+  test("parallel PBF encoding concatenates several parts per section") {
+    // AQE coalescing leaves each of the fixture's sections one range
+    // partition; without it every section spans several parts
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    parallelMatchesSequential(session, PlanetFixture.dump).foreach { section =>
+      // the non-empty partitions are the parts writeParallel writes
+      val parts = section.orderBy(col("id"), col("version")).rdd
+        .mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
+      assert(parts > 1, s"$parts part(s) in section ${section.columns.mkString(",")}")
     }
   }
 

@@ -36,7 +36,10 @@ object PlanetFixture {
   * the SHA-256 recorded from the serial, one-job-per-section pipeline
   * this one replaced — PBF byte for byte, XML after bunzip2 (the bzip2
   * stream boundaries follow the partitioning, the payload does not).
-  * Concurrent and serial writers produce the same files.
+  * Concurrent and serial writers produce the same files. The fixture's
+  * two special cases come through: Load keeps the >64 KiB comment
+  * whole, and history XML applies `XmlFormat`'s C0 rule to the tag
+  * values that carry control characters.
   */
 class PlanetDumpFixtureSpec extends AnyFunSuite with SparkSpec {
   import PlanetFixture._
@@ -103,5 +106,20 @@ class PlanetDumpFixtureSpec extends AnyFunSuite with SparkSpec {
     names.foreach { name =>
       assert(java.util.Arrays.equals(content(serial, name), content(concurrent, name)), name)
     }
+  }
+
+  test("Load keeps the >64 KiB changeset comment intact") {
+    // perfbench/gen/apidb.sql: repeat('A very long changeset comment. ', 2200) || 1
+    val long = "A very long changeset comment. " * 2200 + "1"
+    assert(long.length === 68201)
+    val bodies = OsmDb(spark, s"$concurrent/work/tables").table("changeset_comments")
+      .select("body").collect().map(_.getString(0))
+    assert(bodies.contains(long))
+  }
+
+  test("history XML turns C0 controls into '?', escaping tab and newline") {
+    val text = new String(content(concurrent, "history.osm.bz2"), UTF_8)
+    assert(text.contains("v=\"bad?char?ter?263\""))
+    assert(text.contains("v=\"tab&#9;new&#10;line?11\""))
   }
 }

@@ -1,10 +1,7 @@
 package graft.osm
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import graft.SparkSpec
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{QueryMetrics, SparkSpec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark jobs one warm serial `PlanetDump.run` submits on the in-repo
@@ -29,17 +26,12 @@ class PlanetDumpJobCountSpec extends AnyFunSuite with SparkSpec {
       PlanetFixture.outputs(d), PlanetFixture.generator, resume = false,
       maxConcurrency = Some(1))
     run() // cold
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = session.sparkContext
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val metrics = new QueryMetrics(session)
+    val jobs = try {
+      metrics.begin()
       run()
-      ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= maxJobs, s"${jobs.get()} jobs, bound $maxJobs")
+      metrics.snapshot()("jobs").toInt
+    } finally metrics.close()
+    assert(jobs <= maxJobs, s"$jobs jobs, bound $maxJobs")
   }
 }

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PgDumpSourceSpec extends AnyFunSuite with SparkSpec {
 
-  /** One dump, its own staging directory (staged text is keyed by table
-    * name only), and its `pg_restore` row counts.
+  /** One dump, its own staging directory (`Load.stage`, called directly
+    * below, keys staged text by table name only), and its `pg_restore`
+    * row counts.
     */
   private final class Dump(val path: String, val nodes: Long, val maxNodeId: Long,
                            val users: Long, val comments: Long) {
@@ -62,6 +63,18 @@ class PgDumpSourceSpec extends AnyFunSuite with SparkSpec {
       assert(dump.read("changeset_comments").count() === dump.comments)
       val u = dump.read("users").filter(col("data_public")).count()
       assert(u > 0 && u <= dump.users)
+    }
+  }
+
+  test("a staging directory shared by two dumps never serves one dump's text for the other") {
+    val shared = java.nio.file.Files.createTempDirectory("pgdump-shared")
+    def nodes(path: String) = spark.read.format("pgdump")
+      .option("table", "nodes").option("staging", shared.toString).load(path)
+    assert(nodes(PlanetFixture.dump).count() === dumps.head.nodes)
+    // a missing dump, and an empty file that pg_restore cannot read
+    val empty = java.nio.file.Files.createFile(shared.resolve("empty.dmp")).toString
+    Seq("/nonexistent/other.dmp", empty).foreach { path =>
+      intercept[Exception](nodes(path).count())
     }
   }
 }
