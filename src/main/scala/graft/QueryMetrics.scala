@@ -10,28 +10,34 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The engine's one Spark metrics listener, on `spark`'s context and
   * query executions from construction on: what a window of work ran, as
-  * the fields [[Bench]] persists per query. Jobs split by start time
-  * into build-time (before [[markExec]]) and execution-time (all when
-  * never marked). The Catalyst phases are those of the query executions
-  * starting from [[markExec]] on: for a write, the one that plans and
-  * runs it. The worst-stage skew is max / median successful task time
-  * of the stage with the largest task, over stages of at least 4 tasks.
+  * the fields [[Bench]] persists per query: the jobs starting from
+  * [[begin]] on and their stages' events. Jobs split by start time into
+  * build-time (before [[markExec]]) and execution-time (all when never
+  * marked). The Catalyst phases are those of the query executions
+  * starting from [[markExec]] (else [[begin]]) on: for a write, the one
+  * that plans and runs it. The worst-stage skew is max / median
+  * successful task time of the stage with the largest task, over stages
+  * of at least 4 tasks.
   *
-  * Listener events arrive asynchronously, so [[begin]] and [[snapshot]]
-  * drain the listener bus; [[markExec]], one clock read, does not.
+  * [[begin]] and [[markExec]] read a clock; [[snapshot]] drains the
+  * listener bus. An earlier job's events may still arrive in a window,
+  * but the bus delivers its start, which predates the window, first.
   */
 final class QueryMetrics(spark: SparkSession) extends SparkListener with QueryExecutionListener {
 
   private val events = mutable.ArrayBuffer[AnyRef]()
+  private val earlier = mutable.Set[Int]() // stages of jobs started before the window
+  private var from = Long.MinValue
   @volatile private var execFrom = Long.MinValue
   spark.sparkContext.addSparkListener(this)
   spark.listenerManager.register(this)
 
   /** Start a new window; no event of earlier work lands in it. */
-  def begin(): Unit = {
-    ListenerBus.drain(spark.sparkContext)
-    synchronized { events.clear() }
-    execFrom = Long.MinValue
+  def begin(): Unit = synchronized {
+    events.foreach { case e: SparkListenerJobStart => earlier ++= e.stageIds; case _ => }
+    events.clear()
+    from = System.currentTimeMillis()
+    execFrom = from
   }
 
   /** Jobs and query executions starting from now on are execution-time. */
@@ -76,10 +82,11 @@ final class QueryMetrics(spark: SparkSession) extends SparkListener with QueryEx
     spark.listenerManager.unregister(this)
   }
 
-  private def record(e: AnyRef): Unit = synchronized { events += e }
-  override def onJobStart(e: SparkListenerJobStart): Unit = record(e)
-  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = record(e)
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskInfo != null) record(e)
+  private def record(e: AnyRef, stage: Int = -1): Unit = synchronized { if (!earlier(stage)) events += e }
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    synchronized { if (e.time >= from) events += e else earlier ++= e.stageIds }
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = record(e, e.stageInfo.stageId)
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskInfo != null) record(e, e.stageId)
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
   override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = record(qe)
 }

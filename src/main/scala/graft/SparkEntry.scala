@@ -20,10 +20,9 @@ object SparkEntry {
     allQueries.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    allQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap
+  def oracleSql: Map[String, String] = allQueries.map(q => q.name -> q.oracle).toMap
 
   /** Untimed fixture preparation for gates that materialize scratch
     * input (idempotent; the query lambda also self-triggers it) —

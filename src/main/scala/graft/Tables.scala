@@ -1,20 +1,24 @@
 package graft
 
+import org.apache.spark.graft.ParquetFooter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Loaders for the driver-provided synthetic tables (TESTDATA.md).
-  *
-  * All tables are single parquet files; at 100 TB these would be
-  * partitioned directories — the read path is identical
-  * (`spark.read.parquet` prunes partitions + columns either way).
+/** Loaders for the synthetic gate tables (TESTDATA.md), each
+  * a single parquet file (a directory reads the same way). [[apply]]
+  * pins the schema a schema-less `spark.read.parquet` would infer, read
+  * from the footer on the driver ([[ParquetFooter]]), so building a frame
+  * runs no Spark job where inference runs one. Nothing is cached: a
+  * footer read costs less than that job, and is never stale.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ParquetFooter.schema(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
@@ -32,6 +36,7 @@ object Tables {
     * oracle sees one shape. ns→µs truncation matches what a DuckDB
     * oracle reading the same file produces; under the UTC session zone
     * the NTZ cast is value-identical to the old timestamp_micros path.
+    * The legacy conf is set while [[apply]] converts the footer.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"

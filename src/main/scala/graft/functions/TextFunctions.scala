@@ -122,28 +122,10 @@ object TextFunctions {
         stop >= 2).as("passes"))
   }
 
-  def langId(text: Column): Column = {
-    // NULL text behaves like empty (zero hits -> "und"), matching
-    // langIdRelational's explode_outer path
-    val t = tokens(coalesce(text, lit("")))
-    val scored = langMarkers.map { case (code, words) =>
-      (code, size(filter(t, x => x.isin(words.map(lit(_)): _*))))
-    }
-    // fold: keep (bestCode, bestScore); strict > keeps earlier (lex-first) on ties
-    val (firstCode, firstScore) = scored.head
-    val folded = scored.tail.foldLeft((lit(firstCode), firstScore)) {
-      case ((bc, bs), (code, s)) =>
-        (when(s > bs, lit(code)).otherwise(bc), when(s > bs, s).otherwise(bs))
-    }
-    when(folded._2 === 0, lit("und")).otherwise(folded._1)
-  }
-
   /** Relational language ID over a whole DataFrame: tokens exploded
     * once, marker hits counted in a single codegen'd aggregate, argmax
-    * with lexicographic tie-break. Same semantics as [[langId]] but
-    * ~10× faster at corpus scale (no interpreted per-language
-    * higher-order filters; one explode + one hash agg).
-    * Returns (idCol, lang_pred).
+    * with lexicographic tie-break; text with no marker hit (NULL
+    * included, via explode_outer) is "und". Returns (idCol, lang_pred).
     */
   def langIdRelational(df: org.apache.spark.sql.DataFrame, idCol: String,
                        text: Column): org.apache.spark.sql.DataFrame = {

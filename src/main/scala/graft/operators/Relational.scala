@@ -98,14 +98,6 @@ object Relational {
       .agg(array_sort(collect_list(st)).as(colName))
   }
 
-  /** J4 (reference `src/copy_elements.cpp:328-337`): broadcast dimension
-    * lookup, left-outer so misses survive as nulls (anonymous users).
-    * `dim` must be small enough to broadcast (users table ≪ elements).
-    */
-  def broadcastLookup(fact: DataFrame, dim: DataFrame, factKey: String,
-                      dimKey: String): DataFrame =
-    fact.join(broadcast(dim), fact(factKey) === dim(dimKey), "left_outer")
-
   /** AS-OF join: attach to each left row the latest right row whose
     * `ts` is at-or-before the left row's, per key — the time-series
     * lookup (tick data, attribution, config-as-of). Spark has no

@@ -22,7 +22,6 @@ object Proto {
   def int32Size(v: Int): Int = if (v >= 0) varintSize(v.toLong) else 10
 
   def tag(field: Int, wireType: Int): Int = (field << 3) | wireType
-  def tagSize(field: Int): Int = varintSize(tag(field, 0).toLong)
 
   /** Growable output buffer. */
   final class Out(initial: Int = 1 << 12) {

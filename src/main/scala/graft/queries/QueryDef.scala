@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine capability exposed through the driver's correctness gate:
-  * a Spark query over the testdata tables plus (when SQL-expressible)
-  * the equivalent DuckDB oracle SQL. Column names must match exactly —
+  * a Spark query over the testdata tables plus the equivalent DuckDB
+  * oracle SQL. Column names must match exactly —
   * the driver sorts columns by name and hashes values.
   *
   * `prepare` is the optional UNTIMED fixture step for gates whose
@@ -18,18 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: String,
     prepare: Option[(SparkSession, String) => Unit] = None)
 
 object QueryDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
+    QueryDef(name, fn, oracle)
   def sqlPrepared(name: String, oracle: String)(
       prep: (SparkSession, String) => Unit)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle), Some(prep))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    QueryDef(name, fn, oracle, Some(prep))
 }
 
 /** Oracle SQL twins of URL-identity expression helpers shared across

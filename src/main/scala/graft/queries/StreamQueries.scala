@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.Relational.cents
 import graft.streaming.EventStreams
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -80,14 +80,15 @@ object StreamQueries {
     * (epoch-day of ts) mod 3, fed in order 0, 1, 2. Because the
     * testdata's 30 January days interleave across the three batches,
     * batch 1 arrives mostly BEHIND batch 0's watermark — the natural
-    * late-data torture the gates need. */
-  private def daySlicedBatches[T](s: SparkSession, df: DataFrame)(
+    * late-data torture the gates need. One collect brings every row
+    * with its batch; each batch keeps the frame's row order. */
+  private[queries] def daySlicedBatches[T](df: DataFrame)(
       implicit enc: Encoder[T]): Seq[Seq[T]] = {
-    val tagged = df.withColumn("__b",
-      expr("(unix_micros(ts) div 86400000000) % 3"))
-    (0L until 3L).map(k =>
-      tagged.filter(col("__b") === k).drop("__b").as[T](enc)
-        .collect().toSeq)
+    val rows = df.select(expr("(unix_micros(ts) div 86400000000) % 3").as("_1"),
+        struct(enc.schema.fieldNames.toSeq.map(col): _*).as("_2"))
+      .where(col("_1").isNotNull)
+      .as(Encoders.tuple(Encoders.scalaLong, enc)).collect()
+    (0L until 3L).map(k => rows.iterator.collect { case (b, t) if b == k => t }.toSeq)
   }
 
   /** Oracle for q213: the watermark algebra of the 3-batch day-sliced
@@ -452,7 +453,7 @@ object StreamQueries {
     QueryDef.sql("q213_stream_windowed_counts", windowedCountsOracleSql) {
       (s, d) => {
         import s.implicits._
-        val batches = daySlicedBatches[EventStreams.Event](s, Tables.events(s, d))
+        val batches = daySlicedBatches[EventStreams.Event](Tables.events(s, d))
         val sentinel = Seq(EventStreams.Event(
           -1L, tsOf("2025-01-01T00:00:30Z"), -1L, "flush", 0.0))
         runTranscript(s, "q213_stream_windowed_counts", batches :+ sentinel, OutputMode.Append()) {
@@ -477,7 +478,7 @@ object StreamQueries {
     QueryDef.sql("q214_stream_sessionize_update", sessionizeUpdateOracleSql) {
       (s, d) => {
         import s.implicits._
-        val batches = daySlicedBatches[EventStreams.Event](s, Tables.events(s, d))
+        val batches = daySlicedBatches[EventStreams.Event](Tables.events(s, d))
         runTranscript(s, "q214_stream_sessionize_update", batches, OutputMode.Update()) {
           (ds: Dataset[EventStreams.Event]) => EventStreams.sessionize(ds).toDF()
         }.select(col("user_id"), col("n_events"), col("first_ts"),
@@ -653,11 +654,7 @@ object StreamQueries {
           col("user_id").as("id"), col("event_id").as("version"),
           (col("event_type") =!= "purchase").as("visible"),
           col("event_type").as("payload"), col("ts"))
-        val tagged = upd.withColumn("__b",
-          expr("(unix_micros(ts) div 86400000000) % 3"))
-        val batches = (0L until 3L).map(k =>
-          tagged.filter(col("__b") === k).drop("__b", "ts")
-            .as[ElementUpdate].collect().toSeq)
+        val batches = daySlicedBatches[ElementUpdate](upd)
         runTranscript(s, "q218_stream_current_view", batches, OutputMode.Update()) {
           (ds: Dataset[ElementUpdate]) => EventStreams.currentView(ds).toDF()
         }.select(col("id"), col("version"), col("visible"), col("payload"))
@@ -697,7 +694,7 @@ object StreamQueries {
         |HAVING min(wstart) + 3600000000 <= (1735689630000000 // 1000 - 7200000) * 1000""".stripMargin) {
       (s, d) => {
         import s.implicits._
-        val batches = daySlicedBatches[EventStreams.Event](s, Tables.events(s, d))
+        val batches = daySlicedBatches[EventStreams.Event](Tables.events(s, d))
         val sentinel = Seq(EventStreams.Event(
           -1L, tsOf("2025-01-01T00:00:30Z"), -1L, "flush", 0.0))
         val dim = Tables.events(s, d).select(col("user_id")).distinct()
@@ -753,7 +750,7 @@ object StreamQueries {
             pmod(col("user_id"), lit(19)).cast("string"),
             lit(".example.org/e/"), col("event_id").cast("string"))
             .as("url"))
-        val batches = daySlicedBatches[EventStreams.FetchRequest](s, reqs)
+        val batches = daySlicedBatches[EventStreams.FetchRequest](reqs)
         val delays = (0 until 19).filter(_ % 2 == 0)
           .map(k => (s"h$k.example.org", 500L * (k % 5) + 500L))
           .toDF("host", "crawl_delay_ms")

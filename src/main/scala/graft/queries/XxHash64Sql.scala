@@ -67,19 +67,6 @@ private[queries] object XxHash64Sql {
     (head ++ tail, out)
   }
 
-  /** XXH64 int-input step (`i` must already be the unsigned 32-bit
-    * value as an expression).
-    */
-  def hashIntSteps(i: String, seed: String, pfx: String): (Seq[(String, String)], String) = {
-    val (s1, s2, s3) = (pfx + "1", pfx + "2", pfx + "3")
-    val head = Seq(
-      s1 -> m64(s"($seed) + $P5 + 4"),
-      s2 -> xor(s1, mul(i, P1)),
-      s3 -> m64(mul(rotl(s2, 23), P2) + " + " + P3))
-    val (tail, out) = fmixSteps(s3, pfx + "f")
-    (head ++ tail, out)
-  }
-
   /** Emit a chain of CTEs over `src`, each adding up to `per` of the
     * step columns; returns (cteSql, lastCteName).
     */

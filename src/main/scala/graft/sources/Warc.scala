@@ -533,15 +533,6 @@ object Warc {
       } catch { case _: java.io.IOException => false }
     }
 
-    /** First verified member boundary at or after `from` (`-1` when
-      * none before EOF). Block-scans for the magic triple; overlap
-      * carry handles a triple straddling block edges.
-      */
-    def nextBoundary(raf: java.io.RandomAccessFile, from: Long): Long = {
-      val (bs, stop) = boundariesIn(raf, from, from + 1)
-      bs.headOption.getOrElse(stop)
-    }
-
     /** ONE sequential scan pass: every verified boundary in
       * `[from, end)`, plus the stop boundary — the first verified
       * boundary at-or-after `end` (`-1` at EOF). Total bytes read =

@@ -6,8 +6,9 @@ import org.apache.spark.scheduler.{SparkListenerTaskEnd, TaskInfo, TaskLocality}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[QueryMetrics]], the engine's one metrics listener: the build/exec
-  * job split, the worst-stage skew, and counts that hold right after the
-  * work because a snapshot drains the listener bus.
+  * job split, the worst-stage skew, counts that hold right after the
+  * work because a snapshot drains the listener bus, and windows that
+  * leave out earlier work still queued on the bus when they begin.
   */
 class QueryMetricsSpec extends AnyFunSuite with SparkSpec {
 
@@ -16,11 +17,16 @@ class QueryMetricsSpec extends AnyFunSuite with SparkSpec {
     try { m.begin(); body(m) } finally m.close()
   }
 
-  test("a schema-less Tables read is one build job; the action's jobs are exec jobs") {
+  test("a schema-less read is one build job, a Tables read none; the rest are exec") {
     val dir = Files.createTempDirectory("query-metrics").toString
     spark.range(100).toDF("r_regionkey").write.parquet(s"$dir/region.parquet")
     withMetrics { m =>
-      val df = Tables.region(spark, dir) // footer schema inference: one job
+      Tables.region(spark, dir) // footer schema read on the driver: no job
+      m.markExec()
+      assert(m.snapshot()("build_jobs") === 0)
+    }
+    withMetrics { m =>
+      val df = spark.read.parquet(s"$dir/region.parquet") // schema inference: one job
       m.markExec()
       df.write.format("noop").mode("overwrite").save()
       val s = m.snapshot()
@@ -70,6 +76,23 @@ class QueryMetricsSpec extends AnyFunSuite with SparkSpec {
       assert(s("tasks") === 2 * n)
       // no stage has 4 tasks
       assert(s("worst_stage_skew") === 1.0 && s("max_task_ms") === 0)
+    }
+  }
+
+  test("a window leaves out a job whose events are still queued when it begins") {
+    withMetrics { m =>
+      m.synchronized { // the earlier job's events queue on the bus behind the lock
+        spark.sparkContext.parallelize(1 to 8, 8)
+          .map { x => if (x == 1) Thread.sleep(300); x }.count()
+        Thread.sleep(5) // the earlier job starts strictly before the window
+        m.begin()
+      }
+      spark.sparkContext.parallelize(1 to 4, 4).count()
+      val s = m.snapshot()
+      assert(s("jobs") === 1)
+      assert(s("stages") === 1)
+      assert(s("tasks") === 4)
+      assert(s("max_task_ms") < 300) // the earlier job's slow task is not counted
     }
   }
 }
