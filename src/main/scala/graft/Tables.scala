@@ -15,10 +15,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    spark.read.schema(ParquetFooter.schema(spark, path)).parquet(path)
-  }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(paths: _*)` with the schema pinned from the
+    * first path's footer: for paths written with one schema, the schema
+    * inference would find, with no job.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(ParquetFooter.schema(spark, paths.head)).parquet(paths: _*)
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

@@ -3,10 +3,10 @@ package graft.osm
 import java.nio.file.{Files, Paths}
 import scala.io.Source
 import scala.sys.process._
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Load phase: pg_dump custom archive → per-table sorted Parquet.
+/** Load phase: pg_dump custom archive → per-table Parquet.
   *
   * Reference behavior (S1–S6, O2): 12 tables extracted concurrently via
   * `pg_restore -a -t <table>` (`src/dump_archive.cpp:94-119`,
@@ -14,13 +14,13 @@ import org.apache.spark.sql.functions._
   * the table's key prefix, with a running max-timestamp folded across
   * tables (`src/planet-dump.cpp:144-151`).
   *
-  * Spark shape: the pg_restore stage is a driver-side subprocess (the
-  * archive format is sequential by nature); everything after the staged
-  * text is distributed — `spark.read.textFile` → decoder `map` →
-  * `repartitionByRange(sortKeys).sortWithinPartitions` → Parquet. The
-  * external merge sort, spill management, and merge cascades of the
-  * reference are Catalyst's `ExchangeExec`+`SortExec` here. Re-runs skip
-  * tables whose Parquet output already exists (resume, S6).
+  * Spark shape: each table is read through the `pgdump` source
+  * ([[graft.sources.PgDumpSource]]), which stages its COPY text with a
+  * driver-side pg_restore subprocess (the archive format is sequential
+  * by nature) and decodes byte ranges of that text in parallel. The rows
+  * go to Parquet in dump order: the reference's sort feeds its merge
+  * joins, and nothing here reads a table order (see [[Schema]]). Re-runs
+  * skip tables whose Parquet output already exists (resume, S6).
   */
 object Load {
 
@@ -30,16 +30,6 @@ object Load {
     try src.getLines().find(_.startsWith("COPY "))
       .getOrElse(throw new IllegalStateException(s"no COPY header in $textPath"))
     finally src.close()
-  }
-
-  /** Decode one staged table text file into a typed DataFrame. */
-  def decodeTable(spark: SparkSession, table: Schema.Table, textPath: String): DataFrame = {
-    val idx = CopyDecoder.reorder(table, CopyDecoder.parseCopyHeader(copyHeader(textPath)))
-    val enc = Encoders.row(table.schema)
-    val parser = CopyDecoder.rowParser(table, idx)
-    spark.read.textFile(textPath)
-      .filter(CopyDecoder.isDataLine _)
-      .map(parser)(enc)
   }
 
   /** Extract one table to staging text via pg_restore; returns the path.
@@ -100,7 +90,7 @@ object Load {
       finally walk.close()
     }
 
-  /** Full load: stage + decode + sorted-parquet every table; returns the
+  /** Full load: stage + decode + Parquet every table; returns the
     * global max timestamp (reference planet `timestamp` attr / "now"),
     * or None when the dump has no timestamped rows (empty dump →
     * neg-infinity path, `src/xml_writer.cpp:86-88`). A table written in
@@ -175,12 +165,11 @@ object Load {
         deleteRecursively(Paths.get(tablesDir))
       }
       Files.write(idPath, id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // driver-side staging in parallel — one subprocess per table, like
-      // the reference's 12 extraction threads (capped at maxConcurrency)
-      Bounded.map(Schema.all, maxConcurrency)(t => stage(dumpFile, t.name, staging))
-      // decode→sort→parquet jobs are independent per table: submit them
-      // concurrently (Spark schedules across the 12 jobs' stages) instead
-      // of draining the cluster between tables
+      // per table: the source stages its text when the write is planned
+      // (one pg_restore subprocess, like one of the reference's 12
+      // extraction threads), then the write job decodes it. The tables
+      // are independent, so up to maxConcurrency of them run at once and
+      // Spark schedules across their jobs
       val db = OsmDb(spark, tablesDir)
       val maxTimes = Bounded.map(Schema.all, maxConcurrency) { t =>
         val out = s"$tablesDir/${t.name}"
@@ -188,18 +177,15 @@ object Load {
           t.maxTimeCol.flatMap(c =>
             Option(db.table(t.name).agg(max(col(c))).head().getTimestamp(0)))
         else {
-          val sortCols = t.sortKeys.map(col)
-          val sorted = decodeTable(spark, t, s"$staging/${t.name}.txt")
-            .repartitionByRange(sortCols: _*)
-            .sortWithinPartitions(sortCols: _*)
+          val rows = spark.read.format("pgdump").option("table", t.name)
+            .option("staging", staging).load(dumpFile)
           def write(df: DataFrame): Unit = df.write.mode("overwrite").parquet(out)
           t.maxTimeCol match {
-            case None => write(sorted); None
+            case None => write(rows); None
             case Some(c) =>
-              // observed on the write itself, above the range exchange,
-              // so its sampling job does not evaluate the max
+              // observed on the write itself: no job of its own
               val obs = Observation()
-              write(sorted.observe(obs, max(col(c)).as("max")))
+              write(rows.observe(obs, max(col(c)).as("max")))
               Option(obs.get("max").asInstanceOf[java.sql.Timestamp])
           }
         }

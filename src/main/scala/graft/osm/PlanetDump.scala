@@ -48,8 +48,15 @@ object PlanetDump {
           case _ => None
         }
       }.toMap
+    meta(kv, cliOverrides)
+  }
+
+  /** Each header value from the CLI, else from the meta file, else the
+    * default.
+    */
+  private def meta(file: Map[String, String], cli: Map[String, String]): Meta = {
     def pick(key: String, default: String): String =
-      cliOverrides.getOrElse(key, kv.getOrElse(key, default))
+      cli.getOrElse(key, file.getOrElse(key, default))
     val d = Meta()
     Meta(
       author = pick("meta-author", d.author),
@@ -244,16 +251,8 @@ object PlanetDump {
     }
     require(dumpFile.isDefined, "--dump-file is required")
     require(outputs.nonEmpty, "at least one output is required")
-    val defaults = Meta()
-    val meta = metaFile match {
-      case Some(f) => parseMetaFile(f, metaCli.toMap)
-      case None => Meta(
-        author = metaCli.getOrElse("meta-author", defaults.author),
-        source = metaCli.getOrElse("meta-source", defaults.source),
-        copyleft = metaCli.getOrElse("meta-copyleft", defaults.copyleft),
-        attribution = metaCli.getOrElse("meta-attribution", defaults.attribution))
-    }
-    Cli(dumpFile.get, workDir, generator, outputs.toSeq, meta,
+    val info = metaFile.fold(meta(Map.empty, metaCli.toMap))(parseMetaFile(_, metaCli.toMap))
+    Cli(dumpFile.get, workDir, generator, outputs.toSeq, info,
       compressCommand, denseNodes, resume, maxConcurrency)
   }
 

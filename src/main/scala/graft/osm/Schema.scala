@@ -10,26 +10,30 @@ import org.apache.spark.sql.types._
   * against the COPY header, unused dump columns (e.g. nodes.tile, user
   * PII) are never parsed. `dumpName == "*"` means "positional column 0"
   * (the per-table element-id column of the tag tables).
+  *
+  * No table has a sort key. The reference sorts each table by its key
+  * prefix because its streaming merge joins read that order; here every
+  * assembled frame is joined by a shuffle or a broadcast, tags are
+  * ordered by `tagsArray`, and every sink sorts its own output, so a
+  * load-time order would have no reader.
   */
 object Schema {
 
   /** One consumed column: output field name, dump column name, type. */
   final case class Col(name: String, dumpName: String, dt: DataType, nullable: Boolean = false)
 
-  /** One table: dump table name, consumed columns, sort key, and which
-    * column (if any) feeds the global max-timestamp aggregate
-    * (reference `include/table_extractor.hpp:15-19`).
+  /** One table: dump table name, consumed columns, and which column
+    * (if any) feeds the global max-timestamp aggregate (reference
+    * `include/table_extractor.hpp:15-19`).
     */
-  final case class Table(name: String, cols: Seq[Col], sortKeys: Seq[String],
-                         maxTimeCol: Option[String] = None) {
+  final case class Table(name: String, cols: Seq[Col], maxTimeCol: Option[String] = None) {
     def schema: StructType = StructType(cols.map(c => StructField(c.name, c.dt, c.nullable)))
   }
 
   val users = Table("users", Seq(
     Col("id", "id", LongType),
     Col("display_name", "display_name", StringType),
-    Col("data_public", "data_public", BooleanType)),
-    sortKeys = Seq("id"))
+    Col("data_public", "data_public", BooleanType)))
 
   val changesets = Table("changesets", Seq(
     Col("id", "id", LongType),
@@ -41,7 +45,7 @@ object Schema {
     Col("max_lon", "max_lon", IntegerType, nullable = true),
     Col("closed_at", "closed_at", TimestampType),
     Col("num_changes", "num_changes", IntegerType)),
-    sortKeys = Seq("id"), maxTimeCol = Some("created_at"))
+    maxTimeCol = Some("created_at"))
 
   val nodes = Table("nodes", Seq(
     Col("id", "node_id", LongType),
@@ -52,7 +56,7 @@ object Schema {
     Col("redaction_id", "redaction_id", LongType, nullable = true),
     Col("latitude", "latitude", IntegerType),
     Col("longitude", "longitude", IntegerType)),
-    sortKeys = Seq("id", "version"), maxTimeCol = Some("timestamp"))
+    maxTimeCol = Some("timestamp"))
 
   val ways = Table("ways", Seq(
     Col("id", "way_id", LongType),
@@ -61,7 +65,7 @@ object Schema {
     Col("visible", "visible", BooleanType),
     Col("timestamp", "timestamp", TimestampType),
     Col("redaction_id", "redaction_id", LongType, nullable = true)),
-    sortKeys = Seq("id", "version"), maxTimeCol = Some("timestamp"))
+    maxTimeCol = Some("timestamp"))
 
   val relations = Table("relations", Seq(
     Col("id", "relation_id", LongType),
@@ -70,21 +74,19 @@ object Schema {
     Col("visible", "visible", BooleanType),
     Col("timestamp", "timestamp", TimestampType),
     Col("redaction_id", "redaction_id", LongType, nullable = true)),
-    sortKeys = Seq("id", "version"), maxTimeCol = Some("timestamp"))
+    maxTimeCol = Some("timestamp"))
 
   /** changeset tags: no version column (reference current_tag). */
   val changesetTags = Table("changeset_tags", Seq(
     Col("element_id", "*", LongType),
     Col("k", "k", StringType),
-    Col("v", "v", StringType)),
-    sortKeys = Seq("element_id", "k"))
+    Col("v", "v", StringType)))
 
   private def oldTags(table: String) = Table(table, Seq(
     Col("element_id", "*", LongType),
     Col("version", "version", LongType),
     Col("k", "k", StringType),
-    Col("v", "v", StringType)),
-    sortKeys = Seq("element_id", "version", "k"))
+    Col("v", "v", StringType)))
 
   val nodeTags = oldTags("node_tags")
   val wayTags = oldTags("way_tags")
@@ -94,8 +96,7 @@ object Schema {
     Col("way_id", "way_id", LongType),
     Col("version", "version", LongType),
     Col("sequence_id", "sequence_id", LongType),
-    Col("node_id", "node_id", LongType)),
-    sortKeys = Seq("way_id", "version", "sequence_id"))
+    Col("node_id", "node_id", LongType)))
 
   val relationMembers = Table("relation_members", Seq(
     Col("relation_id", "relation_id", LongType),
@@ -103,8 +104,7 @@ object Schema {
     Col("sequence_id", "sequence_id", LongType),
     Col("member_type", "member_type", StringType), // Node | Way | Relation
     Col("member_id", "member_id", LongType),
-    Col("member_role", "member_role", StringType)),
-    sortKeys = Seq("relation_id", "version", "sequence_id"))
+    Col("member_role", "member_role", StringType)))
 
   val changesetComments = Table("changeset_comments", Seq(
     Col("changeset_id", "changeset_id", LongType),
@@ -112,7 +112,7 @@ object Schema {
     Col("author_id", "author_id", LongType),
     Col("body", "body", StringType),
     Col("visible", "visible", BooleanType)),
-    sortKeys = Seq("changeset_id", "created_at"), maxTimeCol = Some("created_at"))
+    maxTimeCol = Some("created_at"))
 
   val all: Seq[Table] = Seq(
     changesets, nodes, ways, relations,

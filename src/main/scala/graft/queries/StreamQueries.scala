@@ -353,7 +353,7 @@ object StreamQueries {
         var k = 0
         o.write.mode("overwrite").parquet(snap)
         val fn = EventStreams.cdcForeachBatch(Seq("o_orderkey"), Seq("ver"))(
-          () => s.read.parquet(snap),
+          () => Tables.parquet(s, snap),
           df => {
             graft.TriggerPlanProbe.record("q204_stream_cdc_replay", df)
             k += 1
@@ -362,7 +362,7 @@ object StreamQueries {
             snap = p
           })
         fn(b1, 1L); fn(b2, 2L); fn(b3, 3L)
-        s.read.parquet(snap).select(col("o_orderkey"), col("o_custkey"),
+        Tables.parquet(s, snap).select(col("o_orderkey"), col("o_custkey"),
           cents(col("o_totalprice")).as("price_cents"), col("o_orderstatus"),
           col("ver"))
       }
@@ -422,7 +422,7 @@ object StreamQueries {
         var sigDirs = Vector.empty[String]
         val fn = EventStreams.incrementalDedupForeachBatch("doc_id", "text")(
           () => if (docDirs.isEmpty) None
-                else Some((s.read.parquet(docDirs: _*), s.read.parquet(sigDirs: _*))),
+                else Some((Tables.parquet(s, docDirs: _*), Tables.parquet(s, sigDirs: _*))),
           (dd, sg) => {
             // trigger-internal plans are recorded by the OPERATOR
             // (stream_incdedup_*#iter keys), pre-persist — recording
@@ -434,7 +434,7 @@ object StreamQueries {
             sigDirs :+= s"$root/sigs_$k"
           })
         (0L until 3L).foreach(k => fn(src.filter(col("batch_id") === k), k))
-        s.read.parquet(docDirs: _*).select(col("doc_id"), col("batch_id"))
+        Tables.parquet(s, docDirs: _*).select(col("doc_id"), col("batch_id"))
       }
     },
 

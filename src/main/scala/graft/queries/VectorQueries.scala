@@ -277,7 +277,7 @@ object VectorQueries {
         cents.write.mode("overwrite").parquet(s"$dir/centroids")
         assigns.write.mode("overwrite").parquet(s"$dir/assignments")
         Similarity.ivfTopKStored(e, "vec_id", "embedding", e, "vec_id", "embedding",
-          s.read.parquet(s"$dir/centroids"), s.read.parquet(s"$dir/assignments"),
+          Tables.parquet(s, s"$dir/centroids"), Tables.parquet(s, s"$dir/assignments"),
           k = 3)
       }
     },

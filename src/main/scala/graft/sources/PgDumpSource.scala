@@ -9,7 +9,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
 import graft.osm.{CopyDecoder, Schema}
 
-/** DataSourceV2 reader for pg_dump custom archives:
+/** DataSourceV2 reader for pg_dump custom archives, and the one COPY
+  * text reader: [[graft.osm.Load]] reads every table through it.
   *
   * {{{
   * spark.read.format("pgdump")
@@ -28,8 +29,12 @@ import graft.osm.{CopyDecoder, Schema}
   * columns Catalyst asks for are parsed (an empty projection — a bare
   * count — decodes nothing per row).
   *
-  * The staged text path must be visible to the executors: local disk
-  * in local mode, shared storage on a cluster.
+  * Staged text lives at `<staging>/<UUID of Load.dumpId>/<table>.txt`
+  * (a name-based UUID of the dump's identity stamp), so a staging
+  * directory shared by two dumps never serves one dump's text for the
+  * other, and staging again for the same dump is a no-op. It must be
+  * visible to the executors: local disk in local mode, shared storage
+  * on a cluster.
   */
 class PgDumpSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -123,9 +128,8 @@ final class PgDumpPartitionReader(tableDef: Schema.Table, required: StructType,
   // header-driven reorder for the full table row, then project to the
   // required subset (pruning = those columns are never parsed)
   private val dumpCols = CopyDecoder.parseCopyHeader(graft.osm.Load.copyHeader(p.textPath))
-  private val prunedTable = Schema.Table(tableDef.name,
-    required.fields.map(f => tableDef.cols.find(_.name == f.name).get).toSeq,
-    tableDef.sortKeys)
+  private val prunedTable = tableDef.copy(
+    cols = required.fields.map(f => tableDef.cols.find(_.name == f.name).get).toSeq)
   private val parser = CopyDecoder.rowParser(prunedTable,
     CopyDecoder.reorder(prunedTable, dumpCols))
   private val toInternal =

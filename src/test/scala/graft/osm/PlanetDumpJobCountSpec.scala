@@ -7,15 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Spark jobs one warm serial `PlanetDump.run` submits on the in-repo
   * fixture, all six outputs, at local[4] with 4 shuffle partitions. The
   * bound is the measured count with one write job per XML file, table
-  * reads that take their known schema and Load's max time observed on
-  * the writes: 109, against 149 for the earlier pipeline, which ran a
-  * job per XML section, inferred every read's schema and read the max
-  * times back. A re-introduced inference read, read-back aggregate or
+  * reads that take their known schema, Load's max time observed on the
+  * writes, and Load writing each table in dump order through the
+  * `pgdump` source, with no range sort (which cost each table a
+  * sampling job and a shuffle job): 85, against 109 with that sort and
+  * 149 for the earlier pipeline, which ran a job per XML section,
+  * inferred every read's schema and read the max times back. A
+  * re-introduced load-time sort, inference read, read-back aggregate or
   * per-section job fails here.
   */
 class PlanetDumpJobCountSpec extends AnyFunSuite with SparkSpec {
 
-  private val maxJobs = 109
+  private val maxJobs = 85
 
   test(s"a warm serial run of all six outputs submits at most $maxJobs jobs") {
     // a session of its own: no runtime setting another spec left behind
