@@ -82,14 +82,6 @@ object Load {
     s"size=${Files.size(p)} mtime=${Files.getLastModifiedTime(p).toMillis} head=$md5"
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
-
   /** Full load: stage + decode + Parquet every table; returns the
     * global max timestamp (reference planet `timestamp` attr / "now"),
     * or None when the dump has no timestamped rows (empty dump →
@@ -161,8 +153,8 @@ object Load {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     try {
       if (wipe) {
-        deleteRecursively(Paths.get(staging))
-        deleteRecursively(Paths.get(tablesDir))
+        PartSink.deleteRecursive(Paths.get(staging))
+        PartSink.deleteRecursive(Paths.get(tablesDir))
       }
       Files.write(idPath, id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // per table: the source stages its text when the write is planned

@@ -44,10 +44,13 @@ private[osm] object PartSink {
   def concat(out: OutputStream, dir: Path, ids: Seq[Int]): Unit =
     ids.sorted.foreach(pid => Files.copy(partPath(dir, pid), out))
 
+  /** `p` and everything under it, if present; a file that vanishes
+    * during the walk is tolerated.
+    */
   def deleteRecursive(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
       finally walk.close()
     }
 }

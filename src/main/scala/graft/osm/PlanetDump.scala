@@ -40,14 +40,16 @@ object PlanetDump {
     * (`src/planet-dump.cpp:104-116` stores the CLI before the file).
     */
   def parseMetaFile(path: String, cliOverrides: Map[String, String]): Meta = {
-    val kv = scala.io.Source.fromFile(path, "UTF-8").getLines()
-      .map(_.takeWhile(_ != '#').trim).filter(_.nonEmpty)
-      .flatMap { line =>
-        line.split("=", 2) match {
-          case Array(k, v) => Some(k.trim -> v.trim)
-          case _ => None
-        }
-      }.toMap
+    val kv = scala.util.Using.resource(scala.io.Source.fromFile(path, "UTF-8")) {
+      _.getLines()
+        .map(_.takeWhile(_ != '#').trim).filter(_.nonEmpty)
+        .flatMap { line =>
+          line.split("=", 2) match {
+            case Array(k, v) => Some(k.trim -> v.trim)
+            case _ => None
+          }
+        }.toMap
+    }
     meta(kv, cliOverrides)
   }
 

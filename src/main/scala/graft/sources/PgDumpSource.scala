@@ -6,7 +6,9 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.SQLConf
 import graft.osm.{CopyDecoder, Schema}
 
 /** DataSourceV2 reader for pg_dump custom archives, and the one COPY
@@ -84,19 +86,22 @@ final class PgDumpScan(tableDef: Schema.Table, dumpPath: String, staging: String
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  private val splitBytes = 32L * 1024 * 1024
-
   override def planInputPartitions(): Array[InputPartition] = {
     // driver-side staging (idempotent, keyed by the dump's identity), like the
     // reference's pg_restore subprocess; executors then read byte ranges of the text
     val dumpKey = java.util.UUID.nameUUIDFromBytes(graft.osm.Load.dumpId(dumpPath).getBytes("UTF-8"))
     val textPath = graft.osm.Load.stage(dumpPath, tableDef.name, s"$staging/$dumpKey")
     val size = new java.io.File(textPath).length()
-    val nSplits = math.max(1, (size / splitBytes).toInt)
-    val step = size / nSplits + 1
-    (0 until nSplits).map(i =>
-      PgDumpPartition(textPath, i * step, math.min((i + 1) * step, size))
-        .asInstanceOf[InputPartition]).toArray
+    // the split size Spark's file sources derive from the session
+    // (FilePartition.maxSplitBytes); the readers align any cut to lines
+    val conf = SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val split = math.max(1L, math.min(conf.filesMaxPartitionBytes, math.max(openCost,
+      (size + openCost) / SparkSession.active.sparkContext.defaultParallelism)))
+    val nSplits = math.max(1L, (size + split - 1) / split)
+    (0L until nSplits).map(i =>
+      PgDumpPartition(textPath, i * split, math.min((i + 1) * split, size)): InputPartition)
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

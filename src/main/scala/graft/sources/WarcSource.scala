@@ -19,13 +19,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .select("target_uri", "payload")      // pruned: unneeded columns never allocated
   * }}}
   *
-  * Partitioning: ONE input partition per file. Gzip members are not
-  * byte-range splittable without a side index, and the format's own
-  * deployment convention (Common Crawl: ~90k files × ~1 GiB per
-  * crawl) gives file-level parallelism more splits than executors on
-  * any real cluster — so per-file readers are the honest scale design,
-  * not a shortcut. Each reader streams records sequentially in O(one
-  * record) memory.
+  * Partitioning: ONE input partition per file, read by one task, for
+  * batch and streaming alike. Gzip members are not byte-range
+  * splittable without a side index, and the format's own deployment
+  * convention (Common Crawl: ~90k files × ~1 GiB per crawl) gives
+  * file-level parallelism more splits than executors on any real
+  * cluster. Each reader streams records sequentially in O(one record)
+  * memory, so `warc_offset` is always the record's offset in the
+  * decompressed stream.
   *
   * Pushdown surface:
   *  - column pruning ([[SupportsPushDownRequiredColumns]]): a scan
@@ -48,33 +49,12 @@ class WarcSource extends TableProvider
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new WarcTable(properties.get("path"),
-      Option(properties.get(WarcSource.SplitOption)).map(_.toLong))
+    new WarcTable(properties.get("path"))
 
   override def supportsExternalMetadata(): Boolean = false
 }
 
-object WarcSource {
-  /** OPT-IN gzip-member splitting: `.option("member_split_bytes", n)`
-    * splits each `.warc.gz` LARGER than n into ceil(size/n) byte-range
-    * partitions, aligned to VERIFIED gzip-member boundaries inside the
-    * readers (no driver-side scan). The default — one partition per
-    * file — stays the honest unit for real crawls (thousands of
-    * ~1 GiB files); the option covers the one-giant-archive corner.
-    * Plain `.warc` files never split (record boundaries in an
-    * uncompressed stream are not distinguishable from payload bytes).
-    *
-    * Offset semantics under splitting: `warc_offset` is the record's
-    * member chunk's COMPRESSED byte offset (the CDX-style locator) —
-    * the unsplit reader reports the decompressed stream offset. All
-    * other columns are identical between the two paths (WarcSpec
-    * proves record-identity).
-    */
-  val SplitOption = "member_split_bytes"
-}
-
-final class WarcTable(path: String, splitBytes: Option[Long])
-    extends Table with SupportsRead {
+final class WarcTable(path: String) extends Table with SupportsRead {
   require(path != null, "a load path (file or directory) is required")
 
   override def name(): String = s"warc:$path"
@@ -84,11 +64,10 @@ final class WarcTable(path: String, splitBytes: Option[Long])
       TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(path, splitBytes)
+    new WarcScanBuilder(path)
 }
 
-final class WarcScanBuilder(path: String, splitBytes: Option[Long])
-    extends ScanBuilder
+final class WarcScanBuilder(path: String) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
   private var required: StructType = Warc.schema
@@ -120,12 +99,11 @@ final class WarcScanBuilder(path: String, splitBytes: Option[Long])
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new WarcScan(path, required, typeFilter, splitBytes)
+  override def build(): Scan = new WarcScan(path, required, typeFilter)
 }
 
 final class WarcScan(path: String, required: StructType,
-                     typeFilter: Option[Set[String]],
-                     splitBytes: Option[Long] = None) extends Scan with Batch {
+                     typeFilter: Option[Set[String]]) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -133,18 +111,7 @@ final class WarcScan(path: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val files = WarcScan.list(path)
     require(files.nonEmpty, s"no .warc/.warc.gz files under $path")
-    files.flatMap { f =>
-      val size = new java.io.File(f).length()
-      splitBytes match {
-        case Some(sb) if f.endsWith(".gz") && size > sb =>
-          require(sb > 0, s"member_split_bytes must be positive, got $sb")
-          // byte ranges; readers align to verified member boundaries
-          // (a record belongs to the range its MEMBER starts in)
-          (0L until size by sb).map(s =>
-            WarcPartition(f, s, math.min(s + sb, size)))
-        case _ => Seq(WarcPartition(f))
-      }
-    }.map(_.asInstanceOf[InputPartition])
+    files.map(f => WarcPartition(f): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -214,35 +181,35 @@ final class WarcMicroBatchStream(path: String, required: StructType,
     val s = start.asInstanceOf[WarcOffset].last
     val e = end.asInstanceOf[WarcOffset].last
     WarcScan.list(path).filter(f => f > s && f <= e)
-      .map(f => WarcPartition(f).asInstanceOf[InputPartition])
+      .map(f => WarcPartition(f): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WarcReaderFactory(required, typeFilter)
 }
 
-/** `start`/`end` delimit a raw byte range for member-split reads;
-  * `end < 0` = the whole file (the default per-file partition).
-  */
-final case class WarcPartition(file: String, start: Long = 0L,
-                               end: Long = -1L) extends InputPartition
+final case class WarcPartition(file: String) extends InputPartition
 
 final class WarcReaderFactory(required: StructType,
                               typeFilter: Option[Set[String]])
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val wp = p.asInstanceOf[WarcPartition]
-    if (wp.end < 0)
-      new WarcPartitionReader(required, typeFilter, wp.file)
-    else
-      new WarcRangeReader(required, typeFilter, wp.file, wp.start, wp.end)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new WarcPartitionReader(required, typeFilter,
+      p.asInstanceOf[WarcPartition].file)
 }
 
-/** required-subset Row → InternalRow, PgDumpPartitionReader-style —
-  * shared by the per-file and member-range readers.
+/** Streams one file's records, encoding the `required` columns of each
+  * admitted record (PgDumpPartitionReader-style row encoding).
   */
-private[sources] final class WarcRowEncoder(required: StructType) {
+final class WarcPartitionReader(required: StructType,
+                                typeFilter: Option[Set[String]], file: String)
+    extends PartitionReader[InternalRow] {
+
+  private val needPayload = required.fieldNames.contains("payload")
+  private val reader = new Warc.RecordReader(
+    new java.io.FileInputStream(file), new java.io.File(file).getName,
+    readPayload = needPayload)
+
   private val fieldOf: Array[Warc.Record => Any] = required.fieldNames.map {
     case "warc_file" => (r: Warc.Record) => r.file
     case "warc_offset" => (r: Warc.Record) => r.offset
@@ -265,21 +232,6 @@ private[sources] final class WarcRowEncoder(required: StructType) {
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(required)
       .createSerializer()
 
-  def encode(rec: Warc.Record): InternalRow =
-    toInternal(org.apache.spark.sql.Row.fromSeq(
-      fieldOf.toIndexedSeq.map(_(rec)))).copy()
-}
-
-final class WarcPartitionReader(required: StructType,
-                                typeFilter: Option[Set[String]], file: String)
-    extends PartitionReader[InternalRow] {
-
-  private val needPayload = required.fieldNames.contains("payload")
-  private val reader = new Warc.RecordReader(
-    new java.io.FileInputStream(file), new java.io.File(file).getName,
-    readPayload = needPayload)
-  private val enc = new WarcRowEncoder(required)
-
   private var current: InternalRow = _
 
   private val admit: String => Boolean =
@@ -290,7 +242,8 @@ final class WarcPartitionReader(required: StructType,
       val rec = reader.next(admit)
       if (rec == null) return false
       if (admit(rec.warcType)) {
-        current = enc.encode(rec)
+        current = toInternal(org.apache.spark.sql.Row.fromSeq(
+          fieldOf.toIndexedSeq.map(_(rec)))).copy()
         return true
       }
     }
@@ -299,69 +252,4 @@ final class WarcPartitionReader(required: StructType,
 
   override def get(): InternalRow = current
   override def close(): Unit = reader.close()
-}
-
-/** Member-split reader over the raw byte range [start, end) of one
-  * `.warc.gz`: owns every gzip member whose VERIFIED boundary falls in
-  * the range (`Warc.MemberSplit`). First pass block-scans the range
-  * for boundaries (the last owned member may extend past `end`; the
-  * neighbor starts exactly at the next boundary, so no record is read
-  * twice or lost); second pass decompresses one bounded chunk per
-  * member. `warc_offset` under splitting = the member's COMPRESSED
-  * byte offset plus the record's decompressed offset within the
-  * member — for the one-record-per-member layout (this sink's, and
-  * Common Crawl's) that is exactly the CDX-style compressed locator;
-  * the unsplit reader reports decompressed-stream offsets instead
-  * (see [[WarcSource.SplitOption]]).
-  */
-final class WarcRangeReader(required: StructType,
-                            typeFilter: Option[Set[String]], file: String,
-                            start: Long, end: Long)
-    extends PartitionReader[InternalRow] {
-
-  private val needPayload = required.fieldNames.contains("payload")
-  private val fname = new java.io.File(file).getName
-  private val raf = new java.io.RandomAccessFile(file, "r")
-
-  // one sequential scan pass: every verified boundary in [start, end),
-  // plus the stop boundary (first at-or-after end, or EOF)
-  private val (boundaries, stop) = {
-    val (bs, s) = Warc.MemberSplit.boundariesIn(raf, start, end)
-    (bs, if (s >= 0) s else raf.length())
-  }
-
-  private val enc = new WarcRowEncoder(required)
-  private val admit: String => Boolean =
-    t => typeFilter.forall(_.contains(t))
-
-  private var chunk = 0
-  private var reader: Warc.RecordReader = _
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (reader == null) {
-        if (chunk >= boundaries.length) return false
-        val cs = boundaries(chunk)
-        val ce = if (chunk + 1 < boundaries.length) boundaries(chunk + 1) else stop
-        reader = new Warc.RecordReader(
-          new Warc.MemberSplit.RangeStream(raf, cs, ce), fname,
-          readPayload = needPayload)
-      }
-      val rec = reader.next(admit)
-      if (rec == null) {
-        reader.close(); reader = null; chunk += 1
-      } else if (admit(rec.warcType)) {
-        current = enc.encode(rec.copy(offset = boundaries(chunk) + rec.offset))
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = {
-    if (reader != null) reader.close()
-    raf.close()
-  }
 }

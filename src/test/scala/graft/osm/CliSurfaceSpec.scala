@@ -160,4 +160,18 @@ class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
     assert(header.contains("copyright=\"Cli Author\""))
     assert(header.contains("origin=\"http://example.org/file-api\""))
   }
+
+  test("parseMetaFile closes the meta file") {
+    val fds = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fds), "needs /proc/self/fd to list open descriptors")
+    val f = Files.createTempFile("meta", ".conf")
+    Files.writeString(f, "meta-author = File Author\n")
+    assert(PlanetDump.parseMetaFile(f.toString, Map.empty).author === "File Author")
+    val ls = Files.list(fds)
+    val open = try ls.toArray.toSeq.flatMap { fd =>
+      // a descriptor may close between the listing and the read
+      scala.util.Try(Files.readSymbolicLink(fd.asInstanceOf[java.nio.file.Path])).toOption
+    } finally ls.close()
+    assert(!open.contains(f.toRealPath()), s"$f is still open")
+  }
 }

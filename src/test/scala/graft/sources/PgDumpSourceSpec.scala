@@ -71,6 +71,25 @@ class PgDumpSourceSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("the split size follows the session's file-split confs; cut reads return the same rows") {
+    val dump = dumps.head
+    val whole = dump.read("nodes")
+    assert(whole.rdd.getNumPartitions === 1)
+    val expected = whole.orderBy("id", "version").collect().toSeq
+    val confs = Seq("spark.sql.files.maxPartitionBytes" -> "4096",
+      "spark.sql.files.openCostInBytes" -> "0")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val cut = dump.read("nodes")
+      assert(cut.rdd.getNumPartitions > 1)
+      assert(cut.orderBy("id", "version").collect().toSeq === expected)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("a staging directory shared by two dumps never serves one dump's text for the other") {
     val shared = java.nio.file.Files.createTempDirectory("pgdump-shared")
     def nodes(path: String) = spark.read.format("pgdump")

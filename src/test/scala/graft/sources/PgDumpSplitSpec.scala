@@ -5,8 +5,9 @@ import graft.osm.{Load, PlanetFixture, Schema}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `PgDumpPartitionReader`'s line alignment over several byte-range
-  * partitions. Every in-repo dump stages far less text than one
-  * `PgDumpScan` split, so the planner never cuts a table; here the
+  * partitions. Every in-repo dump stages less text than the 4 MiB
+  * `openCostInBytes` floor of a `PgDumpScan` split, so at the default
+  * session settings the planner never cuts a table; here the
   * staged text of the fixture is cut by hand, at line starts, at the
   * `\n` byte, just before and after it, mid-line, and inside the
   * fixture's 68,201-character comment (longer than the reader's 64 KiB
