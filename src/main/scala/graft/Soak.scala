@@ -94,45 +94,32 @@ object Soak {
     }
 
     // the q263/q265 fetch-result fixture at soak scale (997 hosts):
-    // the r13 %11 residue walk — absolute chains, a never-fetched
-    // landing, a self-loop, and the three relative Location forms
-    // (same-host offsets are multiples of 997 where the landing must
-    // be a fetched URL)
-    def soakRedirectResp(d: String): DataFrame = {
+    // the %11 residue walk — absolute chains, a never-fetched landing,
+    // a self-loop, and the three relative Location forms (same-host
+    // offsets are multiples of 997 where the landing must be a
+    // fetched URL)
+    def soakRedirectResp(d: String): DataFrame =
+      queries.WebGraphQueries.redirectFixture(spark, d, hosts = 997)
+
+    // the alias_merge family's shared prelude: the redirect chains of
+    // soakRedirectResp and the merged frontier (every fetched URL
+    // discovered; even docs respelled as seeds with tracking params)
+    def soakAliasMerge(d: String): (DataFrame, DataFrame) = {
+      val docs = spark.read.parquet(s"$d/documents.parquet")
       val did = col("doc_id")
-      val ks = pmod(did, lit(997)).cast("string")
-      def u(x: Column): Column =
-        concat(lit("http://h"), pmod(x, lit(997)).cast("string"),
-          lit(".example.org/r/doc"), x.cast("string"))
-      spark.read.parquet(s"$d/documents.parquet").select(
-        u(did).as("url"),
-        when(pmod(did, lit(11)) === 0, 301)
-          .when(pmod(did, lit(11)) === 1, 302)
-          .when(pmod(did, lit(11)) === 2, 301)
-          .when(pmod(did, lit(11)) === 3, 301)
-          .when(pmod(did, lit(11)) === 5, 301)
-          .when(pmod(did, lit(11)) === 6, 302)
-          .when(pmod(did, lit(11)) === 7, 301)
-          .when(pmod(did, lit(11)) === 8, 307)
-          .when(pmod(did, lit(11)) === 9, 302)
-          .when(pmod(did, lit(11)) === 10, 303)
-          .otherwise(200).as("status"),
-        when(pmod(did, lit(11)) === 0, u(did + 1))
-          .when(pmod(did, lit(11)) === 1, u(did + 2))
-          .when(pmod(did, lit(11)) === 2, u(did + 4))
-          .when(pmod(did, lit(11)) === 3, concat(lit("http://h"), ks,
-            lit(".example.org/private"), ks,
-            lit("/moved/doc"), did.cast("string")))
-          .when(pmod(did, lit(11)) === 5, u(did))
-          .when(pmod(did, lit(11)) === 6, u(did + 2))
-          .when(pmod(did, lit(11)) === 7,
-            concat(lit("/r/doc"), (did + 997).cast("string")))
-          .when(pmod(did, lit(11)) === 8, u(did + 1))
-          .when(pmod(did, lit(11)) === 9, concat(lit("//h"), ks,
-            lit(".example.org/r/doc"), (did + 8973).cast("string")))
-          .when(pmod(did, lit(11)) === 10,
-            concat(lit("doc"), (did + 997).cast("string")))
-          .as("location"))
+      val resp = soakRedirectResp(d)
+      val chains = operators.WebGraph.redirectChains(resp, "url",
+        col("status"), col("location"), maxHops = 4)
+      val seeds = docs.filter(pmod(did, lit(2)) === 0)
+        .select(concat(lit("http://H"),
+            pmod(did, lit(997)).cast("string"),
+            lit(".EXAMPLE.ORG/r/doc"), did.cast("string"),
+            lit("?utm_source=x")).as("loc"),
+          when(pmod(did, lit(3)) === 0,
+            (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
+      val merged = operators.Frontier.mergeSeeds(
+        resp.select(col("url")), col("url"), seeds, col("loc"), col("pm"))
+      (merged, chains)
     }
 
     val shapes: Seq[(String, String => DataFrame)] = Seq(
@@ -562,20 +549,7 @@ object Soak {
         // join, and ONE hash aggregate on the landing key — all
         // partial-aggregate friendly, no window; alias-group fan-in
         // is bounded by the chain depth, never corpus-sized.
-        val docs = spark.read.parquet(s"$d/documents.parquet")
-        val did = col("doc_id")
-        val resp = soakRedirectResp(d)
-        val chains = operators.WebGraph.redirectChains(resp, "url",
-          col("status"), col("location"), maxHops = 4)
-        val seeds = docs.filter(pmod(did, lit(2)) === 0)
-          .select(concat(lit("http://H"),
-              pmod(did, lit(997)).cast("string"),
-              lit(".EXAMPLE.ORG/r/doc"), did.cast("string"),
-              lit("?utm_source=x")).as("loc"),
-            when(pmod(did, lit(3)) === 0,
-              (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
-        val merged = operators.Frontier.mergeSeeds(
-          resp.select(col("url")), col("url"), seeds, col("loc"), col("pm"))
+        val (merged, chains) = soakAliasMerge(d)
         operators.Frontier.resolveAliases(merged, chains)
       },
       "permanent_alias_merge" -> { d: String =>
@@ -585,20 +559,7 @@ object Soak {
         // same chain joins (two extra state columns, no new shuffle)
         // and routing adds ONE canon-keyed equi-join against the
         // fetch-grain chain dimension — same class as the chain map.
-        val docs = spark.read.parquet(s"$d/documents.parquet")
-        val did = col("doc_id")
-        val resp = soakRedirectResp(d)
-        val chains = operators.WebGraph.redirectChains(resp, "url",
-          col("status"), col("location"), maxHops = 4)
-        val seeds = docs.filter(pmod(did, lit(2)) === 0)
-          .select(concat(lit("http://H"),
-              pmod(did, lit(997)).cast("string"),
-              lit(".EXAMPLE.ORG/r/doc"), did.cast("string"),
-              lit("?utm_source=x")).as("loc"),
-            when(pmod(did, lit(3)) === 0,
-              (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
-        val merged = operators.Frontier.mergeSeeds(
-          resp.select(col("url")), col("url"), seeds, col("loc"), col("pm"))
+        val (merged, chains) = soakAliasMerge(d)
         operators.Frontier.resolveAliasesPermanent(merged, chains)
       },
       "canonical_merge" -> { d: String =>
@@ -612,19 +573,7 @@ object Soak {
         // dimension and the hint hash aggregate — no window.
         val docs = spark.read.parquet(s"$d/documents.parquet")
         val did = col("doc_id")
-        val resp = soakRedirectResp(d)
-        val chains = operators.WebGraph.redirectChains(resp, "url",
-          col("status"), col("location"), maxHops = 4)
-        val merged = operators.Frontier.mergeSeeds(
-          resp.select(col("url")), col("url"),
-          docs.filter(pmod(did, lit(2)) === 0)
-            .select(concat(lit("http://H"),
-                pmod(did, lit(997)).cast("string"),
-                lit(".EXAMPLE.ORG/r/doc"), did.cast("string"),
-                lit("?utm_source=x")).as("loc"),
-              when(pmod(did, lit(3)) === 0,
-                (pmod(did, lit(10)) * 100).cast("long")).as("pm")),
-          col("loc"), col("pm"))
+        val (merged, chains) = soakAliasMerge(d)
         val cpages = docs.filter(pmod(did, lit(11)) === 4)
           .select(
             concat(lit("http://h"), pmod(did, lit(997)).cast("string"),

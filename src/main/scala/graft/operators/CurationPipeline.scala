@@ -46,6 +46,30 @@ object CurationPipeline {
       lineDedupMinOccurrences: Option[Long] = None,
       lineSep: String = "\n")
 
+  /** The text-editing prefix [[curate]] and [[curateAudit]] share:
+    * NFC, PII redaction, then the optional line-level cleanup, in C4
+    * order: in-page repeats first, then the corpus-wide boilerplate
+    * census — both BEFORE quality scoring and hashing so downstream
+    * stages see the cleaned text. Returns (doc_id, text).
+    */
+  private def cleaned(docs: DataFrame, idCol: String, textCol: String,
+                      cfg: Config): DataFrame = {
+    val base = docs.select(col(idCol).as("doc_id"),
+      graft.plans.NfcNormalize.nfc_normalize(col(textCol)).as("text"))
+    val scrubbed = base.withColumn("text",
+      graft.functions.TextFunctions.redactPii(col("text")))
+    val intraClean =
+      if (!cfg.intraDocDedup) scrubbed
+      else Dedup.intraDocLineDedup(scrubbed, "doc_id", col("text"), cfg.lineSep)
+        .select(col("doc_id"), col("clean_text").as("text"))
+    cfg.lineDedupMinOccurrences match {
+      case None => intraClean
+      case Some(m) =>
+        Dedup.lineDedup(intraClean, "doc_id", col("text"), m, cfg.lineSep)
+          .select(col("doc_id"), col("clean_text").as("text"))
+    }
+  }
+
   /** Run the full pipeline. `benchmark` is the eval set to
     * decontaminate against (None = skip the stage). Returns the kept
     * corpus as (doc_id, text, quality_milli, split).
@@ -54,22 +78,7 @@ object CurationPipeline {
              benchmark: Option[DataFrame] = None,
              cfg: Config = Config()): DataFrame = {
     import graft.functions.TextFunctions._
-    val base = docs.select(col(idCol).as("doc_id"),
-      graft.plans.NfcNormalize.nfc_normalize(col(textCol)).as("text"))
-    val scrubbed = base.withColumn("text", redactPii(col("text")))
-    // optional line-level cleanup, in C4 order: in-page repeats first,
-    // then the corpus-wide boilerplate census — both BEFORE quality
-    // scoring and hashing so downstream stages see the cleaned text
-    val intraClean =
-      if (!cfg.intraDocDedup) scrubbed
-      else Dedup.intraDocLineDedup(scrubbed, "doc_id", col("text"), cfg.lineSep)
-        .select(col("doc_id"), col("clean_text").as("text"))
-    val lineClean = cfg.lineDedupMinOccurrences match {
-      case None => intraClean
-      case Some(m) =>
-        Dedup.lineDedup(intraClean, "doc_id", col("text"), m, cfg.lineSep)
-          .select(col("doc_id"), col("clean_text").as("text"))
-    }
+    val lineClean = cleaned(docs, idCol, textCol, cfg)
     val scored = lineClean
       .withColumn("quality_milli", qualityScoreMilli(col("text"), cfg.stopwords))
       .filter(col("quality_milli") >= cfg.minQualityMilli)
@@ -121,19 +130,7 @@ object CurationPipeline {
                   benchmark: Option[DataFrame] = None,
                   cfg: Config = Config()): DataFrame = {
     import graft.functions.TextFunctions._
-    val base = docs.select(col(idCol).as("doc_id"),
-      graft.plans.NfcNormalize.nfc_normalize(col(textCol)).as("text"))
-    val scrubbed = base.withColumn("text", redactPii(col("text")))
-    val intraClean =
-      if (!cfg.intraDocDedup) scrubbed
-      else Dedup.intraDocLineDedup(scrubbed, "doc_id", col("text"), cfg.lineSep)
-        .select(col("doc_id"), col("clean_text").as("text"))
-    val lineClean = cfg.lineDedupMinOccurrences match {
-      case None => intraClean
-      case Some(m) =>
-        Dedup.lineDedup(intraClean, "doc_id", col("text"), m, cfg.lineSep)
-          .select(col("doc_id"), col("clean_text").as("text"))
-    }
+    val lineClean = cleaned(docs, idCol, textCol, cfg)
     val scoredAll = CacheRegistry.persist(lineClean
       .withColumn("quality_milli", qualityScoreMilli(col("text"), cfg.stopwords)))
     val lowQ = scoredAll.filter(col("quality_milli") < cfg.minQualityMilli)

@@ -2,6 +2,7 @@ package graft.osm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Assembly of raw tables into canonical "assembled element" DataFrames
   * — the reusable heart of the engine (reference streaming sort-merge
@@ -87,15 +88,25 @@ object Assemble {
         array().cast("array<struct<at:timestamp,author_id:bigint,author_name:string,body:string>>")))
   }
 
+  /** Left-join the per-(element, version) child frame
+    * `child(idCol, version, name)` onto the elements `el`, dropping the
+    * child's keys; an element with no child rows gets an empty array of
+    * the child column's own type.
+    */
+  private def attach(el: DataFrame, child: DataFrame, idCol: String,
+                     name: String): DataFrame = {
+    val arr = child.schema(name).dataType.asInstanceOf[ArrayType]
+    el.join(child, el("id") === child(idCol) && el("version") === child("version"), "left_outer")
+      .drop(child(idCol)).drop(child("version"))
+      .withColumn(name, coalesce(col(name), array().cast(arr.copy(containsNull = true))))
+  }
+
   /** Assembled node history: every surviving version with tags + attribution. */
   def nodes(db: OsmDb): DataFrame = {
     val n = db.nodes
     val el = n.filter(guard(n))
     val tags = tagsArray(db.table("node_tags"), withVersion = true)
-    withAttribution(db,
-      el.join(tags, el("id") === tags("element_id") && el("version") === tags("version"), "left_outer")
-        .drop(tags("element_id")).drop(tags("version"))
-        .withColumn("tags", coalesce(col("tags"), noTags)))
+    withAttribution(db, attach(el, tags, "element_id", "tags"))
   }
 
   /** Assembled way history: + ordered node refs (J2, sequence order). */
@@ -109,12 +120,7 @@ object Assemble {
         array_sort(collect_list(struct(col("sequence_id"), col("node_id")))),
         x => x.getField("node_id")).as("nds"))
     withAttribution(db,
-      el.join(tags, el("id") === tags("element_id") && el("version") === tags("version"), "left_outer")
-        .drop(tags("element_id")).drop(tags("version"))
-        .join(nds, el("id") === nds("way_id") && el("version") === nds("version"), "left_outer")
-        .drop(nds("way_id")).drop(nds("version"))
-        .withColumn("tags", coalesce(col("tags"), noTags))
-        .withColumn("nds", coalesce(col("nds"), array().cast("array<bigint>"))))
+      attach(attach(el, tags, "element_id", "tags"), nds, "way_id", "nds"))
   }
 
   /** Assembled relation history: + ordered members (J2). */
@@ -131,13 +137,7 @@ object Assemble {
           x.getField("member_id").as("mref"),
           x.getField("member_role").as("mrole"))).as("members"))
     withAttribution(db,
-      el.join(tags, el("id") === tags("element_id") && el("version") === tags("version"), "left_outer")
-        .drop(tags("element_id")).drop(tags("version"))
-        .join(members, el("id") === members("relation_id") && el("version") === members("version"), "left_outer")
-        .drop(members("relation_id")).drop(members("version"))
-        .withColumn("tags", coalesce(col("tags"), noTags))
-        .withColumn("members", coalesce(col("members"),
-          array().cast("array<struct<mtype:string,mref:bigint,mrole:string>>"))))
+      attach(attach(el, tags, "element_id", "tags"), members, "relation_id", "members"))
   }
 
   /** F3: latest version per id, then visible only ("current" view).

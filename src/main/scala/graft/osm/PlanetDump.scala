@@ -221,33 +221,43 @@ object PlanetDump {
     if (args.contains("--help") || args.contains("-h"))
       return Cli("", "", "", Nil, Meta(), None, denseNodes = true, help = true)
     var i = 0
+    // the value of the option at i, named in the error when it is missing
+    def value(): String = {
+      if (i + 1 >= args.length)
+        throw new IllegalArgumentException(
+          s"the required argument for option '${args(i)}' is missing")
+      args(i + 1)
+    }
     while (i < args.length) {
       args(i) match {
-        case "--dump-file" | "-f" => dumpFile = Some(args(i + 1)); i += 2
-        case "--work-dir" => workDir = args(i + 1); i += 2
-        case "--generator" => generator = args(i + 1); i += 2
-        case "--compress-command" | "-c" => compressCommand = Some(args(i + 1)); i += 2
-        case "--dense-nodes" | "-d" => denseNodes = parseBool(args(i + 1)); i += 2
+        case "--dump-file" | "-f" => dumpFile = Some(value()); i += 2
+        case "--work-dir" => workDir = value(); i += 2
+        case "--generator" => generator = value(); i += 2
+        case "--compress-command" | "-c" => compressCommand = Some(value()); i += 2
+        case "--dense-nodes" | "-d" => denseNodes = parseBool(value()); i += 2
         case "--resume" => resume = true; i += 1
-        case "--max-concurrency" => maxConcurrency = Some(args(i + 1).toInt); i += 2
-        case "--meta-file" | "-M" => metaFile = Some(args(i + 1)); i += 2
+        case "--max-concurrency" =>
+          val n = value().toInt
+          require(n >= 1, s"--max-concurrency must be at least 1, got $n")
+          maxConcurrency = Some(n); i += 2
+        case "--meta-file" | "-M" => metaFile = Some(value()); i += 2
         case k @ ("--meta-author" | "--meta-source" | "--meta-copyleft" | "--meta-attribution") =>
-          metaCli(k.drop(2)) = args(i + 1); i += 2
-        case "--xml" | "-x" => outputs += Output(XmlPlanet, args(i + 1)); i += 2
-        case "--xml-no-userinfo" => outputs += Output(XmlPlanet, args(i + 1), anon = true); i += 2
-        case "--history-xml" | "-X" => outputs += Output(XmlHistory, args(i + 1)); i += 2
-        case "--history-xml-no-userinfo" => outputs += Output(XmlHistory, args(i + 1), anon = true); i += 2
-        case "--changesets" | "-C" => outputs += Output(XmlChangesets, args(i + 1)); i += 2
-        case "--changesets-no-userinfo" => outputs += Output(XmlChangesets, args(i + 1), anon = true); i += 2
-        case "--pbf" | "-p" => outputs += Output(PbfPlanet, args(i + 1)); i += 2
-        case "--pbf-parallel" => outputs += Output(PbfPlanetParallel, args(i + 1)); i += 2
-        case "--history-pbf-parallel" => outputs += Output(PbfHistoryParallel, args(i + 1)); i += 2
-        case "--pbf-no-userinfo" => outputs += Output(PbfPlanet, args(i + 1), anon = true); i += 2
-        case "--history-pbf" | "-P" => outputs += Output(PbfHistory, args(i + 1)); i += 2
-        case "--history-pbf-no-userinfo" => outputs += Output(PbfHistory, args(i + 1), anon = true); i += 2
-        case "--changeset-discussions" | "-D" => outputs += Output(XmlDiscussions, args(i + 1)); i += 2
+          metaCli(k.drop(2)) = value(); i += 2
+        case "--xml" | "-x" => outputs += Output(XmlPlanet, value()); i += 2
+        case "--xml-no-userinfo" => outputs += Output(XmlPlanet, value(), anon = true); i += 2
+        case "--history-xml" | "-X" => outputs += Output(XmlHistory, value()); i += 2
+        case "--history-xml-no-userinfo" => outputs += Output(XmlHistory, value(), anon = true); i += 2
+        case "--changesets" | "-C" => outputs += Output(XmlChangesets, value()); i += 2
+        case "--changesets-no-userinfo" => outputs += Output(XmlChangesets, value(), anon = true); i += 2
+        case "--pbf" | "-p" => outputs += Output(PbfPlanet, value()); i += 2
+        case "--pbf-parallel" => outputs += Output(PbfPlanetParallel, value()); i += 2
+        case "--history-pbf-parallel" => outputs += Output(PbfHistoryParallel, value()); i += 2
+        case "--pbf-no-userinfo" => outputs += Output(PbfPlanet, value(), anon = true); i += 2
+        case "--history-pbf" | "-P" => outputs += Output(PbfHistory, value()); i += 2
+        case "--history-pbf-no-userinfo" => outputs += Output(PbfHistory, value(), anon = true); i += 2
+        case "--changeset-discussions" | "-D" => outputs += Output(XmlDiscussions, value()); i += 2
         case "--changeset-discussions-no-userinfo" =>
-          outputs += Output(XmlDiscussions, args(i + 1), anon = true); i += 2
+          outputs += Output(XmlDiscussions, value(), anon = true); i += 2
         case other => throw new IllegalArgumentException(s"unknown option $other")
       }
     }

@@ -41,7 +41,7 @@ case class PositionedGramHashes(child: Expression, k: Int)
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
-    val toks = tokenize(s)
+    val toks = WordShingles.tokenize(s)
     val n = toks.length
     if (n < k) return new GenericArrayData(Array.emptyLongArray)
     val out = new Array[Long](n - k + 1)
@@ -59,24 +59,6 @@ case class PositionedGramHashes(child: Expression, k: Int)
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  // exactly Java regex \s = [ \t\n\x0B\f\r] — parity with
-  // split("\\s+")-of-trimmed and the SQL oracle's regexp_split_to_array
-  private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
-  private def tokenize(s: String): Array[String] = {
-    val out = new java.util.ArrayList[String]()
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      while (i < len && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < len && !isWs(s.charAt(i))) i += 1
-      if (i > start) out.add(s.substring(start, i))
-    }
-    out.toArray(new Array[String](out.size()))
   }
 
   override protected def withNewChildInternal(newChild: Expression): PositionedGramHashes =

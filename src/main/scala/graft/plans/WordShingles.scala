@@ -33,7 +33,7 @@ case class WordShingles(child: Expression, n: Int)
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
-    val toks = tokenize(s)
+    val toks = WordShingles.tokenize(s)
     val out = new java.util.LinkedHashSet[UTF8String]()
     if (toks.length > 0 && toks.length < n) {
       out.add(UTF8String.fromString(toks.mkString(" ")))
@@ -55,12 +55,19 @@ case class WordShingles(child: Expression, n: Int)
     new GenericArrayData(out.toArray[AnyRef](new Array[AnyRef](out.size())))
   }
 
+  override protected def withNewChildInternal(newChild: Expression): WordShingles =
+    copy(child = newChild)
+}
+
+object WordShingles {
+
   // exactly Java regex \s = [ \t\n\x0B\f\r], matching the composed
-  // split("\\s+") form and the SQL oracle's regexp_split_to_array
+  // split("\\s+")-of-trimmed form and the SQL oracle's
+  // regexp_split_to_array; shared with PositionedGramHashes
   private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  private def tokenize(s: String): Array[String] = {
+  private[plans] def tokenize(s: String): Array[String] = {
     val out = new java.util.ArrayList[String]()
     var i = 0
     val len = s.length
@@ -73,11 +80,6 @@ case class WordShingles(child: Expression, n: Int)
     out.toArray(new Array[String](out.size()))
   }
 
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
-object WordShingles {
   /** Column wrapper (via the namespace shim — Spark 4 gates Column
     * construction behind private[sql]). */
   def word_shingles(c: Column, n: Int): Column =

@@ -12,6 +12,51 @@ import org.apache.spark.sql.functions._
   */
 object CoreQueries {
 
+  /** TPC-H Q7 (q86), one text for the oracle and the Spark SQL run. */
+  private val tpchQ7Sql: String =
+    """SELECT supp_nation, cust_nation, yr,
+      |       CAST(sum(vol_cents) AS BIGINT) AS revenue_cents,
+      |       count(*) AS n_lines
+      |FROM (
+      |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+      |         CAST(year(l_shipdate) AS BIGINT) AS yr,
+      |         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
+      |           AS vol_cents
+      |  FROM lineitem l
+      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      |  JOIN orders o ON o.o_orderkey = l.l_orderkey
+      |  JOIN customer c ON c.c_custkey = o.o_custkey
+      |  JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
+      |  JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
+      |  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+      |     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')) t
+      |GROUP BY 1, 2, 3""".stripMargin
+
+  /** TPC-H Q8 (q94), one text for the oracle and the Spark SQL run;
+    * `div` is the dialect's integer division (`//` DuckDB, `DIV` Spark).
+    */
+  private def tpchQ8Sql(div: String): String =
+    s"""SELECT yr,
+      |       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN v ELSE 0 END) AS BIGINT)
+      |         AS nation_cents,
+      |       CAST(sum(v) AS BIGINT) AS total_cents,
+      |       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN v ELSE 0 END) * 10000
+      |            $div sum(v) AS BIGINT) AS share_bps
+      |FROM (
+      |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+      |         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS v,
+      |         n2.n_name AS supp_nation
+      |  FROM lineitem
+      |  JOIN orders   ON o_orderkey = l_orderkey
+      |  JOIN customer ON c_custkey = o_custkey
+      |  JOIN nation n1 ON n1.n_nationkey = c_nationkey
+      |  JOIN region   ON r_regionkey = n1.n_regionkey
+      |  JOIN part     ON p_partkey = l_partkey
+      |  JOIN supplier ON s_suppkey = l_suppkey
+      |  JOIN nation n2 ON n2.n_nationkey = s_nationkey
+      |  WHERE r_name = 'EUROPE' AND p_type = 'STANDARD') t
+      |GROUP BY yr HAVING sum(v) > 0""".stripMargin
+
   val all: Seq[QueryDef] = Seq(
 
     // S1–S4: scan with filter + projection pushed to the parquet reader
@@ -1013,46 +1058,13 @@ object CoreQueries {
     // and AQE broadcasts even that when the pair filter is selective.
     // Money is per-row cents (BIGINT) before the sum.
     QueryDef.sql("q86_tpch_q7",
-      """SELECT supp_nation, cust_nation, yr,
-        |       CAST(sum(vol_cents) AS BIGINT) AS revenue_cents,
-        |       count(*) AS n_lines
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |         CAST(year(l_shipdate) AS BIGINT) AS yr,
-        |         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-        |           AS vol_cents
-        |  FROM lineitem l
-        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        |  JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |  JOIN customer c ON c.c_custkey = o.o_custkey
-        |  JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
-        |  JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
-        |  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')) t
-        |GROUP BY 1, 2, 3""".stripMargin) {
+      tpchQ7Sql) {
       (s, d) => {
         Seq("lineitem" -> Tables.lineitem(s, d), "supplier" -> Tables.supplier(s, d),
           "orders" -> Tables.orders(s, d), "customer" -> Tables.customer(s, d),
           "nation" -> Tables.nation(s, d))
           .foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        s.sql(
-          """SELECT supp_nation, cust_nation, yr,
-            |       CAST(sum(vol_cents) AS BIGINT) AS revenue_cents,
-            |       count(*) AS n_lines
-            |FROM (
-            |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-            |         CAST(year(l_shipdate) AS BIGINT) AS yr,
-            |         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-            |           AS vol_cents
-            |  FROM lineitem l
-            |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            |  JOIN orders o ON o.o_orderkey = l.l_orderkey
-            |  JOIN customer c ON c.c_custkey = o.o_custkey
-            |  JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
-            |  JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
-            |  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-            |     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')) t
-            |GROUP BY 1, 2, 3""".stripMargin)
+        s.sql(tpchQ7Sql)
       }
     },
 
@@ -1294,53 +1306,14 @@ object CoreQueries {
     // points (cents × 10000 DIV total) — no float ratio in the gate;
     // HAVING total > 0 guards the division identically on both engines.
     QueryDef.sql("q94_tpch_q8",
-      """SELECT yr,
-        |       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN v ELSE 0 END) AS BIGINT)
-        |         AS nation_cents,
-        |       CAST(sum(v) AS BIGINT) AS total_cents,
-        |       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN v ELSE 0 END) * 10000
-        |            // sum(v) AS BIGINT) AS share_bps
-        |FROM (
-        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS v,
-        |         n2.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN orders   ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON n1.n_nationkey = c_nationkey
-        |  JOIN region   ON r_regionkey = n1.n_regionkey
-        |  JOIN part     ON p_partkey = l_partkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation n2 ON n2.n_nationkey = s_nationkey
-        |  WHERE r_name = 'EUROPE' AND p_type = 'STANDARD') t
-        |GROUP BY yr HAVING sum(v) > 0""".stripMargin) {
+      tpchQ8Sql("//")) {
       (s, d) => {
         Seq("lineitem" -> Tables.lineitem(s, d), "orders" -> Tables.orders(s, d),
           "customer" -> Tables.customer(s, d), "nation" -> Tables.nation(s, d),
           "region" -> Tables.region(s, d), "part" -> Tables.part(s, d),
           "supplier" -> Tables.supplier(s, d))
           .foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        s.sql(
-          """SELECT yr,
-            |       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN v ELSE 0 END) AS BIGINT)
-            |         AS nation_cents,
-            |       CAST(sum(v) AS BIGINT) AS total_cents,
-            |       CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN v ELSE 0 END) * 10000
-            |            DIV sum(v) AS BIGINT) AS share_bps
-            |FROM (
-            |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-            |         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS v,
-            |         n2.n_name AS supp_nation
-            |  FROM lineitem
-            |  JOIN orders   ON o_orderkey = l_orderkey
-            |  JOIN customer ON c_custkey = o_custkey
-            |  JOIN nation n1 ON n1.n_nationkey = c_nationkey
-            |  JOIN region   ON r_regionkey = n1.n_regionkey
-            |  JOIN part     ON p_partkey = l_partkey
-            |  JOIN supplier ON s_suppkey = l_suppkey
-            |  JOIN nation n2 ON n2.n_nationkey = s_nationkey
-            |  WHERE r_name = 'EUROPE' AND p_type = 'STANDARD') t
-            |GROUP BY yr HAVING sum(v) > 0""".stripMargin)
+        s.sql(tpchQ8Sql("DIV"))
       }
     },
 
@@ -1935,14 +1908,8 @@ object CoreQueries {
     // the CM guarantee, visible in the gated rows).
     QueryDef.sql("q120_count_min", {
       import XxHash64Sql._
-      import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      import org.apache.spark.sql.types.LongType
       val depth = 3; val width = 256
       val probeVals = Seq(1L, 2L, 3L, 500L, 999999L)
-      def seedU64(i: Int): String = {
-        val sgn = XxHash64Function.hash(i.toLong, LongType, 42L)
-        (if (sgn < 0) BigInt(sgn) + (BigInt(1) << 64) else BigInt(sgn)).toString
-      }
       var rowCtes = List.empty[String]
       var rowSrc = "lineitem"
       val rowH = (0 until depth).map { i =>

@@ -3,7 +3,9 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Dedup, Graphs, Profiling, Retrieval, Sketches}
 import graft.operators.Similarity
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import TextOracleSql._
 
 /** Gate queries for the artifact / evaluation layer: storable
   * probabilistic filters, multi-criteria selection, ranking-quality
@@ -15,15 +17,31 @@ object EvalQueries {
   private val BloomHashes = 3
   private val BloomProbes = Seq(1L, 2L, 3L, 4L, 500L, 1999L, 31337L, 424242L, 999999L)
 
-  /** Unsigned u64 string of Spark's xxhash64(i) — the chained seed the
-    * i-th bloom/count-min hash starts from (see q120).
+  /** q236/q237 shared KMV keys: per source, every distinct
+    * token#(doc_id % 211) key hashed with the bit-exact XXH64 and its
+    * sign bit flipped (unsigned order). Ends in `fv(source, f)`.
     */
-  private def seedU64(i: Int): String = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.LongType
-    val sgn = XxHash64Function.hash(i.toLong, LongType, 42L)
-    (if (sgn < 0) BigInt(sgn) + (BigInt(1) << 64) else BigInt(sgn)).toString
+  private lazy val kmvKeyCtes: String = {
+    import XxHash64Sql._
+    s"""tok AS (
+       |  SELECT source, doc_id,
+       |    unnest(${tokensSql("text")}) AS t
+       |  FROM documents),
+       |ks AS (SELECT DISTINCT source, t || '#' || (doc_id % 211) AS s FROM tok),
+       |${hashBytesCtes("ks", "s")},
+       |fv AS (SELECT DISTINCT source,
+       |         ${u2s(s"(xxh + 9223372036854775808) % $M64")} AS f
+       |       FROM hb)""".stripMargin
   }
+
+  /** Spark twin of [[kmvKeyCtes]]' keys: (source, key). */
+  private def kmvKeys(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("source"), col("doc_id"),
+        explode(graft.functions.TextFunctions.tokens(col("text"))).as("t"))
+      .select(col("source"),
+        concat(col("t"), lit("#"),
+          pmod(col("doc_id"), lit(211)).cast("string")).as("key"))
 
   val all: Seq[QueryDef] = Seq(
 
@@ -210,10 +228,9 @@ object EvalQueries {
     // bit-portable; ties break to the lexicographically smallest
     // class. OOV test words carry no evidence on either engine.
     QueryDef.sql("q167_naive_bayes",
-      """WITH tra AS (
+      raw"""WITH tra AS (
         |  SELECT lang AS c,
-        |         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
+        |         ${tokensSql("text")} AS a
         |  FROM documents WHERE doc_id % 5 != 0),
         |cw AS (SELECT c, w, count(*) AS cw
         |       FROM (SELECT c, unnest(a) AS w FROM tra) GROUP BY 1, 2),
@@ -232,8 +249,7 @@ object EvalQueries {
         |  FROM totc JOIN nc USING (c) CROSS JOIN v CROSS JOIN n),
         |tea AS (
         |  SELECT doc_id, lang AS true_lang,
-        |         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
+        |         ${tokensSql("text")} AS a
         |  FROM documents WHERE doc_id % 5 = 0),
         |tw AS (SELECT doc_id, w, count(*) AS m
         |       FROM (SELECT doc_id, unnest(a) AS w FROM tea) GROUP BY 1, 2),
@@ -304,10 +320,9 @@ object EvalQueries {
     // intersection self-join keys on the word, fan-out bounded by
     // |sources| — never word-frequency-quadratic.
     QueryDef.sql("q169_source_vocab_overlap",
-      """WITH arr AS (
+      raw"""WITH arr AS (
         |  SELECT source,
-        |         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
+        |         ${tokensSql("text")} AS a
         |  FROM documents),
         |links AS (SELECT DISTINCT source AS g, unnest(a) AS i FROM arr),
         |sizes AS (SELECT g, count(*) AS n FROM links GROUP BY 1),
@@ -625,10 +640,9 @@ object EvalQueries {
     // integer milli ratios over one aggregate of existing engine
     // functions (q25 tokens / q41 subwords).
     QueryDef.sql("q177_tokenizer_fertility",
-      """WITH per AS (
+      raw"""WITH per AS (
         |  SELECT lang,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END AS toks,
+        |         ${tokenCountSql("text")} AS toks,
         |         len(regexp_extract_all(text, '[\p{L}\p{N}]+|[^\p{L}\p{N}\s]')) AS subs,
         |         length(text) AS chars,
         |         octet_length(encode(text)) AS bytes
@@ -664,16 +678,12 @@ object EvalQueries {
     // so the ratio is exact and ≤ 10⁶). Oracle is the brute-force
     // join over the identically filtered universe.
     QueryDef.sql("q178_containment_pairs",
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+      raw"""WITH toks AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS t
         |  FROM documents),
         |shl AS (
         |  SELECT DISTINCT doc_id,
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+        |         unnest(${trigramsSql("t")}) AS g
         |  FROM toks),
         |sh2 AS (
         |  SELECT shl.* FROM shl
@@ -698,16 +708,12 @@ object EvalQueries {
     // doc's shingles the reference has never seen — the freshness /
     // leakage dial. Reference = the doc_id % 50 = 0 slice.
     QueryDef.sql("q179_novelty_score",
-      """WITH mk AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+      raw"""WITH mk AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS t
         |  FROM documents),
         |shl AS (
         |  SELECT DISTINCT doc_id,
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+        |         unnest(${trigramsSql("t")}) AS g
         |  FROM mk),
         |ref AS (SELECT DISTINCT g FROM shl WHERE doc_id % 50 = 0),
         |corpus AS (SELECT * FROM shl WHERE doc_id % 50 != 0)
@@ -930,10 +936,9 @@ object EvalQueries {
     // presence, and the conjunction — the named filter battery most
     // curation stacks start from, hash-verified field by field.
     QueryDef.sql("q197_gopher_rules",
-      """WITH t AS (
+      raw"""WITH t AS (
         |  SELECT doc_id, text,
-        |         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS toks
+        |         ${tokensSql("text")} AS toks
         |  FROM documents),
         |m AS (
         |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
@@ -970,10 +975,10 @@ object EvalQueries {
     // newlines, so those fields gate the zero path here; the synthetic
     // spec exercises them positively (the q49 clean-corpus precedent).
     QueryDef.sql("q201_gopher_repetition",
-      """WITH base AS (
+      raw"""WITH base AS (
         |  SELECT doc_id, coalesce(text, '') AS t,
         |         CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS tk
+        |              ELSE ${splitSql("text")} END AS tk
         |  FROM documents),
         |tot AS (
         |  SELECT doc_id, t, tk, len(tk) AS nt,
@@ -1058,10 +1063,9 @@ object EvalQueries {
     // inequality self-join of the source-sized frame (no global
     // window). 0 ppm = perfectly even.
     QueryDef.sql("q198_source_gini",
-      """WITH s AS (
+      raw"""WITH s AS (
         |  SELECT source,
-        |         CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                  ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END)
+        |         CAST(sum(${tokenCountSql("text")})
         |           AS BIGINT) AS x
         |  FROM documents GROUP BY 1),
         |r AS (
@@ -1105,10 +1109,9 @@ object EvalQueries {
     // (metric, value) frame. ONE scan: parallel aggregate expressions
     // reshaped long (columnProfile's discipline).
     QueryDef.sql("q193_dataset_card",
-      """WITH p AS (
+      raw"""WITH p AS (
         |  SELECT doc_id, lang, source,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END AS toks,
+        |         ${tokenCountSql("text")} AS toks,
         |         length(text) AS chars,
         |         md5(text) AS h
         |  FROM documents),
@@ -1624,23 +1627,8 @@ object EvalQueries {
       def urn(h: String) =
         s"'urn:uuid:' || substr($h,1,8) || '-' || substr($h,9,4) || '-' || " +
           s"substr($h,13,4) || '-' || substr($h,17,4) || '-' || substr($h,21,12)"
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    '<html><!-- doc ' || doc_id || ' --><body class="doc"><h1>' || source ||
-        |    '</h1><script type="text/javascript">var x = 1 < 2;</script><p>' || text ||
-        |    '</p><style media="all">p { color: red; }</style>&amp;amp; &lt;escaped&gt;&nbsp;ok</body></html>'
-        |    AS raw
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(raw, '(?s)<!--.*?-->', ' ', 'g') AS t FROM m),
-        |s2 AS (SELECT doc_id,
-        |         regexp_replace(t, '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g') AS t FROM s1),
-        |s3 AS (SELECT doc_id,
-        |         regexp_replace(t, '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g') AS t FROM s2),
-        |s4 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s3),
-        |s5 AS (SELECT doc_id,
-        |         replace(replace(replace(replace(replace(replace(t,
-        |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |           '&nbsp;', ' '), '&amp;', '&') AS t FROM s4),
+      raw"""WITH ${TextQueries.markupDocsCte},
+        |${stripMarkupCtes("m")},
         |clean AS (SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS c FROM s5),
         |h AS (SELECT doc_id, c, md5('conv-' || doc_id) AS ch,
         |             md5(CAST(doc_id AS VARCHAR)) AS rh FROM clean)
@@ -1663,12 +1651,7 @@ object EvalQueries {
           Option(new java.io.File(dir).listFiles())
             .foreach(_.foreach(f => if (f.getName.endsWith(".warc.gz")) f.delete()))
         }
-        val markup = concat(
-          lit("<html><!-- doc "), col("doc_id").cast("string"),
-          lit(" --><body class=\"doc\"><h1>"), col("source"),
-          lit("</h1><script type=\"text/javascript\">var x = 1 < 2;</script><p>"),
-          col("text"),
-          lit("</p><style media=\"all\">p { color: red; }</style>&amp;amp; &lt;escaped&gt;&nbsp;ok</body></html>"))
+        val markup = TextQueries.markupDoc
         val staged = docs.select(col("doc_id"),
           concat(lit("http://corpus.example/doc/"), col("doc_id")).as("uri"),
           timestamp_seconds(lit(1704067200L)).as("dt"), markup.as("raw"))
@@ -1711,17 +1694,7 @@ object EvalQueries {
     // in the identical single-rounding double expression. n_distinct,
     // estimate, and both sketch endpoints hash-gated.
     QueryDef.sql("q236_kmv_sketch", {
-      import XxHash64Sql._
-      s"""WITH tok AS (
-         |  SELECT source, doc_id,
-         |    unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
-         |  FROM documents),
-         |ks AS (SELECT DISTINCT source, t || '#' || (doc_id % 211) AS s FROM tok),
-         |${hashBytesCtes("ks", "s")},
-         |fv AS (SELECT DISTINCT source,
-         |         ${u2s(s"(xxh + 9223372036854775808) % $M64")} AS f
-         |       FROM hb),
+      s"""WITH $kmvKeyCtes,
          |sk AS (SELECT source, (list_sort(list(f)))[1:64] AS sk,
          |              count(*) AS n
          |       FROM fv GROUP BY source)
@@ -1735,12 +1708,7 @@ object EvalQueries {
          |FROM sk""".stripMargin
     }) {
       (s, d) => {
-        val keyed = Tables.documents(s, d)
-          .select(col("source"), col("doc_id"),
-            explode(graft.functions.TextFunctions.tokens(col("text"))).as("t"))
-          .select(col("source"),
-            concat(col("t"), lit("#"),
-              pmod(col("doc_id"), lit(211)).cast("string")).as("key"))
+        val keyed = kmvKeys(s, d)
         graft.operators.Sketches.kmvSketch(keyed, "source", col("key"), k = 64)
           .select(col("group").as("source"), col("n_distinct"), col("est"),
             size(col("sketch")).cast("long").as("k_used"),
@@ -1757,17 +1725,7 @@ object EvalQueries {
     // any sketch moves inter_k. Pair stage is sketch-frame-sized
     // (#sources² pairs), independent of corpus size.
     QueryDef.sql("q237_kmv_set_ops", {
-      import XxHash64Sql._
-      s"""WITH tok AS (
-         |  SELECT source, doc_id,
-         |    unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
-         |  FROM documents),
-         |ks AS (SELECT DISTINCT source, t || '#' || (doc_id % 211) AS s FROM tok),
-         |${hashBytesCtes("ks", "s")},
-         |fv AS (SELECT DISTINCT source,
-         |         ${u2s(s"(xxh + 9223372036854775808) % $M64")} AS f
-         |       FROM hb),
+      s"""WITH $kmvKeyCtes,
          |sk AS (SELECT source, (list_sort(list(f)))[1:64] AS sk
          |       FROM fv GROUP BY source),
          |p AS (SELECT a.source AS sa, b.source AS sb, a.sk AS ska, b.sk AS skb
@@ -1789,12 +1747,7 @@ object EvalQueries {
          |FROM j""".stripMargin
     }) {
       (s, d) => {
-        val keyed = Tables.documents(s, d)
-          .select(col("source"), col("doc_id"),
-            explode(graft.functions.TextFunctions.tokens(col("text"))).as("t"))
-          .select(col("source"),
-            concat(col("t"), lit("#"),
-              pmod(col("doc_id"), lit(211)).cast("string")).as("key"))
+        val keyed = kmvKeys(s, d)
         graft.operators.Sketches.kmvPairOps(
           graft.operators.Sketches.kmvSketch(keyed, "source", col("key"), k = 64),
           k = 64)
@@ -1982,7 +1935,7 @@ object EvalQueries {
     // alone; per-doc verdicts (is_dup / kept / cleaned md5) are all
     // hash-gated.
     QueryDef.sql("q234_crawl_pipeline",
-      """WITH src AS (
+      raw"""WITH src AS (
         |  SELECT d.doc_id, l.text AS ptext
         |  FROM documents d
         |  JOIN documents l ON l.doc_id = d.doc_id - d.doc_id % 3),
@@ -1991,21 +1944,10 @@ object EvalQueries {
         |    '<html><body><p>' || ptext ||
         |    '</p><script>var x = 1;</script></body></html>' AS raw
         |  FROM src),
-        |s1 AS (SELECT doc_id, regexp_replace(raw, '(?s)<!--.*?-->', ' ', 'g') AS t FROM m),
-        |s2 AS (SELECT doc_id,
-        |         regexp_replace(t, '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g') AS t FROM s1),
-        |s3 AS (SELECT doc_id,
-        |         regexp_replace(t, '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g') AS t FROM s2),
-        |s4 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s3),
-        |s5 AS (SELECT doc_id,
-        |         replace(replace(replace(replace(replace(replace(t,
-        |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |           '&nbsp;', ' '), '&amp;', '&') AS t FROM s4),
+        |${stripMarkupCtes("m")},
         |c AS (SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS clean FROM s5),
         |sc AS (SELECT doc_id, clean,
-        |         CASE WHEN length(trim(clean)) = 0 THEN 0
-        |              ELSE len(list_filter(regexp_split_to_array(clean, '\s+'),
-        |                                   x -> x <> '')) END AS n_tokens
+        |         ${tokenCountSql("clean")} AS n_tokens
         |       FROM c),
         |cen AS (SELECT md5(clean) AS dig, min(doc_id) AS keep
         |        FROM sc GROUP BY 1)

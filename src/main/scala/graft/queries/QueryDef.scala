@@ -63,3 +63,57 @@ object UrlOracleSql {
       "ELSE '%' || s END), ''), '') END"
   }
 }
+
+/** Oracle SQL twins of the text helpers every text gate's DuckDB
+  * replay shares — the whitespace tokenizer
+  * ([[graft.functions.TextFunctions.tokens]]), word trigrams and the
+  * markup strip — so a fix lands in every gate at once. A column
+  * argument spliced more than once must be a column reference.
+  */
+object TextOracleSql {
+
+  /** `col` split on whitespace runs, empty pieces dropped; `v` names
+    * the lambda variable (callers nested in an `x` lambda pass another).
+    */
+  def splitSql(col: String, v: String = "x"): String =
+    "list_filter(regexp_split_to_array(" + col + ", '\\s+'), " + v +
+      " -> " + v + " <> '')"
+
+  /** The token list of `col`, the empty list for blank text. */
+  def tokensSql(col: String): String =
+    "CASE WHEN length(trim(" + col + ")) = 0 THEN []::VARCHAR[] ELSE " +
+      splitSql(col) + " END"
+
+  /** The token count of `col`, 0 for blank text. */
+  def tokenCountSql(col: String): String =
+    "CASE WHEN length(trim(" + col + ")) = 0 THEN 0 ELSE len(" +
+      splitSql(col) + ") END"
+
+  /** The word-trigram shingles of the token list `t` — twin of
+    * [[graft.plans.WordShingles]] at n = 3: fewer than 3 tokens give
+    * ONE shingle of all tokens, no tokens give none. `t` is spliced
+    * more than once: pass a column reference.
+    */
+  def trigramsSql(t: String): String =
+    s"""CASE WHEN len($t) = 0 THEN []::VARCHAR[]
+       |     WHEN len($t) < 3 THEN [array_to_string($t, ' ')]
+       |     ELSE list_transform(generate_series(1, len($t) - 2),
+       |          i -> $t[i] || ' ' || $t[i+1] || ' ' || $t[i+2]) END""".stripMargin
+
+  /** Oracle twin of [[graft.functions.TextFunctions.stripMarkup]] up to
+    * its whitespace fold, over `src(doc_id, raw)`: comments, script and
+    * style bodies, then tags go, then the six entities decode. Ends in
+    * `s5(doc_id, t)`.
+    */
+  def stripMarkupCtes(src: String): String =
+    raw"""s1 AS (SELECT doc_id, regexp_replace(raw, '(?s)<!--.*?-->', ' ', 'g') AS t FROM $src),
+      |s2 AS (SELECT doc_id,
+      |         regexp_replace(t, '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g') AS t FROM s1),
+      |s3 AS (SELECT doc_id,
+      |         regexp_replace(t, '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g') AS t FROM s2),
+      |s4 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s3),
+      |s5 AS (SELECT doc_id,
+      |         replace(replace(replace(replace(replace(replace(t,
+      |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
+      |           '&nbsp;', ' '), '&amp;', '&') AS t FROM s4)""".stripMargin
+}

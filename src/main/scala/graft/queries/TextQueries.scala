@@ -3,7 +3,9 @@ package graft.queries
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal, Retrieval, Sampling, Sketches}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import TextOracleSql._
 
 /** Training-data text operators over the documents table: dedup
   * variants, language ID, quality scoring, token counting,
@@ -15,9 +17,9 @@ object TextQueries {
     * confusion matrix so the two can never drift.
     */
   private val langIdPredCtes: String =
-    """toks AS (
+    raw"""toks AS (
       |  SELECT doc_id, CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []::VARCHAR[]
-      |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+      |                      ELSE ${splitSql("text")} END AS t
       |  FROM documents),
       |hits AS (
       |  SELECT doc_id, l.lang,
@@ -39,6 +41,22 @@ object TextQueries {
 
   private val enStop = Seq("the", "and", "of", "to", "is")
 
+  /** Oracle twin of [[graft.functions.TextFunctions.qualityScoreMilli]]
+    * over `text` with [[enStop]]: length × punctuation × stopword
+    * factors, ×1000 rounded.
+    */
+  private val qualityMilliSql: String =
+    s"""CAST(round(
+       |  (CASE WHEN length(text) < 50 THEN length(text) / 50.0
+       |        WHEN length(text) > 2000 THEN 2000.0 / length(text)
+       |        ELSE 1.0 END)
+       |  * (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
+       |          / greatest(CAST(length(text) AS DOUBLE), 1.0) > 0.1 THEN 0.5 ELSE 1.0 END)
+       |  * (CASE WHEN len(list_filter(${splitSql("text")},
+       |                               x -> x IN ('the','and','of','to','is'))) > 0
+       |          THEN 1.0 ELSE 0.5 END)
+       |  * 1000) AS BIGINT)""".stripMargin
+
   /** DuckDB hex-string replica of [[Multimodal.packImageBlobs]] — the
     * deterministic real-PNG/JPEG container bytes, built from (doc_id,
     * text). Shared by the q199 header-decode and q33 feature gates so
@@ -59,6 +77,103 @@ object TextQueries {
       |  lpad(upper(to_hex(doc_id % 1024 + 16)), 4, '0') ||
       |  '03' || '012200' || '021101' || '031101'
       |END || upper(hex(encode(text))))""".stripMargin
+
+  /** q111/q133 shared BM25 per-term scores (Okapi k1=1.2 b=0.75,
+    * integer-exact — see q111) for the query terms spark/merge/vector:
+    * ends in `ts(doc_id, s_milli)`.
+    */
+  private val bm25TermCtes: String =
+    raw"""toks AS (
+       |  SELECT doc_id, unnest(${tokensSql("text")}) AS token
+       |  FROM documents),
+       |st AS (SELECT (SELECT count(*) FROM documents) AS n,
+       |              (SELECT count(*) FROM toks) AS sdl),
+       |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
+       |tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
+       |       WHERE token IN ('spark','merge','vector') GROUP BY 1, 2),
+       |df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+       |ts AS (
+       |  SELECT tf.doc_id,
+       |         (1000 * (44 * tf.tf * st.sdl) * (2*st.n - 2*df.df + 1))
+       |           // ((20 * tf.tf * st.sdl + 6 * st.sdl + 18 * dl.dl * st.n)
+       |              * (2*df.df + 1)) AS s_milli
+       |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN st)""".stripMargin
+
+  /** q112/q154 shared duplicated-span chain over the docs of `docs`
+    * (a relation, optionally filtered): 8-gram census, dup mark and
+    * the gaps-and-islands merge. Ends in
+    * `islands(doc_id, start_pos, end_pos, island)`; `arr(doc_id, a)`
+    * holds the token lists.
+    */
+  private def dupSpanCtes(docs: String): String =
+    raw"""arr AS (
+       |  SELECT doc_id, ${tokensSql("text")} AS a
+       |  FROM $docs),
+       |grams AS (
+       |  SELECT doc_id, i AS start_pos, array_to_string(a[i:i+7], ' ') AS gram
+       |  FROM arr, unnest(generate_series(1, len(a) - 7)) AS g(i)),
+       |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
+       |marked AS (SELECT doc_id, start_pos, start_pos + 7 AS end_pos
+       |           FROM grams WHERE gram IN (SELECT gram FROM dup)),
+       |flagged AS (
+       |  SELECT doc_id, start_pos, end_pos,
+       |         CASE WHEN start_pos > coalesce(max(end_pos) OVER (
+       |                PARTITION BY doc_id ORDER BY start_pos
+       |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
+       |              THEN 1 ELSE 0 END AS new_island
+       |  FROM marked),
+       |islands AS (
+       |  SELECT doc_id, start_pos, end_pos,
+       |         sum(new_island) OVER (PARTITION BY doc_id ORDER BY start_pos
+       |                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+       |  FROM flagged)""".stripMargin
+
+  /** q28/q143 shared brute-force word-trigram Jaccard over the docs of
+    * `docs`: every pair sharing a shingle with its ppm.
+    */
+  private def trigramJaccardSql(docs: String): String =
+    raw"""WITH toks AS (
+       |  -- blank/whitespace-only text -> NO tokens (the split of '' is
+       |  -- [''], len 1, which would fabricate a '' shingle and spurious
+       |  -- blank-doc pairs; guard on trimmed length like q25/q40)
+       |  SELECT doc_id, ${tokensSql("text")} AS t
+       |  FROM $docs),
+       |sh AS (
+       |  -- parity with WordShingles: fewer than n tokens -> ONE shingle
+       |  -- of all tokens (no tokens -> none)
+       |  SELECT DISTINCT doc_id,
+       |         unnest(${trigramsSql("t")}) AS g
+       |  FROM toks),
+       |pairs AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+       |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2),
+       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
+       |SELECT id_a, id_b,
+       |       CAST(round(inter * 1000000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT) AS jaccard_ppm
+       |FROM pairs
+       |JOIN sizes sa ON sa.doc_id = id_a
+       |JOIN sizes sb ON sb.doc_id = id_b""".stripMargin
+
+  /** The q137/q230 markup fixture: each document wrapped in
+    * deterministic HTML (comment, script, style, entities) — CTE
+    * `m(doc_id, raw)` over `documents`; [[markupDoc]] is its Spark twin.
+    */
+  private[queries] val markupDocsCte: String =
+    """m AS (
+      |  SELECT doc_id,
+      |    '<html><!-- doc ' || doc_id || ' --><body class="doc"><h1>' || source ||
+      |    '</h1><script type="text/javascript">var x = 1 < 2;</script><p>' || text ||
+      |    '</p><style media="all">p { color: red; }</style>&amp;amp; &lt;escaped&gt;&nbsp;ok</body></html>'
+      |    AS raw
+      |  FROM documents)""".stripMargin
+
+  private[queries] def markupDoc: Column = concat(
+    lit("<html><!-- doc "), col("doc_id").cast("string"),
+    lit(" --><body class=\"doc\"><h1>"), col("source"),
+    lit("</h1><script type=\"text/javascript\">var x = 1 < 2;</script><p>"),
+    col("text"),
+    lit("</p><style media=\"all\">p { color: red; }</style>&amp;amp; &lt;escaped&gt;&nbsp;ok</body></html>"))
 
   /** q29b banding parameters, shared by the Spark call and the
     * generated oracle so they cannot drift. 4 bands × 2 rows keeps the
@@ -104,15 +219,11 @@ object TextQueries {
     val pivots = (0 until rows)
       .map(j => s"min(CASE WHEN s % $rows = $j THEN mv END) AS mv$j").mkString(", ")
     s"""toks AS (
-       |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-       |                      ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END AS t
+       |  SELECT doc_id, ${tokensSql("text")} AS t
        |  FROM $src),
        |sh AS (
        |  SELECT DISTINCT doc_id,
-       |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-       |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-       |                     ELSE list_transform(generate_series(1, len(t) - 2),
-       |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+       |         unnest(${trigramsSql("t")}) AS g
        |  FROM toks),
        |gs AS (SELECT DISTINCT g FROM sh),
        |${hashBytesCtes("gs", "g")},
@@ -128,25 +239,7 @@ object TextQueries {
        |  FROM mins GROUP BY 1, 2),
        |$bCtes,
        |banded AS (SELECT doc_id, band, $bSeed AS bucket FROM $bLast),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-       |inters AS (
-       |  SELECT c.id_a, c.id_b, count(*) AS inter
-       |  FROM cand c
-       |  JOIN sh sa ON sa.doc_id = c.id_a
-       |  JOIN sh sb ON sb.doc_id = c.id_b AND sa.g = sb.g
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-       |lshpairs AS (
-       |  SELECT c.id_a, c.id_b,
-       |         CAST(round(coalesce(i.inter, 0) * 1000000.0
-       |              / (sa.n_sh + sb.n_sh - coalesce(i.inter, 0))) AS BIGINT) AS jaccard_ppm
-       |  FROM cand c
-       |  LEFT JOIN inters i ON i.id_a = c.id_a AND i.id_b = c.id_b
-       |  JOIN sizes sa ON sa.doc_id = c.id_a
-       |  JOIN sizes sb ON sb.doc_id = c.id_b)""".stripMargin
+       |${bandVerifyCtes("lshpairs")}""".stripMargin
   }
 
   /** Oracle for q29: the MinHash+LSH chain over the whole documents
@@ -173,8 +266,7 @@ object TextQueries {
     // 64-bit value and a string compare sidesteps any decimal-vs-int
     // coercion difference in the gate's comparator
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-       |                             ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+       |  SELECT doc_id, unnest(${tokensSql("text")}) AS t
        |  FROM documents WHERE doc_id < 200),
        |${XxHash64Sql.hashBytesCtes("toks", "t")},
        |votes AS (SELECT doc_id, $votes FROM hb GROUP BY doc_id),
@@ -201,6 +293,22 @@ object TextQueries {
     * the q140 split-leakage gate so the two can never drift.
     */
   private val minhashMd5PairsCtes: String = {
+    s"""toks AS (
+       |  SELECT doc_id, ${tokensSql("text")} AS t
+       |  FROM documents WHERE doc_id < 200),
+       |sh AS (
+       |  SELECT DISTINCT doc_id,
+       |         unnest(${trigramsSql("t")}) AS g
+       |  FROM toks),
+       |$md5BandCtes,
+       |${bandVerifyCtes("pairs")}""".stripMargin
+  }
+
+  /** The q29b/q82 md5 banding over `sh(doc_id, g)`: per-doc minima of
+    * the Md5Bands × Md5Rows seeded md5 family (`minh`), then one md5
+    * bucket per band (`banded(doc_id, band, bucket)`).
+    */
+  private lazy val md5BandCtes: String = {
     val bands = Md5Bands
     val rows = Md5Rows
     val mins = (0 until bands * rows)
@@ -209,20 +317,17 @@ object TextQueries {
       val bk = (b * rows until (b + 1) * rows).map(i => s"m$i").mkString(" || '|' || ")
       s"SELECT doc_id, $b AS band, md5($bk) AS bucket FROM minh"
     }.mkString(" UNION ALL ")
-    s"""toks AS (
-       |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-       |                      ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END AS t
-       |  FROM documents WHERE doc_id < 200),
-       |sh AS (
-       |  SELECT DISTINCT doc_id,
-       |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-       |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-       |                     ELSE list_transform(generate_series(1, len(t) - 2),
-       |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
-       |  FROM toks),
-       |minh AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-       |banded AS ($bandSelects),
-       |cand AS (
+    s"""minh AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
+       |banded AS ($bandSelects)""".stripMargin
+  }
+
+  /** The q29/q29b LSH verify over `sh(doc_id, g)` and
+    * `banded(doc_id, band, bucket)`: bucket-sharing candidate pairs,
+    * their exact shingle intersection (0 when none) and Jaccard in
+    * ppm, in CTE `out(id_a, id_b, jaccard_ppm)`.
+    */
+  private def bandVerifyCtes(out: String): String =
+    s"""cand AS (
        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM banded a JOIN banded b
        |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
@@ -233,7 +338,7 @@ object TextQueries {
        |  JOIN sh sb ON sb.doc_id = c.id_b AND sa.g = sb.g
        |  GROUP BY 1, 2),
        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-       |pairs AS (
+       |$out AS (
        |  SELECT c.id_a, c.id_b,
        |         CAST(round(coalesce(i.inter, 0) * 1000000.0
        |              / (sa.n_sh + sb.n_sh - coalesce(i.inter, 0))) AS BIGINT) AS jaccard_ppm
@@ -241,7 +346,6 @@ object TextQueries {
        |  LEFT JOIN inters i ON i.id_a = c.id_a AND i.id_b = c.id_b
        |  JOIN sizes sa ON sa.doc_id = c.id_a
        |  JOIN sizes sb ON sb.doc_id = c.id_b)""".stripMargin
-  }
 
   private val minhashMd5OracleSql: String =
     s"""WITH $minhashMd5PairsCtes
@@ -255,28 +359,15 @@ object TextQueries {
     * both sides and the split lives in the candidate join predicate.
     */
   private val minhashMd5AcrossOracleSql: String = {
-    val bands = Md5Bands
-    val rows = Md5Rows
-    val mins = (0 until bands * rows)
-      .map(s => s"min(substr(md5(g || '#$s'), 1, 16)) AS m$s").mkString(", ")
-    val bandSelects = (0 until bands).map { b =>
-      val bk = (b * rows until (b + 1) * rows).map(i => s"m$i").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, md5($bk) AS bucket FROM minh"
-    }.mkString(" UNION ALL ")
     s"""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
        |toks AS (
-       |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-       |                      ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END AS t
+       |  SELECT doc_id, ${tokensSql("text")} AS t
        |  FROM docs),
        |sh AS (
        |  SELECT DISTINCT doc_id,
-       |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-       |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-       |                     ELSE list_transform(generate_series(1, len(t) - 2),
-       |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+       |         unnest(${trigramsSql("t")}) AS g
        |  FROM toks),
-       |minh AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-       |banded AS ($bandSelects),
+       |$md5BandCtes,
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS inc_id, b.doc_id AS ex_id
        |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
@@ -311,8 +402,7 @@ object TextQueries {
         .map(b => s"(CASE WHEN v$b > 0 THEN CAST(1 AS BIGINT) << ${b - lowBit} ELSE 0 END)")
         .mkString(" + ")
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-       |                             ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+       |  SELECT doc_id, unnest(${tokensSql("text")}) AS t
        |  FROM documents WHERE doc_id < 200),
        |bits AS (
        |  SELECT doc_id,
@@ -345,16 +435,7 @@ object TextQueries {
          |  FROM base),
          |qual AS (
          |  SELECT doc_id, text,
-         |    CAST(round(
-         |      (CASE WHEN length(text) < 50 THEN length(text) / 50.0
-         |            WHEN length(text) > 2000 THEN 2000.0 / length(text)
-         |            ELSE 1.0 END)
-         |      * (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-         |              / greatest(CAST(length(text) AS DOUBLE), 1.0) > 0.1 THEN 0.5 ELSE 1.0 END)
-         |      * (CASE WHEN len(list_filter(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),
-         |                                   x -> x IN ('the','and','of','to','is'))) > 0
-         |              THEN 1.0 ELSE 0.5 END)
-         |      * 1000) AS BIGINT) AS quality_milli
+         |    $qualityMilliSql AS quality_milli
          |  FROM scrub),
          |scored AS (SELECT * FROM qual WHERE quality_milli >= 400),
          |keepers AS (SELECT min(doc_id) AS doc_id FROM scored GROUP BY md5(text)),
@@ -371,15 +452,11 @@ object TextQueries {
          |deduped AS (
          |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
          |btoks AS (
-         |  SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |              ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END AS t
+         |  SELECT ${tokensSql("text")} AS t
          |  FROM documents WHERE doc_id % 50 = 0),
          |bsh AS (
          |  SELECT DISTINCT
-         |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-         |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-         |                     ELSE list_transform(generate_series(1, len(t) - 2),
-         |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+         |         unnest(${trigramsSql("t")}) AS g
          |  FROM btoks),
          |contaminated AS (
          |  SELECT DISTINCT s.doc_id FROM sh s JOIN bsh b ON s.g = b.g
@@ -443,8 +520,7 @@ object TextQueries {
          |  SELECT * FROM (VALUES $valuesSql) m(rk, l, r)),
          |nm AS (SELECT count(*) AS n FROM mg),
          |arr AS (
-         |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                      ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END AS a
+         |  SELECT doc_id, ${tokensSql("text")} AS a
          |  FROM documents),
          |toks AS (
          |  SELECT doc_id, unnest(a) AS w,
@@ -513,9 +589,9 @@ object TextQueries {
   // is the no-drift contract (vocab and corpus from the same pass).
   private def q220BpeDecode: QueryDef =
     QueryDef.sql("q220_bpe_decode_roundtrip",
-      """SELECT doc_id,
+      raw"""SELECT doc_id,
         |       md5(array_to_string(
-        |         list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''),
+        |         ${splitSql("text")},
         |         '')) AS decoded_md5,
         |       CAST(0 AS BIGINT) AS n_unk
         |FROM documents
@@ -542,22 +618,19 @@ object TextQueries {
   // windows, join, per-doc census with C4's zero-hit keep verdict.
   private def q221Blocklist: QueryDef =
     QueryDef.sql("q221_blocklist_filter",
-      """WITH bl AS (
+      raw"""WITH bl AS (
         |  SELECT * FROM (VALUES ('customer'), ('Hash  Value'),
         |                        ('slow query'), ('batch batch'),
         |                        ('table table key'), ('unobtainium')) b(term)),
         |norm AS (
         |  SELECT DISTINCT
-        |         array_to_string(list_filter(
-        |           regexp_split_to_array(lower(term), '\s+'), x -> x <> ''), ' ') AS gram,
-        |         len(list_filter(
-        |           regexp_split_to_array(lower(term), '\s+'), x -> x <> '')) AS n
+        |         array_to_string(${splitSql("lower(term)")}, ' ') AS gram,
+        |         len(${splitSql("lower(term)")}) AS n
         |  FROM bl),
         |toks AS (
         |  SELECT doc_id,
         |         CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                               x -> x <> '') END AS t
+        |              ELSE ${splitSql("lower(text)")} END AS t
         |  FROM documents),
         |grams AS (
         |  SELECT doc_id, unnest(list_transform(
@@ -608,9 +681,7 @@ object TextQueries {
     QueryDef.sql("q227_perceptron",
       s"""WITH toks AS (
          |  SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,
-         |         unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                ELSE list_filter(regexp_split_to_array(text, '\\s+'),
-         |                                 x -> x <> '') END) AS t
+         |         unnest(${tokensSql("text")}) AS t
          |  FROM documents WHERE doc_id < 200),
          |${XxHash64Sql.hashBytesCtes("toks", "t")},
          |fx AS (SELECT doc_id, y, CAST(xxh % 64 AS BIGINT) AS b,
@@ -748,13 +819,13 @@ object TextQueries {
   // buckets.
   private def q235VocabGrowth: QueryDef =
     QueryDef.sql("q235_vocab_growth",
-      """WITH m AS (
+      raw"""WITH m AS (
         |  SELECT doc_id,
         |    text || ' u' || doc_id || ' v' || (doc_id % 97) AS t2
         |  FROM documents),
         |toks AS (
         |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(t2, '\s+'), x -> x <> '') AS t
+        |    ${splitSql("t2")} AS t
         |  FROM m),
         |offs AS (
         |  SELECT doc_id, t, coalesce(sum(len(t)) OVER (ORDER BY doc_id
@@ -794,8 +865,7 @@ object TextQueries {
       val (ySteps, yOut) = graft.functions.IntMath.duckSteps("f", "1", "zy_")
       val (ctes, last) = XxHash64Sql.chainCtes("r", xSteps ++ ySteps, "zc", per = 8)
       s"""WITH toks AS (
-         |  SELECT unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                     ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+         |  SELECT unnest(${tokensSql("text")}) AS t
          |  FROM documents),
          |v AS (SELECT t AS w, CAST(count(*) AS BIGINT) AS f FROM toks
          |      GROUP BY t ORDER BY f DESC, w LIMIT 128),
@@ -883,8 +953,7 @@ object TextQueries {
       val (nSteps, nOut) = graft.functions.IntMath.duckSteps("n_rows", "1", "en_")
       val (nCtes, nLast) = XxHash64Sql.chainCtes("agg", nSteps, "enc", per = 8)
       s"""WITH toks AS (
-         |  SELECT source, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                             ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+         |  SELECT source, unnest(${tokensSql("text")}) AS t
          |  FROM documents),
          |census AS (SELECT source, t, CAST(count(*) AS BIGINT) AS c
          |           FROM toks GROUP BY 1, 2),
@@ -916,9 +985,8 @@ object TextQueries {
     },
 
     QueryDef.sql("q25_token_count",
-      """SELECT doc_id,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END AS n_tokens,
+      raw"""SELECT doc_id,
+        |  ${tokenCountSql("text")} AS n_tokens,
         |  length(text) AS n_chars2
         |FROM documents""".stripMargin) {
       (s, d) =>
@@ -928,17 +996,8 @@ object TextQueries {
     },
 
     QueryDef.sql("q26_quality_score",
-      """SELECT doc_id,
-        |  CAST(round(
-        |    (CASE WHEN length(text) < 50 THEN length(text) / 50.0
-        |          WHEN length(text) > 2000 THEN 2000.0 / length(text)
-        |          ELSE 1.0 END)
-        |    * (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |            / greatest(CAST(length(text) AS DOUBLE), 1.0) > 0.1 THEN 0.5 ELSE 1.0 END)
-        |    * (CASE WHEN len(list_filter(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''),
-        |                                 x -> x IN ('the','and','of','to','is'))) > 0
-        |            THEN 1.0 ELSE 0.5 END)
-        |    * 1000) AS BIGINT) AS quality_milli
+      raw"""SELECT doc_id,
+        |  $qualityMilliSql AS quality_milli
         |FROM documents""".stripMargin) {
       (s, d) =>
         Tables.documents(s, d).select(col("doc_id"),
@@ -953,32 +1012,7 @@ object TextQueries {
     },
 
     QueryDef.sql("q28_ngram_jaccard_pairs",
-      """WITH toks AS (
-        |  -- blank/whitespace-only text -> NO tokens (the split of '' is
-        |  -- [''], len 1, which would fabricate a '' shingle and spurious
-        |  -- blank-doc pairs; guard on trimmed length like q25/q40)
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
-        |  FROM documents WHERE doc_id < 80),
-        |sh AS (
-        |  -- parity with WordShingles: fewer than n tokens -> ONE shingle
-        |  -- of all tokens (no tokens -> none)
-        |  SELECT DISTINCT doc_id,
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
-        |  FROM toks),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
-        |SELECT id_a, id_b,
-        |       CAST(round(inter * 1000000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT) AS jaccard_ppm
-        |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b""".stripMargin) {
+      trigramJaccardSql("documents WHERE doc_id < 80")) {
       (s, d) =>
         Dedup.ngramJaccardPairs(
           Tables.documents(s, d).filter(col("doc_id") < 80), "doc_id", col("text"))
@@ -1025,9 +1059,8 @@ object TextQueries {
     // single distinct group rewrites to a two-stage agg, no Expand) +
     // TakeOrdered. The 100-TB shape for BPE/vocab corpus passes.
     QueryDef.sql("q45_vocab_topk",
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                             ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END) AS token
+      raw"""WITH toks AS (
+        |  SELECT doc_id, unnest(${tokensSql("text")}) AS token
         |  FROM documents)
         |SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df
         |FROM toks GROUP BY token
@@ -1046,9 +1079,8 @@ object TextQueries {
     // partial-aggregating. Docs with no tokens have no repetition
     // signal and drop out (both engines).
     QueryDef.sql("q47_repetition",
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                             ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END) AS token
+      raw"""WITH toks AS (
+        |  SELECT doc_id, unnest(${tokensSql("text")}) AS token
         |  FROM documents),
         |cnt AS (SELECT doc_id, token, count(*) AS c FROM toks GROUP BY 1, 2)
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
@@ -1095,11 +1127,11 @@ object TextQueries {
     },
 
     QueryDef.sql("q40_mean_token_len",
-      """SELECT doc_id,
+      raw"""SELECT doc_id,
         |  CASE WHEN length(trim(text)) = 0 THEN 0
         |       ELSE CAST(round(list_sum(list_transform(
-        |              list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''), x -> length(x)))
-        |              * 1000.0 / len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))) AS BIGINT)
+        |              ${splitSql("text")}, x -> length(x)))
+        |              * 1000.0 / len(${splitSql("text")})) AS BIGINT)
         |  END AS mean_len_milli
         |FROM documents""".stripMargin) {
       (s, d) =>
@@ -1214,27 +1246,19 @@ object TextQueries {
     // broadcast join + one hash agg — the corpus side never shuffles
     // until the per-doc aggregate.
     QueryDef.sql("q48_decontamination",
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+      raw"""WITH toks AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS t
         |  FROM documents WHERE doc_id % 50 != 0),
         |sh AS (
         |  SELECT DISTINCT doc_id,
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+        |         unnest(${trigramsSql("t")}) AS g
         |  FROM toks),
         |btoks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+        |  SELECT doc_id, ${tokensSql("text")} AS t
         |  FROM documents WHERE doc_id % 50 = 0),
         |bsh AS (
         |  SELECT DISTINCT
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
+        |         unnest(${trigramsSql("t")}) AS g
         |  FROM btoks)
         |SELECT s.doc_id, count(*) AS n_sh,
         |       CAST(sum(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
@@ -1283,8 +1307,7 @@ object TextQueries {
       s"""WITH $ctes,
          |t AS (
          |  SELECT doc_id,
-         |         CASE WHEN length(trim(text)) = 0 THEN 0
-         |              ELSE len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) END AS n_tokens,
+         |         ${tokenCountSql("text")} AS n_tokens,
          |         ((${u2s(h)} % 8) + 8) % 8 AS shard
          |  FROM $last)
          |SELECT doc_id, shard, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -1319,9 +1342,8 @@ object TextQueries {
     // the RAG/embedding-window pass). Pure per-row explode, no
     // shuffle; chunk content verified via md5 of the joined tokens.
     QueryDef.sql("q54_chunking",
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+      raw"""WITH toks AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS t
         |  FROM documents),
         |nz AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0),
         |st AS (SELECT doc_id, t, n,
@@ -1458,10 +1480,9 @@ object TextQueries {
     // per-source mixture weights turned into an actual reproducible
     // subset (~half of each source's ~750 tokens at sf0.01).
     QueryDef.sql("q69_mix_by_budget",
-      """WITH t AS (
+      raw"""WITH t AS (
         |  SELECT doc_id, source,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END AS n_tokens,
+        |         ${tokenCountSql("text")} AS n_tokens,
         |         md5(CAST(doc_id AS VARCHAR)) AS h
         |  FROM documents),
         |c AS (SELECT doc_id, source, n_tokens,
@@ -1502,17 +1523,8 @@ object TextQueries {
     // engine-deterministic. One shuffle (by source); skew bound = the
     // largest single source, same documented posture as shuffleOrder.
     QueryDef.sql("q83_per_source_quality_rank",
-      """WITH q AS (SELECT doc_id, source,
-        |  CAST(round(
-        |    (CASE WHEN length(text) < 50 THEN length(text) / 50.0
-        |          WHEN length(text) > 2000 THEN 2000.0 / length(text)
-        |          ELSE 1.0 END)
-        |    * (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |            / greatest(CAST(length(text) AS DOUBLE), 1.0) > 0.1 THEN 0.5 ELSE 1.0 END)
-        |    * (CASE WHEN len(list_filter(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''),
-        |                                 x -> x IN ('the','and','of','to','is'))) > 0
-        |            THEN 1.0 ELSE 0.5 END)
-        |    * 1000) AS BIGINT) AS quality_milli
+      raw"""WITH q AS (SELECT doc_id, source,
+        |  $qualityMilliSql AS quality_milli
         |  FROM documents)
         |SELECT doc_id, source, quality_milli,
         |       CAST(round(percent_rank() OVER (
@@ -1539,19 +1551,9 @@ object TextQueries {
     // both engines pick the same element (percentile_disc semantics
     // restated rank-exactly).
     QueryDef.sql("q84_mixture_report",
-      """WITH t AS (SELECT doc_id, source,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END AS n_tokens,
-        |    CAST(round(
-        |      (CASE WHEN length(text) < 50 THEN length(text) / 50.0
-        |            WHEN length(text) > 2000 THEN 2000.0 / length(text)
-        |            ELSE 1.0 END)
-        |      * (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |              / greatest(CAST(length(text) AS DOUBLE), 1.0) > 0.1 THEN 0.5 ELSE 1.0 END)
-        |      * (CASE WHEN len(list_filter(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''),
-        |                                   x -> x IN ('the','and','of','to','is'))) > 0
-        |              THEN 1.0 ELSE 0.5 END)
-        |      * 1000) AS BIGINT) AS quality_milli
+      raw"""WITH t AS (SELECT doc_id, source,
+        |    ${tokenCountSql("text")} AS n_tokens,
+        |    $qualityMilliSql AS quality_milli
         |  FROM documents),
         |r AS (SELECT source, n_tokens, quality_milli,
         |             row_number() OVER (PARTITION BY source
@@ -1633,8 +1635,7 @@ object TextQueries {
     // partial agg). Measured HLL error at rsd=0.01: under 1% on all
     // three SFs — the 5% gate bound is a wide margin, not a coin flip.
     QueryDef.sql("q79_hll_shingles",
-      """WITH t AS (SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                  ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("text")} AS tk
         |           FROM documents),
         |sh AS (SELECT DISTINCT
         |         unnest(CASE WHEN len(tk) = 0 THEN []::VARCHAR[]
@@ -1659,8 +1660,7 @@ object TextQueries {
     // boolean. At 100 TB the exact-percentile form (q42) costs a full
     // sort; the sketch is one bounded-state partial aggregate.
     QueryDef.sql("q80_approx_median_contract",
-      """WITH t AS (SELECT CASE WHEN length(trim(text)) = 0 THEN 0
-        |                  ELSE len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) END AS v
+      raw"""WITH t AS (SELECT ${tokenCountSql("text")} AS v
         |           FROM documents)
         |SELECT CAST(count(*) AS BIGINT) AS n_docs, true AS p50_ok FROM t""".stripMargin) {
       (s, d) =>
@@ -1717,22 +1717,7 @@ object TextQueries {
     // per-doc sums, tf/df from its (tiny) query-term subset; df and
     // the one-row corpus stats broadcast; top-k is TakeOrdered.
     QueryDef.sql("q111_bm25_topk",
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                             ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END) AS token
-        |  FROM documents),
-        |st AS (SELECT (SELECT count(*) FROM documents) AS n,
-        |              (SELECT count(*) FROM toks) AS sdl),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
-        |       WHERE token IN ('spark','merge','vector') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-        |ts AS (
-        |  SELECT tf.doc_id,
-        |         (1000 * (44 * tf.tf * st.sdl) * (2*st.n - 2*df.df + 1))
-        |           // ((20 * tf.tf * st.sdl + 6 * st.sdl + 18 * dl.dl * st.n)
-        |              * (2*df.df + 1)) AS s_milli
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN st)
+      raw"""WITH $bm25TermCtes
         |SELECT doc_id, CAST(sum(s_milli) AS BIGINT) AS bm25_milli
         |FROM ts GROUP BY doc_id
         |ORDER BY bm25_milli DESC, doc_id LIMIT 10""".stripMargin) {
@@ -1753,28 +1738,7 @@ object TextQueries {
     // the gram STRINGS — agreement additionally witnesses that xxhash64
     // produced no collision on this corpus.
     QueryDef.sql("q112_dup_spans",
-      """WITH arr AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, i AS start_pos, array_to_string(a[i:i+7], ' ') AS gram
-        |  FROM arr, unnest(generate_series(1, len(a) - 7)) AS g(i)),
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
-        |marked AS (SELECT doc_id, start_pos, start_pos + 7 AS end_pos
-        |           FROM grams WHERE gram IN (SELECT gram FROM dup)),
-        |flagged AS (
-        |  SELECT doc_id, start_pos, end_pos,
-        |         CASE WHEN start_pos > coalesce(max(end_pos) OVER (
-        |                PARTITION BY doc_id ORDER BY start_pos
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-        |              THEN 1 ELSE 0 END AS new_island
-        |  FROM marked),
-        |islands AS (
-        |  SELECT doc_id, start_pos, end_pos,
-        |         sum(new_island) OVER (PARTITION BY doc_id ORDER BY start_pos
-        |                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM flagged)
+      raw"""WITH ${dupSpanCtes("documents")}
         |SELECT doc_id, CAST(min(start_pos) AS BIGINT) AS span_start,
         |       CAST(max(end_pos) AS BIGINT) AS span_end,
         |       CAST(max(end_pos) - min(start_pos) + 1 AS BIGINT) AS span_tokens
@@ -1846,9 +1810,8 @@ object TextQueries {
     // map-side combinable, persisted); model tables c12/c1/V all
     // derive from that projection — no second scan of the corpus.
     QueryDef.sql("q126_lm_surprisal",
-      """WITH arr AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
+      raw"""WITH arr AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS a
         |  FROM documents),
         |bi AS (
         |  SELECT doc_id, unnest(a[1:len(a)-1]) AS w1, unnest(a[2:len(a)]) AS w2
@@ -1926,10 +1889,9 @@ object TextQueries {
     // recursive term, which SQL recursion can't express; the spec
     // cross-checks round-0 of the trainer against THIS gated census.
     QueryDef.sql("q131_bpe_pair_stats",
-      """WITH words AS (
+      raw"""WITH words AS (
         |  SELECT word, count(*) AS n FROM (
-        |    SELECT unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                       ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END) AS word
+        |    SELECT unnest(${tokensSql("text")}) AS word
         |    FROM documents) GROUP BY 1),
         |sym AS (SELECT n, string_split(word, '') AS s FROM words),
         |pairs AS (
@@ -1953,22 +1915,7 @@ object TextQueries {
     // semantic scan is a broadcast one-row nested-loop, TakeOrdered
     // top-20 — no corpus shuffle anywhere.
     QueryDef.sql("q133_rrf_fusion",
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                             ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END) AS token
-        |  FROM documents),
-        |st AS (SELECT (SELECT count(*) FROM documents) AS n,
-        |              (SELECT count(*) FROM toks) AS sdl),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
-        |       WHERE token IN ('spark','merge','vector') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-        |ts AS (
-        |  SELECT tf.doc_id,
-        |         (1000 * (44 * tf.tf * st.sdl) * (2*st.n - 2*df.df + 1))
-        |           // ((20 * tf.tf * st.sdl + 6 * st.sdl + 18 * dl.dl * st.n)
-        |              * (2*df.df + 1)) AS s_milli
-        |  FROM tf JOIN df USING (token) JOIN dl USING (doc_id) CROSS JOIN st),
+      raw"""WITH $bm25TermCtes,
         |lexs AS (SELECT doc_id, CAST(sum(s_milli) AS BIGINT) AS score
         |         FROM ts GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20),
         |lexr AS (SELECT doc_id,
@@ -2016,32 +1963,12 @@ object TextQueries {
     // the identical code path — the wrapper just gives the testdata
     // markup to strip.
     QueryDef.sql("q137_markup_strip",
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    '<html><!-- doc ' || doc_id || ' --><body class="doc"><h1>' || source ||
-        |    '</h1><script type="text/javascript">var x = 1 < 2;</script><p>' || text ||
-        |    '</p><style media="all">p { color: red; }</style>&amp;amp; &lt;escaped&gt;&nbsp;ok</body></html>'
-        |    AS raw
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(raw, '(?s)<!--.*?-->', ' ', 'g') AS t FROM m),
-        |s2 AS (SELECT doc_id,
-        |         regexp_replace(t, '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g') AS t FROM s1),
-        |s3 AS (SELECT doc_id,
-        |         regexp_replace(t, '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g') AS t FROM s2),
-        |s4 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s3),
-        |s5 AS (SELECT doc_id,
-        |         replace(replace(replace(replace(replace(replace(t,
-        |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |           '&nbsp;', ' '), '&amp;', '&') AS t FROM s4)
+      raw"""WITH $markupDocsCte,
+        |${stripMarkupCtes("m")}
         |SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS clean_text
         |FROM s5""".stripMargin) {
       (s, d) => {
-        val markup = concat(
-          lit("<html><!-- doc "), col("doc_id").cast("string"),
-          lit(" --><body class=\"doc\"><h1>"), col("source"),
-          lit("</h1><script type=\"text/javascript\">var x = 1 < 2;</script><p>"),
-          col("text"),
-          lit("</p><style media=\"all\">p { color: red; }</style>&amp;amp; &lt;escaped&gt;&nbsp;ok</body></html>"))
+        val markup = markupDoc
         Tables.documents(s, d)
           .select(col("doc_id"), stripMarkup(markup).as("clean_text"))
       }
@@ -2171,27 +2098,7 @@ object TextQueries {
     // (inter·10^6 ≥ t·union — never the rounded ppm), so the gate
     // proves the filter loses nothing.
     QueryDef.sql("q143_jaccard_prefix_join",
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS g
-        |  FROM toks),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
-        |SELECT id_a, id_b,
-        |       CAST(round(inter * 1000000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT) AS jaccard_ppm
-        |FROM pairs
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
+      raw"""${trigramJaccardSql("documents")}
         |WHERE inter * 1000000 >= 300000 * (sa.n_sh + sb.n_sh - inter)""".stripMargin) {
       (s, d) =>
         Dedup.jaccardPrefixJoin(Tables.documents(s, d),
@@ -2205,9 +2112,8 @@ object TextQueries {
     // strict total order (bits, count, w1, w2) makes the top-k
     // deterministic.
     QueryDef.sql("q145_pmi_collocations",
-      """WITH arr AS (
-        |  SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |              ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
+      raw"""WITH arr AS (
+        |  SELECT ${tokensSql("text")} AS a
         |  FROM documents),
         |bi AS (
         |  SELECT unnest(a[1:len(a)-1]) AS w1, unnest(a[2:len(a)]) AS w2
@@ -2240,16 +2146,12 @@ object TextQueries {
     // corpus-sized row; the census excludes it BEFORE any posting
     // list is collected).
     QueryDef.sql("q146_inverted_index",
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS t
+      raw"""WITH toks AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS t
         |  FROM documents),
         |dt AS (
         |  SELECT DISTINCT doc_id,
-        |         unnest(CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |                     WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                     ELSE list_transform(generate_series(1, len(t) - 2),
-        |                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) END) AS term
+        |         unnest(${trigramsSql("t")}) AS term
         |  FROM toks),
         |g AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
         |             array_to_string(list_sort(list(doc_id)), ',') AS postings
@@ -2293,8 +2195,7 @@ object TextQueries {
     // (the SQL XXH64 is the expensive twin, not the operator).
     QueryDef.sql("q153_feature_hash",
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                             ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+         |  SELECT doc_id, unnest(${tokensSql("text")}) AS t
          |  FROM documents WHERE doc_id < 200),
          |${XxHash64Sql.hashBytesCtes("toks", "t")},
          |bk AS (SELECT doc_id, CAST(xxh % 64 AS BIGINT) AS b, count(*) AS c
@@ -2315,28 +2216,7 @@ object TextQueries {
     // oracle replays the whole chain — span formation AND the cut —
     // with the string-census spans.
     QueryDef.sql("q154_remove_dup_spans",
-      """WITH arr AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
-        |  FROM documents WHERE text IS NOT NULL),
-        |grams AS (
-        |  SELECT doc_id, i AS start_pos, array_to_string(a[i:i+7], ' ') AS gram
-        |  FROM arr, unnest(generate_series(1, len(a) - 7)) AS g(i)),
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
-        |marked AS (SELECT doc_id, start_pos, start_pos + 7 AS end_pos
-        |           FROM grams WHERE gram IN (SELECT gram FROM dup)),
-        |flagged AS (
-        |  SELECT doc_id, start_pos, end_pos,
-        |         CASE WHEN start_pos > coalesce(max(end_pos) OVER (
-        |                PARTITION BY doc_id ORDER BY start_pos
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-        |              THEN 1 ELSE 0 END AS new_island
-        |  FROM marked),
-        |islands AS (
-        |  SELECT doc_id, start_pos, end_pos,
-        |         sum(new_island) OVER (PARTITION BY doc_id ORDER BY start_pos
-        |                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM flagged),
+      raw"""WITH ${dupSpanCtes("documents WHERE text IS NOT NULL")},
         |spans AS (SELECT doc_id, min(start_pos) AS s, max(end_pos) AS e
         |          FROM islands GROUP BY doc_id, island),
         |tok AS (SELECT doc_id, i AS pos, a[i] AS tok
@@ -2460,8 +2340,7 @@ object TextQueries {
         s"SELECT doc_id, f, $b AS bid, CAST((f // $off) % 65536 AS BIGINT) AS bval FROM fps"
       }.mkString(" UNION ALL ")
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                             ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+         |  SELECT doc_id, unnest(${tokensSql("text")}) AS t
          |  FROM documents WHERE doc_id < 200),
          |${hashBytesCtes("toks", "t")},
          |votes AS (SELECT doc_id, $votes FROM hb GROUP BY doc_id),
@@ -2515,8 +2394,7 @@ object TextQueries {
       val (rSteps, rOut) = graft.functions.IntMath.duckSteps("ar", "br", "lr_")
       val (lamCtes, lamLast) = chainCtes("lam0", tSteps ++ rSteps, "lamc", per = 8)
       s"""WITH toks AS (
-         |  SELECT doc_id, lang, unnest(CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         |                             ELSE list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') END) AS t
+         |  SELECT doc_id, lang, unnest(${tokensSql("text")}) AS t
          |  FROM documents),
          |${hashBytesCtes("toks", "t")},
          |db AS (SELECT doc_id, CAST(xxh % 1024 AS BIGINT) AS b,
@@ -2576,7 +2454,7 @@ object TextQueries {
          |l AS (SELECT doc_id, page, string_split(page, chr(10)) AS ls FROM pg),
          |k AS (SELECT doc_id, page, ls,
          |        list_filter(ls, x -> right(trim(x), 1) IN ('.', '!', '?', '"')
-         |          AND len(list_filter(regexp_split_to_array(trim(x), '\\s+'), w -> w <> '')) >= 5
+         |          AND len(${splitSql("trim(x)", "w")}) >= 5
          |          AND NOT contains(lower(x), 'javascript')) AS kl
          |      FROM l),
          |j AS (SELECT doc_id, page, len(ls) AS n_lines, len(kl) AS n_kept_lines,
@@ -2641,9 +2519,8 @@ object TextQueries {
     q241TokenEntropy,
 
     QueryDef.sql("q211_matched_spans",
-      """WITH arr AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-        |                      ELSE list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') END AS a
+      raw"""WITH arr AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS a
         |  FROM documents),
         |grams AS (
         |  SELECT doc_id, i AS pos, array_to_string(a[i:i+7], ' ') AS gram

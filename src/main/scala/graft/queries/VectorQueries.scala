@@ -111,13 +111,12 @@ object VectorQueries {
        |  FROM embeddings e, pplanes pl)""".stripMargin
   }
 
-  /** Oracle for q38 AND q186: the IVF pipeline (md5-seeded centroids,
-    * broadcast assignment, nProbe=4 probes, exact re-rank, k=3). One
-    * string for both gates so the stored-index path can never drift
-    * from the recompute path.
+  /** q38/q132 shared IVF cell assignment: 16 md5-seeded centroids,
+    * cosine ppm to each, ranked per vector. Ends in
+    * `cells(vid, vec, cid, r)` and `assigned(vid, vec, cell)`.
     */
-  private val ivfOracleSql: String =
-    """WITH v AS (SELECT vec_id AS vid, embedding AS vec FROM embeddings),
+  private val ivfCellsCtes: String =
+    """v AS (SELECT vec_id AS vid, embedding AS vec FROM embeddings),
       |cent AS (SELECT vid AS cid, vec AS cvec FROM v
       |         ORDER BY md5(CAST(vid AS VARCHAR)), vid LIMIT 16),
       |sims AS (
@@ -133,7 +132,34 @@ object VectorQueries {
       |  SELECT vid, vec, cid,
       |         row_number() OVER (PARTITION BY vid ORDER BY sim DESC, cid) AS r
       |  FROM sims),
-      |assigned AS (SELECT vid, vec, cid AS cell FROM cells WHERE r = 1),
+      |assigned AS (SELECT vid, vec, cid AS cell FROM cells WHERE r = 1)""".stripMargin
+
+  /** q55/q134/q166/q195 shared connected components over the q37
+    * near-dup pairs (recursive min-reachable label; `nodes` names the
+    * node CTE). Opens with [[lshBandCtes]]; ends in `reach(v, m)`.
+    */
+  private def clusterReachCtes(nodes: String): String =
+    s"""${lshBandCtes(2, 6, 4096)},
+       |pairs AS (
+       |  SELECT c.id_a, c.id_b, $cosPpm AS cosine_ppm
+       |  FROM cand c JOIN sigs a ON a.vid = c.id_a JOIN sigs b ON b.vid = c.id_b
+       |  WHERE c.id_a < c.id_b),
+       |thr AS (SELECT id_a, id_b FROM pairs WHERE cosine_ppm >= 350000),
+       |e AS (SELECT id_a AS a, id_b AS b FROM thr
+       |      UNION SELECT id_b, id_a FROM thr),
+       |$nodes AS (SELECT DISTINCT a AS v FROM e),
+       |reach AS (
+       |  SELECT v, v AS m FROM $nodes
+       |  UNION
+       |  SELECT e.b AS v, r.m FROM reach r JOIN e ON e.a = r.v)""".stripMargin
+
+  /** Oracle for q38 AND q186: the IVF pipeline (md5-seeded centroids,
+    * broadcast assignment, nProbe=4 probes, exact re-rank, k=3). One
+    * string for both gates so the stored-index path can never drift
+    * from the recompute path.
+    */
+  private val ivfOracleSql: String =
+    s"""WITH $ivfCellsCtes,
       |probes AS (SELECT vid AS query_id, vec AS qe, cid AS cell FROM cells WHERE r <= 4),
       |scored AS (
       |  SELECT p.query_id, a.vid AS neighbor_id,
@@ -303,19 +329,7 @@ object VectorQueries {
     // recursive min-reachable CTE (oracle). cluster_id = min id in the
     // component; is_keeper marks the one doc kept per cluster.
     QueryDef.sql("q55_dup_clusters",
-      s"""WITH RECURSIVE ${lshBandCtes(2, 6, 4096)},
-         |pairs AS (
-         |  SELECT c.id_a, c.id_b, $cosPpm AS cosine_ppm
-         |  FROM cand c JOIN sigs a ON a.vid = c.id_a JOIN sigs b ON b.vid = c.id_b
-         |  WHERE c.id_a < c.id_b),
-         |thr AS (SELECT id_a, id_b FROM pairs WHERE cosine_ppm >= 350000),
-         |e AS (SELECT id_a AS a, id_b AS b FROM thr
-         |      UNION SELECT id_b, id_a FROM thr),
-         |nodes AS (SELECT DISTINCT a AS v FROM e),
-         |reach AS (
-         |  SELECT v, v AS m FROM nodes
-         |  UNION
-         |  SELECT e.b AS v, r.m FROM reach r JOIN e ON e.a = r.v)
+      s"""WITH RECURSIVE ${clusterReachCtes("nodes")}
          |SELECT v AS doc_id, min(m) AS cluster_id, v = min(m) AS is_keeper
          |FROM reach GROUP BY v""".stripMargin) {
       (s, d) => {
@@ -404,23 +418,7 @@ object VectorQueries {
     // miss. The oracle replays centroid choice, assignment, and the
     // within-cell pair scan.
     QueryDef.sql("q132_semantic_dedup",
-      s"""WITH v AS (SELECT vec_id AS vid, embedding AS vec FROM embeddings),
-         |cent AS (SELECT vid AS cid, vec AS cvec FROM v
-         |         ORDER BY md5(CAST(vid AS VARCHAR)), vid LIMIT 16),
-         |sims AS (
-         |  SELECT v.vid, v.vec, c.cid,
-         |    CAST(round(
-         |      list_sum(list_transform(list_zip(v.vec, c.cvec),
-         |               p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-         |      / (sqrt(list_sum(list_transform(v.vec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         |         * sqrt(list_sum(list_transform(c.cvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-         |      * 1000000.0) AS BIGINT) AS sim
-         |  FROM v, cent c),
-         |cells AS (
-         |  SELECT vid, vec, cid,
-         |         row_number() OVER (PARTITION BY vid ORDER BY sim DESC, cid) AS r
-         |  FROM sims),
-         |assigned AS (SELECT vid, vec, cid AS cell FROM cells WHERE r = 1),
+      s"""WITH $ivfCellsCtes,
          |capped AS (SELECT * FROM assigned
          |           QUALIFY count(*) OVER (PARTITION BY cell) <= 1048576),
          |dup AS (
@@ -442,19 +440,7 @@ object VectorQueries {
     // oracle extends the recursive min-label CTE with a per-cluster
     // argmax window.
     QueryDef.sql("q134_canonical_doc",
-      s"""WITH RECURSIVE ${lshBandCtes(2, 6, 4096)},
-         |pairs AS (
-         |  SELECT c.id_a, c.id_b, $cosPpm AS cosine_ppm
-         |  FROM cand c JOIN sigs a ON a.vid = c.id_a JOIN sigs b ON b.vid = c.id_b
-         |  WHERE c.id_a < c.id_b),
-         |thr AS (SELECT id_a, id_b FROM pairs WHERE cosine_ppm >= 350000),
-         |e AS (SELECT id_a AS a, id_b AS b FROM thr
-         |      UNION SELECT id_b, id_a FROM thr),
-         |nodes AS (SELECT DISTINCT a AS v FROM e),
-         |reach AS (
-         |  SELECT v, v AS m FROM nodes
-         |  UNION
-         |  SELECT e.b AS v, r.m FROM reach r JOIN e ON e.a = r.v),
+      s"""WITH RECURSIVE ${clusterReachCtes("nodes")},
          |lab AS (SELECT v, min(m) AS cluster_id FROM reach GROUP BY v),
          |j AS (SELECT l.v, l.cluster_id, d.n_chars
          |      FROM lab l JOIN documents d ON d.doc_id = l.v),
@@ -736,19 +722,7 @@ object VectorQueries {
     // recursive min-reachable CTE + cluster sizes, left-joined to the
     // full id space.
     QueryDef.sql("q166_soft_dedup_weights",
-      s"""WITH RECURSIVE ${lshBandCtes(2, 6, 4096)},
-         |pairs AS (
-         |  SELECT c.id_a, c.id_b, $cosPpm AS cosine_ppm
-         |  FROM cand c JOIN sigs a ON a.vid = c.id_a JOIN sigs b ON b.vid = c.id_b
-         |  WHERE c.id_a < c.id_b),
-         |thr AS (SELECT id_a, id_b FROM pairs WHERE cosine_ppm >= 350000),
-         |e AS (SELECT id_a AS a, id_b AS b FROM thr
-         |      UNION SELECT id_b, id_a FROM thr),
-         |nodes AS (SELECT DISTINCT a AS v FROM e),
-         |reach AS (
-         |  SELECT v, v AS m FROM nodes
-         |  UNION
-         |  SELECT e.b AS v, r.m FROM reach r JOIN e ON e.a = r.v),
+      s"""WITH RECURSIVE ${clusterReachCtes("nodes")},
          |cc AS (SELECT v, min(m) AS lbl FROM reach GROUP BY v),
          |sz AS (SELECT lbl, count(*) AS sz FROM cc GROUP BY lbl)
          |SELECT em.vec_id,
@@ -776,19 +750,7 @@ object VectorQueries {
       import XxHash64Sql._
       val (steps, h) = hashLongSteps(s2u("vec_id"), "42", "DW")
       val (ctes, last) = chainCtes("w", steps, "dwc")
-      s"""WITH RECURSIVE ${lshBandCtes(2, 6, 4096)},
-         |pairs AS (
-         |  SELECT c.id_a, c.id_b, $cosPpm AS cosine_ppm
-         |  FROM cand c JOIN sigs a ON a.vid = c.id_a JOIN sigs b ON b.vid = c.id_b
-         |  WHERE c.id_a < c.id_b),
-         |thr AS (SELECT id_a, id_b FROM pairs WHERE cosine_ppm >= 350000),
-         |e AS (SELECT id_a AS a, id_b AS b FROM thr
-         |      UNION SELECT id_b, id_a FROM thr),
-         |vn AS (SELECT DISTINCT a AS v FROM e),
-         |reach AS (
-         |  SELECT v, v AS m FROM vn
-         |  UNION
-         |  SELECT e.b AS v, r.m FROM reach r JOIN e ON e.a = r.v),
+      s"""WITH RECURSIVE ${clusterReachCtes("vn")},
          |cc AS (SELECT v, min(m) AS lbl FROM reach GROUP BY v),
          |sz AS (SELECT lbl, count(*) AS sz FROM cc GROUP BY lbl),
          |w AS (SELECT em.vec_id,

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.operators.{Graphs, WebGraph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import TextOracleSql._
 
 /** Gate queries for the WAT side of the crawl pipeline
   * ([[graft.operators.WebGraph]]): outlink extraction from HTML
@@ -518,26 +519,17 @@ object WebGraphQueries {
        |    AS canon
        |  FROM ${pfx}cq)""".stripMargin
 
-  /** q255/q261 shared fixture+merge CTE text (the q256/q258 shared-CTE
-    * discipline — the two gates' merge semantics cannot diverge):
-    * robots-allowed discovery canon-merged with sitemap seeds. Expects
-    * [[robotsDirsCtes]] + [[robotsVerdictCtes]] upstream; ends in
+  /** Oracle twin of [[graft.operators.Frontier.mergeSeeds]]: the
+    * discovered URLs canon-merged with sitemap seeds. `disc` and
+    * `seeds` are the CTE definitions `disc(url)` and `seeds(loc, pm)`,
+    * the fixture part that differs between the merging gates; ends in
     * `mg(canon, url, source, priority_milli)`.
     */
-  private lazy val seedMergeCtes: String =
-    s"""disc AS (
-       |  SELECT url FROM win WHERE rn = 1 AND ((NOT m) OR rule = 'allow')),
+  private def mergeCtes(disc: String, seeds: String): String =
+    s"""$disc,
        |${canonChain("d", "disc", "url")},
        |dc AS (SELECT canon, min(url) AS d_url FROM dcn GROUP BY canon),
-       |seeds AS (
-       |  SELECT CASE WHEN doc_id % 2 = 0 THEN
-       |      'http://H' || (doc_id % 19) || '.EXAMPLE.ORG' || ($urlPathSql) ||
-       |        '?utm_source=sm&utm_medium=x'
-       |    ELSE 'http://h' || (doc_id % 19) || '.example.org/seed/doc' || doc_id
-       |    END AS loc,
-       |    CASE WHEN doc_id % 3 = 0
-       |      THEN CAST((doc_id % 10) * 100 AS BIGINT) END AS pm
-       |  FROM documents),
+       |$seeds,
        |${canonChain("s", "seeds", "loc")},
        |sc AS (SELECT canon, min(loc) AS s_url, max(pm) AS priority_milli
        |       FROM scn GROUP BY canon),
@@ -549,6 +541,136 @@ object WebGraphQueries {
        |         ELSE 'discovered' END AS source,
        |    sc.priority_milli
        |  FROM dc FULL OUTER JOIN sc ON dc.canon = sc.canon)""".stripMargin
+
+  /** The q250 verdict funnel over a collapsed frontier
+    * `src(canon, url, ...)` (q265/q271: the landing URL, not the
+    * source, is what gets fetched, so it is what robots must allow).
+    * Expects [[robotsDirsCtes]] upstream; ends in
+    * `fv(canon, host, allowed)`.
+    */
+  private def landingVerdictCtes(src: String): String =
+    s"""fpath AS (
+       |  SELECT canon, url,
+       |    lower(regexp_extract(url, '(?i)^https?://([^/?#]+)', 1)) AS host,
+       |    CASE WHEN regexp_extract(url, '(?i)^https?://[^/?#]+([^#]*)', 1) = ''
+       |      THEN '/' ELSE regexp_extract(url, '(?i)^https?://[^/?#]+([^#]*)', 1)
+       |      END AS p
+       |  FROM $src),
+       |fhits AS (
+       |  SELECT f.canon, f.host, d.rule, d.path AS rpath,
+       |    d.pattern IS NOT NULL AND regexp_matches(f.p, d.pattern) AS m,
+       |    length(d.path) AS plen
+       |  FROM fpath f LEFT JOIN dirs d ON d.host = f.host),
+       |fwin AS (
+       |  SELECT *, row_number() OVER (PARTITION BY canon ORDER BY
+       |      CASE WHEN m THEN plen ELSE -1 END DESC,
+       |      CASE WHEN rule = 'allow' THEN 1 ELSE 0 END DESC,
+       |      rpath ASC NULLS LAST) AS rn
+       |  FROM fhits),
+       |fv AS (SELECT canon, host, (NOT m) OR rule = 'allow' AS allowed
+       |       FROM fwin WHERE rn = 1)""".stripMargin
+
+  /** q269/q270 shared Retry-After parse (RFC 9110 §10.2.3) over the
+    * zero-stripped header value `tra`: delay-seconds from `base` millis
+    * (15-digit horizon, saturating above), else the IMF-fixdate form,
+    * else NULL.
+    */
+  private def retryUntilSql(base: String): String =
+    s"""CASE WHEN regexp_matches(tra, '^[0-9]{1,15}$$')
+       |  THEN $base + CAST(tra AS BIGINT) * 1000
+       |  WHEN regexp_matches(tra, '^[0-9]{16,}$$')
+       |  THEN $base + 999999999999999 * 1000
+       |  ELSE epoch_ms(try_strptime(
+       |    CASE WHEN regexp_matches(tra,
+       |      '^[A-Za-z]{3}, [0-9]{2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2} GMT$$')
+       |      THEN substr(tra, 6, 20) END,
+       |    '%d %b %Y %H:%M:%S'))
+       |  END""".stripMargin
+
+  /** q268/q270 shared RFC 9111 oracle columns over a fetch
+    * observation `f(cc, ageh)`: `mat`, the max-age digits (leading
+    * zeros stripped), and `agems`, the Age header in millis (15-digit
+    * horizon, saturating above).
+    */
+  private val freshnessAgeSql: String =
+    s"""regexp_replace(regexp_extract(lower(coalesce(f.cc, '')),
+       |  '(^|[,\\s])max-age\\s*=\\s*"?([0-9]+)', 2),
+       |  '^0+([0-9])', '\\1') AS mat,
+       |CASE WHEN regexp_matches(regexp_replace(trim(coalesce(f.ageh,
+       |    '')), '^0+([0-9])', '\\1'), '^[0-9]{1,15}$$')
+       |  THEN CAST(regexp_replace(trim(f.ageh), '^0+([0-9])', '\\1')
+       |    AS BIGINT) * 1000
+       |  WHEN regexp_matches(regexp_replace(trim(coalesce(f.ageh,
+       |    '')), '^0+([0-9])', '\\1'), '^[0-9]{16,}$$')
+       |  THEN 999999999999999 * 1000
+       |  ELSE 0 END AS agems""".stripMargin
+
+  /** q268/q270 shared freshness precedence over
+    * (lcc, mat, agems, expms, hdue, hbasis, flm, t): no-cache/no-store,
+    * then max-age, Expires, the typed validator/sitemap due, and the
+    * §4.2.2 heuristic last — [[freshBasisSql]] names the tier,
+    * [[freshDueSql]] its due millis.
+    */
+  private val freshBasisSql: String =
+    s"""CASE WHEN regexp_matches(lcc,
+       |    '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)')
+       |     THEN regexp_extract(lcc,
+       |       '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)', 2)
+       |   WHEN mat <> '' THEN 'max-age'
+       |   WHEN expms IS NOT NULL THEN 'expires'
+       |   WHEN hdue IS NOT NULL THEN hbasis
+       |   WHEN flm IS NOT NULL AND t >= flm THEN 'heuristic'
+       |   ELSE hbasis END""".stripMargin
+
+  private val freshDueSql: String =
+    s"""CASE WHEN regexp_matches(lcc,
+       |    '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)') THEN t
+       |   WHEN regexp_matches(mat, '^[0-9]{1,15}$$')
+       |     THEN t + CAST(mat AS BIGINT) * 1000 - agems
+       |   WHEN regexp_matches(mat, '^[0-9]{16,}$$')
+       |     THEN t + 999999999999999 * 1000
+       |   WHEN expms IS NOT NULL THEN expms
+       |   WHEN hdue IS NOT NULL THEN hdue
+       |   WHEN flm IS NOT NULL AND t >= flm
+       |     THEN t + least((t - flm) // 10, 86400000) - agems
+       |   END""".stripMargin
+
+  /** q255/q261 shared fixture+merge CTE text (the q256/q258 shared-CTE
+    * discipline — the two gates' merge semantics cannot diverge):
+    * robots-allowed discovery canon-merged with sitemap seeds. Expects
+    * [[robotsDirsCtes]] + [[robotsVerdictCtes]] upstream; ends in
+    * `mg(canon, url, source, priority_milli)`.
+    */
+  private lazy val seedMergeCtes: String =
+    mergeCtes(
+      """disc AS (
+        |  SELECT url FROM win WHERE rn = 1 AND ((NOT m) OR rule = 'allow'))""".stripMargin,
+      s"""seeds AS (
+         |  SELECT CASE WHEN doc_id % 2 = 0 THEN
+         |      'http://H' || (doc_id % 19) || '.EXAMPLE.ORG' || ($urlPathSql) ||
+         |        '?utm_source=sm&utm_medium=x'
+         |    ELSE 'http://h' || (doc_id % 19) || '.example.org/seed/doc' || doc_id
+         |    END AS loc,
+         |    CASE WHEN doc_id % 3 = 0
+         |      THEN CAST((doc_id % 10) * 100 AS BIGINT) END AS pm
+         |  FROM documents)""".stripMargin)
+
+  /** q265/q272/q273 shared merge: every fetched URL of [[redirectCtes]]'
+    * `resp` is discovered, and even docs respell it as a seed. Expects
+    * [[redirectCtes]] upstream; ends in
+    * `mg(canon, url, source, priority_milli)`.
+    */
+  private lazy val redirectMergeCtes: String =
+    mergeCtes("disc AS (SELECT url FROM resp)",
+      """seeds AS (
+        |  -- %6F is an ENCODED unreserved 'o': the seed spelling
+        |  -- merges with the discovered fetch set only through RFC
+        |  -- 3986 §6.2.2.2 decode — the previously-split alias proof
+        |  SELECT 'http://H' || (doc_id % 19) || '.EXAMPLE.ORG/r/d%6Fc' ||
+        |      doc_id || '?utm_source=sm' AS loc,
+        |    CASE WHEN doc_id % 3 = 0
+        |      THEN CAST((doc_id % 10) * 100 AS BIGINT) END AS pm
+        |  FROM documents WHERE doc_id % 2 = 0)""".stripMargin)
 
   /** q256/q258 shared fixture SQL: the per-doc lastmod string (every
     * W3C datetime form + absent + an out-of-grammar RFC-822 date) and
@@ -586,13 +708,21 @@ object WebGraphQueries {
        |      WHEN 'monthly' THEN 2592000000 WHEN 'yearly' THEN 31536000000
        |      END""".stripMargin
 
-  /** The lastmod normalization + TRY_CAST + changefreq-period oracle
-    * chain over a `blk(k, doc_id, loc, lm, cf)` CTE — shared verbatim
-    * by q256 and q258 so their typed-lastmod semantics cannot diverge.
-    * Ends in `due(host, entry_no, loc, lm, cf, lastmod_ms, due_at_ms)`.
+  /** The per-doc sitemap fixture `blk(k, doc_id, loc, lm, cf)` plus
+    * the lastmod normalization + TRY_CAST + changefreq-period oracle
+    * chain over it — shared verbatim by q256, q258 and the recrawl
+    * gates built on them so their typed-lastmod semantics cannot
+    * diverge. Ends in
+    * `due(host, entry_no, loc, lm, cf, lastmod_ms, due_at_ms)`.
     */
   private lazy val sitemapDueCtes: String =
-    raw"""ent AS (
+    raw"""blk AS (
+      |  SELECT (doc_id % 19) AS k, doc_id,
+      |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
+      |    $sitemapLastmodSql AS lm,
+      |    $sitemapFreqSql AS cf
+      |  FROM documents),
+      |ent AS (
       |  SELECT 'h' || k || '.example.org' AS host,
       |    row_number() OVER (PARTITION BY k ORDER BY doc_id) AS entry_no,
       |    loc, lm, cf
@@ -638,6 +768,24 @@ object WebGraphQueries {
       .when(pmod(did, lit(9)) === 7, lit(""))
       .otherwise(lit("sometimes"))
 
+  /** One `<urlset>` per host h0..h18 (host, xml): each doc's `<url>`
+    * block `blk`, in doc order — the q256/q258 and q255/q261 sitemap
+    * fixtures' shared assembly.
+    */
+  private def urlsetPerHost(docs: DataFrame, blk: Column): DataFrame = {
+    val did = col("doc_id")
+    docs
+      .select(pmod(did, lit(19)).as("__k"),
+        struct(did.as("i"), blk.as("b")).as("__e"))
+      .groupBy("__k").agg(collect_list(col("__e")).as("__lst"))
+      .select(concat(lit("h"), col("__k").cast("string"),
+          lit(".example.org")).as("host"),
+        concat(lit("<urlset>"),
+          array_join(transform(sort_array(col("__lst")),
+            x => x.getField("b")), ""),
+          lit("</urlset>")).as("xml"))
+  }
+
   /** The q256/q258 sitemap urlset fixture: one block per doc with the
     * lastmod/changefreq residue walk, aggregated per host.
     */
@@ -653,16 +801,7 @@ object WebGraphQueries {
       when(cf =!= "", concat(lit("<changefreq>"), cf,
         lit("</changefreq>"))).otherwise(lit("")),
       lit("</url>"))
-    Tables.documents(s, d)
-      .select(pmod(did, lit(19)).as("__k"),
-        struct(did.as("i"), blk.as("b")).as("__e"))
-      .groupBy("__k").agg(collect_list(col("__e")).as("__lst"))
-      .select(concat(lit("h"), col("__k").cast("string"),
-          lit(".example.org")).as("host"),
-        concat(lit("<urlset>"),
-          array_join(transform(sort_array(col("__lst")),
-            x => x.getField("b")), ""),
-          lit("</urlset>")).as("xml"))
+    urlsetPerHost(Tables.documents(s, d), blk)
   }
 
   /** The q259/q260 FETCHED-sitemap corpus (sitemap_url, xml): per host
@@ -867,16 +1006,7 @@ object WebGraphQueries {
         pmod(did, lit(10)).cast("string"), lit("</priority>")))
         .otherwise(lit("")),
       lit("</url>"))
-    val xmls = docs
-      .select(pmod(did, lit(19)).as("__k"),
-        struct(did.as("i"), blk.as("b")).as("__e"))
-      .groupBy("__k").agg(collect_list(col("__e")).as("__lst"))
-      .select(concat(lit("h"), col("__k").cast("string"),
-          lit(".example.org")).as("host"),
-        concat(lit("<urlset>"),
-          array_join(transform(sort_array(col("__lst")),
-            x => x.getField("b")), ""),
-          lit("</urlset>")).as("xml"))
+    val xmls = urlsetPerHost(docs, blk)
     val seeds = graft.operators.Sitemaps.entries(xmls, "host", col("xml"))
       .filter(!col("from_index"))
     val merged = graft.operators.Frontier.mergeSeeds(
@@ -988,6 +1118,47 @@ object WebGraphQueries {
   }
 
 
+  /** q272/q273 shared identity + routing chain: the redirect chains,
+    * the seed merge, the collapse through the PERMANENT (301/308)
+    * prefix (`perm_url`) and the kept identity routed through the FULL
+    * chain to `fetch_url`. Ends in
+    * `gcn(id_canon, url, source, priority_milli, n_aliases, fetch_url,
+    * canon)`, `canon` being the fetch URL's.
+    */
+  private lazy val permanentRoutingCtes: String =
+    s"""$redirectCtes,
+       |$redirectMergeCtes,
+       |pchd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
+       |           ELSE perm_url END AS dest FROM rc),
+       |${canonChain("p", "pchd", "url")},
+       |pch AS (SELECT canon, min(dest) AS dest FROM pcn GROUP BY canon),
+       |tg AS (SELECT coalesce(pch.dest, mg.url) AS target, mg.source,
+       |         mg.priority_milli
+       |       FROM mg LEFT JOIN pch ON pch.canon = mg.canon),
+       |${canonChain("t", "tg", "target")},
+       |fo0 AS (SELECT canon, min(target) AS url,
+       |         max(priority_milli) AS priority_milli,
+       |         CAST(count(*) AS BIGINT) AS n_aliases,
+       |         max(CASE WHEN source IN ('sitemap', 'both')
+       |             THEN 1 ELSE 0 END) AS sm,
+       |         max(CASE WHEN source IN ('discovered', 'both')
+       |             THEN 1 ELSE 0 END) AS dv
+       |       FROM tcn GROUP BY canon),
+       |fa AS (SELECT canon, url,
+       |         CASE WHEN sm = 1 AND dv = 1 THEN 'both'
+       |              WHEN sm = 1 THEN 'sitemap'
+       |              ELSE 'discovered' END AS source,
+       |         priority_milli, n_aliases FROM fo0),
+       |rchd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
+       |           ELSE final_url END AS dest FROM rc),
+       |${canonChain("r", "rchd", "url")},
+       |rch AS (SELECT canon AS rk, min(dest) AS dest FROM rcn GROUP BY canon),
+       |rt AS (SELECT fa.canon AS id_canon, fa.url, fa.source,
+       |         fa.priority_milli, fa.n_aliases,
+       |         coalesce(rch.dest, fa.url) AS fetch_url
+       |       FROM fa LEFT JOIN rch ON rch.rk = fa.canon),
+       |${canonChain("g", "rt", "fetch_url")}""".stripMargin
+
   /** Spark twin of [[redirectCtes]] — the q263/q264 shared fixture:
     * the %11 residue fetch results resolved through
     * [[graft.operators.WebGraph.redirectChains]].
@@ -997,19 +1168,22 @@ object WebGraphQueries {
       col("status"), col("location"), maxHops = 4)
 
   /** The q263/q264/q265 fetch-result fixture (url, status, location) —
-    * Spark twin of [[redirectCtes]]' `resp`. The %11 residue walk
+    * Spark twin of [[redirectCtes]]' `resp`, over `hosts` hosts (19 in
+    * the gates, 997 in `graft.Soak`). The %11 residue walk
     * covers every Location form the resolution contract names:
     * absolute chains (0→1→3: three hops into a robots-DISALLOWED
     * /private landing — dangling; 2→6→8→9: exactly-maxHops settled),
     * a self-loop (5 — exceeded), root-relative (7), protocol-relative
-    * (9, same-host +171 ≡ 0 mod 19 so the landing IS a fetched URL),
-    * and path-relative (10, resolved against the /r/ base directory).
+    * (9, same-host +9·hosts ≡ 0 mod hosts so the landing IS a fetched
+    * URL), and path-relative (10, resolved against the /r/ base
+    * directory).
     */
-  private def redirectFixture(s: SparkSession, d: String): DataFrame = {
+  private[graft] def redirectFixture(s: SparkSession, d: String,
+                                     hosts: Int = 19): DataFrame = {
     val did = col("doc_id")
-    val ks = pmod(did, lit(19)).cast("string")
+    val ks = pmod(did, lit(hosts)).cast("string")
     def u(x: Column): Column =
-      concat(lit("http://h"), pmod(x, lit(19)).cast("string"),
+      concat(lit("http://h"), pmod(x, lit(hosts)).cast("string"),
         lit(".example.org/r/doc"), x.cast("string"))
     Tables.documents(s, d).select(
       u(did).as("url"),
@@ -1033,18 +1207,130 @@ object WebGraphQueries {
         .when(pmod(did, lit(11)) === 5, u(did))
         .when(pmod(did, lit(11)) === 6, u(did + 2))
         .when(pmod(did, lit(11)) === 7,
-          concat(lit("/r/doc"), (did + 19).cast("string")))
+          concat(lit("/r/doc"), (did + hosts).cast("string")))
         .when(pmod(did, lit(11)) === 8, u(did + 1))
         .when(pmod(did, lit(11)) === 9, concat(lit("//h"), ks,
-          lit(".example.org/r/doc"), (did + 171).cast("string")))
+          lit(".example.org/r/doc"), (did + 9 * hosts).cast("string")))
         // path-relative WITH a dot segment: /r/docN's base dir is /r/,
         // so ../r/docM normalizes back to /r/docM — the same landing
         // as the pre-r14 plain 'docM' spelling, now exercising the
         // §5.2.4 fold through q263/q264/q265's hash gates
         .when(pmod(did, lit(11)) === 10,
-          concat(lit("../r/doc"), (did + 19).cast("string")))
+          concat(lit("../r/doc"), (did + hosts).cast("string")))
         .as("location"))
   }
+
+  /** q265/q271 shared tail (Spark twin of [[landingVerdictCtes]] plus
+    * the capped windows): the collapsed frontier
+    * `collapsed(canon, url, source, priority_milli, n_aliases)`
+    * robots-checked and politeness-scheduled at its landing host, 15
+    * grants per host ordered by `priorityCol` when given; blocked rows
+    * ride along with `allowed` false and no grant.
+    */
+  private def landingSchedule(s: SparkSession, d: String,
+                              collapsed: DataFrame,
+                              priorityCol: Option[String]): DataFrame = {
+    val robots = robotsFixture(s, d)
+    val verd = graft.operators.Robots.allowed(
+      collapsed.select("canon", "url"), "canon", col("url"),
+      robots, "host", col("body"), agent = "graftbot")
+      .select(col("canon"), col("host"), col("allowed"))
+    // the verdict-annotated frame feeds BOTH the scheduled branch
+    // and the blocked branch: pin the landing-key-grain frame so
+    // the chain + merge (+ canonical) + verdict funnel runs once
+    // (the q262 discipline)
+    val full = graft.operators.CacheRegistry.persist(
+      collapsed.join(verd, Seq("canon")))
+    val delays = graft.operators.Robots.crawlDelay(
+      robots, "host", col("body"), agent = "graftbot")
+    val sched = graft.operators.Frontier.fetchSchedule(
+      full.filter(col("allowed")).drop("host", "allowed"),
+      "canon", col("url"), delays, t0Ms = 1704067200000L,
+      defaultDelayMs = 1000L, maxPerHost = 15,
+      priorityCol = priorityCol)
+    sched.withColumn("allowed", lit(true))
+      .unionByName(full.filter(!col("allowed"))
+        .select(col("canon"), col("url"), col("host"),
+          lit(null).cast("long").as("seq"),
+          lit(null).cast("long").as("fetch_at_ms"),
+          col("source"), col("priority_milli"), col("n_aliases"),
+          lit(false).as("allowed")))
+      .select(col("canon"), col("url"), col("host"), col("source"),
+        col("priority_milli"), col("n_aliases"), col("allowed"),
+        col("seq"), col("fetch_at_ms"))
+  }
+
+  /** The q265/q272/q273 merged frontier — Spark twin of
+    * [[redirectMergeCtes]]: every fetched URL of [[redirectFixture]]
+    * discovered, even docs respelled as seeds (uppercase host, an
+    * encoded unreserved `%6F`, a tracking param), priority on
+    * doc%3==0. Returns [[graft.operators.Frontier.mergeSeeds]]' frame.
+    */
+  private def redirectSeedMerge(s: SparkSession, d: String): DataFrame = {
+    val did = col("doc_id")
+    val ks = pmod(did, lit(19)).cast("string")
+    val discovered = redirectFixture(s, d).select(col("url"))
+    val seeds = Tables.documents(s, d)
+      .filter(pmod(did, lit(2)) === 0)
+      .select(concat(lit("http://H"), ks, lit(".EXAMPLE.ORG/r/d%6Fc"),
+          did.cast("string"), lit("?utm_source=sm")).as("loc"),
+        when(pmod(did, lit(3)) === 0,
+          (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
+    graft.operators.Frontier.mergeSeeds(
+      discovered, col("url"), seeds, col("loc"), col("pm"))
+  }
+
+  /** The value of the first `n` header of a parsed
+    * [[graft.sources.Warc.httpMessage]] `msg` (header names are
+    * lowercased by the parse), NULL when absent.
+    */
+  private def hv(msg: Column, n: String): Column =
+    get(filter(msg.getField("headers"),
+      h => h.getField("name") === n), lit(0)).getField("value")
+
+  /** The q256 sitemap entries as recrawl hints (loc, slm, changefreq):
+    * the q266/q268/q270 conditionalRecrawl input.
+    */
+  private def recrawlHints(s: SparkSession, d: String): DataFrame =
+    graft.operators.Sitemaps.entries(
+        recrawlSitemapXmls(s, d), "host", col("xml"))
+      .select(col("loc"),
+        graft.operators.Sitemaps.lastmodMillis(col("lastmod")).as("slm"),
+        col("changefreq"))
+
+  /** q268/q270: the conditionalRecrawl heuristic tier over `hints`
+    * left-joined to the freshnessDue struct `fr` of the parsed
+    * observations `parsed(furl, fms, etag, flm, cc, expms, ageh)`.
+    */
+  private def freshnessJoin(hints: DataFrame, parsed: DataFrame): DataFrame = {
+    val cr = graft.operators.Frontier.conditionalRecrawl(hints, "loc",
+      col("slm"), col("changefreq"), parsed, col("furl"), col("fms"),
+      col("etag"), col("flm"))
+    val fr = parsed.select(col("furl"),
+      graft.sources.Warc.freshnessDue(col("fms"), col("cc"),
+        col("expms"), col("flm"), col("ageh")).as("fr"))
+    cr.join(fr, cr("loc") === fr("furl"), "left_outer")
+  }
+
+  /** q268/q270 precedence over a [[freshnessJoin]] frame: explicit
+    * freshness (no-cache/no-store/max-age/expires) > typed
+    * validator/sitemap due > RFC 9111 §4.2.2 heuristic (lowest — it
+    * fills only where no typed due exists). Spark twin of
+    * [[freshBasisSql]]/[[freshDueSql]].
+    */
+  private def explicitFr: Column = col("fr").isNotNull &&
+    col("fr").getField("basis") =!= "heuristic"
+
+  private def fusedBasis: Column =
+    when(explicitFr, col("fr").getField("basis"))
+      .when(col("due_at_ms").isNotNull, col("basis"))
+      .when(col("fr").isNotNull, col("fr").getField("basis"))
+      .otherwise(col("basis"))
+
+  private def fusedDue: Column =
+    when(explicitFr, col("fr").getField("due_ms"))
+      .when(col("due_at_ms").isNotNull, col("due_at_ms"))
+      .when(col("fr").isNotNull, col("fr").getField("due_ms"))
 
   /** The per-doc decision path — Spark twin of [[urlPathSql]]. */
   private def urlPath(did: Column): Column = {
@@ -1495,21 +1781,10 @@ object WebGraphQueries {
          |    '(?i)\\bcontent\\s*=\\s*("[^">]*\\bnoindex\\b|''[^''>]*\\bnoindex\\b)')
          |    AS noindex
          |  FROM pg),
-         |s1 AS (SELECT doc_id, regexp_replace(raw, '(?s)<!--.*?-->', ' ', 'g') AS t FROM pg),
-         |s2 AS (SELECT doc_id,
-         |         regexp_replace(t, '(?is)<script\\b[^>]*>.*?</script\\s*>', ' ', 'g') AS t FROM s1),
-         |s3 AS (SELECT doc_id,
-         |         regexp_replace(t, '(?is)<style\\b[^>]*>.*?</style\\s*>', ' ', 'g') AS t FROM s2),
-         |s4 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s3),
-         |s5 AS (SELECT doc_id,
-         |         replace(replace(replace(replace(replace(replace(t,
-         |           '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-         |           '&nbsp;', ' '), '&amp;', '&') AS t FROM s4),
+         |${stripMarkupCtes("pg")},
          |c AS (SELECT doc_id, trim(regexp_replace(t, '\\s+', ' ', 'g')) AS clean FROM s5),
          |sc AS (SELECT doc_id, clean,
-         |         CASE WHEN length(trim(clean)) = 0 THEN 0
-         |              ELSE len(list_filter(regexp_split_to_array(clean, '\\s+'),
-         |                                   x -> x <> '')) END AS n_tokens
+         |         ${tokenCountSql("clean")} AS n_tokens
          |       FROM c),
          |idx AS (
          |  SELECT v.doc_id, v.allowed, ni.noindex,
@@ -1809,13 +2084,7 @@ object WebGraphQueries {
     // frontier consumes. The oracle replays synthesis, extraction,
     // normalization (same regex tiers), TRY_CAST, and the period join.
     QueryDef.sql("q256_sitemap_recrawl",
-      s"""WITH blk AS (
-         |  SELECT (doc_id % 19) AS k, doc_id,
-         |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
-         |    $sitemapLastmodSql AS lm,
-         |    $sitemapFreqSql AS cf
-         |  FROM documents),
-         |$sitemapDueCtes
+      s"""WITH $sitemapDueCtes
          |SELECT host, CAST(entry_no AS BIGINT) AS entry_no, loc,
          |  lm AS lastmod, lastmod_ms, due_at_ms
          |FROM due""".stripMargin) {
@@ -1844,13 +2113,7 @@ object WebGraphQueries {
     // recurrence; a wrong running-max frame, a nb/delay mixup, or a
     // deferral leak all break the hash.
     QueryDef.sql("q258_frontier_recrawl",
-      s"""WITH blk AS (
-         |  SELECT (doc_id % 19) AS k, doc_id,
-         |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
-         |    $sitemapLastmodSql AS lm,
-         |    $sitemapFreqSql AS cf
-         |  FROM documents),
-         |$sitemapDueCtes,
+      s"""WITH $sitemapDueCtes,
          |dd AS (
          |  SELECT *, CASE WHEN CAST(substr(host, 2, length(host) - 13) AS INTEGER) % 2 = 0
          |      THEN 500 * (CAST(substr(host, 2, length(host) - 13) AS INTEGER) % 5) + 500
@@ -2142,29 +2405,7 @@ object WebGraphQueries {
     QueryDef.sql("q265_frontier_redirect_merge",
       s"""WITH $robotsDirsCtes,
          |$redirectCtes,
-         |disc AS (SELECT url FROM resp),
-         |${canonChain("d", "disc", "url")},
-         |dc AS (SELECT canon, min(url) AS d_url FROM dcn GROUP BY canon),
-         |seeds AS (
-         |  -- %6F is an ENCODED unreserved 'o': the seed spelling
-         |  -- merges with the discovered fetch set only through RFC
-         |  -- 3986 §6.2.2.2 decode — the previously-split alias proof
-         |  SELECT 'http://H' || (doc_id % 19) || '.EXAMPLE.ORG/r/d%6Fc' ||
-         |      doc_id || '?utm_source=sm' AS loc,
-         |    CASE WHEN doc_id % 3 = 0
-         |      THEN CAST((doc_id % 10) * 100 AS BIGINT) END AS pm
-         |  FROM documents WHERE doc_id % 2 = 0),
-         |${canonChain("s", "seeds", "loc")},
-         |sc AS (SELECT canon, min(loc) AS s_url, max(pm) AS priority_milli
-         |       FROM scn GROUP BY canon),
-         |mg AS (
-         |  SELECT coalesce(dc.canon, sc.canon) AS canon,
-         |    coalesce(sc.s_url, dc.d_url) AS url,
-         |    CASE WHEN sc.canon IS NOT NULL AND dc.canon IS NOT NULL THEN 'both'
-         |         WHEN sc.canon IS NOT NULL THEN 'sitemap'
-         |         ELSE 'discovered' END AS source,
-         |    sc.priority_milli
-         |  FROM dc FULL OUTER JOIN sc ON dc.canon = sc.canon),
+         |$redirectMergeCtes,
          |chd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
          |          ELSE final_url END AS dest FROM rc),
          |${canonChain("c", "chd", "url")},
@@ -2184,26 +2425,7 @@ object WebGraphQueries {
          |    CASE WHEN sm = 1 AND dv = 1 THEN 'both'
          |         WHEN sm = 1 THEN 'sitemap' ELSE 'discovered' END AS source,
          |    priority_milli, n_aliases FROM fo),
-         |fpath AS (
-         |  SELECT canon, url,
-         |    lower(regexp_extract(url, '(?i)^https?://([^/?#]+)', 1)) AS host,
-         |    CASE WHEN regexp_extract(url, '(?i)^https?://[^/?#]+([^#]*)', 1) = ''
-         |      THEN '/' ELSE regexp_extract(url, '(?i)^https?://[^/?#]+([^#]*)', 1)
-         |      END AS p
-         |  FROM fa),
-         |fhits AS (
-         |  SELECT f.canon, f.host, d.rule, d.path AS rpath,
-         |    d.pattern IS NOT NULL AND regexp_matches(f.p, d.pattern) AS m,
-         |    length(d.path) AS plen
-         |  FROM fpath f LEFT JOIN dirs d ON d.host = f.host),
-         |fwin AS (
-         |  SELECT *, row_number() OVER (PARTITION BY canon ORDER BY
-         |      CASE WHEN m THEN plen ELSE -1 END DESC,
-         |      CASE WHEN rule = 'allow' THEN 1 ELSE 0 END DESC,
-         |      rpath ASC NULLS LAST) AS rn
-         |  FROM fhits),
-         |fv AS (SELECT canon, host, (NOT m) OR rule = 'allow' AS allowed
-         |       FROM fwin WHERE rn = 1),
+         |${landingVerdictCtes("fa")},
          |$crawlDelayCtes,
          |alw AS (SELECT fa.*, fv.host FROM fa
          |        JOIN fv ON fv.canon = fa.canon WHERE fv.allowed),
@@ -2224,18 +2446,7 @@ object WebGraphQueries {
          |FROM fa JOIN fv ON fv.canon = fa.canon
          |WHERE NOT fv.allowed""".stripMargin) {
       (s, d) => {
-        val did = col("doc_id")
-        val ks = pmod(did, lit(19)).cast("string")
-        val fx = redirectFixture(s, d)
-        val discovered = fx.select(col("url"))
-        val seeds = Tables.documents(s, d)
-          .filter(pmod(did, lit(2)) === 0)
-          .select(concat(lit("http://H"), ks, lit(".EXAMPLE.ORG/r/d%6Fc"),
-              did.cast("string"), lit("?utm_source=sm")).as("loc"),
-            when(pmod(did, lit(3)) === 0,
-              (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
-        val merged = graft.operators.Frontier.mergeSeeds(
-          discovered, col("url"), seeds, col("loc"), col("pm"))
+        val merged = redirectSeedMerge(s, d)
         // the collapsed frame feeds the robots verdict AND the full
         // join's left side; unpinned, the verdict's column pruning
         // rewrites its copy of the redirect+merge funnel into a
@@ -2245,34 +2456,7 @@ object WebGraphQueries {
         val collapsed = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.resolveAliases(
               merged, redirectResolved(s, d)))
-        val robots = robotsFixture(s, d)
-        val verd = graft.operators.Robots.allowed(
-          collapsed.select("canon", "url"), "canon", col("url"),
-          robots, "host", col("body"), agent = "graftbot")
-          .select(col("canon"), col("host"), col("allowed"))
-        // the verdict-annotated frame feeds BOTH the scheduled branch
-        // and the blocked branch: pin the landing-key-grain frame so
-        // the redirect + merge + verdict funnel runs once (the q262
-        // discipline)
-        val full = graft.operators.CacheRegistry.persist(
-          collapsed.join(verd, Seq("canon")))
-        val delays = graft.operators.Robots.crawlDelay(
-          robots, "host", col("body"), agent = "graftbot")
-        val sched = graft.operators.Frontier.fetchSchedule(
-          full.filter(col("allowed")).drop("host", "allowed"),
-          "canon", col("url"), delays, t0Ms = 1704067200000L,
-          defaultDelayMs = 1000L, maxPerHost = 15,
-          priorityCol = Some("priority_milli"))
-        sched.withColumn("allowed", lit(true))
-          .unionByName(full.filter(!col("allowed"))
-            .select(col("canon"), col("url"), col("host"),
-              lit(null).cast("long").as("seq"),
-              lit(null).cast("long").as("fetch_at_ms"),
-              col("source"), col("priority_milli"), col("n_aliases"),
-              lit(false).as("allowed")))
-          .select(col("canon"), col("url"), col("host"), col("source"),
-            col("priority_milli"), col("n_aliases"), col("allowed"),
-            col("seq"), col("fetch_at_ms"))
+        landingSchedule(s, d, collapsed, Some("priority_milli"))
       }
     },
 
@@ -2297,13 +2481,7 @@ object WebGraphQueries {
     // latest-wins window, and the precedence fold; a byte lost in the
     // header parse or a wrong precedence breaks the hash.
     QueryDef.sql("q266_conditional_recrawl",
-      s"""WITH blk AS (
-         |  SELECT (doc_id % 19) AS k, doc_id,
-         |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
-         |    $sitemapLastmodSql AS lm,
-         |    $sitemapFreqSql AS cf
-         |  FROM documents),
-         |$sitemapDueCtes,
+      s"""WITH $sitemapDueCtes,
          |fob AS (
          |  SELECT 'http://h' || (doc_id % 19) || '.example.org/r/' ||
          |      doc_id AS u,
@@ -2350,11 +2528,7 @@ object WebGraphQueries {
         val did = col("doc_id")
         val ks = pmod(did, lit(19)).cast("string")
         val ds = did.cast("string")
-        val ents = graft.operators.Sitemaps.entries(
-          recrawlSitemapXmls(s, d), "host", col("xml"))
-        val hints = ents.select(col("loc"),
-          graft.operators.Sitemaps.lastmodMillis(col("lastmod")).as("slm"),
-          col("changefreq"))
+        val hints = recrawlHints(s, d)
         val docs = Tables.documents(s, d)
         val urlc = concat(lit("http://h"), ks, lit(".example.org/r/"), ds)
         // fresh observations (June): validators on the %4/%5 residues
@@ -2382,11 +2556,9 @@ object WebGraphQueries {
             lit("HTTP/1.1 304 Not Modified\r\n" +
               "Date: Mon, 01 Jul 2024 12:00:00 GMT\r\n\r\n").as("payload"))
         val msg = graft.sources.Warc.httpMessage(col("payload"))
-        def hv(n: String) = get(filter(msg.getField("headers"),
-          h => h.getField("name") === n), lit(0)).getField("value")
         val parsed = fresh.unionByName(stale).unionByName(reval).select(
-          col("furl"), col("fms"), hv("etag").as("etag"),
-          graft.sources.Warc.httpDateMillis(hv("last-modified")).as("flm"),
+          col("furl"), col("fms"), hv(msg, "etag").as("etag"),
+          graft.sources.Warc.httpDateMillis(hv(msg, "last-modified")).as("flm"),
           msg.getField("status_code").cast("int").as("hstatus"))
         graft.operators.Frontier.conditionalRecrawl(hints, "loc",
           col("slm"), col("changefreq"), parsed, col("furl"), col("fms"),
@@ -2405,13 +2577,7 @@ object WebGraphQueries {
     // the oracle replays synthesis, the freshness precedence CASE on
     // the header value, engine-derived epochs, and the fallback fold.
     QueryDef.sql("q268_http_freshness",
-      s"""WITH blk AS (
-         |  SELECT (doc_id % 19) AS k, doc_id,
-         |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
-         |    $sitemapLastmodSql AS lm,
-         |    $sitemapFreqSql AS cf
-         |  FROM documents),
-         |$sitemapDueCtes,
+      s"""WITH $sitemapDueCtes,
          |fob AS (
          |  SELECT 'http://h' || (doc_id % 19) || '.example.org/r/' ||
          |      doc_id AS u,
@@ -2431,17 +2597,7 @@ object WebGraphQueries {
          |crx AS (
          |  SELECT d.loc, f.etag, f.t, f.cc, f.expms, f.flm,
          |    lower(coalesce(f.cc, '')) AS lcc,
-         |    regexp_replace(regexp_extract(lower(coalesce(f.cc, '')),
-         |      '(^|[,\\s])max-age\\s*=\\s*"?([0-9]+)', 2),
-         |      '^0+([0-9])', '\\1') AS mat,
-         |    CASE WHEN regexp_matches(regexp_replace(trim(coalesce(f.ageh,
-         |        '')), '^0+([0-9])', '\\1'), '^[0-9]{1,15}$$')
-         |      THEN CAST(regexp_replace(trim(f.ageh), '^0+([0-9])', '\\1')
-         |        AS BIGINT) * 1000
-         |      WHEN regexp_matches(regexp_replace(trim(coalesce(f.ageh,
-         |        '')), '^0+([0-9])', '\\1'), '^[0-9]{16,}$$')
-         |      THEN 999999999999999 * 1000
-         |      ELSE 0 END AS agems,
+         |    $freshnessAgeSql,
          |    CASE WHEN f.flm IS NOT NULL THEN 'validator'
          |         WHEN d.lastmod_ms IS NOT NULL THEN 'sitemap' END AS hbasis,
          |    coalesce(f.flm, d.lastmod_ms) +
@@ -2449,37 +2605,15 @@ object WebGraphQueries {
          |    (f.etag IS NOT NULL OR f.flm IS NOT NULL) AS conditional
          |  FROM due d LEFT JOIN fob f ON f.u = d.loc)
          |SELECT loc,
-         |  CASE WHEN regexp_matches(lcc,
-         |        '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)')
-         |         THEN regexp_extract(lcc,
-         |           '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)', 2)
-         |       WHEN mat <> '' THEN 'max-age'
-         |       WHEN expms IS NOT NULL THEN 'expires'
-         |       WHEN hdue IS NOT NULL THEN hbasis
-         |       WHEN flm IS NOT NULL AND t >= flm THEN 'heuristic'
-         |       ELSE hbasis END AS basis,
-         |  CASE WHEN regexp_matches(lcc,
-         |        '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)') THEN t
-         |       WHEN regexp_matches(mat, '^[0-9]{1,15}$$')
-         |         THEN t + CAST(mat AS BIGINT) * 1000 - agems
-         |       WHEN regexp_matches(mat, '^[0-9]{16,}$$')
-         |         THEN t + 999999999999999 * 1000
-         |       WHEN expms IS NOT NULL THEN expms
-         |       WHEN hdue IS NOT NULL THEN hdue
-         |       WHEN flm IS NOT NULL AND t >= flm
-         |         THEN t + least((t - flm) // 10, 86400000) - agems
-         |       END AS due_at_ms,
+         |  $freshBasisSql AS basis,
+         |  $freshDueSql AS due_at_ms,
          |  etag, conditional
          |FROM crx""".stripMargin) {
       (s, d) => {
         val did = col("doc_id")
         val ks = pmod(did, lit(19)).cast("string")
         val ds = did.cast("string")
-        val ents = graft.operators.Sitemaps.entries(
-          recrawlSitemapXmls(s, d), "host", col("xml"))
-        val hints = ents.select(col("loc"),
-          graft.operators.Sitemaps.lastmodMillis(col("lastmod")).as("slm"),
-          col("changefreq"))
+        val hints = recrawlHints(s, d)
         val urlc = concat(lit("http://h"), ks, lit(".example.org/r/"), ds)
         // observation time 2024-07-01T12:00Z: 30 days after the June 1
         // Last-Modified, so the §4.2.2 heuristic tier (10% of age) is
@@ -2514,40 +2648,19 @@ object WebGraphQueries {
               .otherwise(lit("")),
             lit("\r\nok")).as("payload"))
         val msg = graft.sources.Warc.httpMessage(col("payload"))
-        def hv(n: String) = get(filter(msg.getField("headers"),
-          h => h.getField("name") === n), lit(0)).getField("value")
         // the parsed observation frame feeds BOTH the heuristic tier
         // (conditionalRecrawl) and the freshness overlay: pin it so
         // the header parse runs once (the q262/q264/q265 discipline)
         val parsed = graft.operators.CacheRegistry.persist(
-          raw.select(col("furl"), col("fms"), hv("etag").as("etag"),
-            graft.sources.Warc.httpDateMillis(hv("last-modified"))
+          raw.select(col("furl"), col("fms"), hv(msg, "etag").as("etag"),
+            graft.sources.Warc.httpDateMillis(hv(msg, "last-modified"))
               .as("flm"),
-            hv("cache-control").as("cc"),
-            graft.sources.Warc.httpDateMillis(hv("expires")).as("expms"),
-            hv("age").as("ageh")))
-        val cr = graft.operators.Frontier.conditionalRecrawl(hints, "loc",
-          col("slm"), col("changefreq"), parsed, col("furl"), col("fms"),
-          col("etag"), col("flm"))
-        val fr = parsed.select(col("furl"),
-          graft.sources.Warc.freshnessDue(col("fms"), col("cc"),
-            col("expms"), col("flm"), col("ageh")).as("fr"))
-        // precedence: explicit freshness (no-cache/no-store/max-age/
-        // expires) > typed validator/sitemap due > RFC 9111 §4.2.2
-        // heuristic (lowest — it fills only where no typed due exists)
-        val explicitFr = col("fr").isNotNull &&
-          col("fr").getField("basis") =!= "heuristic"
-        cr.join(fr, cr("loc") === fr("furl"), "left_outer")
-          .select(col("loc"),
-            when(explicitFr, col("fr").getField("basis"))
-              .when(col("due_at_ms").isNotNull, col("basis"))
-              .when(col("fr").isNotNull, col("fr").getField("basis"))
-              .otherwise(col("basis")).as("basis"),
-            when(explicitFr, col("fr").getField("due_ms"))
-              .when(col("due_at_ms").isNotNull, col("due_at_ms"))
-              .when(col("fr").isNotNull, col("fr").getField("due_ms"))
-              .as("due_at_ms"),
-            col("etag"), col("conditional"))
+            hv(msg, "cache-control").as("cc"),
+            graft.sources.Warc.httpDateMillis(hv(msg, "expires")).as("expms"),
+            hv(msg, "age").as("ageh")))
+        freshnessJoin(hints, parsed)
+          .select(col("loc"), fusedBasis.as("basis"),
+            fusedDue.as("due_at_ms"), col("etag"), col("conditional"))
       }
     },
 
@@ -2571,12 +2684,6 @@ object WebGraphQueries {
          |${hostRankCtes(4)},
          |$budgetAllocCtes,
          |$crawlDelayCtes,
-         |blk AS (
-         |  SELECT (doc_id % 19) AS k, doc_id,
-         |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
-         |    $sitemapLastmodSql AS lm,
-         |    $sitemapFreqSql AS cf
-         |  FROM documents),
          |$sitemapDueCtes,
          |pr AS (
          |  SELECT loc, host, due_at_ms,
@@ -2676,16 +2783,7 @@ object WebGraphQueries {
          |    max(untl) AS backoff_until_ms
          |  FROM (
          |    SELECT k,
-         |      CASE WHEN regexp_matches(tra, '^[0-9]{1,15}$$')
-         |        THEN 1706745600000 + CAST(tra AS BIGINT) * 1000
-         |        WHEN regexp_matches(tra, '^[0-9]{16,}$$')
-         |        THEN 1706745600000 + 999999999999999 * 1000
-         |        ELSE epoch_ms(try_strptime(
-         |          CASE WHEN regexp_matches(tra,
-         |            '^[A-Za-z]{3}, [0-9]{2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2} GMT$$')
-         |            THEN substr(tra, 6, 20) END,
-         |          '%d %b %Y %H:%M:%S'))
-         |        END AS untl
+         |      ${retryUntilSql("1706745600000")} AS untl
          |    FROM (SELECT k, regexp_replace(trim(ra), '^0+([0-9])', '\\1') AS tra
          |          FROM resp WHERE status IN (429, 503) AND ra IS NOT NULL) x0) x
          |  WHERE untl IS NOT NULL GROUP BY k),
@@ -2772,12 +2870,6 @@ object WebGraphQueries {
     QueryDef.sql("q270_recrawl_wave",
       s"""WITH $robotsDirsCtes,
          |$crawlDelayCtes,
-         |blk AS (
-         |  SELECT (doc_id % 19) AS k, doc_id,
-         |    'http://h' || (doc_id % 19) || '.example.org/r/' || doc_id AS loc,
-         |    $sitemapLastmodSql AS lm,
-         |    $sitemapFreqSql AS cf
-         |  FROM documents),
          |$sitemapDueCtes,
          |fob AS (
          |  SELECT 'http://h' || (doc_id % 19) || '.example.org/r/' ||
@@ -2804,17 +2896,7 @@ object WebGraphQueries {
          |  FROM documents),
          |fx AS (
          |  SELECT d.loc, d.host, f.t, lower(coalesce(f.cc, '')) AS lcc,
-         |    regexp_replace(regexp_extract(lower(coalesce(f.cc, '')),
-         |      '(^|[,\\s])max-age\\s*=\\s*"?([0-9]+)', 2),
-         |      '^0+([0-9])', '\\1') AS mat,
-         |    CASE WHEN regexp_matches(regexp_replace(trim(coalesce(f.ageh,
-         |        '')), '^0+([0-9])', '\\1'), '^[0-9]{1,15}$$')
-         |      THEN CAST(regexp_replace(trim(f.ageh), '^0+([0-9])', '\\1')
-         |        AS BIGINT) * 1000
-         |      WHEN regexp_matches(regexp_replace(trim(coalesce(f.ageh,
-         |        '')), '^0+([0-9])', '\\1'), '^[0-9]{16,}$$')
-         |      THEN 999999999999999 * 1000
-         |      ELSE 0 END AS agems,
+         |    $freshnessAgeSql,
          |    f.expms, f.etag, f.flm,
          |    CASE WHEN f.flm IS NOT NULL THEN 'validator'
          |         WHEN d.lastmod_ms IS NOT NULL THEN 'sitemap' END AS hbasis,
@@ -2823,42 +2905,15 @@ object WebGraphQueries {
          |  FROM due d LEFT JOIN fob f ON f.u = d.loc),
          |fz AS (
          |  SELECT loc, host,
-         |    CASE WHEN regexp_matches(lcc,
-         |          '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)')
-         |           THEN regexp_extract(lcc,
-         |             '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)', 2)
-         |         WHEN mat <> '' THEN 'max-age'
-         |         WHEN expms IS NOT NULL THEN 'expires'
-         |         WHEN hdue IS NOT NULL THEN hbasis
-         |         WHEN flm IS NOT NULL AND t >= flm THEN 'heuristic'
-         |         ELSE hbasis END AS basis,
-         |    CASE WHEN regexp_matches(lcc,
-         |          '(^|[,\\s])(no-cache|no-store)\\s*(,|$$)') THEN t
-         |         WHEN regexp_matches(mat, '^[0-9]{1,15}$$')
-         |           THEN t + CAST(mat AS BIGINT) * 1000 - agems
-         |         WHEN regexp_matches(mat, '^[0-9]{16,}$$')
-         |           THEN t + 999999999999999 * 1000
-         |         WHEN expms IS NOT NULL THEN expms
-         |         WHEN hdue IS NOT NULL THEN hdue
-         |         WHEN flm IS NOT NULL AND t >= flm
-         |           THEN t + least((t - flm) // 10, 86400000) - agems
-         |         END AS due_ms
+         |    $freshBasisSql AS basis,
+         |    $freshDueSql AS due_ms
          |  FROM fx),
          |bo AS (
          |  SELECT 'h' || k || '.example.org' AS host,
          |    max(untl) AS backoff_until_ms
          |  FROM (
          |    SELECT k,
-         |      CASE WHEN regexp_matches(tra, '^[0-9]{1,15}$$')
-         |        THEN t + CAST(tra AS BIGINT) * 1000
-         |        WHEN regexp_matches(tra, '^[0-9]{16,}$$')
-         |        THEN t + 999999999999999 * 1000
-         |        ELSE epoch_ms(try_strptime(
-         |          CASE WHEN regexp_matches(tra,
-         |            '^[A-Za-z]{3}, [0-9]{2} [A-Za-z]{3} [0-9]{4} [0-9]{2}:[0-9]{2}:[0-9]{2} GMT$$')
-         |            THEN substr(tra, 6, 20) END,
-         |          '%d %b %Y %H:%M:%S'))
-         |        END AS untl
+         |      ${retryUntilSql("t")} AS untl
          |    FROM (SELECT k, t, regexp_replace(trim(ra), '^0+([0-9])', '\\1') AS tra
          |          FROM fob WHERE status IN (429, 503) AND ra IS NOT NULL) x0) x
          |  WHERE untl IS NOT NULL GROUP BY k),
@@ -2884,11 +2939,7 @@ object WebGraphQueries {
         val did = col("doc_id")
         val ks = pmod(did, lit(19)).cast("string")
         val ds = did.cast("string")
-        val ents = graft.operators.Sitemaps.entries(
-          recrawlSitemapXmls(s, d), "host", col("xml"))
-        val hints = ents.select(col("loc"),
-          graft.operators.Sitemaps.lastmodMillis(col("lastmod")).as("slm"),
-          col("changefreq"))
+        val hints = recrawlHints(s, d)
         val urlc = concat(lit("http://h"), ks, lit(".example.org/r/"), ds)
         val raw = Tables.documents(s, d).select(urlc.as("furl"),
           lit(1717243200000L).as("fms"),
@@ -2933,39 +2984,20 @@ object WebGraphQueries {
               .otherwise(lit("")),
             lit("\r\nok")).as("payload"))
         val msg = graft.sources.Warc.httpMessage(col("payload"))
-        def hv(n: String) = get(filter(msg.getField("headers"),
-          h => h.getField("name") === n), lit(0)).getField("value")
         // one real response carries every signal; the parse feeds
         // THREE consumers (heuristic due, freshness overlay, backoff)
         // — pinned once
         val parsed = graft.operators.CacheRegistry.persist(
           raw.select(col("furl"), col("fms"),
             msg.getField("status_code").as("st"),
-            hv("retry-after").as("ra"), hv("etag").as("etag"),
-            graft.sources.Warc.httpDateMillis(hv("last-modified"))
+            hv(msg, "retry-after").as("ra"), hv(msg, "etag").as("etag"),
+            graft.sources.Warc.httpDateMillis(hv(msg, "last-modified"))
               .as("flm"),
-            hv("cache-control").as("cc"),
-            graft.sources.Warc.httpDateMillis(hv("expires")).as("expms"),
-            hv("age").as("ageh")))
-        val cr = graft.operators.Frontier.conditionalRecrawl(hints, "loc",
-          col("slm"), col("changefreq"), parsed, col("furl"), col("fms"),
-          col("etag"), col("flm"))
-        val fr = parsed.select(col("furl"),
-          graft.sources.Warc.freshnessDue(col("fms"), col("cc"),
-            col("expms"), col("flm"), col("ageh")).as("fr"))
-        // q268's precedence: explicit > typed due > §4.2.2 heuristic
-        val explicitFr = col("fr").isNotNull &&
-          col("fr").getField("basis") =!= "heuristic"
-        val fused = cr.join(fr, cr("loc") === fr("furl"), "left_outer")
-          .select(col("loc"),
-            when(explicitFr, col("fr").getField("basis"))
-              .when(col("due_at_ms").isNotNull, col("basis"))
-              .when(col("fr").isNotNull, col("fr").getField("basis"))
-              .otherwise(col("basis")).as("basis"),
-            when(explicitFr, col("fr").getField("due_ms"))
-              .when(col("due_at_ms").isNotNull, col("due_at_ms"))
-              .when(col("fr").isNotNull, col("fr").getField("due_ms"))
-              .as("due_ms"))
+            hv(msg, "cache-control").as("cc"),
+            graft.sources.Warc.httpDateMillis(hv(msg, "expires")).as("expms"),
+            hv(msg, "age").as("ageh")))
+        val fused = freshnessJoin(hints, parsed)
+          .select(col("loc"), fusedBasis.as("basis"), fusedDue.as("due_ms"))
         val bo = graft.operators.Frontier.hostBackoff(parsed, col("furl"),
           col("st"), col("ra"), col("fms"))
         val urls = fused
@@ -3071,26 +3103,7 @@ object WebGraphQueries {
          |              WHEN sm = 1 THEN 'sitemap'
          |              ELSE 'discovered' END AS source,
          |         priority_milli, n_aliases FROM fo0),
-         |fpath AS (
-         |  SELECT canon, url,
-         |    lower(regexp_extract(url, '(?i)^https?://([^/?#]+)', 1)) AS host,
-         |    CASE WHEN regexp_extract(url, '(?i)^https?://[^/?#]+([^#]*)', 1) = ''
-         |      THEN '/' ELSE regexp_extract(url, '(?i)^https?://[^/?#]+([^#]*)', 1)
-         |      END AS p
-         |  FROM fo),
-         |fhits AS (
-         |  SELECT f.canon, f.host, d.rule, d.path AS rpath,
-         |    d.pattern IS NOT NULL AND regexp_matches(f.p, d.pattern) AS m,
-         |    length(d.path) AS plen
-         |  FROM fpath f LEFT JOIN dirs d ON d.host = f.host),
-         |fwin AS (
-         |  SELECT *, row_number() OVER (PARTITION BY canon ORDER BY
-         |      CASE WHEN m THEN plen ELSE -1 END DESC,
-         |      CASE WHEN rule = 'allow' THEN 1 ELSE 0 END DESC,
-         |      rpath ASC NULLS LAST) AS rn
-         |  FROM fhits),
-         |fv AS (SELECT canon, host, (NOT m) OR rule = 'allow' AS allowed
-         |       FROM fwin WHERE rn = 1),
+         |${landingVerdictCtes("fo")},
          |$crawlDelayCtes,
          |alw AS (SELECT fo.canon, fo.url, fo.source, fo.priority_milli,
          |          fo.n_aliases, fv.host FROM fo
@@ -3149,32 +3162,7 @@ object WebGraphQueries {
         val collapsed = graft.operators.CacheRegistry.persist(
           graft.operators.Frontier.resolveAliases(
               merged, redirectResolved(s, d), hints, col("curl"), col("canu")))
-        val robots = robotsFixture(s, d)
-        val verd = graft.operators.Robots.allowed(
-          collapsed.select("canon", "url"), "canon", col("url"),
-          robots, "host", col("body"), agent = "graftbot")
-          .select(col("canon"), col("host"), col("allowed"))
-        // verdict-annotated frame feeds the scheduled AND blocked
-        // branches: pin it so the chain + canonical + verdict funnel
-        // runs once (the q262/q265 discipline)
-        val full = graft.operators.CacheRegistry.persist(
-          collapsed.join(verd, Seq("canon")))
-        val delays = graft.operators.Robots.crawlDelay(
-          robots, "host", col("body"), agent = "graftbot")
-        val sched = graft.operators.Frontier.fetchSchedule(
-          full.filter(col("allowed")).drop("host", "allowed"),
-          "canon", col("url"), delays, t0Ms = 1704067200000L,
-          defaultDelayMs = 1000L, maxPerHost = 15)
-        sched.withColumn("allowed", lit(true))
-          .unionByName(full.filter(!col("allowed"))
-            .select(col("canon"), col("url"), col("host"),
-              lit(null).cast("long").as("seq"),
-              lit(null).cast("long").as("fetch_at_ms"),
-              col("source"), col("priority_milli"), col("n_aliases"),
-              lit(false).as("allowed")))
-          .select(col("canon"), col("url"), col("host"), col("source"),
-            col("priority_milli"), col("n_aliases"), col("allowed"),
-            col("seq"), col("fetch_at_ms"))
+        landingSchedule(s, d, collapsed, None)
       }
     },
 
@@ -3198,57 +3186,7 @@ object WebGraphQueries {
     // both canon chains, the merge, the permanent collapse, the
     // routing map, and the fetch-grain census.
     QueryDef.sql("q272_permanent_frontier",
-      s"""WITH $redirectCtes,
-         |disc AS (SELECT url FROM resp),
-         |${canonChain("d", "disc", "url")},
-         |dc AS (SELECT canon, min(url) AS d_url FROM dcn GROUP BY canon),
-         |seeds AS (
-         |  SELECT 'http://H' || (doc_id % 19) || '.EXAMPLE.ORG/r/d%6Fc' ||
-         |      doc_id || '?utm_source=sm' AS loc,
-         |    CASE WHEN doc_id % 3 = 0
-         |      THEN CAST((doc_id % 10) * 100 AS BIGINT) END AS pm
-         |  FROM documents WHERE doc_id % 2 = 0),
-         |${canonChain("s", "seeds", "loc")},
-         |sc AS (SELECT canon, min(loc) AS s_url, max(pm) AS priority_milli
-         |       FROM scn GROUP BY canon),
-         |mg AS (
-         |  SELECT coalesce(dc.canon, sc.canon) AS canon,
-         |    coalesce(sc.s_url, dc.d_url) AS url,
-         |    CASE WHEN sc.canon IS NOT NULL AND dc.canon IS NOT NULL THEN 'both'
-         |         WHEN sc.canon IS NOT NULL THEN 'sitemap'
-         |         ELSE 'discovered' END AS source,
-         |    sc.priority_milli
-         |  FROM dc FULL OUTER JOIN sc ON dc.canon = sc.canon),
-         |pchd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
-         |           ELSE perm_url END AS dest FROM rc),
-         |${canonChain("p", "pchd", "url")},
-         |pch AS (SELECT canon, min(dest) AS dest FROM pcn GROUP BY canon),
-         |tg AS (SELECT coalesce(pch.dest, mg.url) AS target, mg.source,
-         |         mg.priority_milli
-         |       FROM mg LEFT JOIN pch ON pch.canon = mg.canon),
-         |${canonChain("t", "tg", "target")},
-         |fo0 AS (SELECT canon, min(target) AS url,
-         |         max(priority_milli) AS priority_milli,
-         |         CAST(count(*) AS BIGINT) AS n_aliases,
-         |         max(CASE WHEN source IN ('sitemap', 'both')
-         |             THEN 1 ELSE 0 END) AS sm,
-         |         max(CASE WHEN source IN ('discovered', 'both')
-         |             THEN 1 ELSE 0 END) AS dv
-         |       FROM tcn GROUP BY canon),
-         |fa AS (SELECT canon, url,
-         |         CASE WHEN sm = 1 AND dv = 1 THEN 'both'
-         |              WHEN sm = 1 THEN 'sitemap'
-         |              ELSE 'discovered' END AS source,
-         |         priority_milli, n_aliases FROM fo0),
-         |rchd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
-         |           ELSE final_url END AS dest FROM rc),
-         |${canonChain("r", "rchd", "url")},
-         |rch AS (SELECT canon AS rk, min(dest) AS dest FROM rcn GROUP BY canon),
-         |rt AS (SELECT fa.canon AS id_canon, fa.url, fa.source,
-         |         fa.priority_milli, fa.n_aliases,
-         |         coalesce(rch.dest, fa.url) AS fetch_url
-         |       FROM fa LEFT JOIN rch ON rch.rk = fa.canon),
-         |${canonChain("g", "rt", "fetch_url")},
+      s"""WITH $permanentRoutingCtes,
          |fcen AS (SELECT canon AS fetch_canon,
          |           CAST(count(*) AS BIGINT) AS n_identities,
          |           min(id_canon) AS lead FROM gcn GROUP BY canon)
@@ -3258,18 +3196,7 @@ object WebGraphQueries {
          |FROM gcn g JOIN fcen f ON f.fetch_canon = g.canon""".stripMargin) {
       (s, d) => {
         import graft.functions.TextFunctions.canonicalizeUrl
-        val did = col("doc_id")
-        val ks = pmod(did, lit(19)).cast("string")
-        val fx = redirectFixture(s, d)
-        val discovered = fx.select(col("url"))
-        val seeds = Tables.documents(s, d)
-          .filter(pmod(did, lit(2)) === 0)
-          .select(concat(lit("http://H"), ks, lit(".EXAMPLE.ORG/r/d%6Fc"),
-              did.cast("string"), lit("?utm_source=sm")).as("loc"),
-            when(pmod(did, lit(3)) === 0,
-              (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
-        val merged = graft.operators.Frontier.mergeSeeds(
-          discovered, col("url"), seeds, col("loc"), col("pm"))
+        val merged = redirectSeedMerge(s, d)
         // the identity-grain frame feeds BOTH the fetch-grain census
         // and the final join-back: pin it so the chain + merge +
         // permanent-collapse funnel runs once (the q264 discipline)
@@ -3304,57 +3231,7 @@ object WebGraphQueries {
     // + the priority-ordered capped windows.
     QueryDef.sql("q273_permanent_wave",
       s"""WITH $robotsDirsCtes,
-         |$redirectCtes,
-         |disc AS (SELECT url FROM resp),
-         |${canonChain("d", "disc", "url")},
-         |dc AS (SELECT canon, min(url) AS d_url FROM dcn GROUP BY canon),
-         |seeds AS (
-         |  SELECT 'http://H' || (doc_id % 19) || '.EXAMPLE.ORG/r/d%6Fc' ||
-         |      doc_id || '?utm_source=sm' AS loc,
-         |    CASE WHEN doc_id % 3 = 0
-         |      THEN CAST((doc_id % 10) * 100 AS BIGINT) END AS pm
-         |  FROM documents WHERE doc_id % 2 = 0),
-         |${canonChain("s", "seeds", "loc")},
-         |sc AS (SELECT canon, min(loc) AS s_url, max(pm) AS priority_milli
-         |       FROM scn GROUP BY canon),
-         |mg AS (
-         |  SELECT coalesce(dc.canon, sc.canon) AS canon,
-         |    coalesce(sc.s_url, dc.d_url) AS url,
-         |    CASE WHEN sc.canon IS NOT NULL AND dc.canon IS NOT NULL THEN 'both'
-         |         WHEN sc.canon IS NOT NULL THEN 'sitemap'
-         |         ELSE 'discovered' END AS source,
-         |    sc.priority_milli
-         |  FROM dc FULL OUTER JOIN sc ON dc.canon = sc.canon),
-         |pchd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
-         |           ELSE perm_url END AS dest FROM rc),
-         |${canonChain("p", "pchd", "url")},
-         |pch AS (SELECT canon, min(dest) AS dest FROM pcn GROUP BY canon),
-         |tg AS (SELECT coalesce(pch.dest, mg.url) AS target, mg.source,
-         |         mg.priority_milli
-         |       FROM mg LEFT JOIN pch ON pch.canon = mg.canon),
-         |${canonChain("t", "tg", "target")},
-         |fo0 AS (SELECT canon, min(target) AS url,
-         |         max(priority_milli) AS priority_milli,
-         |         CAST(count(*) AS BIGINT) AS n_aliases,
-         |         max(CASE WHEN source IN ('sitemap', 'both')
-         |             THEN 1 ELSE 0 END) AS sm,
-         |         max(CASE WHEN source IN ('discovered', 'both')
-         |             THEN 1 ELSE 0 END) AS dv
-         |       FROM tcn GROUP BY canon),
-         |fa AS (SELECT canon, url,
-         |         CASE WHEN sm = 1 AND dv = 1 THEN 'both'
-         |              WHEN sm = 1 THEN 'sitemap'
-         |              ELSE 'discovered' END AS source,
-         |         priority_milli, n_aliases FROM fo0),
-         |rchd AS (SELECT url, CASE WHEN outcome = 'exceeded' THEN url
-         |           ELSE final_url END AS dest FROM rc),
-         |${canonChain("r", "rchd", "url")},
-         |rch AS (SELECT canon AS rk, min(dest) AS dest FROM rcn GROUP BY canon),
-         |rt AS (SELECT fa.canon AS id_canon, fa.url, fa.source,
-         |         fa.priority_milli, fa.n_aliases,
-         |         coalesce(rch.dest, fa.url) AS fetch_url
-         |       FROM fa LEFT JOIN rch ON rch.rk = fa.canon),
-         |${canonChain("g", "rt", "fetch_url")},
+         |$permanentRoutingCtes,
          |wv AS (SELECT canon AS fetch_canon, min(id_canon) AS lead,
          |         min(fetch_url) AS wave_url,
          |         max(priority_milli) AS wave_priority
@@ -3402,18 +3279,7 @@ object WebGraphQueries {
          |LEFT JOIN sch ON sch.fetch_canon = g.canon""".stripMargin) {
       (s, d) => {
         import graft.functions.TextFunctions.canonicalizeUrl
-        val did = col("doc_id")
-        val ks = pmod(did, lit(19)).cast("string")
-        val fx = redirectFixture(s, d)
-        val discovered = fx.select(col("url"))
-        val seeds = Tables.documents(s, d)
-          .filter(pmod(did, lit(2)) === 0)
-          .select(concat(lit("http://H"), ks, lit(".EXAMPLE.ORG/r/d%6Fc"),
-              did.cast("string"), lit("?utm_source=sm")).as("loc"),
-            when(pmod(did, lit(3)) === 0,
-              (pmod(did, lit(10)) * 100).cast("long")).as("pm"))
-        val merged = graft.operators.Frontier.mergeSeeds(
-          discovered, col("url"), seeds, col("loc"), col("pm"))
+        val merged = redirectSeedMerge(s, d)
         // identity rows feed the wave fold AND the final join-back;
         // the wave frame feeds the verdict, the schedule, and the
         // join-back — pin both (the q264/q265 discipline)

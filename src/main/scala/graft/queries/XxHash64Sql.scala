@@ -25,6 +25,16 @@ private[queries] object XxHash64Sql {
   private val P4 = "9650029242287828579"
   private val P5 = "2870177450012600261"
 
+  /** Unsigned u64 string of Spark's xxhash64(i) — the chained seed the
+    * i-th bloom/count-min hash starts from (see q120).
+    */
+  def seedU64(i: Int): String = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    import org.apache.spark.sql.types.LongType
+    val sgn = XxHash64Function.hash(i.toLong, LongType, 42L)
+    (if (sgn < 0) BigInt(sgn) + (BigInt(1) << 64) else BigInt(sgn)).toString
+  }
+
   private def m64(x: String) = s"(($x) % $M64)"
   private def mul(a: String, b: String) =
     m64(s"((($a) % 4294967296) * ($b) % $M64 + ((($a) // 4294967296) * ($b) % 4294967296) * 4294967296)")

@@ -132,6 +132,12 @@ class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException](parseArgs(Array("--bogus", "x")))
     intercept[IllegalArgumentException](parseArgs(Array("-x", "out.xml"))) // no dump file
     intercept[IllegalArgumentException](parseArgs(Array("-f", "d.dmp"))) // no outputs
+    // an option missing its value names the option, like the reference
+    val missing = intercept[IllegalArgumentException](parseArgs(Array("-f")))
+    assert(missing.getMessage.contains("'-f'"))
+    intercept[IllegalArgumentException](parseArgs(Array("-f", "d.dmp", "--xml")))
+    intercept[IllegalArgumentException](parseArgs(Array(
+      "-f", "d.dmp", "-x", "o.xml", "--max-concurrency", "0")))
     // --help anywhere wins, even with otherwise-invalid args (reference
     // prints usage and exits 0 before any validation)
     assert(parseArgs(Array("--help")).help)
