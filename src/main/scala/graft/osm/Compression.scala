@@ -1,60 +1,56 @@
 package graft.osm
 
-import java.io.OutputStream
-import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
+import java.io.{IOException, OutputStream}
+import scala.util.{Try, Using}
 
-/** Pluggable XML-output compression (reference `--compress-command`,
-  * `src/planet-dump.cpp:34-35` + `src/xml_writer.cpp:58-79`): by
-  * default the built-in bzip2 codec; optionally any external program
-  * that reads stdin and writes stdout (`pbzip2 -c`, `gzip -c`,
-  * `zstd -c`, ...).
+/** XML-output compression through an external program, as the
+  * reference does (`--compress-command`, `src/planet-dump.cpp:34-35` +
+  * `src/xml_writer.cpp:58-79`): [[DefaultCommand]], or any program on
+  * `PATH` that reads stdin and writes stdout (`pbzip2 -c`, `gzip -c`, ...).
   *
-  * The sink compresses each sorted range partition as its own complete
-  * stream on the executors and byte-concatenates, so the command must
-  * emit a multistream-concatenation-safe format — bzip2, gzip, xz and
-  * zstd all decode a concatenation of streams as the concatenation of
-  * the payloads (the same property the built-in path relies on).
+  * [[XmlSink]] compresses each range partition as its own stream and
+  * concatenates the streams, so the command's format must decode a
+  * concatenation of streams as the concatenation of the payloads, as
+  * bzip2, gzip, xz and zstd do.
   */
 object Compression {
 
-  /** Run `write` against a compressing stream over `os`: built-in bzip2
-    * when `command` is None, otherwise the external program via
-    * `/bin/sh -c` (matching the reference's popen of a shell command
-    * line). The external process's stdout is pumped to `os` on a
-    * separate thread; a non-zero exit is an error, not silent
-    * truncation.
-    */
-  def compressTo(os: OutputStream, command: Option[String])(write: OutputStream => Unit): Unit =
-    command match {
-      case None =>
-        val bz = new BZip2CompressorOutputStream(new NonClosingStream(os))
-        write(bz)
-        bz.close()
-      case Some(cmd) =>
-        val proc = new ProcessBuilder("/bin/sh", "-c", cmd)
-          .redirectError(ProcessBuilder.Redirect.INHERIT).start()
-        @volatile var pumpError: Throwable = null
-        val pump = new Thread(() => {
-          try {
-            val in = proc.getInputStream
-            val buf = new Array[Byte](1 << 16)
-            var n = in.read(buf)
-            while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = in.read(buf) }
-          } catch { case t: Throwable => pumpError = t }
-        }, "compress-stdout-pump")
-        pump.start()
-        try {
-          val stdin = proc.getOutputStream
-          try write(stdin) finally stdin.close()
-          pump.join()
-          val rc = proc.waitFor()
-          require(rc == 0, s"compress command '$cmd' exited with $rc")
-          if (pumpError != null) throw pumpError
-        } finally proc.destroyForcibly()
-    }
+  /** The reference's compressor. */
+  val DefaultCommand = "bzip2 -c"
 
-  private final class NonClosingStream(inner: OutputStream) extends java.io.FilterOutputStream(inner) {
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = inner.write(b, off, len)
-    override def close(): Unit = inner.flush()
+  /** Run `write` against the stdin of `command`, run via `/bin/sh -c` as
+    * the reference popens it, while a thread pumps its stdout to `os`. A
+    * non-zero exit is an error naming the command, also when the command
+    * ended before reading all of its input. A failure to write `os` ends
+    * the command, so that `write` cannot block on a full pipe.
+    */
+  def compressTo(os: OutputStream, command: String)(write: OutputStream => Unit): Unit = {
+    val proc = new ProcessBuilder("/bin/sh", "-c", command)
+      .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+    @volatile var pumpError: Throwable = null
+    val pump = new Thread(() => {
+      try {
+        val in = proc.getInputStream
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = in.read(buf) }
+      } catch {
+        case t: Throwable =>
+          pumpError = t
+          // `/bin/sh -c` need not exec the command: end the shell's children too
+          proc.descendants().forEach(_.destroyForcibly())
+          proc.destroyForcibly()
+      }
+    }, "compress-stdout-pump")
+    pump.start()
+    try {
+      val written = Try(Using.resource(proc.getOutputStream)(write))
+      pump.join()
+      if (pumpError != null) throw pumpError
+      val rc = proc.waitFor()
+      if (rc != 0)
+        throw new IOException(s"compress command '$command' exited with $rc", written.failed.toOption.orNull)
+      written.get
+    } finally proc.destroyForcibly()
   }
 }

@@ -81,15 +81,18 @@ object PlanetDump {
     * also on failure. A sequential PBF writer streams its sorted
     * frames to the driver with `toLocalIterator`, so at most
     * `maxConcurrency` such streams hold a partition on the driver at
-    * once.
+    * once. XML outputs pipe through `compressCommand`, run first on an
+    * empty payload so that a command that cannot run fails before Load.
     */
   def run(spark: SparkSession, dumpFile: String, workDir: String,
           outputs: Seq[Output], generator: String,
           meta: Meta = Meta(),
-          compressCommand: Option[String] = None,
+          compressCommand: String = Compression.DefaultCommand,
           denseNodes: Boolean = true,
           resume: Boolean = true,
           maxConcurrency: Option[Int] = None): Unit = {
+    if (outputs.exists(o => Set[Kind](XmlPlanet, XmlHistory, XmlChangesets, XmlDiscussions)(o.kind)))
+      Compression.compressTo(java.io.OutputStream.nullOutputStream(), compressCommand)(_ => ())
     val maxTime = Load.run(spark, dumpFile, workDir, resume, maxConcurrency)
     val db = OsmDb(spark, s"$workDir/tables")
 
@@ -153,15 +156,15 @@ object PlanetDump {
     */
   final case class Cli(dumpFile: String, workDir: String, generator: String,
                        outputs: Seq[Output], meta: Meta,
-                       compressCommand: Option[String], denseNodes: Boolean,
+                       compressCommand: String, denseNodes: Boolean,
                        resume: Boolean = false, maxConcurrency: Option[Int] = None,
                        help: Boolean = false)
 
   /** Usage text (the option surface; mirrors the reference's list). */
   val helpText: String =
-    """planet-dump-ng-spark: allowed options
+    s"""planet-dump-ng-spark: allowed options
       |  -h [ --help ]                 display help text and exit
-      |  -c [ --compress-command ] arg program used to compress XML output
+      |  -c [ --compress-command ] arg program used to compress XML output (default ${Compression.DefaultCommand})
       |  -x [ --xml ] arg              planet XML output file (without history)
       |  -X [ --history-xml ] arg      history XML output file
       |  -p [ --pbf ] arg              planet PBF output file (without history)
@@ -210,7 +213,7 @@ object PlanetDump {
     var dumpFile: Option[String] = None
     var workDir = "planet-dump-work"
     var generator = "graft-spark"
-    var compressCommand: Option[String] = None
+    var compressCommand = Compression.DefaultCommand
     var denseNodes = true
     var resume = false
     var maxConcurrency: Option[Int] = None
@@ -219,7 +222,7 @@ object PlanetDump {
     val outputs = scala.collection.mutable.ArrayBuffer[Output]()
     // --help anywhere wins: usage + exit 0, nothing else validated
     if (args.contains("--help") || args.contains("-h"))
-      return Cli("", "", "", Nil, Meta(), None, denseNodes = true, help = true)
+      return Cli("", "", "", Nil, Meta(), Compression.DefaultCommand, denseNodes = true, help = true)
     var i = 0
     // the value of the option at i, named in the error when it is missing
     def value(): String = {
@@ -233,7 +236,7 @@ object PlanetDump {
         case "--dump-file" | "-f" => dumpFile = Some(value()); i += 2
         case "--work-dir" => workDir = value(); i += 2
         case "--generator" => generator = value(); i += 2
-        case "--compress-command" | "-c" => compressCommand = Some(value()); i += 2
+        case "--compress-command" | "-c" => compressCommand = value(); i += 2
         case "--dense-nodes" | "-d" => denseNodes = parseBool(value()); i += 2
         case "--resume" => resume = true; i += 1
         case "--max-concurrency" =>

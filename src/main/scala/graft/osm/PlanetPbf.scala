@@ -11,12 +11,12 @@ import graft.osm.pbf.PbfWriter
   *
   * The PBF block/group layout is inherently sequential state (string
   * table per block, running deltas, byte-size flush heuristics), so —
-  * exactly like the reference's single writer thread — final encoding is
-  * one stream; Spark does everything up to it distributed (join,
-  * attribution, sort) and `toLocalIterator` streams ranges in order
-  * without materializing the dataset. For cluster-scale parallel
-  * encoding, partition-per-block variants are possible (blocks are
-  * independent after the header) at the cost of byte-identical layout.
+  * like the reference's single writer thread — [[write]] encodes one
+  * stream, after Spark does the join, attribution and sort distributed
+  * and `toLocalIterator` streams the ranges in order. [[writeParallel]]
+  * encodes each partition's blocks on the executors (blocks are
+  * independent after the header): faster, but its block layout is not
+  * the reference's.
   */
 object PlanetPbf {
 

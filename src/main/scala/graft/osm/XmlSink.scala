@@ -23,14 +23,14 @@ import org.apache.spark.sql.Dataset
   * order, then the second's — so part order is section order, then
   * range order within a section.
   *
-  * `compressCommand` mirrors the reference's `--compress-command`: an
-  * external stdin→stdout compressor run per partition (see
-  * [[Compression]]); None uses the built-in bzip2 codec.
+  * `compressCommand` is the reference's `--compress-command`: the
+  * external stdin→stdout compressor run per partition and for the
+  * header and footer (see [[Compression]]), `bzip2 -c` by default.
   */
 object XmlSink {
 
   def write(outPath: String, header: String, sections: Seq[Dataset[String]],
-            compressCommand: Option[String] = None): Unit = {
+            compressCommand: String = Compression.DefaultCommand): Unit = {
     val partsRoot = Paths.get(outPath + ".parts")
     PartSink.deleteRecursive(partsRoot)
     val ids = PartSink.writeParts(sections.reduce(_ union _), partsRoot) { (it, os) =>

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `--compress-command`, `--dense-nodes`, `--meta-file` / `meta-*`
   * header overrides. The reference ships no goldens for these, so they
   * are covered structurally (non-dense PBF ≡ dense PBF element-wise;
-  * external compressor output decompresses to the built-in payload;
-  * meta values land on the right header attributes).
+  * another compressor's output decompresses to the default `bzip2 -c`
+  * payload; meta values land on the right header attributes).
   */
 class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
 
@@ -77,31 +77,41 @@ class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
     try new String(cs.readAllBytes(), "UTF-8") finally cs.close()
   }
 
-  test("--compress-command output decompresses to the built-in payload") {
+  test("--compress-command output decompresses to the default bzip2 payload") {
     import spark.implicits._
     val d = Files.createTempDirectory("compress-cmd").toString
     val lines = (1 to 1000).map(i => s"<line n=\"$i\"/>\n")
     val ds = spark.createDataset(lines).repartition(3)
-    XmlSink.write(s"$d/builtin.xml.bz2", "<header>\n", Seq(ds))
-    XmlSink.write(s"$d/external.xml.gz", "<header>\n", Seq(ds),
-      compressCommand = Some("gzip -c"))
-    val builtin = decompressAll(s"$d/builtin.xml.bz2", gz = false)
-    val external = decompressAll(s"$d/external.xml.gz", gz = true)
-    assert(external === builtin)
-    assert(external.startsWith("<header>\n"))
-    assert(external.endsWith(XmlFormat.footer))
-    assert(lines.forall(external.contains(_)))
+    XmlSink.write(s"$d/default.xml.bz2", "<header>\n", Seq(ds))
+    XmlSink.write(s"$d/gzip.xml.gz", "<header>\n", Seq(ds), compressCommand = "gzip -c")
+    val default = decompressAll(s"$d/default.xml.bz2", gz = false)
+    val gzip = decompressAll(s"$d/gzip.xml.gz", gz = true)
+    assert(gzip === default)
+    assert(gzip.startsWith("<header>\n"))
+    assert(gzip.endsWith(XmlFormat.footer))
+    assert(lines.forall(gzip.contains(_)))
   }
 
   test("failing compress command surfaces as an error, not truncation") {
     import spark.implicits._
     val d = Files.createTempDirectory("compress-fail").toString
-    val ds = spark.createDataset(Seq("x\n"))
+    // more than a pipe buffer: the write fails once `false` has exited,
+    // and the error still names the command and its exit code
+    val ds = spark.createDataset(Seq("x" * (100 << 10) + "\n"))
     val e = intercept[Exception] {
-      XmlSink.write(s"$d/out.xml", "<h>\n", Seq(ds),
-        compressCommand = Some("false"))
+      XmlSink.write(s"$d/out.xml", "<h>\n", Seq(ds), compressCommand = "false")
     }
-    assert(e.getMessage.contains("exited") || e.getCause != null)
+    assert(e.getMessage.contains("compress command 'false' exited with 1"))
+  }
+
+  test("a compress command that cannot run fails the run before the load") {
+    val d = Files.createTempDirectory("compress-preflight").toString
+    val e = intercept[java.io.IOException] {
+      PlanetDump.run(spark, PlanetFixture.dump, s"$d/work", PlanetFixture.outputs(d),
+        PlanetFixture.generator, compressCommand = "exit 3", resume = false)
+    }
+    assert(e.getMessage === "compress command 'exit 3' exited with 3")
+    assert(!Files.exists(Paths.get(d, "work", "tables")))
   }
 
   test("parseArgs covers the reference option surface") {
@@ -117,7 +127,9 @@ class CliSurfaceSpec extends AnyFunSuite with SparkSpec {
     assert(cli.dumpFile === "planet.dmp")
     assert(cli.workDir === "/tmp/w")
     assert(cli.generator === "gen v1")
-    assert(cli.compressCommand === Some("pbzip2 -c"))
+    assert(cli.compressCommand === "pbzip2 -c")
+    // without -c, the reference's compressor
+    assert(parseArgs(Array("-f", "d.dmp", "-x", "o.xml")).compressCommand === "bzip2 -c")
     assert(!cli.denseNodes)
     assert(cli.meta.author === "A" && cli.meta.copyleft === "L")
     assert(cli.meta.source === Meta().source) // untouched default
